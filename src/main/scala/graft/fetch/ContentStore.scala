@@ -2,15 +2,19 @@ package graft.fetch
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
+
+import graft.index.ShardedTable
 
 /** Raw-content cache keyed by sha256(url) — the Spark-native shape of
   * the reference's S3 content cache (`external/aws/.../s3/S3Cacher
   * .java:38` stores fetched bytes under the URL digest;
   * `S3CacheChecker.java:42` consults it before fetching).
   *
-  * Layout: parquet partitioned by the first hex byte of the digest
-  * (256 dirs) — object-store friendly (no hot prefix, bounded listing)
-  * and the digest prefix doubles as the partition key for pruning.
+  * Layout: a [[graft.index.ShardedTable]] — parquet partitioned by the
+  * first hex digit of the digest (16 dirs; that scaladoc says when the
+  * pruning pays) — object-store friendly (no hot prefix, bounded
+  * listing) and the digest prefix doubles as the partition key.
   * Writes append; readers dedupe to the newest row per digest, so
   * re-fetches supersede older captures without rewrites (same idea as
   * the frontier store's generation model, but append-only because
@@ -21,62 +25,27 @@ import org.apache.spark.sql.functions._
   * STORE is unbounded. So the batch's digests broadcast into a
   * semi-join against the store — never the store's digest set into the
   * batch — and the store scan is pre-filtered to the batch's shard
-  * partitions (≤256 values, derived from the bounded batch), so the
+  * partitions (≤ 16 values, derived from the bounded batch), so the
   * newest-capture window runs over only the semi-joined sliver of the
   * store, not the whole table.
   */
 class ContentStore(path: String) {
 
-  private val schema = org.apache.spark.sql.types.StructType(Seq(
-    org.apache.spark.sql.types.StructField("url_sha256", org.apache.spark.sql.types.StringType),
-    org.apache.spark.sql.types.StructField("url", org.apache.spark.sql.types.StringType),
-    org.apache.spark.sql.types.StructField("content", org.apache.spark.sql.types.BinaryType),
-    org.apache.spark.sql.types.StructField("fetch_time", org.apache.spark.sql.types.TimestampNTZType),
-    org.apache.spark.sql.types.StructField("shard", org.apache.spark.sql.types.StringType)))
+  private val table = new ShardedTable(path, StructType(Seq(
+    StructField("url_sha256", StringType),
+    StructField("url", StringType),
+    StructField("content", BinaryType),
+    StructField("fetch_time", TimestampNTZType),
+    StructField("shard", StringType))))
 
-  /** Append content rows (url + content bytes + fetch time).
-    *
-    * The repartition-by-shard before the write is load-bearing: a
-    * partitionBy write from W tasks creates up to W files PER SHARD
-    * (measured: ~8 192 tiny parquet files per 10 k-page crawl cycle at
-    * 32 tasks — 19.5 s of the 62 s steady-state cycle was this commit
-    * overhead, the largest single leg). Clustering rows by shard first
-    * bounds the cycle's output at one file per shard present (≤256),
-    * which is also the object-store-correct shape (bounded PUTs and
-    * listings per batch). The shuffle moved is just the batch.
-    *
-    * The partition count is PINNED (min(256, cluster parallelism)):
-    * an unpinned `repartition(col)` lets AQE coalesce a small batch to
-    * ONE task, which then writes all ~256 shard files serially at
-    * ~13 ms of parquet-writer setup each — measured 3.4 s vs 0.5 s for
-    * the same 50 k-row append. Pinning keeps the write parallel while
-    * each shard still hashes to exactly one task (≤1 file/shard). */
-  def store(df: DataFrame): Unit = {
-    val parts = math.min(256,
-      df.sparkSession.sparkContext.defaultParallelism).max(1)
-    df.select(
-        sha2(col("url"), 256).as("url_sha256"),
-        substring(sha2(col("url"), 256), 1, 2).as("shard"),
-        col("url"), col("content"),
-        col("fetch_time").cast("timestamp_ntz").as("fetch_time"))
-      .repartition(parts, col("shard"))
-      .write.mode("append").partitionBy("shard").parquet(path)
-  }
-
-  /** Raw scan of all captures (empty typed frame before the first
-    * write; filesystem probe goes through the Hadoop FS API so hdfs://
-    * and s3a:// paths work, not just local disk). */
-  private def raw(spark: SparkSession): DataFrame = {
-    val hPath = new org.apache.hadoop.fs.Path(path)
-    val fs = hPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val hasData = fs.exists(hPath) &&
-      fs.listStatus(hPath).exists(_.getPath.getName.startsWith("shard="))
-    // pin the schema: partition-column type inference would read an
-    // all-digits shard population ("22", "97", …) as DOUBLE and then
-    // fail comparing against hex strings like "f9"
-    if (hasData) spark.read.schema(schema).parquet(path)
-    else spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-  }
+  /** Append content rows (url + content bytes + fetch time), one file
+    * per shard present ([[graft.index.ShardedTable.append]]). */
+  def store(df: DataFrame): Unit =
+    table.append(df.select(
+      sha2(col("url"), 256).as("url_sha256"),
+      ShardedTable.shardOf(sha2(col("url"), 256)).as("shard"),
+      col("url"), col("content"),
+      col("fetch_time").cast("timestamp_ntz").as("fetch_time")))
 
   private def newestPerDigest(df: DataFrame): DataFrame = {
     import org.apache.spark.sql.expressions.Window
@@ -88,7 +57,7 @@ class ContentStore(path: String) {
   /** Current view: newest capture per digest. Full-table window — use
     * for offline analytics over the whole store, not per-batch checks
     * (that's [[split]]). */
-  def read(spark: SparkSession): DataFrame = newestPerDigest(raw(spark))
+  def read(spark: SparkSession): DataFrame = newestPerDigest(table.read(spark))
 
   /** Cache check for a fetch batch: (hits with content, misses).
     *
@@ -102,10 +71,10 @@ class ContentStore(path: String) {
             maxAgeMs: Option[Long] = None,
             asOfMs: Long = System.currentTimeMillis()): (DataFrame, DataFrame) = {
     val keyed = batch.withColumn("url_sha256", sha2(col("url"), 256))
-    // collecting the batch's distinct shard prefixes is driver-cheap at
-    // ANY batch size (≤256 two-hex-char strings) and turns the store
-    // scan into a partition-pruned read
-    val shards = keyed.select(substring(col("url_sha256"), 1, 2).as("s"))
+    // collecting the batch's distinct shards is driver-cheap at ANY
+    // batch size (≤ 16 one-hex-digit strings) and turns the store scan
+    // into a partition-pruned read
+    val shards = keyed.select(ShardedTable.shardOf(col("url_sha256")))
       .distinct().collect().map(_.getString(0))
     // NO broadcast hints: a production fetch batch is bounded by the
     // frontier selection limit and AQE broadcasts it from its RUNTIME
@@ -115,7 +84,7 @@ class ContentStore(path: String) {
     // hits hint would have broadcast full content BODIES). Unhinted,
     // the same code serves both: broadcast when small, shuffle join
     // when someone replays a corpus through the cache check.
-    val sliver = raw(spark).where(col("shard").isin(shards.toSeq: _*))
+    val sliver = table.sliver(spark, shards.toSeq)
       .join(keyed.select(col("url_sha256")), Seq("url_sha256"), "left_semi")
     val freshEnough = maxAgeMs match {
       case Some(age) => newestPerDigest(sliver).where(

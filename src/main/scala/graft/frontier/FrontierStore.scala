@@ -67,15 +67,18 @@ final class FrontierStore(val root: String, numBuckets: Int = 64,
       .withColumn("error_count", lit(0))
 
   /** Read frontier rows for the given buckets (all when None). One scan
-    * per delta generation (basePath recovers the bucket column), unioned. */
+    * per delta generation (basePath recovers the bucket column), unioned.
+    * The schema is pinned ([[FrontierStore.stored]]): an inferring read
+    * starts a one-task footer job per generation on every select and
+    * every merge. */
   private def readBuckets(spark: SparkSession, buckets: Option[Set[Int]]): DataFrame = {
     val entries = manifest.filter { case (b, _) => buckets.forall(_.contains(b)) }
     if (entries.isEmpty) emptyFrontier(spark)
     else entries.groupBy(_._2).map { case (gen, es) =>
       spark.read
+        .schema(FrontierStore.stored)
         .option("basePath", s"$root/$gen")
         .parquet(es.keys.toSeq.sorted.map(b => s"$root/$gen/bucket=$b"): _*)
-        .withColumn("bucket", col("bucket").cast("int"))
         .select("url_sha256", "url", "status", "next_fetch_date", "key",
           "bucket", "metadata", "error_count")
     }.reduce(_.unionByName(_))
@@ -87,6 +90,11 @@ final class FrontierStore(val root: String, numBuckets: Int = 64,
   private def nextGeneration: Int =
     if (!exists) 0
     else manifest.values.map(_.stripPrefix("delta_").toInt).maxOption.map(_ + 1).getOrElse(0)
+
+  /** Task count of a delta write: one task per bucket up to the
+    * cluster's parallelism. */
+  private def writeParallelism(spark: SparkSession): Int =
+    math.min(numBuckets, spark.sparkContext.defaultParallelism).max(1)
 
   /** Write the merged content of `touched` buckets as one new delta
     * generation and swap the manifest pointer atomically. `preClustered`
@@ -109,9 +117,7 @@ final class FrontierStore(val root: String, numBuckets: Int = 64,
     // ContentStore measurement); pinning keeps the write parallel
     // while each bucket still hashes to exactly one task.
     (if (preClustered) df
-     else df.repartition(
-       math.min(numBuckets, df.sparkSession.sparkContext.defaultParallelism).max(1),
-       col("bucket")))
+     else df.repartition(writeParallelism(df.sparkSession), col("bucket")))
       .write.partitionBy("bucket").mode("overwrite")
       // zstd over the default snappy: the store's peak disk is two
       // coexisting generations (the old one is the merge's INPUT while
@@ -240,6 +246,13 @@ final class FrontierStore(val root: String, numBuckets: Int = 64,
     // real cluster is 2× the network). Grouping by url ≡ grouping by
     // url_sha256: the hash is injective on the store's key space by
     // construction.
+    //
+    // That one exchange is PINNED at writeDelta's own task count: left to
+    // the window's requirement it is an ENSURE_REQUIREMENTS shuffle that
+    // AQE coalesces, and a cycle-sized merge then wrote every touched
+    // bucket file from ONE task (measured: 52 bucket files, 0.94 s, on 4
+    // cores). A repartition to a fixed count is exempt from coalescing and
+    // already satisfies the bucket windows, so no second exchange appears.
     val rank =
       when(col("incoming") === 1 && col("status") =!= Status.Discovered, 0)
         .when(col("incoming") === 0, 1)
@@ -256,6 +269,7 @@ final class FrontierStore(val root: String, numBuckets: Int = 64,
     val wPeer = Window.partitionBy(col("bucket")).orderBy(col("url"))
       .rangeBetween(Window.currentRow, Window.currentRow)
     val unioned = existing.unionByName(incoming)
+      .repartition(writeParallelism(spark), col("bucket"))
       // carry the error history: sum error counts across merged rows,
       // capped escalation handled below
       .withColumn("total_errors", sum(col("error_count")).over(wPeer))
@@ -429,5 +443,22 @@ final class FrontierStore(val root: String, numBuckets: Int = 64,
       .select(col("url_sha256"), col("url"), col("status"), col("next_fetch_date").cast("timestamp"),
         col("key"), col("bucket"), col("metadata"))
       .as[graft.model.StatusRow]
+  }
+}
+
+object FrontierStore {
+  /** The columns of a delta generation as written (`bucket` is the
+    * partition directory). */
+  private val stored: org.apache.spark.sql.types.StructType = {
+    import org.apache.spark.sql.types._
+    StructType(Seq(
+      StructField("url_sha256", StringType),
+      StructField("url", StringType),
+      StructField("status", StringType),
+      StructField("next_fetch_date", TimestampNTZType),
+      StructField("key", StringType),
+      StructField("metadata", MapType(StringType, ArrayType(StringType))),
+      StructField("error_count", LongType), // a windowed sum
+      StructField("bucket", IntegerType)))
   }
 }

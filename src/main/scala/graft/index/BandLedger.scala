@@ -1,6 +1,6 @@
 package graft.index
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Append-only ledger of MinHash LSH band keys already indexed — the
@@ -20,53 +20,12 @@ import org.apache.spark.sql.functions._
   * ([[graft.analytics.Dedup]]); making the streaming rule depend on
   * intra-batch ordering would make the output depend on partitioning.
   *
-  * Same scale shape as [[DigestLedger]]: 256 md5-prefix shards, the
+  * Same scale shape as [[DigestLedger]] ([[ShardedLedger]] over the
+  * `bk` column): 16 shards by the first hex digit of md5(bk), the
   * bounded batch broadcasts into a shard-pruned ledger sliver, the
   * unbounded ledger never moves.
   */
-class BandLedger(path: String) {
-
-  private val schema = org.apache.spark.sql.types.StructType(Seq(
-    org.apache.spark.sql.types.StructField("bk", org.apache.spark.sql.types.StringType),
-    org.apache.spark.sql.types.StructField("shard", org.apache.spark.sql.types.StringType)))
-
-  private def raw(spark: SparkSession): DataFrame = {
-    val hPath = new org.apache.hadoop.fs.Path(path)
-    val fs = hPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val hasData = fs.exists(hPath) &&
-      fs.listStatus(hPath).exists(_.getPath.getName.startsWith("shard="))
-    if (hasData) spark.read.schema(schema).parquet(path)
-    else spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-  }
-
-  /** The subset of `bandKeys` (one `bk` column, batch-bounded) already
-    * present in the ledger. */
-  def knownAmong(spark: SparkSession, bandKeys: DataFrame): DataFrame = {
-    val shards = bandKeys
-      .select(substring(md5(col("bk")), 1, 2).as("s"))
-      .distinct().collect().map(_.getString(0)) // ≤256, batch-derived
-    raw(spark).where(col("shard").isin(shards.toSeq: _*))
-      .join(broadcast(bandKeys), Seq("bk"), "left_semi")
-      .select("bk").distinct()
-  }
-
-  /** Append band keys (idempotent for readers — membership is a set
-    * question).
-    *
-    * Clustered by shard before the partitionBy write (the ContentStore
-    * finding — see [[DigestLedger.record]]): bounds each append at one
-    * file per shard present instead of one per (task × shard). */
-  def record(bandKeys: DataFrame): Unit = {
-    val parts = math.min(256,
-      bandKeys.sparkSession.sparkContext.defaultParallelism).max(1)
-    bandKeys.select(col("bk"),
-        substring(md5(col("bk")), 1, 2).as("shard"))
-      .distinct()
-      .repartition(parts, col("shard"))
-      .write.mode("append").partitionBy("shard").parquet(path)
-  }
-}
+class BandLedger(path: String) extends ShardedLedger(path, "bk", md5)
 
 object BandLedger {
   /** Per-doc LSH band keys from the text column — the exact banding of

@@ -1,8 +1,5 @@
 package graft.index
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
-
 /** Append-only ledger of content digests that have already been
   * indexed — the cross-batch face of the crawl loop's content dedup
   * (the batch-scoped collapse in `CrawlTopology.crawlOnce` only sees
@@ -12,62 +9,10 @@ import org.apache.spark.sql.functions._
   * (`core/.../persistence/AdaptiveScheduler.java:121`) — applied
   * across URLs and batches instead of per-URL.
   *
-  * Layout mirrors [[graft.fetch.ContentStore]]: parquet partitioned by
-  * the first hex byte of the digest (256 shards, no hot prefix,
-  * bounded listing). The membership check is careful about which side
-  * is small: the crawl BATCH is bounded by the frontier selection
-  * limit, the LEDGER is unbounded — so the batch's digests broadcast
-  * into a semi-join against a shard-pruned sliver of the ledger
-  * (≤256 partition values derived from the bounded batch), and the
-  * ledger's digest set is never collected or broadcast. At 100 TB the
-  * per-batch cost is a pruned scan of ≤256 shard files + two
-  * batch-broadcast joins.
+  * Layout and membership check: [[ShardedLedger]] over the `digest`
+  * column, sharded by the digest's first hex digit (16 shards). At
+  * 100 TB the per-batch cost is a pruned scan of ≤ 16 shard
+  * directories plus one batch-broadcast semi-join; the ledger never
+  * moves.
   */
-class DigestLedger(path: String) {
-
-  private val schema = org.apache.spark.sql.types.StructType(Seq(
-    org.apache.spark.sql.types.StructField("digest", org.apache.spark.sql.types.StringType),
-    org.apache.spark.sql.types.StructField("shard", org.apache.spark.sql.types.StringType)))
-
-  private def raw(spark: SparkSession): DataFrame = {
-    val hPath = new org.apache.hadoop.fs.Path(path)
-    val fs = hPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val hasData = fs.exists(hPath) &&
-      fs.listStatus(hPath).exists(_.getPath.getName.startsWith("shard="))
-    // pinned schema: partition-type inference would read all-digit
-    // shard values as DOUBLE (same trap as ContentStore)
-    if (hasData) spark.read.schema(schema).parquet(path)
-    else spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-  }
-
-  /** The subset of `digests` (one `digest` column, batch-bounded)
-    * already present in the ledger. */
-  def knownAmong(spark: SparkSession, digests: DataFrame): DataFrame = {
-    val shards = digests
-      .select(substring(col("digest"), 1, 2).as("s"))
-      .distinct().collect().map(_.getString(0)) // ≤256, batch-derived
-    raw(spark).where(col("shard").isin(shards.toSeq: _*))
-      .join(broadcast(digests), Seq("digest"), "left_semi")
-      .select("digest").distinct()
-  }
-
-  /** Append digests (idempotent for readers — membership is a set
-    * question, duplicate rows across appends are harmless).
-    *
-    * Clustered by shard before the partitionBy write (the ContentStore
-    * finding): an unclustered write from W tasks creates up to W files
-    * PER SHARD per cycle, and every later cycle's [[knownAmong]] pays
-    * the listing/open cost of the accumulated pile. The count is
-    * pinned so AQE can't coalesce a small batch to one task that
-    * writes all ~256 shard files serially. */
-  def record(digests: DataFrame): Unit = {
-    val parts = math.min(256,
-      digests.sparkSession.sparkContext.defaultParallelism).max(1)
-    digests.select(col("digest"),
-        substring(col("digest"), 1, 2).as("shard"))
-      .distinct()
-      .repartition(parts, col("shard"))
-      .write.mode("append").partitionBy("shard").parquet(path)
-  }
-}
+class DigestLedger(path: String) extends ShardedLedger(path, "digest", identity)

@@ -60,7 +60,13 @@ object CrawlTopology {
 
   def now(): java.sql.Timestamp = new java.sql.Timestamp(System.currentTimeMillis())
 
-  /** One crawl micro-batch. Returns (stats, indexable docs). */
+  /** One crawl micro-batch. Returns (stats, indexable docs).
+    *
+    * The returned docs are CACHED (materialized by the cycle's own stats
+    * aggregate), so consuming them never re-runs the fetch; every other
+    * cache of the cycle is released before return. The caller owns the
+    * docs: `docs.unpersist()` once it has consumed them, as [[crawl]]
+    * and [[startStream]] do. */
   def crawlOnce(spark: SparkSession, store: FrontierStore,
                 protocols: ProtocolFactory = new ProtocolFactory(),
                 chain: UrlFilterChain = UrlFilterChain.default(),
@@ -80,38 +86,60 @@ object CrawlTopology {
                 digestLedger: Option[graft.index.DigestLedger] = None,
                 bandLedger: Option[graft.index.BandLedger] = None,
                 timeLegs: Boolean = false): (CrawlStats, DataFrame) = {
+    // Every leg's Spark jobs carry the job description `crawl.<leg>`, so
+    // a listener or the UI can attribute them; the label adds no action.
     // Per-leg profiling (timeLegs=true): each pipeline leg is FORCED
     // (cache + count) inside a timer so wall time attributes to the
     // leg that did the work instead of to whichever downstream action
     // happened to trigger the lazy chain. Off by default — the extra
     // materializing actions belong in a profiling run, not the
     // production path.
+    val sc = spark.sparkContext
     val legSecs = scala.collection.mutable.LinkedHashMap.empty[String, Double]
-    def leg[T](name: String)(f: => T): T =
-      if (!timeLegs) f
-      else {
-        val t0 = System.nanoTime()
-        val r = f
-        legSecs(name) = legSecs.getOrElse(name, 0.0) + (System.nanoTime() - t0) / 1e9
-        r
+    def leg[T](name: String)(f: => T): T = {
+      val prev = sc.getLocalProperty("spark.job.description")
+      sc.setJobDescription(s"crawl.$name")
+      val t0 = System.nanoTime()
+      try f
+      finally {
+        if (timeLegs)
+          legSecs(name) = legSecs.getOrElse(name, 0.0) + (System.nanoTime() - t0) / 1e9
+        sc.setJobDescription(prev)
       }
+    }
     // selection may run at an adaptive horizon (backlog digging), but
     // merges/schedules always stamp wall-clock batchTime — scheduling
     // new discoveries at a frozen horizon would make them immediately
-    // due and defeat the freeze
+    // due and defeat the freeze.
+    // The selection (like the status updates below) is materialized ONCE
+    // and read by every consumer: both are bounded (limit × outlinks per
+    // page), while recomputing them re-runs the frontier scan and window
+    // or the whole parse branch. Released at the end of the cycle.
     val batch = store.selectBatch(spark, selectTime.getOrElse(batchTime),
-      perBucket, maxKeys, limit, saltBuckets = saltBuckets)
+      perBucket, maxKeys, limit, saltBuckets = saltBuckets).cache()
     val selected = leg("select")(batch.count())
-    if (selected == 0)
+    if (selected == 0) {
+      batch.unpersist()
       return (CrawlStats(0, 0, 0, 0, 0), spark.emptyDataFrame)
+    }
 
     // Cache check (S3CacheChecker semantics): hits skip the network and
     // re-enter the pipeline as synthetic FETCHED rows; only misses go
     // through the fetch stage, whose new captures append to the store.
     val (toFetch, cachedRows) = contentStore match {
       case Some(cs) =>
-        val (hits, misses) = cs.split(spark, batch, contentMaxAgeMs, batchTime.getTime)
-        val hitRows = hits.select(
+        val (hits, misses) = leg("content_store")(
+          cs.split(spark, batch, contentMaxAgeMs, batchTime.getTime))
+        // The split is FROZEN (≤ limit digests) before the fetch output
+        // appends to the store: Spark re-caches every plan that reads a
+        // path it writes, so a fetch whose input still read the store
+        // would be cleared by that append and re-run against the post-
+        // append store, where each page just fetched reads as a cache hit
+        // and each failure is fetched again.
+        val missed = leg("content_store")(
+          misses.select("url_sha256").collect().map(_.getString(0)).toSeq)
+        val isMiss = col("url_sha256").isin(missed: _*)
+        val hitRows = hits.where(!isMiss).select(
           col("url"), col("key"), lit(Status.Fetched).as("status"),
           lit(200).as("http_code"), col("content"),
           lit(null).cast("string").as("content_type"),
@@ -122,7 +150,7 @@ object CrawlTopology {
           map_concat(
             map_filter(coalesce(col("metadata"), map()), (k, _) => k =!= "cache.hit"),
             map(lit("cache.hit"), array(lit("true")))).as("metadata"))
-        (misses, Some(hitRows))
+        (batch.where(isMiss), Some(hitRows))
       case None => (batch, None)
     }
     val fetchedLive = FetchStage.fetch(spark, toFetch, protocols,
@@ -140,6 +168,9 @@ object CrawlTopology {
     val parsed = ParseStage.parse(fetched, chain)
     parsed.cache()
     if (timeLegs) leg("parse_chain")(parsed.count())
+    // handed to the caller: cached on its own so that releasing the
+    // parse output below keeps the docs readable without a re-fetch
+    val docs = parsed.where(col("kind") === "doc").cache()
 
     // attach the parse signature to the page's status row so the
     // adaptive scheduler's change detection has something to compare
@@ -189,12 +220,15 @@ object CrawlTopology {
     val parseErrors = parsed.where(col("kind") === "error")
       .select(col("url"), col("status"), col("metadata"))
 
+    // cached here, not inside merge: merge never caches its input (a
+    // q94-scale update batch must not spill), but this one is bounded
+    // and is read again by the index sink's deletions
     val updates = fetchStatuses.unionByName(redirectTargets)
       .unionByName(outlinkStatuses).unionByName(parseErrors)
       .unionByName(discoveredFromFetch)
+      .cache()
     leg("merge")(store.merge(spark, updates, batchTime))
 
-    val docs = parsed.where(col("kind") === "doc")
     // live index sink (IndexerBolt + DeletionBolt wiring): index this
     // batch's docs through the mapping projection; delete EVERY page
     // whose status row turned ERROR this batch — robots-denied and
@@ -234,17 +268,16 @@ object CrawlTopology {
       // ledger, where every just-recorded doc suppresses itself.
       val (toIndex, cached) = digestLedger match {
         case Some(ledger) if dedupContent =>
+          // read by the check, the record and the index: computed once
           val keyed = batchDeduped.withColumn("__d",
-            coalesce(col("signature"), sha2(col("url"), 256)))
+            coalesce(col("signature"), sha2(col("url"), 256))).cache()
           val knownSet = leg("digest_ledger")(ledger.knownAmong(spark,
-              keyed.select(col("__d").as("digest")))
-            .collect().map(_.getString(0)).toSeq) // ≤ batch size
+            keyed.select(col("__d").as("digest")))) // ≤ batch size
           val fresh =
             if (knownSet.isEmpty) keyed
             else keyed.where(!col("__d").isin(knownSet: _*))
-          fresh.cache() // consumed twice: record + index
           leg("digest_ledger")(ledger.record(fresh.select(col("__d").as("digest"))))
-          (fresh.drop("__d"), Some(fresh))
+          (fresh.drop("__d"), Some(keyed))
         case _ => (batchDeduped, None)
       }
       // near-dup cross-batch face: suppress docs whose MinHash band
@@ -258,22 +291,18 @@ object CrawlTopology {
       // suppress the batch's own just-recorded bands.
       val (toIndexFinal, bandCached) = bandLedger match {
         case Some(ledger) =>
-          val withBands = graft.index.BandLedger.bandKeys(toIndex, "text")
+          // (url, bk) of every doc, MinHashed once for the check, the
+          // suppression and the record
+          val bands = graft.index.BandLedger.bandKeys(toIndex, "text")
+            .select("url", "bk").cache()
           val knownKeys = leg("band_ledger")(ledger.knownAmong(spark,
-              withBands.select("bk").distinct())
-            .collect().map(_.getString(0)).toSeq) // ≤ 2 × batch size
-          val fresh =
-            if (knownKeys.isEmpty) toIndex
-            else {
-              val suppressedUrls = withBands
-                .where(col("bk").isin(knownKeys: _*))
-                .select("url").distinct()
-              toIndex.join(broadcast(suppressedUrls), Seq("url"), "left_anti")
-            }
-          fresh.cache() // consumed twice: record + index
-          leg("band_ledger")(ledger.record(
-            graft.index.BandLedger.bandKeys(fresh, "text").select("bk")))
-          (fresh, Some(fresh))
+            bands.select("bk"))) // ≤ 2 × batch size
+          def unsuppressed(df: DataFrame): DataFrame =
+            if (knownKeys.isEmpty) df
+            else df.join(broadcast(bands.where(col("bk").isin(knownKeys: _*))
+              .select("url").distinct()), Seq("url"), "left_anti")
+          leg("band_ledger")(ledger.record(unsuppressed(bands).select("bk")))
+          (unsuppressed(toIndex), Some(bands))
         case None => (toIndex, None)
       }
       try {
@@ -286,15 +315,21 @@ object CrawlTopology {
         bandCached.foreach(_.unpersist())
       }
     }
-    val (nFetched, nFailed, nDocs, nDisc) = leg("stats_counts")((
-      fetched.where(col("status") === Status.Fetched).count(),
-      fetched.where(col("status").isin(Status.FetchError, Status.Error)).count(),
-      docs.count(),
-      outlinkStatuses.count()))
+    // one aggregate over the fetch output, one over the parse output;
+    // the latter reads the docs through their own cache, so it also
+    // materializes them for the caller before the parse cache goes
+    val (nFetched, nFailed, nDocs, nDisc) = leg("stats_counts") {
+      val f = fetched.agg(
+        count_if(col("status") === Status.Fetched),
+        count_if(col("status").isin(Status.FetchError, Status.Error))).head()
+      val p = docs.select(lit(true).as("doc"))
+        .unionByName(outlinkStatuses.select(lit(false).as("doc")))
+        .agg(count_if(col("doc")), count_if(!col("doc"))).head()
+      (f.getLong(0), f.getLong(1), p.getLong(0), p.getLong(1))
+    }
     val stats = CrawlStats(selected, nFetched, nFailed, nDocs, nDisc,
       legs = legSecs.toMap)
-    fetched.unpersist()
-    if (contentStore.isDefined) fetchedLive.unpersist()
+    Seq(batch, fetchedLive, fetched, parsed, updates).foreach(_.unpersist())
     (stats, docs)
   }
 
@@ -333,6 +368,7 @@ object CrawlTopology {
           docs.select("url", "title", "text", "signature", "noindex")
             .write.mode("append").parquet(dir)
       }
+      docs.unpersist()
       stats :+= st
       continue = st.selected > 0
       i += 1
@@ -372,6 +408,7 @@ object CrawlTopology {
         if (st.docs > 0)
           docs.select("url", "title", "text", "signature", "noindex")
             .write.mode("append").parquet(docsOut)
+        docs.unpersist()
         ()
       }
       .start()

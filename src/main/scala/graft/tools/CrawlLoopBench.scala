@@ -126,7 +126,7 @@ object CrawlLoopBench {
     val legsCycle = sys.env.get("SPARK_GRAFT_LEGS").map(_.toInt)
     while (continue && cycles < 64) {
       val tc0 = System.nanoTime()
-      val (st, _) = CrawlTopology.crawlOnce(spark, store,
+      val (st, docs) = CrawlTopology.crawlOnce(spark, store,
         new ProtocolFactory(), chain,
         perBucket = perHost, maxKeys = hosts, limit = limit,
         crawlDelayMs = delayMs, respectRobots = true,
@@ -136,6 +136,7 @@ object CrawlLoopBench {
         dedupContent = true, digestLedger = Some(digests),
         bandLedger = Some(bands),
         timeLegs = legsCycle.contains(cycles))
+      docs.unpersist()
       if (st.legs.nonEmpty) {
         val total = (System.nanoTime() - tc0) / 1e9
         val parts = st.legs.map { case (k, v) => f""""$k":$v%.2f""" }.mkString(",")

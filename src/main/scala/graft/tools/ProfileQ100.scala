@@ -30,7 +30,7 @@ object ProfileQ100 {
     (1 to 6).foreach { rep =>
       leg("shuffleOnly") {
         batch0.select(sha2(col("url"), 256).as("url_sha256"),
-            substring(sha2(col("url"), 256), 1, 2).as("shard"), col("url"))
+            graft.index.ShardedTable.shardOf(sha2(col("url"), 256)).as("shard"), col("url"))
           .repartition(col("shard")).count()
       }
       leg("writeV1") {
@@ -38,7 +38,7 @@ object ProfileQ100 {
       }
       val keyed = batch0.select(
         sha2(col("url"), 256).as("url_sha256"),
-        substring(sha2(col("url"), 256), 1, 2).as("shard"),
+        graft.index.ShardedTable.shardOf(sha2(col("url"), 256)).as("shard"),
         col("url"), col("content"), col("fetch_time"))
       leg("flatWrite") {
         keyed.write.mode("append").parquet(Scratch.dir("graft_q100f_").toString)

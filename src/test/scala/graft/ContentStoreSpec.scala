@@ -46,10 +46,10 @@ class ContentStoreSpec extends AnyFunSuite {
     assert(new String(hit.head.getAs[Array[Byte]]("content")) == "v2")
     assert(misses.select("url").as[String].collect().toSeq == Seq("http://b.com/new"))
 
-    // sharded layout: partition dirs named by the first digest byte
+    // sharded layout: partition dirs named by the first digest hex digit
     val shards = new java.io.File(dir).listFiles().filter(_.isDirectory)
       .map(_.getName).filter(_.startsWith("shard="))
-    assert(shards.nonEmpty && shards.forall(_.matches("shard=[0-9a-f]{2}")))
+    assert(shards.nonEmpty && shards.forall(_.matches("shard=[0-9a-f]")))
   }
 
   test("freshness gate: captures older than maxAge become misses (recrawl refreshes)") {

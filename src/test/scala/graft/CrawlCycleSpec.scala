@@ -1,0 +1,212 @@
+package graft
+
+import java.nio.file.Files
+import java.util.concurrent.ConcurrentLinkedQueue
+
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerTaskEnd}
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.util.QueryExecutionListener
+import org.scalatest.funsuite.AnyFunSuite
+
+import graft.fetch.{ContentStore, ProtocolFactory}
+import graft.filters.{BasicUrlFilter, BasicUrlNormalizer, MaxDepthFilter, RegexUrlFilter, SelfUrlFilter, UrlFilterChain}
+import graft.frontier.FrontierStore
+import graft.index.{BandLedger, DigestLedger, IndexSink}
+import graft.model.Status
+import graft.streaming.CrawlTopology
+
+/** The fixed cost of a crawl cycle: the frontier merge writes in
+  * parallel through one exchange, a cycle leaves no cache behind, and
+  * every job of a cycle is labelled with its leg. */
+class CrawlCycleSpec extends AnyFunSuite {
+
+  lazy val spark: SparkSession = SparkSession.builder()
+    .master("local[4]")
+    .config("spark.sql.shuffle.partitions", "4")
+    .config("spark.sql.session.timeZone", "UTC")
+    .config("spark.ui.enabled", "false")
+    .getOrCreate()
+
+  private val chain = new UrlFilterChain(Seq(
+    new BasicUrlNormalizer(), new BasicUrlFilter(), new SelfUrlFilter(),
+    new MaxDepthFilter(5), RegexUrlFilter.parse(Seq("+."))))
+
+  /** A ring of `pages` file:// pages, each linking to the next. */
+  private def site(pages: Int): Seq[String] = {
+    val dir = Files.createTempDirectory("cycle")
+    (0 until pages).map { i =>
+      Files.write(dir.resolve(s"p$i.html"),
+        (s"<html><head><title>P$i</title></head><body>page $i of the ring " +
+          s"""<a href="p${(i + 1) % pages}.html">next</a></body></html>""").getBytes("UTF-8"))
+      s"file://$dir/p$i.html"
+    }
+  }
+
+  private val noopSink = new IndexSink {
+    def indexBatch(docs: DataFrame): Unit = docs.count(): Unit
+    def deleteBatch(urls: DataFrame): Unit = urls.count(): Unit
+  }
+
+  /** Job starts (with their local properties) and task counts per stage.
+    * Listener delivery is asynchronous: [[drain]] runs a marker job and
+    * waits for its end, after which every earlier event has arrived. */
+  private class JobLog extends SparkListener {
+    val jobs = new ConcurrentLinkedQueue[SparkListenerJobStart]()
+    val tasks = new java.util.concurrent.ConcurrentHashMap[Int, Int]()
+    @volatile private var markerJob = -1
+    @volatile var markerDone = false
+    override def onJobStart(e: SparkListenerJobStart): Unit =
+      if (e.properties.getProperty("spark.jobGroup.id") == "marker") markerJob = e.jobId
+      else jobs.add(e)
+    override def onJobEnd(e: SparkListenerJobEnd): Unit =
+      if (e.jobId == markerJob) markerDone = true
+    override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+      tasks.merge(e.stageId, 1, (a: Int, b: Int) => a + b)
+    def group(id: String): Seq[SparkListenerJobStart] = jobs.asScala.toSeq
+      .filter(_.properties.getProperty("spark.jobGroup.id") == id).sortBy(_.jobId)
+  }
+
+  private def withJobLog[T](body: JobLog => T): T = {
+    val sc = spark.sparkContext
+    val log = new JobLog
+    sc.addSparkListener(log)
+    try body(log) finally sc.removeSparkListener(log)
+  }
+
+  private def drain(log: JobLog): Unit = {
+    val sc = spark.sparkContext
+    sc.setJobGroup("marker", "listener drain")
+    try spark.range(1).count() finally sc.clearJobGroup()
+    val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+    while (!log.markerDone && System.nanoTime() < deadline) Thread.sleep(10)
+    assert(log.markerDone, "listener events did not drain")
+  }
+
+  test("merge writes a many-bucket delta from several tasks through exactly one bucket exchange") {
+    import spark.implicits._
+    val sc = spark.sparkContext
+    val store = new FrontierStore(Files.createTempDirectory("merge").toString) // 64 buckets
+    val updates = (0 until 200)
+      .map(i => (s"http://h$i.example/p", Status.Discovered, Map.empty[String, Seq[String]]))
+      .toDF("url", "status", "metadata")
+    val plans = new ConcurrentLinkedQueue[String]()
+    val qel = new QueryExecutionListener {
+      def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        plans.add(qe.executedPlan.toString)
+      def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit = ()
+    }
+    spark.listenerManager.register(qel)
+    // the write is the merge's last job; its result stage is its last stage
+    val writeTasks = try withJobLog { log =>
+      sc.setJobGroup("merge-under-test", "frontier merge")
+      try store.merge(spark, updates) finally sc.clearJobGroup()
+      drain(log)
+      log.tasks.getOrDefault(log.group("merge-under-test").last.stageIds.max, 0)
+    } finally spark.listenerManager.unregister(qel)
+
+    assert(store.read(spark).count() == 200)
+    val writes = plans.asScala.filter(_.contains("InsertIntoHadoopFsRelationCommand")).toSeq
+    assert(writes.size == 1, plans.asScala.mkString("\n----\n"))
+    // the final adaptive plan only (the string appends the initial one);
+    // "Exchange " not preceded by a letter skips broadcast/reused nodes
+    val fin = writes.head.split("== Initial Plan ==")(0)
+    val exchanges = fin.linesIterator.filter(_.matches(".*(?<![A-Za-z])Exchange .*")).toSeq
+    assert(exchanges.size == 1 && exchanges.head.contains("hashpartitioning(bucket"), fin)
+    assert(writeTasks > 1, s"the delta write ran $writeTasks task(s)")
+  }
+
+  test("crawl() releases every cycle cache: persistent RDDs stay flat over 3 runs") {
+    val sc = spark.sparkContext
+    val work = Files.createTempDirectory("flat")
+    def d(n: String): String = work.resolve(n).toString
+    val digests = new DigestLedger(d("digests"))
+    val bands = new BandLedger(d("bands"))
+    val before = sc.getPersistentRDDs.size
+    val counts = (1 to 3).map { i =>
+      val store = new FrontierStore(d(s"frontier$i"))
+      CrawlTopology.seed(spark, store, site(4), chain)
+      val stats = CrawlTopology.crawl(spark, store, new ProtocolFactory(), chain,
+        maxIterations = 3, docsOut = Some(d(s"docs$i")), crawlDelayMs = 0,
+        respectRobots = false, indexSink = Some(noopSink), dedupContent = true,
+        digestLedger = Some(digests), bandLedger = Some(bands))
+      assert(stats.map(_.fetched).sum == 4)
+      assert(spark.read.parquet(d(s"docs$i")).count() == 4)
+      sc.getPersistentRDDs.size
+    }
+    assert(counts == Seq.fill(3)(before))
+  }
+
+  test("crawlOnce hands back readable docs and keeps no other cache, timed or not") {
+    val sc = spark.sparkContext
+    val work = Files.createTempDirectory("once")
+    val before = sc.getPersistentRDDs.size
+    for ((content, timeLegs) <- Seq((false, true), (true, true), (true, false))) {
+      val store = new FrontierStore(Files.createTempDirectory(work, "f").toString)
+      CrawlTopology.seed(spark, store, site(3), chain)
+      val (st, docs) = CrawlTopology.crawlOnce(spark, store, new ProtocolFactory(), chain,
+        crawlDelayMs = 0, respectRobots = false, timeLegs = timeLegs,
+        contentStore =
+          if (content) Some(new ContentStore(Files.createTempDirectory(work, "c").toString))
+          else None)
+      assert(st.fetched == 3 && st.docs == 3 && st.discovered == 3)
+      assert(docs.count() == 3)
+      docs.unpersist()
+      assert(sc.getPersistentRDDs.size == before, s"content=$content timeLegs=$timeLegs")
+    }
+  }
+
+  test("with a non-empty content store, a miss is fetched once and stays a live fetch") {
+    val work = Files.createTempDirectory("frozen")
+    val Seq(a, b) = site(2)
+    val cs = new ContentStore(work.resolve("content").toString)
+    def cacheHits(urls: Seq[String]): Map[String, Boolean] = {
+      val store = new FrontierStore(Files.createTempDirectory(work, "f").toString)
+      CrawlTopology.seed(spark, store, urls, chain)
+      val (st, docs) = CrawlTopology.crawlOnce(spark, store, new ProtocolFactory(), chain,
+        crawlDelayMs = 0, respectRobots = false, contentStore = Some(cs))
+      docs.unpersist()
+      assert(st.fetched == urls.size && st.failed == 0)
+      store.read(spark).collect().map(r => r.getAs[String]("url") ->
+        r.getAs[scala.collection.Map[String, Seq[String]]]("metadata").contains("cache.hit"))
+        .toMap.filter { case (u, _) => urls.contains(u) }
+    }
+    assert(cacheHits(Seq(a)) == Map(a -> false))
+    // a is served from the store; b is fetched over the wire, and the
+    // append of its capture must not turn its row into a cache hit
+    assert(cacheHits(Seq(a, b)) == Map(a -> true, b -> false))
+  }
+
+  test("every job of a cycle is labelled with its leg, and the caller's label is restored") {
+    val sc = spark.sparkContext
+    val work = Files.createTempDirectory("labels")
+    def d(n: String): String = work.resolve(n).toString
+    val store = new FrontierStore(d("frontier"))
+    CrawlTopology.seed(spark, store, site(3), chain)
+    val labels = withJobLog { log =>
+      sc.setJobGroup("cycle", "labelled cycle")
+      sc.setJobDescription("outer")
+      try {
+        val (_, docs) = CrawlTopology.crawlOnce(spark, store, new ProtocolFactory(), chain,
+          crawlDelayMs = 0, respectRobots = false,
+          contentStore = Some(new ContentStore(d("content"))),
+          indexSink = Some(noopSink), dedupContent = true,
+          digestLedger = Some(new DigestLedger(d("digests"))),
+          bandLedger = Some(new BandLedger(d("bands"))))
+        docs.unpersist()
+        assert(sc.getLocalProperty("spark.job.description") == "outer")
+      } finally {
+        sc.setJobDescription(null)
+        sc.clearJobGroup()
+      }
+      drain(log)
+      log.group("cycle").map(_.properties.getProperty("spark.job.description"))
+    }
+    val legs = Set("select", "content_store", "merge", "digest_ledger", "band_ledger",
+      "index_sink", "stats_counts").map(l => s"crawl.$l")
+    assert(labels.nonEmpty && labels.forall(legs.contains), labels.distinct)
+    assert(legs.forall(labels.contains), labels.distinct)
+  }
+}

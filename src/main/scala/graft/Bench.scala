@@ -1,5 +1,7 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import scala.util.control.NonFatal
+
+import org.apache.spark.sql.{DataFrame, SparkSession}
 object Bench {
   /** A dirty tree means the compiled classes may not match the stamped
     * sha — and a concurrent `sbt compile` can rewrite
@@ -80,91 +82,32 @@ object Bench {
     first ++ names.filterNot(first.contains).sorted
   }
 
-  def main(args: Array[String]): Unit = {
-    if (refuseDirty(gitPorcelainDirty(), sys.env.get("SPARK_GRAFT_ALLOW_DIRTY"))) {
-      System.err.println(
-        "bench: REFUSING to run from a dirty tree — commit (or stash) first, " +
-          "or set SPARK_GRAFT_ALLOW_DIRTY=1 to override (artifact will be stamped -dirty).")
-      sys.exit(2)
-    }
-    // SPARK_GRAFT_ONLY=q22,q24 restricts to a subset (prefix match on
-    // the query name) — parsed here because the disk preflight is sized
-    // to the number of queries that will actually run.
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
-    val nSelected = SparkEntry.queries.keys
-      .count(n => only.forall(_.exists(n.startsWith)))
-    // disk preflight (VERDICT r13 ask #4, r14 what's-wrong #2): a
-    // 99%-full host produced two disk-pressure-shaped defects in r13,
-    // and the one-query-sized 5 GB floor let a 94-query campaign bench
-    // into scratch exhaustion in r14 — refuse with a named reason, with
-    // the floor sized to the suite length.
-    try Disk.preflight(s"bench ($nSelected queries)", Disk.requiredGb(nSelected)) catch {
-      case e: IllegalStateException =>
-        System.err.println(e.getMessage)
-        sys.exit(3)
-    }
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    // Scale-aware shuffle sizing: start reduce stages WIDE and let AQE
-    // coalesce down from MEASURED map-output sizes. A fixed partition
-    // count tuned at sf0.1 is 30× undersized at sf30 (sort/window
-    // partitions exceed executor memory and spill); initial-wide +
-    // coalesce keeps partitions near the advisory size at ANY scale,
-    // which is the cluster-correct setting. Measured (interleaved A/B,
-    // min-of-2 runs of the full suite): 256 vs 32 initial = sf0.1
-    // 31.4 vs 32.6 s, sf0.01 20.3 vs 21.0 s, and at sf30 the heavy
-    // subset halves memory-acquire retries (66→35) — neutral-or-better
-    // at every scale. Env-overridable for A/B.
-    val initParts = sys.env.getOrElse("SPARK_GRAFT_INIT_PARTS",
-      (cpus.toInt * 8).toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum", initParts)
-      // zstd for shuffle/spill/broadcast blocks (default lz4): ~35-40%
-      // smaller shuffle files at a decode speed that keeps the exchange
-      // scan-bound. On this single-box host the binding resource for
-      // the 1 B-row queries is DISK (q94's sf1000 window shuffle +
-      // copy-on-write store generations exceeded the FS with lz4), and
-      // on a real cluster the same bytes are the network — compression
-      // ratio is the right trade on both. Env-overridable for A/B.
-      .config("spark.io.compression.codec",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_CODEC", "zstd"))
-      // Let AQE re-optimize CACHED plans (default false pins every
-      // shuffle under a .cache() at initialPartitionNum — with
-      // initial-wide at 256 that put 256 tasks under EVERY cached
-      // frame: the CC edge cache, the BPE word histogram, q81's vocab
-      // table — 775-1567 tasks per query on kilobyte-sized cached
-      // data, pure scheduler churn). True lets AQE size cached-plan
-      // partitions from MEASURED bytes — the same scale-adaptive
-      // argument as initial-wide+coalesce itself, correct at any SF.
-      // Coalesced caches still report CoalescedHashPartitioning, so
-      // per-round joins keyed on the cache key keep eliding their
-      // exchange. Measured (min-of-2, sf0.1): q49 1.45→0.80 s,
-      // q68 2.55→1.39 s, q71 2.67→1.36 s, q77 0.99→0.69 s; suite
-      // task count for the 10 cache-using queries 9 289→561.
-      // Results are partitioning-invariant by design (integer/decimal
-      // aggregates, quantized geometry) — oracle-verified under BOTH
-      // settings. Env-overridable for A/B.
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-        sys.env.getOrElse("SPARK_GRAFT_CACHE_AQE", "true"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // Warmup: absorb JVM/codegen/parquet-footer startup cost outside the
-    // timed queries (runs a scan+agg touching the common tables).
-    try {
+  /** The queries whose name starts with one of `only`'s prefixes (every
+    * query when None), in suite order. */
+  private[graft] def select(only: Option[Seq[String]]): Seq[(String, (SparkSession, String) => DataFrame)] = {
+    val queries = SparkEntry.queries
+    suiteOrder(queries.keys.filter(n => only.forall(_.exists(n.startsWith))).toSeq)
+      .map(n => n -> queries(n))
+  }
+
+  /** Absorb JVM/codegen/parquet-footer startup cost outside the timed
+    * queries. A failed warmup is logged and skipped: the queries it
+    * warms still run, and a real fault shows up there. */
+  private[graft] def warmup(spark: SparkSession, sfDir: String): Unit = {
+    def attempt(what: String)(body: => Unit): Unit =
+      try body catch { case NonFatal(e) => System.err.println(s"warmup ($what) failed: $e") }
+    // a scan+agg touching the common tables
+    attempt("table") {
       spark.read.parquet(s"$sfDir/lineitem.parquet").groupBy("l_returnflag").count().count()
-      spark.read.parquet(s"$sfDir/documents.parquet").count()
-    } catch { case _: Throwable => () }
+      spark.read.parquet(s"$sfDir/documents.parquet").count(): Unit
+    }
     // Machinery warmup on a 2-row in-memory table: the FIRST use of each
     // execution path in a JVM (regexp inside an aggregate, window exec,
     // broadcast join, Generate/explode, higher-order lambdas, sort) pays
     // a one-off multi-second class-loading + codegen cost that would
     // otherwise be billed to whichever timed query happens to hit that
     // path first. Data volume here is nil; only the code paths matter.
-    try {
+    attempt("machinery") {
       import org.apache.spark.sql.functions._
       import org.apache.spark.sql.expressions.Window
       import spark.implicits._
@@ -180,8 +123,80 @@ object Bench {
       tiny.rollup(col("url"), col("n")).count().count()
       tiny.withColumn("lv", last(col("url"), ignoreNulls = true).over(
         Window.partitionBy("n").orderBy("n")
-          .rowsBetween(Window.unboundedPreceding, Window.currentRow))).count()
-    } catch { case _: Throwable => () }
+          .rowsBetween(Window.unboundedPreceding, Window.currentRow))).count(): Unit
+    }
+  }
+
+  /** The timed action: toRdd.count(), NOT df.count(). df.count()
+    * re-optimizes with zero required columns, and Catalyst then
+    * DELETES operators whose output the count doesn't need — a
+    * row-preserving window/join tail prunes to a parquet metadata
+    * count (measured: q37's as-of window, q57's semdedup window+join,
+    * q87's OOV join, q92's quota window). toRdd executes the physical
+    * plan with the query's full output schema (every output column
+    * materialized into UnsafeRows, final sorts included), so the
+    * timing covers the operator the query declares. */
+  private[graft] def execute(df: DataFrame): Long = df.queryExecution.toRdd.count()
+
+  /** Untimed hygiene at a query boundary, sized for a suite of
+    * `nQueries`. */
+  private[graft] def boundary(spark: SparkSession, nQueries: Int): Unit = {
+    // free result-backing checkpoints (CC labels, digest maps) so
+    // repeated queries don't accumulate block-manager residents
+    graft.analytics.CheckpointRegistry.releaseAll()
+    // Shuffle files and broadcasts are only deleted when the
+    // ContextCleaner sees their driver references GC'd — and a 96 g
+    // heap under a light driver load almost never GCs, so a long suite
+    // accumulates every prior query's shuffle output on disk (tens of
+    // GB at sf100), evicting the page-cached parquet the next query
+    // needs. Observed: q08 194.9 s / q25 51.7 s IN-SUITE at sf100 vs
+    // 20.3 s / 8.9 s in isolation min-of-2 — same code, same data. An
+    // explicit GC at each query boundary lets the cleaner reclaim the
+    // dead state while the clock is stopped.
+    spark.catalog.clearCache()
+    // ... and reclaim store-backed scratch NOW (WARC shards, frontier
+    // stores): at campaign scale the per-query scratch residue is
+    // monotonic and killed three sf1000 rows at 7.1 GB free (VERDICT
+    // r14 what's-wrong #2). Safe at a query boundary — every query
+    // allocates a fresh dir.
+    graft.tools.Scratch.sweepAll()
+    // GC + bounded wait for the ASYNCHRONOUS shuffle-file reclaim
+    // (measured: 42 GB of q44 sf1000 shuffle vanishes ~20-40 s after
+    // the boundary; a store-backed query starting milliseconds later
+    // races that deletion — this, not monotonic leakage, is what
+    // refused q99 in the r17 re-cut). Disk.settle exits on target
+    // headroom or observed-then-stopped growth, never on quiet ticks
+    // alone (ADVICE r15).
+    Disk.settle(Disk.requiredGb(nQueries) + 10): Unit
+  }
+
+  def main(args: Array[String]): Unit = {
+    if (refuseDirty(gitPorcelainDirty(), sys.env.get("SPARK_GRAFT_ALLOW_DIRTY"))) {
+      System.err.println(
+        "bench: REFUSING to run from a dirty tree — commit (or stash) first, " +
+          "or set SPARK_GRAFT_ALLOW_DIRTY=1 to override (artifact will be stamped -dirty).")
+      sys.exit(2)
+    }
+    // SPARK_GRAFT_ONLY=q22,q24 restricts to a subset (prefix match on
+    // the query name) — parsed here because the disk preflight is sized
+    // to the number of queries that will actually run.
+    val only = sys.env.get("SPARK_GRAFT_ONLY")
+      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
+    val suite = select(only)
+    val nSelected = suite.size
+    // disk preflight (VERDICT r13 ask #4, r14 what's-wrong #2): a
+    // 99%-full host produced two disk-pressure-shaped defects in r13,
+    // and the one-query-sized 5 GB floor let a 94-query campaign bench
+    // into scratch exhaustion in r14 — refuse with a named reason, with
+    // the floor sized to the suite length.
+    try Disk.preflight(s"bench ($nSelected queries)", Disk.requiredGb(nSelected)) catch {
+      case e: IllegalStateException =>
+        System.err.println(e.getMessage)
+        sys.exit(3)
+    }
+    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    val spark = Session.local()
+    warmup(spark, sfDir)
     // SPARK_GRAFT_REPS=N runs the suite N times in ONE JVM and keeps
     // the per-query minimum — on a shared host the min is the signal,
     // single runs carry ±30% (spikes: 3×) load noise. Default 2: one
@@ -192,29 +207,14 @@ object Bench {
     // adjudication (VERDICT ask #5); the reason rides in the artifact.
     val errorDetails = scala.collection.mutable.Map.empty[String, String]
     def runSuite(dir: String): Map[String, Double] = {
-      val selected = SparkEntry.queries
-        .filter { case (name, _) => only.forall(_.exists(name.startsWith)) }
-      val qs = suiteOrder(selected.keys.toSeq).map(n => n -> selected(n))
       val runs = (1 to reps).map { _ =>
-        qs.map { case (name, fn) =>
+        suite.map { case (name, fn) =>
           val t0 = System.nanoTime()
           // a failed query is recorded as failed (NaN), never as a timing:
           // an exception's duration (~0.05 s) silently deflating the total
           // is exactly the artifact lying when it matters most.
-          //
-          // The action is toRdd.count(), NOT df.count(): df.count()
-          // re-optimizes with zero required columns, and Catalyst then
-          // DELETES operators whose output the count doesn't need — a
-          // row-preserving window/join tail prunes to a parquet metadata
-          // count (measured: q37's as-of window, q57's semdedup
-          // window+join, q87's OOV join, q92's quota window —
-          // tools/PruneCheck.scala flags them). toRdd executes the
-          // physical plan with the query's full output schema (every
-          // output column materialized into UnsafeRows, final sorts
-          // included), so the timing covers the operator the query
-          // declares.
           val ok =
-            try { fn(spark, dir).queryExecution.toRdd.count(); true }
+            try { execute(fn(spark, dir)); true }
             catch { case e: Throwable =>
               System.err.println(s"bench: $name FAILED: ${e.getMessage}")
               val reason = (e.getClass.getSimpleName + ": " +
@@ -229,34 +229,7 @@ object Bench {
               false
             }
           val t = if (ok) (System.nanoTime() - t0) / 1e9 else Double.NaN
-          // free result-backing checkpoints (CC labels, digest maps) so
-          // repeated queries don't accumulate block-manager residents
-          graft.analytics.CheckpointRegistry.releaseAll()
-          // Inter-query hygiene (untimed): shuffle files and broadcasts
-          // are only deleted when the ContextCleaner sees their driver
-          // references GC'd — and a 96 g heap under a light driver load
-          // almost never GCs, so a long suite accumulates every prior
-          // query's shuffle output on disk (tens of GB at sf100),
-          // evicting the page-cached parquet the next query needs.
-          // Observed: q08 194.9 s / q25 51.7 s IN-SUITE at sf100 vs
-          // 20.3 s / 8.9 s in isolation min-of-2 — same code, same
-          // data. An explicit GC at each query boundary lets the
-          // cleaner reclaim the dead state while the clock is stopped.
-          spark.catalog.clearCache()
-          // ... and reclaim store-backed scratch NOW (WARC shards,
-          // frontier stores): at campaign scale the per-query scratch
-          // residue is monotonic and killed three sf1000 rows at 7.1 GB
-          // free (VERDICT r14 what's-wrong #2). Safe at a query
-          // boundary — every query allocates a fresh dir.
-          graft.tools.Scratch.sweepAll()
-          // GC + bounded wait for the ASYNCHRONOUS shuffle-file reclaim
-          // (measured: 42 GB of q44 sf1000 shuffle vanishes ~20-40 s
-          // after the boundary; a store-backed query starting
-          // milliseconds later races that deletion — this, not
-          // monotonic leakage, is what refused q99 in the r17 re-cut).
-          // Disk.settle exits on target headroom or observed-then-
-          // stopped growth, never on quiet ticks alone (ADVICE r15).
-          Disk.settle(Disk.requiredGb(nSelected) + 10): Unit
+          boundary(spark, nSelected)
           name -> t
         }.toMap
       }

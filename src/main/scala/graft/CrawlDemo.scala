@@ -2,8 +2,6 @@ package graft
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.SparkSession
-
 import graft.fetch.ProtocolFactory
 import graft.filters._
 import graft.frontier.FrontierStore
@@ -23,14 +21,7 @@ object CrawlDemo {
       if (target.contains("://")) target else s"file://$target/index.html"
     val maxIter = args.lift(1).map(_.toInt).getOrElse(5)
 
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-crawl-demo")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local()
 
     val chain = new UrlFilterChain(Seq(
       new BasicUrlNormalizer(), new BasicUrlFilter(), new SelfUrlFilter(),

@@ -2,7 +2,6 @@ package graft
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.frontier.FrontierStore
@@ -19,13 +18,7 @@ import graft.model.Status
 object FrontierBench {
   def main(args: Array[String]): Unit = {
     val baseRows = args.headOption.map(_.toInt).getOrElse(200000)
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local()
 
     val store = new FrontierStore(Files.createTempDirectory("fbench").toString)
 

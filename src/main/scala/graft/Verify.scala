@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -13,23 +12,13 @@ object Verify {
         System.err.println(e.getMessage)
         sys.exit(3)
     }
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // DuckDB reads TIMESTAMP_MICROS natively; INT96 (Spark's default)
-      // round-trips less predictably — pin the portable encoding.
-      .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-      // same cached-plan AQE setting as the bench session (Bench.scala):
-      // results are partitioning-invariant by design, and running the
-      // CORRECTNESS gate under the bench's config certifies that the
-      // config change cannot move a declared query's hash.
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-        sys.env.getOrElse("SPARK_GRAFT_CACHE_AQE", "true"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // the bench's own session: the correctness gate certifies that no
+    // engine setting moves a declared query's hash
+    val spark = Session.local()
+    // DuckDB reads TIMESTAMP_MICROS natively; INT96 (Spark's default)
+    // round-trips less predictably — pin the portable encoding of the
+    // files this dump writes.
+    spark.conf.set("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
     new java.io.File(outDir).mkdirs()
     // mismatch-prone faces (q88 WARC round-trip) persist diagnostic
     // sidecars next to the verify output when this property names a

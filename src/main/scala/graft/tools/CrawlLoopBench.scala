@@ -2,8 +2,6 @@ package graft.tools
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.SparkSession
-
 import graft.fetch.{ContentStore, ProtocolFactory}
 import graft.filters.{BasicUrlFilter, BasicUrlNormalizer, MaxDepthFilter, RegexUrlFilter, SelfUrlFilter, UrlFilterChain}
 import graft.frontier.FrontierStore
@@ -51,14 +49,7 @@ object CrawlLoopBench {
     val pages = args.lift(1).map(_.toInt).getOrElse(50)
     val perHost = args.lift(2).map(_.toInt).getOrElse(10)
     val delayMs = 1000L
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session.local()
 
     // H hosts × P pages; p0 is the seed and links the rest (relative
     // hrefs resolve against the page's own fake-host base URL)

@@ -2,7 +2,6 @@ package graft.tools
 
 import java.sql.Timestamp
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.frontier.FrontierStore
@@ -23,13 +22,7 @@ object MergeSoak {
     val generations = args.lift(1).map(_.toInt).getOrElse(120)
     val batch = args.lift(2).map(_.toInt).getOrElse(8000)
 
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .appName("merge-soak").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session.local()
 
     val root = java.nio.file.Files.createTempDirectory("frontier-soak").toString
     val store = new FrontierStore(root, numBuckets = 64)

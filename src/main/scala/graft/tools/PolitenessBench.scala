@@ -2,7 +2,6 @@ package graft.tools
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.fetch.{FetchStage, ProtocolFactory}
@@ -25,13 +24,7 @@ object PolitenessBench {
     val hosts = args.headOption.map(_.toInt).getOrElse(16)
     val pages = args.lift(1).map(_.toInt).getOrElse(20)
     val delayMs = 1000L
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session.local()
     import spark.implicits._
 
     val dir = Scratch.dir("polite_corpus")
@@ -49,7 +42,7 @@ object PolitenessBench {
     val t0 = System.nanoTime()
     val fetched = FetchStage.fetch(spark, batch, new ProtocolFactory(),
         crawlDelayMs = delayMs, respectRobots = false,
-        parallelism = Some(cpus.toInt))
+        parallelism = Some(graft.Session.cpus))
       .where(col("status") === graft.model.Status.Fetched)
       .count()
     val wallSec = (System.nanoTime() - t0) / 1e9

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.streaming.EventStreams
@@ -29,14 +29,7 @@ object StreamingSoak {
   def main(args: Array[String]): Unit = {
     val seconds = args.headOption.map(_.toInt).getOrElse(60)
     val scale = args.lift(1).map(_.toDouble).getOrElse(1.0)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session.local()
     import spark.implicits._
 
     def rateSource(rowsPerSec: Int): DataFrame =

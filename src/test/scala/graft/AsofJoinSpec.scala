@@ -2,20 +2,13 @@ package graft
 
 import java.sql.Timestamp
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.AsofJoin
 
 /** Backward as-of join: inclusive at-or-before match, left-join nulls,
   * single-shuffle plan. */
-class AsofJoinSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class AsofJoinSpec extends AnyFunSuite with LocalSpark {
 
   private def ts(s: String) = Timestamp.valueOf(s)
 

@@ -7,7 +7,7 @@ import graft.parse.{BinaryDocs, BinaryParser, Ole2}
   * trips (compressed + uncompressed + Unicode + escapes), link
   * annotations, titles, RTF control-word handling, plain-text and
   * failure dispatch. */
-class BinaryParseSpec extends AnyFunSuite {
+class BinaryParseSpec extends AnyFunSuite with LocalSpark {
 
   test("pdf round trip, uncompressed stream") {
     val text = "the quick brown fox\njumps over the lazy dog"
@@ -304,11 +304,6 @@ class BinaryParseSpec extends AnyFunSuite {
   }
 
   test("image payloads through the FULL parse stage carry parse.image.* metadata") {
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
     import spark.implicits._
     val fetched = Seq(
       ("http://site.example/a.png", "site.example", graft.model.Status.Fetched,

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -9,17 +8,11 @@ import graft.plans.Bucketing
 /** Bucketed tables must join on the bucket key WITHOUT an Exchange on
   * the bucketed sides — the co-located-join contract that makes the
   * write-time shuffle amortize across every downstream join. */
-class BucketingSpec extends AnyFunSuite {
+class BucketingSpec extends AnyFunSuite with LocalSpark {
 
   // getOrCreate returns the suite-shared session in a full run, so no
   // per-spec warehouse config can be relied on: tables get unique names
   // and explicit temp locations instead (the IndexSinkSpec Derby rule)
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
   private val run = java.util.UUID.randomUUID().toString.replace("-", "")
   private val docsTable = s"docs_bucketed_$run"
   private val keepTable = s"keep_bucketed_$run"

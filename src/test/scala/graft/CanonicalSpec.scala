@@ -1,19 +1,12 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.index.IndexerMapping
 import graft.parse.{HtmlParser, SitemapParser}
 
 /** Canonical-URL extraction + indexer guard, sitemap lastmod filter. */
-class CanonicalSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class CanonicalSpec extends AnyFunSuite with LocalSpark {
 
   test("rel=canonical extracted in both attribute orders, resolved") {
     val p1 = HtmlParser.parse(

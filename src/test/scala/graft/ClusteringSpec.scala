@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -11,13 +10,7 @@ import graft.analytics.Clustering
   * point of quantized geometry), assignments minimize distance to the
   * final centroids, and the summary view reconciles with the per-row
   * assignments. */
-class ClusteringSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class ClusteringSpec extends AnyFunSuite with LocalSpark {
 
   private def embeddings = spark.read
     .parquet("/root/testdata/sf0.001/embeddings.parquet")

@@ -3,20 +3,13 @@ package graft
 import java.nio.file.Files
 import java.sql.Timestamp
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.fetch.ContentStore
 
 /** Content cache keyed by sha256(url): newest capture wins, cache-check
   * splits a batch into hits and misses (S3Cacher/S3CacheChecker). */
-class ContentStoreSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class ContentStoreSpec extends AnyFunSuite with LocalSpark {
 
   private def ts(s: String) = Timestamp.valueOf(s)
 

@@ -6,7 +6,7 @@ import java.util.concurrent.ConcurrentLinkedQueue
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerTaskEnd}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.funsuite.AnyFunSuite
@@ -21,14 +21,7 @@ import graft.streaming.CrawlTopology
 /** The fixed cost of a crawl cycle: the frontier merge writes in
   * parallel through one exchange, a cycle leaves no cache behind, and
   * every job of a cycle is labelled with its leg. */
-class CrawlCycleSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class CrawlCycleSpec extends AnyFunSuite with LocalSpark {
 
   private val chain = new UrlFilterChain(Seq(
     new BasicUrlNormalizer(), new BasicUrlFilter(), new SelfUrlFilter(),

@@ -2,7 +2,6 @@ package graft
 
 import java.nio.file.{Files, Path, Paths}
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -16,14 +15,7 @@ import graft.streaming.CrawlTopology
 /** The minimum end-to-end slice of SURVEY §7: seed → filter → merge →
   * frontier select → file:// fetch → parse → outlink discovery →
   * re-merge → indexer projection + status counts. */
-class CrawlE2ESpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class CrawlE2ESpec extends AnyFunSuite with LocalSpark {
 
   // file:// URLs have no host — allow-everything regex chain, keep depth cap
   private val chain = new UrlFilterChain(Seq(

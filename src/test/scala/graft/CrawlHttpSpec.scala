@@ -4,7 +4,6 @@ import java.net.InetSocketAddress
 import java.nio.file.Files
 
 import com.sun.net.httpserver.{HttpExchange, HttpHandler, HttpServer}
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.fetch.ProtocolFactory
@@ -16,13 +15,7 @@ import graft.streaming.CrawlTopology
 /** Real-HTTP crawl: JDK HttpServer serving a tiny site with robots.txt —
   * exercises HttpProtocol, the robots cache/deny path, and redirect
   * handling end-to-end (FetcherBoltTest style, SURVEY §5.5). */
-class CrawlHttpSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class CrawlHttpSpec extends AnyFunSuite with LocalSpark {
 
   private val pages: Map[String, (Int, String, String)] = Map(
     "/robots.txt" -> (200, "text/plain",

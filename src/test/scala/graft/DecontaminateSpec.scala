@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -9,13 +8,7 @@ import graft.functions.{RepStatsOps, TextStatExpressions}
 
 /** Benchmark decontamination (n-gram overlap vs an eval set) and the
   * exact one-pass 2-gram repetition stats. */
-class DecontaminateSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class DecontaminateSpec extends AnyFunSuite with LocalSpark {
 
   test("ngramHits: hit counts, shingle totals, first_match = min bench id") {
     import spark.implicits._

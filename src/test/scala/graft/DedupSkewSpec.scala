@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.analytics.{Dedup, Similarity}
@@ -9,13 +8,7 @@ import graft.analytics.{Dedup, Similarity}
   * (many identical / boilerplate docs) must complete with a BOUNDED
   * pair count instead of N²/2 rows — the hot-bucket cap in
   * lshCandidatePairs and the document-frequency prune in jaccardPairs. */
-class DedupSkewSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class DedupSkewSpec extends AnyFunSuite with LocalSpark {
 
   import spark.implicits._
 

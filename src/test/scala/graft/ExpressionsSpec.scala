@@ -1,19 +1,12 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.functions.{UrlExpressions, GraftExtensions}
 
 /** Native Catalyst expression specs: same semantics as the Scala layer,
   * and codegen actually engages (no CodegenFallback). */
-class ExpressionsSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class ExpressionsSpec extends AnyFunSuite with LocalSpark {
 
   test("normalize_url expression via Column API") {
     import spark.implicits._

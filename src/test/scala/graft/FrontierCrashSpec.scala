@@ -3,7 +3,6 @@ package graft
 import java.nio.file.{Files, Paths, StandardCopyOption}
 import java.sql.Timestamp
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.frontier.FrontierStore
@@ -18,14 +17,7 @@ import graft.model.Status
   * and the next merge/vacuum must self-heal the leftovers. Each test
   * reproduces one kill point by performing the protocol's prefix by
   * hand against a store that real merges built. */
-class FrontierCrashSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class FrontierCrashSpec extends AnyFunSuite with LocalSpark {
 
   private val t0 = Timestamp.valueOf("2024-01-01 00:00:00")
 

@@ -3,7 +3,6 @@ package graft
 import java.nio.file.Files
 import java.sql.Timestamp
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.frontier.FrontierStore
@@ -11,14 +10,7 @@ import graft.model.Status
 import graft.parse.Charsets
 
 /** HybridSpout refill, deletion stream, typed reads, charset detect. */
-class FrontierExtrasSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class FrontierExtrasSpec extends AnyFunSuite with LocalSpark {
 
   private val t0 = Timestamp.valueOf("2024-01-01 00:00:00")
   private val t1 = Timestamp.valueOf("2024-01-02 00:00:00")

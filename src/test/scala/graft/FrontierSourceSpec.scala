@@ -3,7 +3,6 @@ package graft
 import java.nio.file.Files
 import java.sql.Timestamp
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.frontier.FrontierStore
@@ -12,14 +11,7 @@ import graft.model.Status
 /** The custom crawl source: frontier table as a DSv2 micro-batch
   * stream — offsets advance only on merges, batches are the frontier
   * selection, partitions are keyed for politeness. */
-class FrontierSourceSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class FrontierSourceSpec extends AnyFunSuite with LocalSpark {
 
   private def statusRows(rows: (String, String)*) = {
     import spark.implicits._

@@ -3,7 +3,6 @@ package graft
 import java.nio.file.Files
 import java.sql.Timestamp
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -12,14 +11,7 @@ import graft.model.Status
 
 /** Frontier merge + select semantics (AbstractStatusUpdaterBolt /
   * AggregationSpout — SURVEY §2.7, §3.2/§3.3). */
-class FrontierSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class FrontierSpec extends AnyFunSuite with LocalSpark {
 
   private def freshStore(maxErrors: Int = 3): FrontierStore =
     new FrontierStore(Files.createTempDirectory("frontier").toString,

@@ -3,7 +3,6 @@ package graft
 import java.net.InetSocketAddress
 
 import com.sun.net.httpserver.{HttpExchange, HttpHandler, HttpServer}
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.index.HttpBulkIndexSink
@@ -11,13 +10,7 @@ import graft.index.HttpBulkIndexSink
 /** HTTP `_bulk` index sink against a local stub server (the wire
   * contract of the reference's OpenSearch IndexerBolt/DeletionBolt) +
   * proxy-pool rotation on the fetch protocol (MultiProxyManager). */
-class HttpBulkSinkSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class HttpBulkSinkSpec extends AnyFunSuite with LocalSpark {
 
   /** Stub `_bulk` endpoint: records every NDJSON line, answers the
     * bulk contract's `{"errors":false}` (or `true` when poisoned). */

@@ -3,7 +3,6 @@ package graft
 import java.nio.file.Files
 import java.sql.DriverManager
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.fetch.ProtocolFactory
@@ -15,13 +14,7 @@ import graft.streaming.CrawlTopology
 /** Round-trip of the live JDBC index sink against embedded Derby:
   * upsert vs create-only, sha256 ids, deletion, and the crawl-loop
   * wiring (IndexerBolt + DeletionBolt semantics). */
-class IndexSinkSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class IndexSinkSpec extends AnyFunSuite with LocalSpark {
 
   // Unique DB name per suite INSTANCE: in-memory Derby databases are
   // process-global in the forked test JVM, so a fixed name collides

@@ -8,13 +8,7 @@ import graft.plans.InputWidth
   * cannot feed every core — a compact parquet table (one file, one row
   * group) — and be a provable no-op everywhere else, since at cluster
   * scale the no-op path is the only acceptable cost. */
-class InputWidthSpec extends AnyFunSuite {
-  lazy val spark: org.apache.spark.sql.SparkSession =
-    org.apache.spark.sql.SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+class InputWidthSpec extends AnyFunSuite with LocalSpark {
   import spark.implicits._
 
   private def tmpDir(name: String): String = {

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -10,13 +9,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * with intact schema/values, lineage truncation (round N+1 reads a
   * LogicalRDD scan, not the round-N plan), and the edge table's
   * reusable hash partitioning. */
-class IterateSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class IterateSpec extends AnyFunSuite with LocalSpark {
 
   test("checkpoint preserves schema and values across the internal-row bridge") {
     import spark.implicits._

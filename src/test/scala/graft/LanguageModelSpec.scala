@@ -1,19 +1,12 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.analytics.LanguageModel
 
 /** Corpus-trained bigram LM fluency: exact integer scores, and the
   * digest-collapsed path pinned bit-identical to the doc-level path. */
-class LanguageModelSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class LanguageModelSpec extends AnyFunSuite with LocalSpark {
 
   test("fluency: hand-computed integer conditional probabilities") {
     import spark.implicits._

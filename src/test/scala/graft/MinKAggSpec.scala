@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -12,13 +11,7 @@ import graft.functions.MinKByOrdStrAgg.minKByOrdStr
   * including ties, duplicate rows, groups smaller than k, and the
   * partial/final merge path (many input partitions per group).
   */
-class MinKAggSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class MinKAggSpec extends AnyFunSuite with LocalSpark {
 
   private def viaWindow(df: org.apache.spark.sql.DataFrame, k: Int) = {
     val w = Window.partitionBy(col("g")).orderBy(col("o"), col("s"))

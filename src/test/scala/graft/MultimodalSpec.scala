@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -8,13 +7,7 @@ import graft.multimodal.Multimodal
 
 /** Multimodal plumbing: schema, framing, decode batch shape, the
   * media→embedding→ANN bridge, and size-aware partitioning. */
-class MultimodalSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class MultimodalSpec extends AnyFunSuite with LocalSpark {
 
   private def docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
 

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.FileSourceScanExec
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.scalatest.funsuite.AnyFunSuite
@@ -10,15 +9,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * per-query shuffle counts stay at the minimum the semantics require.
   * These are the properties that decide whether a plan survives a 100×
   * scale-up, checked mechanically. */
-class PlanSpec extends AnyFunSuite {
+class PlanSpec extends AnyFunSuite with LocalSpark {
   private val sf = "/root/testdata/sf0.001"
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
 
   // executedPlan is the AQE wrapper (no children pre-execution); the
   // pre-AQE sparkPlan carries the scans, and shuffle counting needs the

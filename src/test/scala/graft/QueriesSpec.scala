@@ -1,20 +1,12 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Smoke-level checks of every SparkEntry query on sf0.001 (full
   * hash-correctness runs against the DuckDB oracle via Verify +
   * tools/check_oracle.py). */
-class QueriesSpec extends AnyFunSuite {
+class QueriesSpec extends AnyFunSuite with LocalSpark {
   private val sf = "/root/testdata/sf0.001"
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
 
   test("every oracle-declared query exists in queries") {
     val missing = SparkEntry.oracleSql.keySet -- SparkEntry.queries.keySet

@@ -2,21 +2,13 @@ package graft
 
 import java.sql.Timestamp
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.analytics.{Sampling, Sessions}
 
 /** Sessionization gap semantics + deterministic-sampling invariants. */
-class SessionsSamplingSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class SessionsSamplingSpec extends AnyFunSuite with LocalSpark {
 
   private def ts(min: Long): Timestamp = new Timestamp(min * 60000L)
 

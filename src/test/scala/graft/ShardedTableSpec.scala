@@ -3,7 +3,6 @@ package graft
 import java.nio.file.Files
 import java.sql.Timestamp
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -13,13 +12,7 @@ import graft.index.{BandLedger, DigestLedger}
 /** The digest-sharded append layout shared by the content store and the
   * crawl ledgers: 16 one-hex-digit shards, and stores written with the
   * older two-digit layout still answer membership and cache checks. */
-class ShardedTableSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class ShardedTableSpec extends AnyFunSuite with LocalSpark {
 
   private def sha256(s: String): String =
     java.security.MessageDigest.getInstance("SHA-256")

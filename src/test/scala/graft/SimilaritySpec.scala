@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -9,13 +8,7 @@ import graft.analytics.Similarity
 /** IVF multi-probe ANN search properties: exactness when every cell is
   * probed, candidate-superset monotonicity in nprobe, and measured
   * recall against the brute-force baseline on real test vectors. */
-class SimilaritySpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class SimilaritySpec extends AnyFunSuite with LocalSpark {
 
   private def embeddings = spark.read
     .parquet("/root/testdata/sf0.001/embeddings.parquet")

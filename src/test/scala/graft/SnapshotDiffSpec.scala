@@ -1,19 +1,12 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.SnapshotDiff
 
 /** Truth table for [[SnapshotDiff.diff]]: presence classes, null-safe
   * value compare, multi-column keys and values. */
-class SnapshotDiffSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class SnapshotDiffSpec extends AnyFunSuite with LocalSpark {
 
   test("ADDED / REMOVED / CHANGED / SAME classification with null-safe values") {
     import spark.implicits._

@@ -2,7 +2,6 @@ package graft
 
 import java.sql.Timestamp
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.streaming.Trigger
 import org.scalatest.funsuite.AnyFunSuite
@@ -12,14 +11,7 @@ import graft.streaming.EventStreams.{Seen, Timing}
 
 /** Structured Streaming specs driven by MemoryStream — windowed counts
   * with watermark, TTL dedup state, per-key EMA state. */
-class StreamingSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class StreamingSpec extends AnyFunSuite with LocalSpark {
 
   private def ts(s: String) = Timestamp.valueOf(s)
 

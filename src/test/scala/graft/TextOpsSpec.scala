@@ -1,19 +1,12 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.analytics.{Packing, TextAnalysis}
 
 /** Unit truth tables for topTerms / redactPii / sequence packing. */
-class TextOpsSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class TextOpsSpec extends AnyFunSuite with LocalSpark {
 
   test("topTerms: frequency first, rarity breaks ties, then lexicographic") {
     import spark.implicits._

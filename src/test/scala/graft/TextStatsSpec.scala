@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.analytics.TextAnalysis
@@ -8,13 +7,7 @@ import graft.functions.LangIdOps
 
 /** Truth tables for the native text-stats pass and the trigram/script
   * language-ID model. */
-class TextStatsSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class TextStatsSpec extends AnyFunSuite with LocalSpark {
 
   import spark.implicits._
 

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -12,13 +11,8 @@ import graft.analytics.{BpeTrainer, Decontaminate, Dsir, Sharding}
   * DuckDB oracle (q67–q70); these pin the operator SEMANTICS on
   * synthetic micro-corpora where the right answer is computable by
   * hand. */
-class TrainingOpsSpec extends AnyFunSuite {
+class TrainingOpsSpec extends AnyFunSuite with LocalSpark {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
   import spark.implicits._
 
   test("Dsir ranks target-vocabulary docs above off-target docs") {

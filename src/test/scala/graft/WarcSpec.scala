@@ -2,20 +2,13 @@ package graft
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.sources.Warc
 
 /** WARC write → read roundtrip (WARCSpout / WARCHdfsBolt semantics). */
-class WarcSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class WarcSpec extends AnyFunSuite with LocalSpark {
 
   test("roundtrip: content rows -> gzipped WARC -> content rows") {
     import spark.implicits._

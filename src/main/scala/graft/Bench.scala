@@ -90,14 +90,24 @@ object Bench {
       .map(n => n -> queries(n))
   }
 
+  /** Runs `body`; a non-fatal failure is handed to `record` and the
+    * result is false. Fatal errors (OOM, linkage) propagate, and so
+    * does an interrupt, with the thread's interrupt flag set. Bench and
+    * Verify record a failed query through this. */
+  private[graft] def attempt(body: => Unit)(record: Throwable => Unit): Boolean =
+    try { body; true } catch {
+      case e: InterruptedException => Thread.currentThread().interrupt(); throw e
+      case NonFatal(e) => record(e); false
+    }
+
   /** Absorb JVM/codegen/parquet-footer startup cost outside the timed
     * queries. A failed warmup is logged and skipped: the queries it
     * warms still run, and a real fault shows up there. */
   private[graft] def warmup(spark: SparkSession, sfDir: String): Unit = {
-    def attempt(what: String)(body: => Unit): Unit =
-      try body catch { case NonFatal(e) => System.err.println(s"warmup ($what) failed: $e") }
+    def warm(what: String)(body: => Unit): Unit =
+      attempt(body)(e => System.err.println(s"warmup ($what) failed: $e")): Unit
     // a scan+agg touching the common tables
-    attempt("table") {
+    warm("table") {
       spark.read.parquet(s"$sfDir/lineitem.parquet").groupBy("l_returnflag").count().count()
       spark.read.parquet(s"$sfDir/documents.parquet").count(): Unit
     }
@@ -107,7 +117,7 @@ object Bench {
     // a one-off multi-second class-loading + codegen cost that would
     // otherwise be billed to whichever timed query happens to hit that
     // path first. Data volume here is nil; only the code paths matter.
-    attempt("machinery") {
+    warm("machinery") {
       import org.apache.spark.sql.functions._
       import org.apache.spark.sql.expressions.Window
       import spark.implicits._
@@ -214,8 +224,7 @@ object Bench {
           // an exception's duration (~0.05 s) silently deflating the total
           // is exactly the artifact lying when it matters most.
           val ok =
-            try { execute(fn(spark, dir)); true }
-            catch { case e: Throwable =>
+            attempt(execute(fn(spark, dir))) { e =>
               System.err.println(s"bench: $name FAILED: ${e.getMessage}")
               val reason = (e.getClass.getSimpleName + ": " +
                 Option(e.getMessage).getOrElse("(no message)")).take(300)
@@ -225,8 +234,7 @@ object Bench {
               val key =
                 if (dir == sfDir) name
                 else s"$name@${java.nio.file.Paths.get(dir).getFileName}"
-              errorDetails.getOrElseUpdate(key, reason)
-              false
+              errorDetails.getOrElseUpdate(key, reason): Unit
             }
           val t = if (ok) (System.nanoTime() - t0) / 1e9 else Double.NaN
           boundary(spark, nSelected)

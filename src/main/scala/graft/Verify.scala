@@ -27,7 +27,7 @@ object Verify {
     System.setProperty("graft.verify.out", outDir)
     var failed = List.empty[String]
     SparkEntry.queries.foreach { case (name, fn) =>
-      try {
+      try Bench.attempt {
         val df = fn(spark, sfDir)
         // DuckDB reads Spark's UTC-adjusted timestamps as TIMESTAMPTZ,
         // while the oracle SQL yields naive TIMESTAMP — normalize all
@@ -40,8 +40,7 @@ object Verify {
           }
         }
         out.coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")
-      }
-      catch { case e: Throwable =>
+      } { e =>
         failed ::= name
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }

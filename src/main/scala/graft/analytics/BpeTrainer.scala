@@ -42,14 +42,14 @@ object BpeTrainer {
 
   /** Corpus → sentinel-encoded word histogram (the only corpus-wide
     * pass; BPE statistics depend on nothing else). ADAPTIVE on the
-    * [[Dedup.noVerbatimDups]] probe: a replicated corpus tokenizes
+    * [[Collapse.unique]] probe: a replicated corpus tokenizes
     * every copy of a text into the same words, so with duplicates
     * present the corpus collapses to one representative per content
     * digest and word counts recover exactly as member-weight sums —
     * identical histogram, tokenization priced by DISTINCT texts. */
   private def wordHistogram(corpus: DataFrame, textCol: String): DataFrame = {
     val weighted =
-      if (Dedup.noVerbatimDups(corpus, textCol, textCol))
+      if (Collapse.unique(corpus, textCol, textCol))
         corpus.select(explode(Dedup.words(col(textCol))).as("w"),
           lit(1L).as("m"))
       else

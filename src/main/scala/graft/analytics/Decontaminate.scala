@@ -20,16 +20,10 @@ import org.apache.spark.sql.functions._
   * laptop, an OOM at 100 TB. The hint pins the build side to the one
   * input that does not grow with the corpus.
   *
-  * Adaptive on the [[Dedup.noVerbatimDups]] probe, like the dedup
-  * family: a replicated crawl corpus shingles every copy of a text for
-  * the same answer, so when verbatim duplicates exist the corpus
-  * collapses to one representative per content digest BEFORE
-  * shingling (fixed-width-only HashAggregate; representative text via
-  * a join-back on digest + id = rep), overlap is computed once per
-  * DISTINCT text, and the per-digest result expands back to every
-  * member through a broadcast join — identical output by construction
-  * (identical texts have identical overlap), spec-pinned. On a unique
-  * corpus the collapse is pure overhead and the direct path runs.
+  * Routed through [[Collapse]] like the dedup family: identical texts
+  * have identical overlap, so on a replicated corpus shingling and the
+  * gram shuffle run once per DISTINCT text and results expand back to
+  * every member.
   *
   * Shingling is the native one-pass
   * [[graft.functions.DistinctShinglesExpr]] with [[Dedup.words]]'
@@ -42,20 +36,18 @@ object Decontaminate {
     * (doc_id, n_hits, n_shingles, contamination, first_match) with
     * contamination = n_hits / n_shingles over DISTINCT k-word shingles
     * and first_match = the smallest benchmark id owning a shared gram.
-    * Docs shorter than k words have no shingles and never appear. */
+    * Docs shorter than k words have no shingles and never appear. The
+    * corpus scan is WIDENED: shingling is CPU-dense per row, and a
+    * compact single-row-group corpus pins it to one task (measured
+    * 0.8 s serial inside q90 at sf0.1 while 31 cores idle). */
   def ngramHits(corpus: DataFrame, bench: DataFrame, idCol: String,
-                textCol: String, k: Int,
-                corpusNoDups: Option[Boolean] = None,
-                benchNoDups: Option[Boolean] = None): DataFrame = {
-    // corpusNoDups / benchNoDups: optional PRECOMPUTED duplication-
-    // probe answers (see [[Dedup.nearDupComponents]]'s `noDups`) —
-    // composite pipelines fuse the probe scans into one pass; routing
-    // and output are unchanged.
-    val bg = benchGrams(bench, idCol, textCol, k, benchNoDups)
-    if (corpusNoDups.getOrElse(Dedup.noVerbatimDups(corpus, textCol, textCol)))
-      directHits(corpus, bg, idCol, textCol, k)
-    else collapsedHits(corpus, bg, idCol, textCol, k)
-  }
+                textCol: String, k: Int): DataFrame =
+    hitsOver(Collapse.textUnits(corpus, idCol, textCol),
+      Collapse.textUnits(bench, idCol, textCol), k)
+
+  private[graft] def hitsOver(corpus: Collapse.Units, bench: Collapse.Units,
+                              k: Int): DataFrame =
+    hits(corpus, broadcast(benchGramsOver(bench, k)), k, identity)
 
   /** [[ngramHits]] for the regime where the eval-gram table has grown
     * past broadcast-hash-relation size (a full benchmark-suite gram
@@ -65,7 +57,7 @@ object Decontaminate {
     * into the probe task as a codegen reference object), prefilter the
     * exploded corpus grams MAP-ONLY, and confirm the survivors with an
     * exact sort-merge join. Zero false negatives means the output is
-    * hash-identical to [[ngramHits]]' direct path by construction; the
+    * hash-identical to [[ngramHits]] by construction; the
     * bloom only changes which bytes reach the exchange — at a typical
     * sub-percent contamination rate, ~all of the corpus-gram shuffle
     * (the dominant cost: O(corpus tokens) rows) disappears before it
@@ -88,9 +80,14 @@ object Decontaminate {
     * unconditionally. */
   def ngramHitsBloom(corpus: DataFrame, bench: DataFrame, idCol: String,
                      textCol: String, k: Int, log2Bits: Int = 20,
-                     numHash: Int = 5): DataFrame = {
+                     numHash: Int = 5): DataFrame =
+    bloomHitsOver(Collapse.textUnits(corpus, idCol, textCol),
+      Collapse.textUnits(bench, idCol, textCol), k, log2Bits, numHash)
+
+  private[graft] def bloomHitsOver(corpus: Collapse.Units, bench: Collapse.Units,
+                                   k: Int, log2Bits: Int, numHash: Int): DataFrame = {
     import graft.functions.BloomFunctions
-    val bg = benchGrams(bench, idCol, textCol, k)
+    val bg = benchGramsOver(bench, k)
     val setPositions = bg
       .select(explode(BloomFunctions
         .bloomPositions(col("g"), numHash, log2Bits)).as("p"))
@@ -98,85 +95,41 @@ object Decontaminate {
       .collect() // bounded by 2^log2Bits — the filter's own bit count
       .map(_.getInt(0))
     val bits = graft.functions.BloomOps.buildBits(setPositions, log2Bits)
-    def prefiltered(grams: DataFrame) = grams
-      .where(BloomFunctions.bloomContains(col("g"), bits, numHash, log2Bits))
-    // ADAPTIVE like ngramHits: on a replicated corpus, shingling every
-    // copy feeds the (pinned sort-merge) confirm join a gram stream
-    // that scales with COPIES — the collapse prices it by DISTINCT
-    // texts and expands per-digest hits back to members, bit-identical
-    // (measured 30 → ~2 s at a 100×-replicated sf10). The bloom
-    // prefilter applies to the rep gram stream the same way.
-    if (Dedup.noVerbatimDups(corpus, textCol, textCol)) {
-      // widened scan (r17): same starved-scan repair as [[directHits]]
-      val grams = prefiltered(docGrams(
-        withGs(graft.plans.InputWidth.widen(
-          corpus.select(col(idCol).cast("long").as("doc_id"),
-            col(textCol))), textCol, k), "doc_id"))
-      grams.join(bg.hint("merge"), "g")
-        .groupBy("doc_id", "n_shingles")
-        .agg(count(lit(1)).as("n_hits"), min("bench_id").as("first_match"))
-        .select(col("doc_id"), col("n_hits"), col("n_shingles"),
-          (col("n_hits").cast("double") / col("n_shingles").cast("double"))
-            .as("contamination"),
-          col("first_match"))
-    } else {
-      val members = corpus.select(col(idCol).cast("long").as("doc_id"),
-        md5(col(textCol)).as("digest"))
-      val repIds = members.groupBy("digest").agg(min("doc_id").as("rep"))
-      val repRows = corpus
-        .select(col(idCol).cast("long").as("m_id"), col(textCol))
-        .join(repIds.withColumnRenamed("digest", "r_digest"),
-          col("m_id") === col("rep"))
-        .select(col("r_digest").as("digest"), col(textCol))
-      val hitsByDigest = prefiltered(
-          docGrams(withGs(repRows, textCol, k), "digest"))
-        .join(bg.hint("merge"), "g")
-        .groupBy("digest", "n_shingles")
-        .agg(count(lit(1)).as("n_hits"), min("bench_id").as("first_match"))
-      members.join(hitsByDigest, "digest")
-        .select(col("doc_id"), col("n_hits"), col("n_shingles"),
-          (col("n_hits").cast("double") / col("n_shingles").cast("double"))
-            .as("contamination"),
-          col("first_match"))
-    }
+    hits(corpus, bg.hint("merge"), k,
+      _.where(BloomFunctions.bloomContains(col("g"), bits, numHash, log2Bits)))
+  }
+
+  /** The one body of [[ngramHits]] and [[ngramHitsBloom]]: the
+    * per-unit gram stream (after `prefilter`) joined to the eval-gram
+    * table `bg`, counted per unit and expanded to documents. */
+  private def hits(u: Collapse.Units, bg: DataFrame, k: Int,
+                   prefilter: DataFrame => DataFrame): DataFrame = {
+    val byKey = prefilter(docGrams(withGs(u.wide, "text", k), "key"))
+      .join(bg, "g")
+      .groupBy("key", "n_shingles")
+      .agg(count(lit(1)).as("n_hits"), min("bench_id").as("first_match"))
+    u.expand(byKey, "doc_id")
+      .select(col("doc_id").cast("long").as("doc_id"), col("n_hits"), col("n_shingles"),
+        (col("n_hits").cast("double") / col("n_shingles").cast("double"))
+          .as("contamination"),
+        col("first_match"))
   }
 
   /** (g, bench_id = min owning benchmark id) per distinct eval-set
-    * gram. Small by contract — callers broadcast it. */
-  /** (gram → min benchmark id) table. ADAPTIVE on verbatim-duplicate
-    * eval mass: a replicated benchmark table (the gen_scale shape —
-    * same texts, shifted ids) otherwise explodes one gram row per
-    * COPY into the group-by exchange (measured at sf1000: the q53
-    * bench side is ~3.8 M rows of ~5 k distinct texts — a tens-of-GB
-    * gram shuffle that spilled the suite to 26.7× for 10× data), so
-    * with duplicates present the bench collapses to one representative
-    * per content digest BEFORE shingling and grams are priced by
-    * DISTINCT texts. Identical output by construction: every doc
-    * containing gram g belongs to a digest whose representative also
-    * contains g, and that digest's bench_id is the min member id — so
-    * min over reps = min over all members, gram by gram. On a
-    * dup-free benchmark the collapse is pure overhead and the direct
-    * explode runs. */
-  private def benchGrams(bench: DataFrame, idCol: String, textCol: String,
-                         k: Int,
-                         noDups: Option[Boolean] = None): DataFrame = {
-    val perDoc =
-      if (noDups.getOrElse(Dedup.noVerbatimDups(bench, textCol, textCol)))
-        bench.select(col(idCol).cast("long").as("bench_id"), col(textCol))
-      else {
-        val mins = bench
-          .select(col(idCol).cast("long").as("doc_id"), md5(col(textCol)).as("digest"))
-          .groupBy("digest").agg(min("doc_id").as("bench_id"))
-        bench.select(col(idCol).cast("long").as("doc_id"), col(textCol))
-          .join(mins, col("doc_id") === col("bench_id"))
-          .select(col("bench_id"), col(textCol))
-      }
-    perDoc.select(
+    * gram. Small by contract — callers broadcast it. A replicated
+    * benchmark table (the gen_scale shape — same texts, shifted ids)
+    * would otherwise explode one gram row per COPY into the group-by
+    * exchange (measured at sf1000: the q53 bench side is ~3.8 M rows of
+    * ~5 k distinct texts — a tens-of-GB gram shuffle that spilled the
+    * suite to 26.7× for 10× data). No expansion: a unit's key is its
+    * min member id, so the min over units is the min over members. */
+  private def benchGramsOver(u: Collapse.Units, k: Int): DataFrame =
+    u.rows.select(
         explode_outer(graft.functions.TextHashExpressions
-          .distinctShingles(col(textCol), k)).as("g"),
-        col("bench_id"))
+          .distinctShingles(col("text"), k)).as("g"),
+        col("key").cast("long").as("bench_id"))
       .groupBy("g").agg(min("bench_id").as("bench_id"))
-  }
+
 
   /** Contamination ATTRIBUTION: for each corpus doc sharing at least
     * `minShared` distinct k-grams with some eval doc, report WHICH
@@ -197,7 +150,13 @@ object Decontaminate {
     * in [0, 2^32) and shared < 2^31 — shared is bounded by per-doc
     * distinct grams, so any realistic document qualifies. */
   def attribution(corpus: DataFrame, bench: DataFrame, idCol: String,
-                  textCol: String, k: Int, minShared: Long = 2L): DataFrame = {
+                  textCol: String, k: Int, minShared: Long = 2L): DataFrame =
+    attributionOver(Collapse.textUnits(corpus, idCol, textCol, 0.95),
+      bench, idCol, textCol, k, minShared)
+
+  private[graft] def attributionOver(corpus: Collapse.Units, bench: DataFrame,
+                                     idCol: String, textCol: String, k: Int,
+                                     minShared: Long): DataFrame = {
     // Attribution is over distinct eval ITEMS: verbatim-duplicate eval
     // docs collapse to one canonical (min-id) item BEFORE shingling,
     // so the broadcast prices by distinct eval texts — a replicated
@@ -214,37 +173,15 @@ object Decontaminate {
           .distinctShingles(col("btext"), k)).as("g"),
         col("eval_id"))
       .where(col("g").isNotNull)
-    // Corpus side is ADAPTIVE like q53 (collapsedHits): identical
-    // texts share their gram set, so on a replicated corpus the
-    // shingle pass, the broadcast join, and both aggregations run
-    // once per DISTINCT text and the per-digest report expands back
-    // to members — bit-identical per member (spec-pinned), shuffle
-    // mass priced by distinct texts (57 → a few seconds at a
-    // 100×-replicated sf10 shape).
-    if (Dedup.mostlyUnique(corpus, textCol, textCol)) {
-      val cg = withGs(graft.plans.InputWidth.widen(
-          corpus.select(col(idCol), col(textCol))), textCol, k)
-        .select(col(idCol).cast("long").as("doc_id"),
-          explode_outer(col("gs")).as("g"))
-      attributionReport(cg.join(broadcast(bg), "g"), "doc_id", minShared)
-    } else {
-      val agg = corpus
-        .select(md5(col(textCol)).as("digest"), col(idCol).as("m_id"))
-        .groupBy("digest")
-        .agg(min(col("m_id")).as("rep"))
-      val reps = corpus
-        .select(md5(col(textCol)).as("digest"), col(idCol).as("rep"),
-          col(textCol).as("rtext"))
-        .join(agg, Seq("digest", "rep"))
-      val cg = withGs(reps, "rtext", k)
-        .select(col("digest"), explode_outer(col("gs")).as("g"))
-      val perDigest = attributionReport(cg.join(broadcast(bg), "g"),
-        "digest", minShared)
-      val members = corpus.select(md5(col(textCol)).as("digest"),
-        col(idCol).cast("long").as("doc_id"))
-      perDigest.join(members, "digest")
-        .select(col("doc_id"), col("n_evals"), col("top_shared"), col("top_eval"))
-    }
+    // the corpus side collapses at 0.95 ([[Collapse.unique]]): the
+    // collapse saves the shingle pass and both aggregations per copy
+    // (57 → a few seconds at a 100×-replicated sf10) but costs two
+    // joins on a nearly-unique corpus
+    val cg = withGs(corpus.wide, "text", k)
+      .select(col("key"), explode_outer(col("gs")).as("g"))
+    corpus.expand(attributionReport(cg.join(broadcast(bg), "g"), "key", minShared), "doc_id")
+      .select(col("doc_id").cast("long").as("doc_id"), col("n_evals"),
+        col("top_shared"), col("top_eval"))
   }
 
   /** The shared (hit-rows → per-key report) tail of [[attribution]]:
@@ -373,54 +310,26 @@ object Decontaminate {
     * per-doc aggregate partial-aggregates map-side; top-k is
     * TakeOrderedAndProject. */
   def ngramNovelty(df: DataFrame, ref: DataFrame, idCol: String,
-                   textCol: String, k: Int, topK: Int): DataFrame = {
-    // Each side collapses independently (adaptive per-side probes):
-    // the reference's distinct gram set and a doc's novelty are both
-    // functions of the TEXT, so shingling replicas is pure waste.
-    val refRows =
-      if (Dedup.noVerbatimDups(ref, textCol, textCol))
-        // widened scan (r17): the reference side is corpus-sized too,
-        // and its shingle pass is the same CPU-dense starved scan
-        graft.plans.InputWidth.widen(ref.select(col(textCol)))
-      else repTexts(ref, idCol, textCol).select(col(textCol))
-    val refGrams = refRows
-      .select(explode_outer(graft.functions.TextHashExpressions
-        .distinctShingles(col(textCol), k)).as("g"))
-      .where(col("g").isNotNull).distinct()
-    if (Dedup.noVerbatimDups(df, textCol, textCol)) {
-      // widened scan (r17): same starved-scan repair as [[directHits]]
-      val grams = docGrams(
-        withGs(graft.plans.InputWidth.widen(
-          df.select(col(idCol).cast("long").as("doc_id"), col(textCol))),
-          textCol, k), "doc_id")
-        .where(col("g").isNotNull)
-      noveltyRank(grams, refGrams, "doc_id", topK)
-    } else {
-      val members = df.select(col(idCol).cast("long").as("doc_id"),
-        md5(col(textCol)).as("digest"))
-      val grams = docGrams(
-        withGs(repTexts(df, idCol, textCol), textCol, k), "digest")
-        .where(col("g").isNotNull)
-      val byDigest = noveltyStats(grams, refGrams, "digest")
-      members.join(byDigest, "digest")
-        .select(col("doc_id"), col("n_shingles"), col("n_novel"),
-          col("novelty_ppm"))
-        .orderBy(col("novelty_ppm").desc, col("doc_id"))
-        .limit(topK)
-    }
-  }
+                   textCol: String, k: Int, topK: Int): DataFrame =
+    noveltyOver(Collapse.textUnits(df, idCol, textCol),
+      Collapse.textUnits(ref, idCol, textCol), k, topK)
 
-  /** One (digest, text) row per distinct text of `df` — the standard
-    * fixed-width collapse + join-back on id = rep. */
-  private def repTexts(df: DataFrame, idCol: String,
-                       textCol: String): DataFrame = {
-    val repIds = df
-      .select(md5(col(textCol)).as("digest"), col(idCol).cast("long").as("m_id"))
-      .groupBy("digest").agg(min("m_id").as("rep"))
-    df.select(col(idCol).cast("long").as("m_id"), col(textCol))
-      .join(repIds.withColumnRenamed("digest", "r_digest"),
-        col("m_id") === col("rep"))
-      .select(col("r_digest").as("digest"), col(textCol))
+  /** Each side routes on its own probe: the reference's distinct gram
+    * set and a doc's novelty are both functions of the TEXT. The
+    * reference side is corpus-sized too, so both shingle passes widen. */
+  private[graft] def noveltyOver(doc: Collapse.Units, ref: Collapse.Units,
+                                 k: Int, topK: Int): DataFrame = {
+    val refGrams = ref.wide
+      .select(explode_outer(graft.functions.TextHashExpressions
+        .distinctShingles(col("text"), k)).as("g"))
+      .where(col("g").isNotNull).distinct()
+    val grams = docGrams(withGs(doc.wide, "text", k), "key")
+      .where(col("g").isNotNull)
+    doc.expand(noveltyStats(grams, refGrams, "key"), "doc_id")
+      .select(col("doc_id").cast("long").as("doc_id"), col("n_shingles"),
+        col("n_novel"), col("novelty_ppm"))
+      .orderBy(col("novelty_ppm").desc, col("doc_id"))
+      .limit(topK)
   }
 
   private def noveltyStats(grams: DataFrame, refGrams: DataFrame,
@@ -433,35 +342,6 @@ object Decontaminate {
         coalesce(col("n_novel"), lit(0L)).as("n_novel"))
       .withColumn("novelty_ppm",
         expr("n_novel * 1000000 div n_shingles"))
-  }
-
-  private def noveltyRank(grams: DataFrame, refGrams: DataFrame,
-                          keyName: String, topK: Int): DataFrame =
-    noveltyStats(grams, refGrams, keyName)
-      .orderBy(col("novelty_ppm").desc, col(keyName))
-      .limit(topK)
-
-  /** Doc-level pipeline: one shingle pass per corpus ROW. The scan is
-    * WIDENED (r17, the [[attribution]] pattern): shingling is
-    * CPU-dense per row, and a compact single-row-group corpus pins it
-    * to one task (measured 0.8 s serial inside q90 at sf0.1 while 31
-    * cores idle); [[graft.plans.InputWidth]] repartitions only when
-    * the physical input cannot feed every core — a no-op at cluster
-    * scale. */
-  private[graft] def directHits(corpus: DataFrame, bg: DataFrame,
-                                    idCol: String, textCol: String,
-                                    k: Int): DataFrame = {
-    val grams = docGrams(
-      withGs(graft.plans.InputWidth.widen(
-        corpus.select(col(idCol).cast("long").as("doc_id"),
-          col(textCol))), textCol, k), "doc_id")
-    grams.join(broadcast(bg), "g")
-      .groupBy("doc_id", "n_shingles")
-      .agg(count(lit(1)).as("n_hits"), min("bench_id").as("first_match"))
-      .select(col("doc_id"), col("n_hits"), col("n_shingles"),
-        (col("n_hits").cast("double") / col("n_shingles").cast("double"))
-          .as("contamination"),
-        col("first_match"))
   }
 
   /** Corpus-internal duplicated-span statistics (the span-level signal
@@ -490,108 +370,23 @@ object Decontaminate {
     * the window pins every row of a boilerplate gram into one sorted
     * partition with no skew remedy. Null-gram rows from shingle-less
     * docs need no filter (no InferFiltersFromGenerate re-evaluation):
-    * the inner equi-join on the gram drops them. Adaptive like the
-    * rest of the family ([[Dedup.noVerbatimDups]]): on a replicated
-    * corpus the digest collapse prices shingling and the gram shuffle
-    * by DISTINCT texts and recovers df exactly as the member-weight
-    * sum (identical texts have identical distinct-gram sets); on a
-    * unique corpus the direct path skips the collapse's two extra
-    * corpus passes. */
+    * the inner equi-join on the gram drops them. df is the weight sum
+    * over units: identical texts have identical distinct-gram sets. */
   def dupSpanStats(corpus: DataFrame, idCol: String, textCol: String,
                    k: Int, minDf: Long = 2L): DataFrame =
-    if (Dedup.noVerbatimDups(corpus, textCol, textCol))
-      dupSpansDirect(corpus, idCol, textCol, k, minDf)
-    else dupSpansCollapsed(corpus, idCol, textCol, k, minDf)
+    dupSpansOver(Collapse.textUnits(corpus, idCol, textCol), k, minDf)
 
-  /** Doc-level duplicated-span pipeline: one shingle pass per corpus
-    * row, one gram exchange reused by the df aggregate and the join. */
-  private[graft] def dupSpansDirect(corpus: DataFrame, idCol: String,
-                                    textCol: String, k: Int,
-                                    minDf: Long): DataFrame = {
-    // widened scan (r17): same starved-scan repair as [[directHits]]
-    val grams = docGrams(
-      withGs(graft.plans.InputWidth.widen(
-        corpus.select(col(idCol).cast("long").as("doc_id"),
-          col(textCol))), textCol, k), "doc_id")
-    val dfTab = grams.groupBy("g").agg(count(lit(1)).as("df"))
-    grams.join(dfTab, "g")
-      .groupBy("doc_id", "n_shingles")
-      .agg(sum(when(col("df") >= minDf, 1L).otherwise(0L)).as("n_dup"))
-      .select(col("doc_id"), col("n_shingles"), col("n_dup"),
-        (col("n_dup").cast("double") / col("n_shingles").cast("double"))
-          .as("dup_fraction"))
-  }
-
-  /** Digest-collapsed duplicated-span pipeline: shingling and the gram
-    * shuffle run once per DISTINCT text; df is the member-weight sum,
-    * bit-identical to the doc-level count because identical texts have
-    * identical distinct-gram sets. Fixed-width-only collapse aggregate
-    * (min id + count → HashAggregate); representative text via the
-    * join-back on digest + id = rep. */
-  private[graft] def dupSpansCollapsed(corpus: DataFrame, idCol: String,
-                                       textCol: String, k: Int,
-                                       minDf: Long): DataFrame = {
-    val members = corpus.select(col(idCol).cast("long").as("doc_id"),
-      md5(col(textCol)).as("digest"))
-    val reps = members.groupBy("digest")
-      .agg(min("doc_id").as("rep"), count(lit(1)).as("weight"))
-    val joined = corpus
-      .select(col(idCol).cast("long").as("m_id"), col(textCol))
-      .join(reps.withColumnRenamed("digest", "r_digest"),
-        col("m_id") === col("rep"))
-      .select(col("r_digest").as("digest"), col("weight"), col(textCol))
-    // starved-scan repair (r17): see [[collapsedHits]]
-    val repRows =
-      if (graft.plans.InputWidth.isNarrow(corpus)) {
-        val w = corpus.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt
-        joined.repartition(w)
-      } else joined
-    val grams = withGs(repRows, textCol, k)
-      .select(col("digest"), col("weight"),
+  private[graft] def dupSpansOver(u: Collapse.Units, k: Int, minDf: Long): DataFrame = {
+    val grams = withGs(u.wide, "text", k)
+      .select(col("key"), col("weight"),
         size(col("gs")).as("n_shingles"), explode_outer(col("gs")).as("g"))
     val dfTab = grams.groupBy("g").agg(sum("weight").as("df"))
-    val byDigest = grams.join(dfTab, "g")
-      .groupBy("digest", "n_shingles")
+    val byKey = grams.join(dfTab, "g")
+      .groupBy("key", "n_shingles")
       .agg(sum(when(col("df") >= minDf, 1L).otherwise(0L)).as("n_dup"))
-    members.join(byDigest, "digest")
-      .select(col("doc_id"), col("n_shingles"), col("n_dup"),
+    u.expand(byKey, "doc_id")
+      .select(col("doc_id").cast("long").as("doc_id"), col("n_shingles"), col("n_dup"),
         (col("n_dup").cast("double") / col("n_shingles").cast("double"))
           .as("dup_fraction"))
-  }
-
-  /** Digest-collapsed pipeline: one shingle pass per DISTINCT text,
-    * result expanded back to every member. The collapse aggregate
-    * carries fixed-width columns only (min id) — partial/final
-    * HashAggregate, no corpus Sort — and the representative's text
-    * arrives via the join-back on (digest, id = rep). */
-  private[graft] def collapsedHits(corpus: DataFrame, bg: DataFrame,
-                                       idCol: String, textCol: String,
-                                       k: Int): DataFrame = {
-    val members = corpus.select(col(idCol).cast("long").as("doc_id"),
-      md5(col(textCol)).as("digest"))
-    val repIds = members.groupBy("digest").agg(min("doc_id").as("rep"))
-    val joined = corpus
-      .select(col(idCol).cast("long").as("m_id"), col(textCol))
-      .join(repIds.withColumnRenamed("digest", "r_digest"),
-        col("m_id") === col("rep"))
-      .select(col("r_digest").as("digest"), col(textCol))
-    // starved-scan repair (r17, the digestReps pattern): never widen
-    // the corpus-streaming join-back side; when the SCAN is narrow,
-    // repartition the (rep-sized) joined frame so the CPU-dense
-    // shingle pass runs at full width above it.
-    val repRows =
-      if (graft.plans.InputWidth.isNarrow(corpus)) {
-        val w = corpus.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt
-        joined.repartition(w)
-      } else joined
-    val hitsByDigest = docGrams(withGs(repRows, textCol, k), "digest")
-      .join(broadcast(bg), "g")
-      .groupBy("digest", "n_shingles")
-      .agg(count(lit(1)).as("n_hits"), min("bench_id").as("first_match"))
-    members.join(hitsByDigest, "digest")
-      .select(col("doc_id"), col("n_hits"), col("n_shingles"),
-        (col("n_hits").cast("double") / col("n_shingles").cast("double"))
-          .as("contamination"),
-        col("first_match"))
   }
 }

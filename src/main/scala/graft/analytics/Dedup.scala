@@ -290,58 +290,6 @@ object Dedup {
     ccRound(und, labels)
   }
 
-  /** Exact verbatim-duplication probe: true when every worded
-    * (group, text) is unique, i.e. the digest collapse has nothing to
-    * collapse. ONE column-pruned scan (md5 + count-distinct with
-    * map-side partials) whose single-row result picks the pipeline
-    * CLASS for the pair generators below — the collapse's join-back /
-    * expansion machinery is pure overhead on a unique corpus, and a
-    * 2×2-banded LSH over a ×100-replicated corpus without the collapse
-    * pays ×10⁴ in pair mass, so the right plan is data-dependent in a
-    * way AQE cannot re-plan (it prunes branches, it cannot restructure
-    * the operator). Sampling is NOT a substitute: a 1% sample of a
-    * ×100-replicated corpus looks mostly unique (expected one copy per
-    * text), which would mis-route exactly the corpus that needs the
-    * collapse — hence exact counts. Null groups (never produced by the
-    * crawl tables) conservatively read as duplication: the collapsed
-    * path is correct for any input, just slower when unique. */
-  private[analytics] def noVerbatimDups(df: DataFrame, textCol: String,
-                                        groupCol: String): Boolean = {
-    // xxhash64, not md5: an order of magnitude cheaper per byte, and a
-    // collision can only UNDERCOUNT distincts, i.e. mis-route to the
-    // collapsed path — which is correct on any input, just slower on a
-    // unique corpus. The fast path can never be taken wrongly.
-    val r = df.where(trim(col(textCol)) =!= "")
-      .agg(count(lit(1)),
-        count_distinct(xxhash64(col(groupCol), col(textCol))))
-      .first()
-    r.getLong(0) == r.getLong(1)
-  }
-
-  /** Duplication-RATIO probe: true when at least `threshold` of the
-    * worded (group, text) rows are distinct. For operators whose
-    * direct and collapsed pipelines are bit-identical AND whose
-    * collapse costs a fixed overhead (join-back + member expansion)
-    * rather than averting a quadratic blowup — postings,
-    * collocations, attribution — a NEARLY-unique corpus should take
-    * the direct path: 8 duplicate texts in 5 000 don't pay for two
-    * extra joins (measured: q80 2.2 → 6.0 s mis-routed). The PAIR
-    * generators keep the exact [[noVerbatimDups]] probe: there a few
-    * hundred copies of one text is a ×10⁴ pair blowup, so any
-    * duplication at all justifies the collapse. Same one-scan
-    * xxhash64 count-distinct; same conservative direction (a
-    * collision undercounts distincts and can only mis-route toward
-    * the collapsed path, which is correct on any input). */
-  private[graft] def mostlyUnique(df: DataFrame, textCol: String,
-                                  groupCol: String,
-                                  threshold: Double = 0.95): Boolean = {
-    val r = df.where(trim(col(textCol)) =!= "")
-      .agg(count(lit(1)),
-        count_distinct(xxhash64(col(groupCol), col(textCol))))
-      .first()
-    r.getLong(0) == 0L || r.getLong(1).toDouble >= threshold * r.getLong(0)
-  }
-
   /** LSH candidate pairs from unigram MinHash, banded 2×2 (band A =
     * (h1,h2), band B = (h3,h4)); docs sharing either band within the
     * same `groupCol` become candidates. Returns distinct (a, b) pairs,
@@ -353,298 +301,130 @@ object Dedup {
     * verbatim-duplicate clusters, which [[exactDedup]] already catches.
     * The cap's window count partitions on the same (group, bucket) key
     * as the join, so it rides the join's own exchange — no extra
-    * shuffle.
+    * shuffle. Both join sides share one plan, so ReuseExchange
+    * evaluates the signature + window side once (PlanSpec-pinned).
     *
-    * Adaptive ([[noVerbatimDups]]): on a corpus with no verbatim
-    * duplicates the direct doc-level pipeline runs ([[lshPairsDirect]]
-    * — collapse and expansion are identities there, so skipping them
-    * is bit-identical and saves two corpus passes plus two joins);
-    * with duplicates present the digest-collapsed pipeline runs
-    * ([[lshPairsCollapsed]]) and prices pair mass by DISTINCT texts. */
+    * Collapses on any verbatim duplicate ([[Collapse.unique]] at 1.0):
+    * a 2×2-banded LSH over a ×100-replicated corpus pays ×10⁴ in pair
+    * mass without it. Members share their unit's signature, so the doc
+    * pair graph is the unit graph with each unit blown up into a
+    * clique. */
   def lshCandidatePairs(df: DataFrame, idCol: String, textCol: String,
                         groupCol: String, maxBucket: Int = 1024): DataFrame =
-    if (noVerbatimDups(df, textCol, groupCol))
-      lshPairsDirect(df, idCol, textCol, groupCol, maxBucket)
-    else lshPairsCollapsed(df, idCol, textCol, groupCol, maxBucket)
+    lshOver(Collapse.units(df, idCol, textCol, Seq(groupCol),
+      Collapse.unique(df, textCol, groupCol)), groupCol, maxBucket)
 
-  /** Doc-level LSH pair generation for corpora WITHOUT verbatim
-    * duplicates: per-doc signature (map-only over the widened scan),
-    * band explode, bucket cap by row count (= weight sum when all
-    * weights are 1), self-join. Both join sides share one plan, so
-    * ReuseExchange evaluates the signature + window side once. */
-  private[graft] def lshPairsDirect(df: DataFrame, idCol: String, textCol: String,
-                                    groupCol: String, maxBucket: Int): DataFrame = {
-    val sig = graft.functions.TextHashExpressions
-      .minhashSig(col(textCol), 1, 4, distinct = true)
-    val keyed = graft.plans.InputWidth.widen(df.where(trim(col(textCol)) =!= ""))
-      .select(col(groupCol), col(idCol).as("i"), sig.as("sig"))
-      .select(col(groupCol), col("i"),
-        concat_ws("_", lit("A"), col("sig").getItem(0), col("sig").getItem(1)).as("bkA"),
-        concat_ws("_", lit("B"), col("sig").getItem(2), col("sig").getItem(3)).as("bkB"))
-    val bands = keyed
-      .select(col(groupCol), col("i"), explode(array(col("bkA"), col("bkB"))).as("bk"))
-      .withColumn("bkn",
-        count(lit(1)).over(Window.partitionBy(col(groupCol), col("bk"))))
-      .where(col("bkn") <= maxBucket).drop("bkn")
-    bands.as("l").join(bands.as("r"), Seq(groupCol, "bk"))
-      .where(col("l.i") < col("r.i"))
-      .select(col(groupCol), col("l.i").as("a"), col("r.i").as("b"))
-      .distinct()
-  }
-
-  /** Digest-collapsed LSH pair generation (see [[lshCandidatePairs]]):
-    * signature / banding / self-join run over one representative per
-    * (group, md5(text)) ([[digestReps]]), with the bucket cap applied
-    * to member-weight sums (= the per-doc count the uncollapsed
-    * formulation sees), then digest-level pairs expand back to member
-    * pairs and weight ≥ 2 groups surviving the cap emit their verbatim
-    * cliques — the doc-level pair set is bit-identical (members share
-    * their representative's signature, so the doc graph is exactly the
-    * rep graph with each rep blown up into a clique). The self-join
-    * keeps the SAME plan on both sides, renamed after the join, so
-    * ReuseExchange evaluates the collapse + window side once
-    * (PlanSpec-pinned). */
-  private[graft] def lshPairsCollapsed(df: DataFrame, idCol: String, textCol: String,
-                                       groupCol: String, maxBucket: Int): DataFrame = {
-    val bands = repBands(digestReps(df, idCol, textCol, groupCol), groupCol, maxBucket)
-    val crossRep = bands.as("l").join(bands.as("r"), Seq(groupCol, "bk"))
-      .where(col("l.rep") < col("r.rep"))
-      .select(col(groupCol), col("l.digest").as("da"), col("r.digest").as("db"))
-      .distinct()
-    // expansion: the second corpus pass computes md5 only (column
-    // pruning drops the text); cross and self sets are disjoint by
-    // construction, so the union needs no dedup
-    val members = df.select(col(groupCol), md5(col(textCol)).as("digest"), col(idCol))
-    val ma = members.select(col(groupCol), col("digest").as("da"), col(idCol).as("ia"))
-    val mb = members.select(col(groupCol), col("digest").as("db"), col(idCol).as("ib"))
-    val crossOut = crossRep.join(ma, Seq(groupCol, "da")).join(mb, Seq(groupCol, "db"))
-      .select(col(groupCol), least(col("ia"), col("ib")).as("a"),
-        greatest(col("ia"), col("ib")).as("b"))
-    val selfOut = bands.select(col(groupCol), col("digest"), col("weight")).distinct()
-      .where(col("weight") >= 2)
-      .select(col(groupCol), col("digest"))
-      .join(ma.withColumnRenamed("da", "digest"), Seq(groupCol, "digest"))
-      .join(mb.withColumnRenamed("db", "digest"), Seq(groupCol, "digest"))
-      .where(col("ia") < col("ib"))
-      .select(col(groupCol), col("ia").as("a"), col("ib").as("b"))
-    crossOut.unionByName(selfOut)
+  private[graft] def lshOver(u: Collapse.Units, groupCol: String,
+                             maxBucket: Int): DataFrame = {
+    val bands = lshBands(u, groupCol, maxBucket)
+    u.expandPairs(bandPairs(bands, groupCol),
+      bands.where(col("weight") >= 2).select(col(groupCol), col("key")).distinct())
   }
 
   /** Per-group LSH candidate-pair COUNTS, computed WITHOUT enumerating
     * the pairs — `lshCandidatePairs(df, …).groupBy(group).count()`
-    * done in weight arithmetic over the digest-collapsed band graph:
-    * cross-digest mass is Σ wa·wb over the distinct capped digest
-    * pairs, verbatim-clique mass is Σ w·(w−1)/2 over cap-surviving
-    * digests with weight ≥ 2. Both formulations count the identical
-    * pair set ([[lshPairsCollapsed]]'s bit-exactness argument: members
-    * inherit their representative's bands, so the doc-pair set is the
-    * digest-pair set with each digest blown into its clique) — but the
-    * enumeration is QUADRATIC in verbatim multiplicity while the
-    * arithmetic is linear in distinct texts. Measured at sf1000 (50 M
-    * docs, 10 000 verbatim copies per text): the enumeration face
-    * streamed ~2.5·10¹¹ clique rows through the count — 229 s, 21.8×
-    * the sf100 time for 10× the data — where this face prices the
-    * same answer by the ~5 000 distinct digests. Use the enumeration
-    * entry point only when a consumer needs the pairs themselves. */
+    * done in weight arithmetic: cross-unit mass is Σ wa·wb over the
+    * distinct capped unit pairs, verbatim-clique mass is Σ w·(w−1)/2
+    * over cap-surviving units. The enumeration is QUADRATIC in
+    * verbatim multiplicity while the arithmetic is linear in distinct
+    * texts. Measured at sf1000 (50 M docs, 10 000 verbatim copies per
+    * text): the enumeration face streamed ~2.5·10¹¹ clique rows through
+    * the count — 229 s, 21.8× the sf100 time for 10× the data — where
+    * this face prices the same answer by the ~5 000 distinct digests.
+    * Use the enumeration entry point only when a consumer needs the
+    * pairs themselves. */
   def lshCandidatePairCounts(df: DataFrame, idCol: String, textCol: String,
-                             groupCol: String, maxBucket: Int = 1024): DataFrame = {
-    // Adaptive, mirroring [[lshCandidatePairs]]: on a no-verbatim-dup
-    // corpus every weight is 1, so the collapse join-back and rep
-    // expansion are identity overhead — count the direct pairs instead
-    // (bounded there: no verbatim multiplicity to square).
-    if (noVerbatimDups(df, textCol, groupCol))
-      return lshPairsDirect(df, idCol, textCol, groupCol, maxBucket)
-        .groupBy(col(groupCol)).agg(count(lit(1)).as("n_pairs"))
-    val bands = repBands(digestReps(df, idCol, textCol, groupCol), groupCol, maxBucket)
-    // same digest-pair dedup as the enumeration path (a pair colliding
-    // in both bands must count once); weights ride along — they are
-    // functionally dependent on the digest, so the distinct set is the
-    // distinct (group, da, db) set
-    val crossRep = bands.as("l").join(bands.as("r"), Seq(groupCol, "bk"))
-      .where(col("l.rep") < col("r.rep"))
-      .select(col(groupCol), col("l.digest").as("da"), col("r.digest").as("db"),
-        col("l.weight").as("wa"), col("r.weight").as("wb"))
+                             groupCol: String, maxBucket: Int = 1024): DataFrame =
+    lshCountsOver(Collapse.units(df, idCol, textCol, Seq(groupCol),
+      Collapse.unique(df, textCol, groupCol)), groupCol, maxBucket)
+
+  private[graft] def lshCountsOver(u: Collapse.Units, groupCol: String,
+                                   maxBucket: Int): DataFrame = {
+    val bands = lshBands(u, groupCol, maxBucket)
+    // a unit pair colliding in both bands counts once; the weight
+    // product is a function of the pair, so it rides the distinct
+    val cross = bands.as("l").join(bands.as("r"), Seq(groupCol, "bk"))
+      .where(col("l.key") < col("r.key"))
+      .select(col(groupCol), col("l.key").as("ka"), col("r.key").as("kb"),
+        (col("l.weight") * col("r.weight")).as("n"))
       .distinct()
-    val crossCnt = crossRep.groupBy(col(groupCol))
-      .agg(sum(col("wa") * col("wb")).as("n"))
-    val selfCnt = bands.select(col(groupCol), col("digest"), col("weight")).distinct()
-      .where(col("weight") >= 2)
-      .groupBy(col(groupCol))
-      // w·(w−1) is even so `div` (LONG integer division) is exact AND
-      // the column stays LongType end-to-end. Spark's `/` would be
-      // double division — exact only below 2^53, and it silently
-      // widens the union with crossCnt's long to double.
-      .agg(sum(expr("weight * (weight - 1) div 2")).as("n"))
-    crossCnt.unionByName(selfCnt)
+      .select(col(groupCol), col("n"))
+    // w·(w−1) is even, so LONG `div` is exact and keeps the column
+    // LongType (Spark's `/` is double division, exact only below 2^53)
+    val cliques = bands.where(col("weight") >= 2)
+      .select(col(groupCol), col("key"), col("weight")).distinct()
+      .select(col(groupCol), expr("weight * (weight - 1) div 2").as("n"))
+    cross.unionByName(cliques)
       .groupBy(col(groupCol))
       .agg(sum(col("n")).cast("long").as("n_pairs"))
   }
 
-  /** Verbatim-duplicate collapse — the digest pre-pass of the near-dup
-    * pipeline: one row per (group, md5(text)) with the group's smallest
-    * id as representative, its member count as `weight`, and the two
-    * LSH band keys. The collapse aggregates FIXED-WIDTH columns only
-    * (min id + count) so Catalyst plans a partial/final HashAggregate —
-    * a string in the agg buffer (e.g. min(text)) is not
-    * UnsafeRow-mutable and would demote the whole pre-pass to
-    * Sort + SortAggregate, a full per-partition sort of the corpus
-    * carrying the document text (measured: 2× q22 at small scale).
-    * The representative's text is fetched by a second corpus pass
-    * joined back on (group, digest, id == rep) — AQE broadcasts the
-    * digest table when small, making the join-back a map-only stage —
-    * and the MinHash signature (the expensive per-row work) is
-    * computed AFTER that join, so it still runs once per DISTINCT
-    * text (when the scan is starved — single row group — the JOINED
-    * rep-sized frame is repartitioned so the signature runs at full
-    * width; see inline note). Wordless texts are dropped by a CHEAP
-    * scan-level
-    * pre-filter, trim(text) != '' — exactly the unigram signature's
-    * null condition (members share it, so pre-filtering equals the
-    * per-doc sig-is-null filter) — NOT by filtering on the signature
-    * itself: `where(sig.isNotNull)` would be predicate-pushed through
-    * the join-back into the corpus scan and re-evaluate the signature
-    * on every row, the precise cost the collapse exists to avoid. */
-  private[graft] def digestReps(df: DataFrame, idCol: String, textCol: String,
-                                groupCol: String): DataFrame = {
-    val worded = df.where(trim(col(textCol)) =!= "")
-    val agg = worded
-      .select(col(groupCol), md5(col(textCol)).as("digest"), col(idCol).as("m_id"))
-      .groupBy(col(groupCol), col("digest"))
-      .agg(min(col("m_id")).as("rep"), count(lit(1)).as("weight"))
+  /** Band-tagged bucket rows (group, key, weight, bk), capped on the
+    * SUM OF WEIGHTS per (group, bucket) — the number of documents in
+    * the bucket, so the same buckets drop on either route. Wordless
+    * texts are dropped by the cheap scan-level trim(text) != '', which
+    * is exactly the unigram signature's null condition — NOT by
+    * filtering on the signature: `where(sig.isNotNull)` would be
+    * pushed through the collapse's join-back into the corpus scan and
+    * re-evaluate the signature on every row. */
+  private def lshBands(u: Collapse.Units, groupCol: String,
+                       maxBucket: Int): DataFrame = {
     val sig = graft.functions.TextHashExpressions
-      .minhashSig(col("rtext"), 1, 4, distinct = true)
-    // the join-back STREAMS the corpus (id, text) — never widen that
-    // side: a round-robin repartition there shuffles the full corpus
-    // text (measured +2.5 s on q22 at 100× scale). When the scan is
-    // starved (single row group), repartition the JOINED frame
-    // instead: one row per distinct text, so the shuffle is the rep
-    // set, and the signature still runs at full width above it.
-    val joined = worded
-      .select(col(groupCol), md5(col(textCol)).as("digest"),
-        col(idCol).as("rep"), col(textCol).as("rtext"))
-      .join(agg, Seq(groupCol, "digest", "rep"))
-    val sigIn =
-      if (graft.plans.InputWidth.isNarrow(df)) {
-        val w = df.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt
-        joined.repartition(w)
-      } else joined
-    sigIn
-      .select(col(groupCol), col("digest"), col("rep"), col("weight"),
-        sig.as("sig"))
-      .select(col(groupCol), col("digest"), col("rep"), col("weight"),
-        concat_ws("_", lit("A"), col("sig").getItem(0), col("sig").getItem(1)).as("bkA"),
-        concat_ws("_", lit("B"), col("sig").getItem(2), col("sig").getItem(3)).as("bkB"))
-  }
-
-  /** Band-tagged bucket rows over digest representatives, capped on the
-    * SUM OF MEMBER WEIGHTS per (group, bucket) — i.e. the number of
-    * ORIGINAL documents in the bucket, so the cap decision is
-    * bit-identical to running [[lshCandidatePairs]]'s per-doc count cap
-    * over the uncollapsed corpus (every member of a digest group lands
-    * in exactly the buckets its representative lands in). The weight
-    * window partitions on the same (group, bk) key as the downstream
-    * self-join, so it rides the join's exchange. */
-  private[graft] def repBands(reps: DataFrame, groupCol: String,
-                              maxBucket: Int): DataFrame =
-    reps.select(col(groupCol), col("digest"), col("rep"), col("weight"),
-        explode(array(col("bkA"), col("bkB"))).as("bk"))
+      .minhashSig(col("text"), 1, 4, distinct = true)
+    u.wide.where(Collapse.worded("text"))
+      .select(col(groupCol), col("key"), col("weight"), sig.as("sig"))
+      .select(col(groupCol), col("key"), col("weight"), explode(array(
+        concat_ws("_", lit("A"), col("sig").getItem(0), col("sig").getItem(1)),
+        concat_ws("_", lit("B"), col("sig").getItem(2), col("sig").getItem(3)))).as("bk"))
       .withColumn("bkn",
         sum(col("weight")).over(Window.partitionBy(col(groupCol), col("bk"))))
       .where(col("bkn") <= maxBucket).drop("bkn")
-
-  /** Representative-level candidate pairs (plan-inspection entry: the
-    * full digest-collapse → band → self-join pipeline, un-cached). */
-  private[graft] def repPairs(df: DataFrame, idCol: String, textCol: String,
-                              groupCol: String, maxBucket: Int = 1024): DataFrame = {
-    val bands = repBands(digestReps(df, idCol, textCol, groupCol), groupCol, maxBucket)
-    bands.as("l").join(bands.as("r"), Seq(groupCol, "bk"))
-      .where(col("l.rep") < col("r.rep"))
-      .select(col("l.rep").as("a"), col("r.rep").as("b"))
-      .distinct()
   }
 
-  /** Near-dup components over the WHOLE corpus. Adaptive like
-    * [[lshCandidatePairs]]: a unique corpus ([[noVerbatimDups]])
-    * clusters doc-level pairs directly; otherwise the verbatim
-    * duplicates are collapsed out of the expensive middle: digest
-    * pre-pass ([[digestReps]]) → LSH banding + self-join over
-    * REPRESENTATIVES only → [[connectedComponents]] on the rep graph →
-    * labels expanded back to every member through the digest→component
-    * map.
+  /** Distinct unit pairs (group, ka, kb), ka < kb, sharing a bucket. */
+  private def bandPairs(bands: DataFrame, groupCol: String): DataFrame =
+    bands.as("l").join(bands.as("r"), Seq(groupCol, "bk"))
+      .where(col("l.key") < col("r.key"))
+      .select(col(groupCol), col("l.key").as("ka"), col("r.key").as("kb"))
+      .distinct()
+
+  /** Representative-level candidate pairs (plan-inspection entry: the
+    * full collapse → band → self-join pipeline, un-cached). */
+  private[graft] def repPairs(df: DataFrame, idCol: String, textCol: String,
+                              groupCol: String, maxBucket: Int = 1024): DataFrame =
+    bandPairs(lshBands(Collapse.units(df, idCol, textCol, Seq(groupCol), unique = false),
+        groupCol, maxBucket), groupCol)
+      .select(col("ka").as("a"), col("kb").as("b"))
+
+  /** Near-dup components over the WHOLE corpus: LSH banding + self-join
+    * over units, [[connectedComponents]] on the unit graph, labels
+    * expanded back to every member. Bit-identical to running
+    * lshCandidatePairs + connectedComponents over the uncollapsed
+    * corpus (the exact transitive-closure oracle): the doc graph is the
+    * unit graph with each unit blown up into a clique, which preserves
+    * components, and a unit's key is its min member id, which preserves
+    * the min labels. A weight ≥ 2 unit surviving the cap is a component
+    * even without a cross pair (its members pair with EACH OTHER), so
+    * it enters the graph as a self-loop; a capped-out or weight-1 unit
+    * without pairs yields no rows, as in the uncollapsed pipeline.
     *
-    * Produces bit-identical output to running lshCandidatePairs +
-    * connectedComponents over the uncollapsed corpus (the exact
-    * transitive-closure oracle), because:
-    *  - members of a digest group share their representative's
-    *    signature, so the doc-level pair graph is exactly the rep-level
-    *    graph with each rep blown up into a verbatim clique — expansion
-    *    preserves components, and the rep (= group min id) preserves
-    *    the min-label component ids;
-    *  - the bucket cap counts original docs via the weight sum
-    *    ([[repBands]]), so the same buckets drop;
-    *  - a weight ≥ 2 group surviving in ≥ 1 bucket is a component even
-    *    when its rep has no external pair (its members pair with EACH
-    *    OTHER in the uncollapsed graph) — emitted as an internal
-    *    clique; a fully-capped-out or singleton rep with no pairs
-    *    produces no output rows, same as the uncollapsed pipeline.
-    *
-    * Scale: pair mass and CC edge mass now price by DISTINCT texts —
-    * a ×100-replicated corpus generates ×10⁴ fewer candidate pairs —
-    * while the per-doc work stays a map-only pass feeding a
-    * combiner-collapsed shuffle of tiny columns. The expansion join is
-    * |docs|⋈|component digests| on (group, digest), AQE-broadcastable
-    * when the component map is small. */
+    * Scale: pair mass and CC edge mass price by DISTINCT texts — a
+    * ×100-replicated corpus generates ×10⁴ fewer candidate pairs. */
   def nearDupComponents(df: DataFrame, idCol: String, textCol: String,
                         groupCol: String, maxBucket: Int = 1024,
-                        maxIterations: Int = 20,
-                        noDups: Option[Boolean] = None): DataFrame =
-    // `noDups`: optional PRECOMPUTED [[noVerbatimDups]](df, textCol,
-    // groupCol) answer — composite pipelines (q90) that run several
-    // adaptive operators over the same corpus can fuse the probe scans
-    // into one pass (guide §2.4) and hand each operator its answer;
-    // routing (and therefore output, both paths being bit-identical)
-    // is unchanged, only the redundant probe scan disappears.
-    if (noDups.getOrElse(noVerbatimDups(df, textCol, groupCol))) {
-      // no verbatim duplicates: the rep graph IS the doc graph and the
-      // expansion join is an identity — cluster doc-level pairs
-      // directly and skip the collapse, the digest→component map, and
-      // the member re-join entirely
-      val pairs = lshPairsDirect(df, idCol, textCol, groupCol, maxBucket)
-      connectedComponents(pairs, "a", "b", maxIterations)
-    } else nearDupCollapsed(df, idCol, textCol, groupCol, maxBucket, maxIterations)
+                        maxIterations: Int = 20): DataFrame =
+    nearDupOver(Collapse.units(df, idCol, textCol, Seq(groupCol),
+      Collapse.unique(df, textCol, groupCol)), groupCol, maxBucket, maxIterations)
 
-  private[graft] def nearDupCollapsed(df: DataFrame, idCol: String, textCol: String,
-                                      groupCol: String, maxBucket: Int,
-                                      maxIterations: Int): DataFrame = {
-    val reps = digestReps(df, idCol, textCol, groupCol)
-    reps.cache()
-    val bands = repBands(reps, groupCol, maxBucket)
-    val pairs = bands.as("l").join(bands.as("r"), Seq(groupCol, "bk"))
-      .where(col("l.rep") < col("r.rep"))
-      .select(col("l.rep").as("a"), col("r.rep").as("b"))
-      .distinct()
-    val ccLabels = connectedComponents(pairs, "a", "b", maxIterations)
-    // verbatim cliques: weight ≥ 2 groups that survived the cap in at
-    // least one bucket but whose rep found no cross-digest pair
-    val internal = bands.select(col("rep"), col("weight")).distinct()
-      .where(col("weight") >= 2)
-      .join(ccLabels.select(col("node").as("rep")), Seq("rep"), "left_anti")
-      .select(col("rep").as("node"), col("rep").as("comp"))
-    val digestComp = reps
-      .join(ccLabels.union(internal), reps("rep") === col("node"))
-      .select(col(groupCol), col("digest"), col("comp"))
-    // materialize the (small) digest→component map through a checkpoint
-    // so `reps` can be freed before the caller's final action; the
-    // checkpoint backs the returned frame, like the CC labels' own
-    // final-round checkpoint — retained so the caller can free both
-    // once the result is consumed ([[CheckpointRegistry]])
-    val (dc, dcHandle) = Iterate.checkpoint(digestComp)
-    dc.count()
-    CheckpointRegistry.retain(dcHandle)
-    reps.unpersist()
-    df.select(col(groupCol), md5(col(textCol)).as("digest"), col(idCol))
-      .join(dc, Seq(groupCol, "digest"))
-      .select(col(idCol).as("node"), col("comp"))
+  private[graft] def nearDupOver(u: Collapse.Units, groupCol: String,
+                                 maxBucket: Int = 1024,
+                                 maxIterations: Int = 20): DataFrame = {
+    val bands = lshBands(u, groupCol, maxBucket)
+    val loops = bands.where(col("weight") >= 2)
+      .select(col(groupCol), col("key").as("ka"), col("key").as("kb"))
+    val labels = connectedComponents(bandPairs(bands, groupCol).unionByName(loops),
+      "ka", "kb", maxIterations)
+    u.expand(labels.withColumnRenamed("node", "key"), "node").select("node", "comp")
   }
 
   /** 16-bit SimHash over distinct words: per-bit ±1 contributions
@@ -659,15 +439,10 @@ object Dedup {
       .where(col("simhash").isNotNull)
 
   /** Exact n-gram (here unigram-set) Jaccard similarity for pairs within
-    * a group, over a pre-filtered subset. Adaptive like
-    * [[lshCandidatePairs]]: a unique corpus runs the doc-level
-    * pipeline ([[jaccardDirect]]); otherwise a digest pre-pass
-    * (verbatim
-    * duplicates collapse to one representative, results expand back to
-    * member pairs — bit-identical output, see inline notes), then
-    * shared-word self-join → intersection counts; per-digest set sizes
-    * attached BEFORE the join (AQE-broadcastable), enabling a
-    * size-ratio prefilter at the join itself.
+    * a group, over a pre-filtered subset: shared-word self-join →
+    * intersection counts, with per-unit set sizes attached BEFORE the
+    * join (AQE-broadcastable) so a size-ratio prefilter runs at the
+    * join itself.
     *
     * Skew defenses, in evaluation order:
     *  - a token appearing in `d` docs fans the self-join out to d²/2
@@ -691,133 +466,21 @@ object Dedup {
     *    (a `sz_small >= j * sz_big` product form CAN, when jaccard
     *    lands exactly on the threshold).
     * Carrying the true sizes through the groupBy keys also removes the
-    * two post-aggregation size joins the previous formulation needed. */
+    * two post-aggregation size joins the previous formulation needed.
+    *
+    * Collapses on any verbatim duplicate. A verbatim pair reports what
+    * the uncollapsed pipeline reports under df-pruning: s/(2k − s),
+    * with s surviving shared tokens over set size k. */
   def jaccardPairs(df: DataFrame, idCol: String, textCol: String,
                    groupCol: String, minJaccard: Double,
                    maxDf: Int = 1024): DataFrame =
-    if (noVerbatimDups(df, textCol, groupCol))
-      jaccardDirect(df, idCol, textCol, groupCol, minJaccard, maxDf)
-    else jaccardCollapsed(df, idCol, textCol, groupCol, minJaccard, maxDf)
+    jaccardOver(Collapse.units(df, idCol, textCol, Seq(groupCol),
+      Collapse.unique(df, textCol, groupCol)), groupCol, minJaccard, maxDf)
 
-  /** Doc-level exact-Jaccard pipeline for corpora WITHOUT verbatim
-    * duplicates: tokenize per doc, document-frequency prune (plain row
-    * count = the weighted df when all weights are 1), set sizes joined
-    * before the self-join for the size-ratio prefilter, intersection
-    * groupBy carrying the true sizes. Same skew defenses and the same
-    * division-form prefilter as the collapsed pipeline; no same-digest
-    * branch (there are no duplicate pairs to emit). */
-  private[graft] def jaccardDirect(df: DataFrame, idCol: String, textCol: String,
-                                   groupCol: String, minJaccard: Double,
-                                   maxDf: Int): DataFrame = {
-    val tok = graft.plans.InputWidth.widen(df)
-      .select(col(groupCol), col(idCol).as("i"),
-        explode(array_distinct(words(col(textCol)))).as("w"))
-    val sizes = tok.groupBy(col(groupCol), col("i")).agg(count(lit(1)).as("sz"))
-    val pruned = tok
-      .withColumn("df", count(lit(1)).over(Window.partitionBy(col(groupCol), col("w"))))
-      .where(col("df") <= maxDf).drop("df")
-      .join(sizes, Seq(groupCol, "i"))
-    pruned.as("l").join(pruned.as("r"), Seq(groupCol, "w"))
-      .where(col("l.i") < col("r.i") &&
-        least(col("l.sz"), col("r.sz")).cast("double") /
-          greatest(col("l.sz"), col("r.sz")).cast("double") >= minJaccard)
-      .select(col(groupCol), col("l.i").as("a"), col("r.i").as("b"),
-        col("l.sz").as("sza"), col("r.sz").as("szb"))
-      .groupBy(col(groupCol), col("a"), col("b"), col("sza"), col("szb"))
-      .agg(count(lit(1)).as("inter"))
-      .withColumn("jaccard",
-        col("inter").cast("double") / (col("sza") + col("szb") - col("inter")).cast("double"))
-      .where(col("jaccard") >= minJaccard)
-      .select(col(groupCol), col("a"), col("b"), col("jaccard"))
-  }
-
-  private[graft] def jaccardCollapsed(df: DataFrame, idCol: String, textCol: String,
-                                      groupCol: String, minJaccard: Double,
-                                      maxDf: Int): DataFrame = {
-    // digest collapse (same move as [[nearDupComponents]], same
-    // hash-aggregable shape as [[digestReps]]): verbatim duplicates
-    // share their token set, so tokenize / df-window / self-join /
-    // intersection-count all run over one representative per
-    // (group, md5(text)) and the results expand back to member pairs
-    // afterward. The aggregate carries fixed-width columns only
-    // (HashAggregate, no corpus sort); the representative's text
-    // arrives via the join-back on (group, digest, id == rep), and
-    // tokenization — the expensive per-row work — runs after it, once
-    // per DISTINCT text, at widened scan parallelism.
-    val agg = df
-      .select(col(groupCol), md5(col(textCol)).as("digest"), col(idCol).as("m_id"))
-      .groupBy(col(groupCol), col("digest"))
-      .agg(min(col("m_id")).as("rep"), count(lit(1)).as("weight"))
-    // stream the corpus un-widened, repartition the rep-sized joined
-    // frame only when the scan is starved (same note as [[digestReps]])
-    val joined = df
-      .select(col(groupCol), md5(col(textCol)).as("digest"),
-        col(idCol).as("rep"), col(textCol).as("rtext"))
-      .join(agg, Seq(groupCol, "digest", "rep"))
-    val reps =
-      (if (graft.plans.InputWidth.isNarrow(df)) {
-        val w = df.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt
-        joined.repartition(w)
-      } else joined)
-        .select(col(groupCol), col("digest"), col("weight"), col("rtext"))
-    val tok = reps.select(col(groupCol), col("digest"), col("weight"),
-      explode(array_distinct(words(col("rtext")))).as("w"))
-    val sizes = tok.groupBy(col(groupCol), col("digest")).agg(count(lit(1)).as("sz"))
-    // weighted document frequency: sum of member counts = the df the
-    // uncollapsed pipeline would see, so the SAME tokens are pruned.
-    // No broadcast hint on `sizes`: one row per distinct (group, text)
-    // approaches corpus cardinality on a mostly-unique corpus, so the
-    // join strategy is AQE's call (broadcast when it measures small).
-    val pruned = tok
-      .withColumn("df", sum(col("weight")).over(Window.partitionBy(col(groupCol), col("w"))))
-      .where(col("df") <= maxDf).drop("df")
-      .join(sizes, Seq(groupCol, "digest"))
-    // cross-digest pairs: one exact jaccard per digest pair — shared
-    // by every member pair across the two groups. Rename AFTER the
-    // self-join so both children stay canonically identical and
-    // ReuseExchange runs the tokenize + df-window side once.
-    val crossRep = pruned.as("l").join(pruned.as("r"), Seq(groupCol, "w"))
-      .where(col("l.digest") < col("r.digest") &&
-        least(col("l.sz"), col("r.sz")).cast("double") /
-          greatest(col("l.sz"), col("r.sz")).cast("double") >= minJaccard)
-      .select(col(groupCol), col("l.digest").as("da"), col("r.digest").as("db"),
-        col("l.sz").as("sza"), col("r.sz").as("szb"))
-      .groupBy(col(groupCol), col("da"), col("db"), col("sza"), col("szb"))
-      .agg(count(lit(1)).as("inter"))
-      .withColumn("jaccard",
-        col("inter").cast("double") / (col("sza") + col("szb") - col("inter")).cast("double"))
-      .where(col("jaccard") >= minJaccard)
-      .select(col(groupCol), col("da"), col("db"), col("jaccard"))
-    // same-digest pairs: identical token sets, but the REPORTED
-    // jaccard under df-pruning is s/(2k − s) (intersection counts only
-    // the s surviving tokens, the denominator all k) — exactly what
-    // the uncollapsed pipeline emits for a duplicate pair; a group
-    // whose every token was pruned shares no surviving token and
-    // produces no pair at all
-    val selfRep = pruned.groupBy(col(groupCol), col("digest"))
-      .agg(count(lit(1)).as("s"), min(col("sz")).as("szs"))
-      .join(reps.select(col(groupCol), col("digest"), col("weight")),
-        Seq(groupCol, "digest"))
-      .where(col("weight") >= 2)
-      .withColumn("jaccard", col("s").cast("double") /
-        (lit(2) * col("szs") - col("s")).cast("double"))
-      .where(col("jaccard") >= minJaccard)
-      .select(col(groupCol), col("digest"), col("jaccard"))
-    // expand digest-level pairs to member pairs (second corpus pass
-    // computes md5 only — column pruning drops the text)
-    val members = df.select(col(groupCol), md5(col(textCol)).as("digest"), col(idCol))
-    val ma = members.select(col(groupCol), col("digest").as("da"), col(idCol).as("ia"))
-    val mb = members.select(col(groupCol), col("digest").as("db"), col(idCol).as("ib"))
-    val crossOut = crossRep.join(ma, Seq(groupCol, "da")).join(mb, Seq(groupCol, "db"))
-      .select(col(groupCol), least(col("ia"), col("ib")).as("a"),
-        greatest(col("ia"), col("ib")).as("b"), col("jaccard"))
-    val selfOut = selfRep
-      .join(ma.withColumnRenamed("da", "digest"), Seq(groupCol, "digest"))
-      .join(mb.withColumnRenamed("db", "digest"), Seq(groupCol, "digest"))
-      .where(col("ia") < col("ib"))
-      .select(col(groupCol), col("ia").as("a"), col("ib").as("b"), col("jaccard"))
-    crossOut.unionByName(selfOut)
-  }
+  private[graft] def jaccardOver(u: Collapse.Units, groupCol: String,
+                                 minJaccard: Double, maxDf: Int): DataFrame =
+    setPairs(u, groupCol, maxDf, "jaccard", minJaccard, ratioPrefilter = true,
+      (inter, sza, szb) => inter.cast("double") / (sza + szb - inter).cast("double"))
 
   /** Overlap-coefficient (containment) pairs: |A∩B| / min(|A|,|B|) —
     * the near-dup signal Jaccard structurally misses when a SHORT
@@ -827,110 +490,67 @@ object Dedup {
     * that asymmetry: catching excerpts, boilerplate-wrapped reposts,
     * and doc-inside-doc containment that [[jaccardPairs]] scores low.
     *
-    * Same unigram-set machinery and adaptive digest collapse as
-    * [[jaccardPairs]], with one deliberate difference: the size-ratio
-    * join prefilter is UNSOUND here — a small set fully contained in a
-    * big one scores 1.0 at ANY size ratio — so the self-join keeps
-    * every shared-word pair and the skew defenses are the df-prune
-    * (`maxDf`) and the group key alone. Same df-prune caveat as
-    * jaccard: intersection mass carried only by ubiquitous tokens is
-    * dropped while the min-size denominator still counts every token,
-    * so a pair sharing nothing but stop-words sits below any useful
-    * threshold rather than at a spurious 1.0. */
+    * Same unigram-set machinery as [[jaccardPairs]], with one
+    * deliberate difference: the size-ratio join prefilter is UNSOUND
+    * here — a small set fully contained in a big one scores 1.0 at ANY
+    * size ratio — so the self-join keeps every shared-word pair and the
+    * skew defenses are the df-prune (`maxDf`) and the group key alone.
+    * Same df-prune caveat as jaccard: intersection mass carried only by
+    * ubiquitous tokens is dropped while the min-size denominator still
+    * counts every token, so a pair sharing nothing but stop-words sits
+    * below any useful threshold rather than at a spurious 1.0. A
+    * verbatim pair scores s/k. */
   def containmentPairs(df: DataFrame, idCol: String, textCol: String,
                        groupCol: String, minOverlap: Double,
                        maxDf: Int = 1024): DataFrame =
-    if (noVerbatimDups(df, textCol, groupCol))
-      containmentDirect(df, idCol, textCol, groupCol, minOverlap, maxDf)
-    else containmentCollapsed(df, idCol, textCol, groupCol, minOverlap, maxDf)
+    containmentOver(Collapse.units(df, idCol, textCol, Seq(groupCol),
+      Collapse.unique(df, textCol, groupCol)), groupCol, minOverlap, maxDf)
 
-  /** Doc-level overlap pipeline for corpora without verbatim
-    * duplicates — [[jaccardDirect]] minus the (unsound here) ratio
-    * prefilter, with the overlap-coefficient formula at the end. */
-  private[graft] def containmentDirect(df: DataFrame, idCol: String,
-                                       textCol: String, groupCol: String,
-                                       minOverlap: Double,
-                                       maxDf: Int): DataFrame = {
-    val tok = graft.plans.InputWidth.widen(df)
-      .select(col(groupCol), col(idCol).as("i"),
-        explode(array_distinct(words(col(textCol)))).as("w"))
-    val sizes = tok.groupBy(col(groupCol), col("i")).agg(count(lit(1)).as("sz"))
-    val pruned = tok
-      .withColumn("df", count(lit(1)).over(Window.partitionBy(col(groupCol), col("w"))))
-      .where(col("df") <= maxDf).drop("df")
-      .join(sizes, Seq(groupCol, "i"))
-    pruned.as("l").join(pruned.as("r"), Seq(groupCol, "w"))
-      .where(col("l.i") < col("r.i"))
-      .select(col(groupCol), col("l.i").as("a"), col("r.i").as("b"),
-        col("l.sz").as("sza"), col("r.sz").as("szb"))
-      .groupBy(col(groupCol), col("a"), col("b"), col("sza"), col("szb"))
-      .agg(count(lit(1)).as("inter"))
-      .withColumn("overlap",
-        col("inter").cast("double") / least(col("sza"), col("szb")).cast("double"))
-      .where(col("overlap") >= minOverlap)
-      .select(col(groupCol), col("a"), col("b"), col("overlap"))
-  }
+  private[graft] def containmentOver(u: Collapse.Units, groupCol: String,
+                                     minOverlap: Double, maxDf: Int): DataFrame =
+    setPairs(u, groupCol, maxDf, "overlap", minOverlap, ratioPrefilter = false,
+      (inter, sza, szb) => inter.cast("double") / least(sza, szb).cast("double"))
 
-  /** Digest-collapsed overlap pipeline — [[jaccardCollapsed]] with the
-    * overlap formula. Same-digest pairs under df-pruning score
-    * s / k (s surviving shared tokens over the true set size k =
-    * min(|A|,|A|)), which is exactly what the uncollapsed pipeline
-    * emits for a verbatim pair — and a pair whose every token was
-    * pruned emits nothing on either path. */
-  private[graft] def containmentCollapsed(df: DataFrame, idCol: String,
-                                          textCol: String, groupCol: String,
-                                          minOverlap: Double,
-                                          maxDf: Int): DataFrame = {
-    val agg = df
-      .select(col(groupCol), md5(col(textCol)).as("digest"), col(idCol).as("m_id"))
-      .groupBy(col(groupCol), col("digest"))
-      .agg(min(col("m_id")).as("rep"), count(lit(1)).as("weight"))
-    val joined = df
-      .select(col(groupCol), md5(col(textCol)).as("digest"),
-        col(idCol).as("rep"), col(textCol).as("rtext"))
-      .join(agg, Seq(groupCol, "digest", "rep"))
-    val reps =
-      (if (graft.plans.InputWidth.isNarrow(df)) {
-        val w = df.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt
-        joined.repartition(w)
-      } else joined)
-        .select(col(groupCol), col("digest"), col("weight"), col("rtext"))
-    val tok = reps.select(col(groupCol), col("digest"), col("weight"),
-      explode(array_distinct(words(col("rtext")))).as("w"))
-    val sizes = tok.groupBy(col(groupCol), col("digest")).agg(count(lit(1)).as("sz"))
+  /** The shared core of [[jaccardPairs]] and [[containmentPairs]]:
+    * tokenize, prune tokens by weighted document frequency (the df the
+    * uncollapsed pipeline sees, so the SAME tokens are pruned), attach
+    * set sizes, self-join on shared words, count intersections, and
+    * score pairs `score(inter, sza, szb)` named `name`. A verbatim pair
+    * shares its s surviving tokens over equal sizes k, so it scores
+    * `score(s, k, k)`. No broadcast hint on the sizes: one row per unit
+    * approaches corpus cardinality on a unique corpus, so the join
+    * strategy is AQE's call. The self-join renames AFTER joining so both
+    * children stay canonically identical and ReuseExchange runs the
+    * tokenize + df-window side once. */
+  private def setPairs(u: Collapse.Units, groupCol: String, maxDf: Int,
+                       name: String, minScore: Double, ratioPrefilter: Boolean,
+                       score: (Column, Column, Column) => Column): DataFrame = {
+    val tok = u.wide.select(col(groupCol), col("key"), col("weight"),
+      explode(array_distinct(words(col("text")))).as("w"))
+    val sizes = tok.groupBy(col(groupCol), col("key")).agg(count(lit(1)).as("sz"))
     val pruned = tok
       .withColumn("df", sum(col("weight")).over(Window.partitionBy(col(groupCol), col("w"))))
       .where(col("df") <= maxDf).drop("df")
-      .join(sizes, Seq(groupCol, "digest"))
-    val crossRep = pruned.as("l").join(pruned.as("r"), Seq(groupCol, "w"))
-      .where(col("l.digest") < col("r.digest"))
-      .select(col(groupCol), col("l.digest").as("da"), col("r.digest").as("db"),
+      .join(sizes, Seq(groupCol, "key"))
+    val ratioOk =
+      if (ratioPrefilter)
+        least(col("l.sz"), col("r.sz")).cast("double") /
+          greatest(col("l.sz"), col("r.sz")).cast("double") >= minScore
+      else lit(true)
+    val cross = pruned.as("l").join(pruned.as("r"), Seq(groupCol, "w"))
+      .where(col("l.key") < col("r.key") && ratioOk)
+      .select(col(groupCol), col("l.key").as("ka"), col("r.key").as("kb"),
         col("l.sz").as("sza"), col("r.sz").as("szb"))
-      .groupBy(col(groupCol), col("da"), col("db"), col("sza"), col("szb"))
+      .groupBy(col(groupCol), col("ka"), col("kb"), col("sza"), col("szb"))
       .agg(count(lit(1)).as("inter"))
-      .withColumn("overlap",
-        col("inter").cast("double") / least(col("sza"), col("szb")).cast("double"))
-      .where(col("overlap") >= minOverlap)
-      .select(col(groupCol), col("da"), col("db"), col("overlap"))
-    val selfRep = pruned.groupBy(col(groupCol), col("digest"))
-      .agg(count(lit(1)).as("s"), min(col("sz")).as("szs"))
-      .join(reps.select(col(groupCol), col("digest"), col("weight")),
-        Seq(groupCol, "digest"))
-      .where(col("weight") >= 2)
-      .withColumn("overlap", col("s").cast("double") / col("szs").cast("double"))
-      .where(col("overlap") >= minOverlap)
-      .select(col(groupCol), col("digest"), col("overlap"))
-    val members = df.select(col(groupCol), md5(col(textCol)).as("digest"), col(idCol))
-    val ma = members.select(col(groupCol), col("digest").as("da"), col(idCol).as("ia"))
-    val mb = members.select(col(groupCol), col("digest").as("db"), col(idCol).as("ib"))
-    val crossOut = crossRep.join(ma, Seq(groupCol, "da")).join(mb, Seq(groupCol, "db"))
-      .select(col(groupCol), least(col("ia"), col("ib")).as("a"),
-        greatest(col("ia"), col("ib")).as("b"), col("overlap"))
-    val selfOut = selfRep
-      .join(ma.withColumnRenamed("da", "digest"), Seq(groupCol, "digest"))
-      .join(mb.withColumnRenamed("db", "digest"), Seq(groupCol, "digest"))
-      .where(col("ia") < col("ib"))
-      .select(col(groupCol), col("ia").as("a"), col("ib").as("b"), col("overlap"))
-    crossOut.unionByName(selfOut)
+      .withColumn(name, score(col("inter"), col("sza"), col("szb")))
+      .where(col(name) >= minScore)
+      .select(col(groupCol), col("ka"), col("kb"), col(name))
+    u.expandPairs(cross, pruned.where(col("weight") >= 2)
+      .groupBy(col(groupCol), col("key"))
+      .agg(count(lit(1)).as("s"), min(col("sz")).as("sz"))
+      .withColumn(name, score(col("s"), col("sz"), col("sz")))
+      .where(col(name) >= minScore)
+      .select(col(groupCol), col("key"), col(name)))
   }
 }

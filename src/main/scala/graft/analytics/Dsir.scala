@@ -35,17 +35,11 @@ import org.apache.spark.sql.functions._
   * tiny broadcast middle is the [[Sampling.temperatureSample]] shape,
   * feature-hashed edition.
   *
-  * ADAPTIVE like the dedup family ([[Dedup.noVerbatimDups]] probe): a
-  * replicated crawl corpus hashes every copy's tokens for the same
-  * per-text feature vector, so when verbatim duplicates exist the
-  * corpus collapses to one representative per content digest, token
-  * buckets are hashed once per DISTINCT text, bucket counts recover
-  * exactly as member-weight sums (per-digest target/total member
-  * counts × the text's per-bucket occurrences — identical texts have
-  * identical token multisets), and per-digest scores expand back to
-  * members through the digest join. Bit-identical to the direct path
-  * by construction, spec-pinned; measured 77.6 → ~2 s at a 100×
-  * replicated sf10.
+  * Routed through [[Collapse]] with the target flag as a group column:
+  * identical texts have identical token multisets, so bucket counts
+  * are weight sums over (flag, text) units, and the target and
+  * all-member counts both fall out of `weight`. Measured 77.6 → ~2 s
+  * at a 100× replicated sf10.
   */
 object Dsir {
 
@@ -66,81 +60,44 @@ object Dsir {
   def importanceTopK(corpus: DataFrame, idCol: String, textCol: String,
                      targetPred: Column, buckets: Int = 4096,
                      k: Int = 20): DataFrame =
-    if (Dedup.noVerbatimDups(corpus, textCol, textCol))
-      directTopK(corpus, idCol, textCol, targetPred, buckets, k)
-    else collapsedTopK(corpus, idCol, textCol, targetPred, buckets, k)
+    importanceOver(Collapse.units(
+        corpus.select(col(idCol), col(textCol), coalesce(targetPred, lit(false)).as("is_target")),
+        idCol, textCol, Seq("is_target"), Collapse.unique(corpus, textCol, textCol)),
+      buckets, k)
 
-  /** Doc-level pipeline — ONE hash pass over the corpus (r16): the
-    * token stream compacts to per-(doc, bucket) occurrence counts
-    * FIRST (`kx` — the same shape [[collapsedTopK]]'s `tb` already
-    * uses per digest), and both the bucket-count aggregate and the
-    * score join consume that compacted frame, so the dominant per-row
-    * cost (one seeded md5 per token) runs ONCE instead of once per
-    * pass. ReuseExchange evaluates the (doc, bucket) exchange a single
-    * time; its rows are fixed-width and bounded by min(tokens,
-    * docs × buckets), and a hot bucket compacts map-side (partial
-    * aggregation), so the exchange is skew-free at any scale. Scores
-    * are exact-integer either way: Σ_tokens wgt(bkt) ≡ Σ_bkt kx·wgt.
-    * Measured (min-of-3, sf0.1, isolated): wall FLAT (2.54 → 2.56 s —
-    * at the gate SF the two old tokenize branches ran CONCURRENTLY
-    * under AQE, so the critical path didn't shrink) but executor task
-    * time drops 2.07 → 1.89 s and the plan goes 4 scans + 2 Generate →
-    * 2 scans + 1 Generate (plans/r16/q67_*) — at 100 TB one full
-    * tokenize+md5 pass over the corpus is removed, and in-suite the
-    * freed CPU is a neighbor query's headroom. */
-  private[graft] def directTopK(corpus: DataFrame, idCol: String,
-                                textCol: String, targetPred: Column,
-                                buckets: Int, k: Int): DataFrame = {
-    val tokc = graft.plans.InputWidth.widen(corpus).select(
-        col(idCol).cast("long").as("doc_id"),
-        targetPred.as("is_target"),
-        explode(Dedup.words(col(textCol))).as("w"))
-      .select(col("doc_id"), col("is_target"),
+  /** ONE hash pass over the units (r16): the token stream compacts to
+    * per-(unit, bucket) occurrence counts FIRST (`kx`), and both the
+    * bucket-count aggregate and the score join consume that compacted
+    * frame, so the dominant per-row cost (one seeded md5 per token)
+    * runs ONCE instead of once per pass. ReuseExchange evaluates the
+    * (unit, bucket) exchange a single time; its rows are fixed-width
+    * and bounded by min(tokens, units × buckets), and a hot bucket
+    * compacts map-side (partial aggregation), so the exchange is
+    * skew-free at any scale. Scores are exact-integer either way:
+    * Σ_tokens wgt(bkt) ≡ Σ_bkt kx·wgt. Measured (min-of-3, sf0.1,
+    * isolated): wall FLAT (2.54 → 2.56 s — at the gate SF the two old
+    * tokenize branches ran CONCURRENTLY under AQE, so the critical path
+    * didn't shrink) but executor task time drops 2.07 → 1.89 s and the
+    * plan goes 4 scans + 2 Generate → 2 scans + 1 Generate
+    * (plans/r16/q67_*) — at 100 TB one full tokenize+md5 pass over the
+    * corpus is removed, and in-suite the freed CPU is a neighbor
+    * query's headroom. */
+  private[graft] def importanceOver(u: Collapse.Units, buckets: Int, k: Int): DataFrame = {
+    val tokc = u.wide
+      .select(col("key"), col("is_target"), col("weight"),
+        explode(Dedup.words(col("text"))).as("w"))
+      .select(col("key"), col("is_target"), col("weight"),
         bucket(col("w"), buckets).as("bkt"))
-      .groupBy("doc_id", "is_target", "bkt")
+      .groupBy("key", "is_target", "weight", "bkt")
       .agg(count(lit(1)).as("kx"))
     val cnts = tokc.groupBy("bkt").agg(
-      sum(when(col("is_target"), col("kx")).otherwise(0L)).as("tcnt"),
-      sum(col("kx")).as("scnt"))
-    tokc.join(broadcast(lut(cnts)), "bkt")
-      .groupBy("doc_id")
+      sum(when(col("is_target"), col("kx") * col("weight")).otherwise(0L)).as("tcnt"),
+      sum(col("kx") * col("weight")).as("scnt"))
+    val byKey = tokc.join(broadcast(lut(cnts)), "bkt")
+      .groupBy("key")
       .agg(sum(col("kx")).as("n_tokens"), sum(col("kx") * col("wgt")).as("score"))
-      .orderBy(col("score").desc, col("doc_id"))
-      .limit(k)
-  }
-
-  /** Digest-collapsed pipeline: token hashing prices by DISTINCT
-    * texts; counts are member-weight sums, scores expand back per
-    * member — bit-identical to [[directTopK]] (identical texts have
-    * identical token multisets), spec-pinned. */
-  private[graft] def collapsedTopK(corpus: DataFrame, idCol: String,
-                                   textCol: String, targetPred: Column,
-                                   buckets: Int, k: Int): DataFrame = {
-    val members = corpus.select(col(idCol).cast("long").as("doc_id"),
-      md5(col(textCol)).as("digest"), targetPred.as("is_t"))
-    val wts = members.groupBy("digest").agg(
-      min("doc_id").as("rep"),
-      count(lit(1)).as("m_all"),
-      sum(when(col("is_t"), 1L).otherwise(0L)).as("m_t"))
-    val repRows = corpus
-      .select(col(idCol).cast("long").as("m_id"), col(textCol))
-      .join(wts.select(col("digest").as("r_digest"), col("rep")),
-        col("m_id") === col("rep"))
-      .select(col("r_digest").as("digest"), col(textCol))
-    // per-(distinct text, bucket) occurrence counts — the collapsed
-    // working set: |distinct texts| × avg distinct buckets per text
-    val tb = repRows
-      .select(col("digest"), explode(Dedup.words(col(textCol))).as("w"))
-      .select(col("digest"), bucket(col("w"), buckets).as("bkt"))
-      .groupBy("digest", "bkt").agg(count(lit(1)).as("kx"))
-    val cnts = tb.join(wts, "digest").groupBy("bkt").agg(
-      sum(col("kx") * col("m_t")).as("tcnt"),
-      sum(col("kx") * col("m_all")).as("scnt"))
-    val perDigest = tb.join(broadcast(lut(cnts)), "bkt")
-      .groupBy("digest")
-      .agg(sum("kx").as("n_tokens"), sum(expr("kx * wgt")).as("score"))
-    members.select("doc_id", "digest").join(perDigest, "digest")
-      .select(col("doc_id"), col("n_tokens"), col("score"))
+    u.expand(byKey, "doc_id")
+      .select(col("doc_id").cast("long").as("doc_id"), col("n_tokens"), col("score"))
       .orderBy(col("score").desc, col("doc_id"))
       .limit(k)
   }

@@ -31,12 +31,9 @@ import org.apache.spark.sql.functions._
   * into one partition). The two count aggregates ship map-side partials
   * only (a boilerplate gram crosses the wire once per partition), and
   * the bigram-score table S is vocabulary-sized, built from the two
-  * count tables — its join is NOT the corpus-sized one. Adaptive like
-  * the rest of the family ([[Dedup.noVerbatimDups]]): on a replicated
-  * corpus, tokenizing and the gram exchange run once per DISTINCT text
-  * and counts are recovered exactly as member-weight sums (identical
-  * texts have identical occurrence multisets), so the model and every
-  * score are bit-identical to the doc-level path — spec-pinned.
+  * count tables — its join is NOT the corpus-sized one. Routed through
+  * [[Collapse]]: counts are weight sums over units, because identical
+  * texts have identical occurrence multisets.
   */
 object LanguageModel {
 
@@ -49,52 +46,25 @@ object LanguageModel {
     * than 2 tokens have no bigrams and do not appear (their unigrams
     * still train the model). */
   def fluency(corpus: DataFrame, idCol: String, textCol: String): DataFrame =
-    if (Dedup.noVerbatimDups(corpus, textCol, textCol))
-      fluencyDirect(corpus, idCol, textCol)
-    else fluencyCollapsed(corpus, idCol, textCol)
+    fluencyOver(Collapse.textUnits(corpus, idCol, textCol))
 
-  /** Doc-level pipeline: tokenize once per corpus row; the bigram
-    * occurrence table feeds the count aggregate and the score join
-    * (ReuseExchange runs the shuffle once). */
-  private[graft] def fluencyDirect(corpus: DataFrame, idCol: String,
-                                   textCol: String): DataFrame = {
-    val toks = corpus.select(col(idCol).cast("long").as("doc_id"),
-      Dedup.words(col(textCol)).as("ws"))
-    val bg = toks.select(col("doc_id"),
+  /** Tokenize once per unit; the bigram occurrence table feeds the
+    * count aggregate and the score join (ReuseExchange runs the shuffle
+    * once), and the per-unit aggregation of that join is the
+    * pipeline's one corpus-sized exchange. */
+  private[graft] def fluencyOver(u: Collapse.Units): DataFrame = {
+    val toks = u.rows.select(col("key"), col("weight"),
+      Dedup.words(col("text")).as("ws"))
+    val bg = toks.select(col("key"), col("weight"),
       explode(Dedup.shingles(col("ws"), 2)).as("g"))
-    val uc = toks.select(explode(col("ws")).as("w1"))
-      .groupBy("w1").agg(count(lit(1)).as("u"))
-    val bc = bg.groupBy("g").agg(count(lit(1)).as("b"))
-    perDoc(bg, score(bc, uc))
-  }
-
-  /** Digest-collapsed pipeline: tokenize/shuffle once per DISTINCT
-    * text; counts are member-weight sums — bit-identical to the direct
-    * counts because identical texts have identical occurrence
-    * multisets. Fixed-width-only collapse aggregate (min id + count),
-    * representative text via the join-back on id = rep. */
-  private[graft] def fluencyCollapsed(corpus: DataFrame, idCol: String,
-                                      textCol: String): DataFrame = {
-    val members = corpus.select(col(idCol).cast("long").as("doc_id"),
-      md5(col(textCol)).as("digest"))
-    val reps = members.groupBy("digest")
-      .agg(min("doc_id").as("rep"), count(lit(1)).as("weight"))
-    val repRows = corpus
-      .select(col(idCol).cast("long").as("m_id"), col(textCol))
-      .join(reps.withColumnRenamed("digest", "r_digest"),
-        col("m_id") === col("rep"))
-      .select(col("r_digest").as("digest"), col("weight"),
-        Dedup.words(col(textCol)).as("ws"))
-    val bg = repRows.select(col("digest"), col("weight"),
-      explode(Dedup.shingles(col("ws"), 2)).as("g"))
-    val uc = repRows.select(col("weight"), explode(col("ws")).as("w1"))
+    val uc = toks.select(col("weight"), explode(col("ws")).as("w1"))
       .groupBy("w1").agg(sum("weight").as("u"))
     val bc = bg.groupBy("g").agg(sum("weight").as("b"))
-    val byDigest = bg.join(score(bc, uc), "g")
-      .groupBy("digest")
+    val byKey = bg.join(score(bc, uc), "g")
+      .groupBy("key")
       .agg(count(lit(1)).as("n_bigrams"), sum("s").as("score_s"))
-    members.join(byDigest, "digest")
-      .select(col("doc_id"), col("n_bigrams"), col("score_s"),
+    u.expand(byKey, "doc_id")
+      .select(col("doc_id").cast("long").as("doc_id"), col("n_bigrams"), col("score_s"),
         (col("score_s").cast("double") / col("n_bigrams").cast("double"))
           .as("fluency"))
   }
@@ -105,14 +75,4 @@ object LanguageModel {
     bc.withColumn("w1", substring_index(col("g"), " ", 1))
       .join(uc, "w1")
       .select(col("g"), expr(s"($Scale * b) div u").as("s"))
-
-  /** Per-doc aggregation of the occurrence⋈score join — the pipeline's
-    * one corpus-sized exchange. */
-  private def perDoc(bg: DataFrame, sc: DataFrame): DataFrame =
-    bg.join(sc, "g")
-      .groupBy("doc_id")
-      .agg(count(lit(1)).as("n_bigrams"), sum("s").as("score_s"))
-      .select(col("doc_id"), col("n_bigrams"), col("score_s"),
-        (col("score_s").cast("double") / col("n_bigrams").cast("double"))
-          .as("fluency"))
 }

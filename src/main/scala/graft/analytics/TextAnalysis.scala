@@ -57,10 +57,14 @@ object TextAnalysis {
           .as("stop_ratio"),
         (col("n_chars_m").cast("double") / greatest(col("n_tokens"), lit(1)).cast("double"))
           .as("mean_word_len"),
-        ((col("n_stop").cast("double") / greatest(col("n_tokens"), lit(1)).cast("double")) * 0.5 +
-         (col("n_tokens").cast("double") / (col("n_chars_m") + 1).cast("double")) * 0.5)
-          .as("quality"))
+        quality(col("n_tokens"), col("n_stop"), col("n_chars_m")).as("quality"))
   }
+
+  /** The quality formula over [[qualityScore]]'s counters: half the
+    * stopword ratio plus half the tokens per character. */
+  def quality(nTokens: Column, nStop: Column, nCharsM: Column): Column =
+    (nStop.cast("double") / greatest(nTokens, lit(1)).cast("double")) * 0.5 +
+      (nTokens.cast("double") / (nCharsM + 1).cast("double")) * 0.5
 
   /** Token counts: whitespace tokens + a BPE-ish regex token count
     * (alnum runs and single non-space symbols counted separately).
@@ -253,13 +257,14 @@ object TextAnalysis {
   def postings(df: DataFrame, idCol: String, textCol: String,
                shingleN: Int = 3, minDf: Long = 2,
                maxDf: Long = 8): DataFrame =
-    if (Dedup.mostlyUnique(df, textCol, textCol))
-      postingsDirect(df, idCol, textCol, shingleN, minDf, maxDf)
-    else postingsCollapsed(df, idCol, textCol, shingleN, minDf, maxDf)
+    postingsOver(Collapse.textUnits(df, idCol, textCol, 0.95), shingleN, minDf, maxDf)
 
-  private[graft] def postingsDirect(df: DataFrame, idCol: String,
-                                    textCol: String, shingleN: Int,
-                                    minDf: Long, maxDf: Long): DataFrame = {
+  /** Collapses at 0.95 ([[Collapse.unique]]): the collapse saves the
+    * shingle pass per copy but costs two joins. Only QUALIFYING terms
+    * expand back to members — rare terms are carried by few distinct
+    * texts, and a term replicated across a mirror set has df ≫ maxDf. */
+  private[graft] def postingsOver(u: Collapse.Units, shingleN: Int,
+                                  minDf: Long, maxDf: Long): DataFrame = {
     // native distinct_shingles (r16): the column-algebra spelling
     // array_distinct(shingles(words(text))) re-evaluates the inline
     // tokenize subtree inside the transform lambda PER ELEMENT —
@@ -267,49 +272,13 @@ object TextAnalysis {
     // where the codegen'd expression is one pass. Documented
     // bit-identical output. Measured (sf0.1, isolated): q80 wall
     // ~2.1 → 1.33 s (min-of-4), executor task time 30.3 → 6.4 s.
-    val terms = graft.plans.InputWidth.widen(df)
-      .select(col(idCol).as("doc"),
+    val terms = u.wide
+      .select(col("key"), col("weight"),
         explode(graft.functions.TextHashExpressions
-          .distinctShingles(col(textCol), shingleN)).as("term"))
-    val keep = terms.groupBy("term").agg(count(lit(1)).as("df"))
+          .distinctShingles(col("text"), shingleN)).as("term"))
+    val keep = terms.groupBy("term").agg(sum(col("weight")).as("df"))
       .where(col("df") >= minDf && col("df") <= maxDf)
-    terms.join(keep, "term")
-      .groupBy("term", "df")
-      .agg(sort_array(collect_set(col("doc"))).as("postings"))
-      .select(col("term"), col("df"), col("postings"))
-  }
-
-  /** Digest-collapsed postings for replicated corpora (the Dedup
-    * family's adaptive move): shingling and the df aggregate run once
-    * per DISTINCT text — df recovers exactly as the member-weight sum
-    * (identical texts contain identical term sets) — and only
-    * QUALIFYING terms expand back through the digest→member map.
-    * On mirror-heavy data the expansion side is tiny twice over: rare
-    * terms are by definition carried by few distinct texts, and a
-    * term replicated across the whole mirror set has df ≫ maxDf and
-    * never reaches the expansion. Bit-identical to the direct path
-    * (spec-pinned). */
-  private[graft] def postingsCollapsed(df: DataFrame, idCol: String,
-                                       textCol: String, shingleN: Int,
-                                       minDf: Long, maxDf: Long): DataFrame = {
-    val agg = df
-      .select(md5(col(textCol)).as("digest"), col(idCol).as("m_id"))
-      .groupBy("digest")
-      .agg(min(col("m_id")).as("rep"), count(lit(1)).as("weight"))
-    val reps = df
-      .select(md5(col(textCol)).as("digest"), col(idCol).as("rep"),
-        col(textCol).as("rtext"))
-      .join(agg, Seq("digest", "rep"))
-    // native distinct_shingles — same O(words²)→one-pass fix as the
-    // direct path above
-    val rterms = reps.select(col("digest"), col("weight"),
-      explode(graft.functions.TextHashExpressions
-        .distinctShingles(col("rtext"), shingleN)).as("term"))
-    val keep = rterms.groupBy("term").agg(sum(col("weight")).as("df"))
-      .where(col("df") >= minDf && col("df") <= maxDf)
-    val members = df.select(md5(col(textCol)).as("digest"), col(idCol).as("doc"))
-    rterms.select(col("digest"), col("term")).join(keep, "term")
-      .join(members, "digest")
+    u.expand(terms.select(col("key"), col("term")).join(keep, "term"), "doc")
       .groupBy("term", "df")
       .agg(sort_array(collect_set(col("doc"))).as("postings"))
       .select(col("term"), col("df"), col("postings"))
@@ -343,7 +312,7 @@ object TextAnalysis {
     // the VOCABULARY-sized unigram table caches, pinning one tiny
     // table across its three uses (nTotal + both broadcast joins).
     val toks =
-      if (Dedup.mostlyUnique(df, textCol, textCol))
+      if (Collapse.unique(df, textCol, textCol, 0.95))
         graft.plans.InputWidth.widen(df)
           .select(lit(1L).as("weight"), Dedup.words(col(textCol)).as("ws"))
       else {

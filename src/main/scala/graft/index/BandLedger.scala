@@ -29,7 +29,7 @@ class BandLedger(path: String) extends ShardedLedger(path, "bk", md5)
 
 object BandLedger {
   /** Per-doc LSH band keys from the text column — the exact banding of
-    * [[graft.analytics.Dedup.lshPairsDirect]] (unigram MinHash, 4
+    * [[graft.analytics.Dedup.lshCandidatePairs]] (unigram MinHash, 4
     * chunks, bands A=(h1,h2) / B=(h3,h4)), exploded to one row per
     * band. Docs with no tokens produce no bands (null signature → the
     * explode drops them): they can never be suppressed or recorded. */

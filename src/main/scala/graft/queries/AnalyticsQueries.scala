@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.analytics.{Dedup, Similarity, TextAnalysis}
+import graft.analytics.{Collapse, Dedup, Similarity, TextAnalysis}
 import graft.multimodal.Multimodal
 import Tables._
 
@@ -183,16 +183,13 @@ object AnalyticsQueries {
       val corpus = docs.where(corpusCond)
       val bench = docs.where(col("doc_id") % 13 === 0)
       // ONE probe scan instead of three (r17, guide §2.4): the two
-      // adaptive legs would each run their own duplication probe over
+      // routed legs would each run their own duplication probe over
       // the same documents scan — nearDupComponents on (source, text),
       // ngramHits on (text) for the corpus AND (text) for the bench
       // slice — three full-text passes answering three one-bit
       // questions. Conditional count-distincts compute all three in a
-      // single pass (each replicates noVerbatimDups exactly: worded
-      // rows only, xxhash64 over the probe key; a collision still only
-      // mis-routes toward the always-correct collapsed path). Routing
-      // — and therefore output, the paths being spec-pinned
-      // bit-identical — is unchanged.
+      // single pass over Collapse's own worded filter, probe key and
+      // unique test, so routing is exactly the operators' own.
       // hashes PROJECTED once per row before the aggregate (a when()
       // around each count_distinct re-evaluates its full-text hash per
       // aggregate — measured 1.17 s serial vs ~3×0.4 s for the three
@@ -201,24 +198,23 @@ object AnalyticsQueries {
       // repartition ships exactly those text bytes (measured 4.2
       // task-seconds of shuffle for ~0.4 s of serial hashing — the
       // §2.3 project-before-exchange rule applied in reverse).
-      val worded = trim(col("text")) =!= ""
       val pre = docs.select(
-        corpusCond.as("isc"), worded.as("w"),
-        xxhash64(col("source"), col("text")).as("hsrc"),
-        xxhash64(col("text"), col("text")).as("htxt"))
+        corpusCond.as("isc"), Collapse.worded("text").as("w"),
+        Collapse.probeKey("source", "text").as("hsrc"),
+        Collapse.probeKey("text", "text").as("htxt"))
       val pr = pre.agg(
         count(when(col("isc") && col("w"), 1)).as("cn"),
         count_distinct(when(col("isc") && col("w"), col("hsrc"))).as("cd_src"),
         count_distinct(when(col("isc") && col("w"), col("htxt"))).as("cd_txt"),
         count(when(!col("isc") && col("w"), 1)).as("bn"),
         count_distinct(when(!col("isc") && col("w"), col("htxt"))).as("bd_txt")).first()
-      val corpusNoDupsBySrc = pr.getLong(0) == pr.getLong(1)
-      val corpusNoDupsByTxt = pr.getLong(0) == pr.getLong(2)
-      val benchNoDups = pr.getLong(3) == pr.getLong(4)
+      def units(df: DataFrame, groups: Seq[String], rows: Long, distinct: Long) =
+        Collapse.units(df, "doc_id", "text", groups,
+          Collapse.unique(rows, distinct, atLeast = 1.0))
       val keep1 = Dedup.exactDedup(corpus, "doc_id", "text")
         .select(col("keep_id").as("doc_id"))
-      val comps = Dedup.nearDupComponents(corpus, "doc_id", "text", "source",
-        noDups = Some(corpusNoDupsBySrc))
+      val comps = Dedup.nearDupOver(
+        units(corpus, Seq("source"), pr.getLong(0), pr.getLong(1)), "source")
       val q = TextAnalysis.qualityScore(corpus, "doc_id", "text")
         .select(col("doc_id"), col("n_tokens"), col("quality"))
       val w = org.apache.spark.sql.expressions.Window
@@ -228,16 +224,15 @@ object AnalyticsQueries {
         .withColumn("rn", row_number().over(w)).where(col("rn") > 1)
         .select(col("node").as("doc_id"))
       val drop4 = graft.analytics.Decontaminate
-        .ngramHits(corpus, bench, "doc_id", "text", 4,
-          corpusNoDups = Some(corpusNoDupsByTxt),
-          benchNoDups = Some(benchNoDups))
+        .hitsOver(units(corpus, Nil, pr.getLong(0), pr.getLong(2)),
+          units(bench, Nil, pr.getLong(3), pr.getLong(4)), 4)
         .where(col("contamination") >= 0.5).select(col("doc_id"))
       // quality gate INLINED into the survivor scan (r17): the old
       // shape joined qualityScore(corpus) back on doc_id — a 1:1
       // self-derived frame, costing a second full textStats evaluation
       // plus a broadcast-build leg — where the gate columns are plain
-      // per-row expressions the scan can carry (identical expressions,
-      // same two-step projection, so gate membership is bit-identical;
+      // per-row expressions the scan can carry (the same counters and
+      // TextAnalysis.quality, so gate membership is bit-identical;
       // the inner join on a 1:1 key ≡ the filter).
       val st = graft.functions.TextStatExpressions
         .textStats(col("text"), TextAnalysis.langMarkers("en"))
@@ -249,10 +244,7 @@ object AnalyticsQueries {
           col("__qst").getItem(1).cast("int").as("n_stop"),
           col("__qst").getItem(5).cast("int").as("n_chars_m"))
         .withColumn("quality",
-          (col("n_stop").cast("double") /
-            greatest(col("n_tokens"), lit(1)).cast("double")) * 0.5 +
-          (col("n_tokens").cast("double") /
-            (col("n_chars_m") + 1).cast("double")) * 0.5)
+          TextAnalysis.quality(col("n_tokens"), col("n_stop"), col("n_chars_m")))
         .where(col("n_tokens") >= 10 && col("quality") > 0.1)
         .join(drop4, Seq("doc_id"), "left_anti")
         .groupBy("lang")

@@ -47,15 +47,15 @@ class DecontaminateSpec extends AnyFunSuite with LocalSpark {
       f.orderBy("doc_id").collect().map(_.toSeq).toSeq
     for (corpus <- Seq(dup, uniq)) {
       val direct = run(graft.analytics.Decontaminate
-        .directHits(corpus, benchGramsOf(bench), "doc_id", "text", 4))
+        .hitsOver(units(corpus, true), units(bench, true), 4))
       val collapsed = run(graft.analytics.Decontaminate
-        .collapsedHits(corpus, benchGramsOf(bench), "doc_id", "text", 4))
+        .hitsOver(units(corpus, false), units(bench, true), 4))
       assert(direct == collapsed)
     }
     // the public entry on the duplicated corpus (probe routes to the
     // collapsed path) matches the direct computation
     val pub = run(Decontaminate.ngramHits(dup, bench, "doc_id", "text", 4))
-    val ref = run(Decontaminate.directHits(dup, benchGramsOf(bench), "doc_id", "text", 4))
+    val ref = run(Decontaminate.hitsOver(units(dup, true), units(bench, true), 4))
     assert(pub == ref)
     // every member of a duplicated text carries the representative's counts
     assert(pub.count(r => r.head.asInstanceOf[Long] % 10 == 1) == 3)
@@ -154,9 +154,9 @@ class DecontaminateSpec extends AnyFunSuite with LocalSpark {
       f.orderBy("doc_id").collect().map(_.toSeq).toSeq
     for (corpus <- Seq(dup, uniq); k <- Seq(2, 4)) {
       val direct = run(Decontaminate
-        .dupSpansDirect(corpus, "doc_id", "text", k, 2L))
+        .dupSpansOver(units(corpus, true), k, 2L))
       val collapsed = run(Decontaminate
-        .dupSpansCollapsed(corpus, "doc_id", "text", k, 2L))
+        .dupSpansOver(units(corpus, false), k, 2L))
       assert(direct == collapsed, s"k=$k")
     }
     // verbatim copies alone make every shingled doc fully duplicated
@@ -166,15 +166,9 @@ class DecontaminateSpec extends AnyFunSuite with LocalSpark {
     assert(pub.find(_.head == 2L).get.last.asInstanceOf[Double] == 0.0)
   }
 
-  // mirror of Decontaminate.benchGrams for the package-visible paths
-  private def benchGramsOf(bench: org.apache.spark.sql.DataFrame) = {
-    import org.apache.spark.sql.functions._
-    bench.select(
-        explode_outer(graft.functions.TextHashExpressions
-          .distinctShingles(col("text"), 4)).as("g"),
-        col("doc_id").cast("long").as("doc_id"))
-      .groupBy("g").agg(min("doc_id").as("bench_id"))
-  }
+  // a corpus as unique (direct route) or collapsed units
+  private def units(df: org.apache.spark.sql.DataFrame, unique: Boolean) =
+    graft.analytics.Collapse.units(df, "doc_id", "text", Nil, unique)
 
   test("repStats: exact 2-gram totals, distinct counts, top count") {
     import org.apache.spark.unsafe.types.UTF8String

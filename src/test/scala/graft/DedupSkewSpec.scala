@@ -2,7 +2,7 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.analytics.{Dedup, Similarity}
+import graft.analytics.{Collapse, Dedup, Similarity}
 
 /** Skew defenses in the dedup pair generators: a degenerate input
   * (many identical / boilerplate docs) must complete with a BOUNDED
@@ -272,22 +272,23 @@ class DedupSkewSpec extends AnyFunSuite with LocalSpark {
     for (docs <- Seq(unique, dup)) {
       def lset(f: org.apache.spark.sql.DataFrame) =
         f.collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSet
-      assert(lset(Dedup.lshPairsDirect(docs, "doc_id", "text", "source", 1024)) ===
-        lset(Dedup.lshPairsCollapsed(docs, "doc_id", "text", "source", 1024)))
+      def u(unique: Boolean) = Collapse.units(docs, "doc_id", "text", Seq("source"), unique)
+      assert(lset(Dedup.lshOver(u(true), "source", 1024)) ===
+        lset(Dedup.lshOver(u(false), "source", 1024)))
       def jset(f: org.apache.spark.sql.DataFrame) =
         f.collect().map(r =>
           (r.getString(0), r.getLong(1), r.getLong(2), r.getDouble(3))).toSet
-      assert(jset(Dedup.jaccardDirect(docs, "doc_id", "text", "source", 0.3, 1024)) ===
-        jset(Dedup.jaccardCollapsed(docs, "doc_id", "text", "source", 0.3, 1024)))
-      assert(jset(Dedup.containmentDirect(docs, "doc_id", "text", "source", 0.3, 1024)) ===
-        jset(Dedup.containmentCollapsed(docs, "doc_id", "text", "source", 0.3, 1024)))
+      assert(jset(Dedup.jaccardOver(u(true), "source", 0.3, 1024)) ===
+        jset(Dedup.jaccardOver(u(false), "source", 0.3, 1024)))
+      assert(jset(Dedup.containmentOver(u(true), "source", 0.3, 1024)) ===
+        jset(Dedup.containmentOver(u(false), "source", 0.3, 1024)))
       def cset(f: org.apache.spark.sql.DataFrame) =
         f.collect().map(r => (r.getAs[Long]("node"), r.getAs[Long]("comp"))).toSet
       assert(cset(Dedup.connectedComponents(
-          Dedup.lshPairsDirect(docs, "doc_id", "text", "source", 1024))) ===
-        cset(Dedup.nearDupCollapsed(docs, "doc_id", "text", "source", 1024, 20)))
+          Dedup.lshOver(u(true), "source", 1024))) ===
+        cset(Dedup.nearDupOver(u(false), "source", 1024, 20)))
       // local union-find solve == distributed fixed-point loop
-      val pairs = Dedup.lshPairsDirect(docs, "doc_id", "text", "source", 1024)
+      val pairs = Dedup.lshOver(u(true), "source", 1024)
       assert(cset(Dedup.connectedComponents(pairs)) ===
         cset(Dedup.connectedComponents(pairs, localSolveMaxEdges = 0L)))
     }

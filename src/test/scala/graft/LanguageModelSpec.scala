@@ -39,8 +39,9 @@ class LanguageModelSpec extends AnyFunSuite with LocalSpark {
     def run(f: => org.apache.spark.sql.DataFrame) =
       f.orderBy("doc_id").collect().map(_.toSeq).toSeq
     for (corpus <- Seq(dup, uniq)) {
-      val direct = run(LanguageModel.fluencyDirect(corpus, "doc_id", "text"))
-      val collapsed = run(LanguageModel.fluencyCollapsed(corpus, "doc_id", "text"))
+      def u(unique: Boolean) = graft.analytics.Collapse.units(corpus, "doc_id", "text", Nil, unique)
+      val direct = run(LanguageModel.fluencyOver(u(true)))
+      val collapsed = run(LanguageModel.fluencyOver(u(false)))
       assert(direct == collapsed)
       assert(direct.nonEmpty)
     }

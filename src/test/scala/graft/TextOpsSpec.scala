@@ -159,8 +159,9 @@ class TextOpsSpec extends AnyFunSuite with LocalSpark {
       .toDF("doc_id", "text")
     def pset(f: org.apache.spark.sql.DataFrame) =
       f.collect().map(r => (r.getString(0), r.getLong(1), r.getSeq[Long](2))).toSet
-    val d = TextAnalysis.postingsDirect(docs, "doc_id", "text", 2, 2, 6)
-    val c = TextAnalysis.postingsCollapsed(docs, "doc_id", "text", 2, 2, 6)
+    def u(unique: Boolean) = graft.analytics.Collapse.units(docs, "doc_id", "text", Nil, unique)
+    val d = TextAnalysis.postingsOver(u(true), 2, 2, 6)
+    val c = TextAnalysis.postingsOver(u(false), 2, 2, 6)
     assert(pset(d) === pset(c))
     assert(pset(d).nonEmpty) // "a b" df=6 qualifies under maxDf=6
   }

@@ -41,10 +41,10 @@ class TrainingOpsSpec extends AnyFunSuite with LocalSpark {
       (3L, "aa bb aa", false), (4L, "zz yy", true),
       (5L, "zz yy", false), (6L, "cc dd cc dd", false)
     ).toDF("doc_id", "text", "is_t")
-    val direct = Dsir.directTopK(docs, "doc_id", "text",
-        col("is_t"), 64, 10).collect().map(_.toSeq).toSeq
-    val collapsed = Dsir.collapsedTopK(docs, "doc_id", "text",
-        col("is_t"), 64, 10).collect().map(_.toSeq).toSeq
+    def u(unique: Boolean) = graft.analytics.Collapse.units(
+      docs.withColumnRenamed("is_t", "is_target"), "doc_id", "text", Seq("is_target"), unique)
+    val direct = Dsir.importanceOver(u(true), 64, 10).collect().map(_.toSeq).toSeq
+    val collapsed = Dsir.importanceOver(u(false), 64, 10).collect().map(_.toSeq).toSeq
     assert(direct == collapsed)
   }
 

@@ -50,6 +50,12 @@ object Session {
     // settings.
     "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning" -> "true",
     "spark.sql.session.timeZone" -> "UTC",
+    // `events.parquet` has shipped with TIMESTAMP(NANOS) `ts`, which
+    // Spark reads only as a long under this conf (`Tables.events`
+    // converts it). It is session-wide because Spark reads it when it
+    // plans and runs the scan, not at `spark.read`, so it cannot be
+    // scoped to one read.
+    "spark.sql.legacy.parquet.nanosAsLong" -> "true",
     "spark.ui.enabled" -> "false")
 
   /** A `local[cpus]` session with the engine's settings, logging at WARN.

@@ -1,8 +1,11 @@
 package graft.analytics
 
-import org.apache.spark.sql.{Column, DataFrame}
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{IntegerType, ShortType, StructField}
 
 /** Deduplication operators for large-scale training-data pipelines:
   * exact (hash-groupBy), MinHash (+ LSH banding), SimHash, n-gram
@@ -150,109 +153,62 @@ object Dedup {
     * the min-aggregation as a carried column, so the round's single
     * `filter(changed).count()` both materializes the new label
     * checkpoint and decides convergence — no second fixed-point join.
-    * Each round's |V|-row checkpoint is freed as soon as the next one
-    * lands ([[Iterate.checkpoint]]).
+    *
+    * Routed by [[Graph]] on the symmetrized edge list. The local route
+    * solves the same fixed point by union-find + min-label (both
+    * compute "every node labeled with its component's min id"); it
+    * takes the min under Long ordering, so only integral ids take it.
     */
   def connectedComponents(pairs: DataFrame, aCol: String = "a", bCol: String = "b",
-                          maxIterations: Int = 20,
-                          localSolveMaxEdges: Long = 2000000L): DataFrame = {
-    val und = symmetrized(pairs, aCol, bCol)
-    und.cache()
-    // Small-graph fast path: the pair graph of a dedup pipeline is
-    // edges-per-CLUSTER sparse — after LSH banding + digest collapse it
-    // is routinely thousands of edges even when the corpus is 10⁸ docs
-    // — and each distributed round costs a fixed multi-stage job. When
-    // the (symmetrized, distinct) edge list fits on the driver, solve
-    // the EXACT same fixed point locally with union-find + min-label
-    // (identical output by definition: both compute "every node labeled
-    // with its component's min id") and skip the loop entirely. The
-    // count() that decides this materializes the cache the first round
-    // would have paid for anyway. Gated on integral node ids so the
-    // min is taken under the same ordering Spark's `min` uses; any
-    // other type (or a big graph) takes the distributed loop.
-    val integral = und.schema("x").dataType match {
-      case org.apache.spark.sql.types.LongType |
-           org.apache.spark.sql.types.IntegerType |
-           org.apache.spark.sql.types.ShortType => true
-      case _ => false
-    }
-    if (integral && und.count() <= localSolveMaxEdges) {
-      val nodeType = und.schema("x").dataType
-      val edges = und.select(col("x").cast("long"), col("y").cast("long")).collect()
-      val parent = new java.util.HashMap[Long, Long]()
-      def find(x0: Long): Long = {
-        var x = x0
-        while (parent.get(x) != x) {
-          val g = parent.get(parent.get(x))
-          parent.put(x, g)
-          x = g
-        }
-        x
-      }
-      edges.foreach { r =>
-        val a = r.getLong(0); val b = r.getLong(1)
-        parent.putIfAbsent(a, a); parent.putIfAbsent(b, b)
-        val ra = find(a); val rb = find(b)
-        if (ra != rb) parent.put(math.max(ra, rb), math.min(ra, rb))
-      }
-      val out = new scala.collection.mutable.ArrayBuffer[(Long, Long)](parent.size)
-      parent.keySet().forEach { n => out += ((n, find(n))) }
-      und.unpersist()
-      val spark = pairs.sparkSession
-      import spark.implicits._
-      return out.toSeq.toDF("node", "comp")
-        .select(col("node").cast(nodeType).as("node"),
-          col("comp").cast(nodeType).as("comp"))
-    }
-    val nodes = und.select(col("x").as("node")).distinct()
-    var labels = nodes.withColumn("comp", col("node"))
-    var prevHandle: Option[org.apache.spark.rdd.RDD[org.apache.spark.sql.catalyst.InternalRow]] = None
-    var converged = false
-    var round = 0
-    while (!converged && round < maxIterations) {
-      round += 1
-      val (next, handle) = Iterate.checkpoint(ccRound(und, labels))
-      // the ONE action of the round: a DataFrame aggregate over the
-      // checkpointed frame — its first action materializes every
-      // partition of the checkpoint AND counts label changes, all on
-      // columnar UnsafeRow blocks (no boxed-Row filter)
-      val nChanged = next.where(!(col("comp") <=> col("prev"))).count()
-      converged = nChanged == 0L
-      prevHandle.foreach(_.unpersist(false))
-      prevHandle = Some(handle)
-      labels = next.select("node", "comp")
-    }
-    if (!converged)
-      org.slf4j.LoggerFactory.getLogger(getClass).warn(
-        s"connectedComponents exited at the maxIterations=$maxIterations cap " +
-          "WITHOUT converging: components with diameter above the cap are " +
-          "under-merged (and will not match an exact transitive closure)")
-    und.unpersist()
-    // the final round's checkpoint backs the RETURNED labels — freeable
-    // only after the caller consumes them ([[CheckpointRegistry]])
-    prevHandle.foreach(CheckpointRegistry.retain)
-    labels
-  }
+                          maxIterations: Int = 20): DataFrame =
+    componentsOver(Graph.undirected(pairs, aCol, bCol), maxIterations)
 
-  /** Symmetrize candidate pairs in ONE pass: the input is typically an
-    * expensive generator (MinHash window + self-join), and the
-    * union-of-two-selects formulation would evaluate it twice before
-    * the cache can help; explode(array(struct)) emits both directions
-    * from a single evaluation. The result is pre-partitioned AND
-    * pre-sorted on the per-round join key: the cached plan's
-    * outputPartitioning/outputOrdering survive the InMemoryTableScan,
-    * so every round's edge⋈label join reuses them — zero exchange and
-    * zero sort on the (big) edge side per round; only the |V|-row
-    * label side moves. */
-  private def symmetrized(pairs: DataFrame, aCol: String, bCol: String): DataFrame =
-    pairs
-      .select(explode(array(
-        struct(col(aCol).as("x"), col(bCol).as("y")),
-        struct(col(bCol).as("x"), col(aCol).as("y")))).as("e"))
-      .select(col("e.x").as("x"), col("e.y").as("y"))
-      .distinct()
-      .repartition(col("y"))
-      .sortWithinPartitions("y")
+  private[graft] def componentsOver(g: Graph.Edges, maxIterations: Int): DataFrame =
+    g.solve(componentsLocal(g, _)) { und =>
+      val nodes = und.select(col("x").as("node")).distinct()
+      val (labels, changed) = Graph.rounds(nodes.withColumn("comp", col("node")),
+        maxIterations, l => ccRound(und, l.select("node", "comp")),
+        // the ONE action of the round: a DataFrame aggregate over the
+        // checkpointed frame — its first action materializes every
+        // partition of the checkpoint AND counts label changes, all on
+        // columnar UnsafeRow blocks (no boxed-Row filter)
+        (next, _) => next.where(!(col("comp") <=> col("prev"))).count())
+      if (changed != 0L)
+        org.slf4j.LoggerFactory.getLogger(getClass).warn(
+          s"connectedComponents exited at the maxIterations=$maxIterations cap " +
+            "WITHOUT converging: components with diameter above the cap are " +
+            "under-merged (and will not match an exact transitive closure)")
+      labels.select("node", "comp")
+    }
+
+  /** Union-find with min-label over the collected edges, ids compared
+    * as Long and returned in their own type. */
+  private def componentsLocal(g: Graph.Edges, rows: Array[Row]): DataFrame = {
+    val parent = new java.util.HashMap[Long, Long]()
+    def find(x0: Long): Long = {
+      var x = x0
+      while (parent.get(x) != x) {
+        val gp = parent.get(parent.get(x))
+        parent.put(x, gp)
+        x = gp
+      }
+      x
+    }
+    rows.foreach { r =>
+      val a = r.getAs[Number](0).longValue; val b = r.getAs[Number](1).longValue
+      parent.putIfAbsent(a, a); parent.putIfAbsent(b, b)
+      val ra = find(a); val rb = find(b)
+      if (ra != rb) parent.put(math.max(ra, rb), math.min(ra, rb))
+    }
+    val idType = g.df.schema("x").dataType
+    val id: Long => Any = idType match {
+      case IntegerType => _.toInt
+      case ShortType => _.toShort
+      case _ => identity
+    }
+    g.solved(Seq(StructField("comp", idType)),
+      parent.keySet.asScala.toSeq.map(n => Row(id(n), id(find(n)))))
+  }
 
   /** One label-propagation round, pre-checkpoint: min over (a) the
     * node's own label — which also carries `prev` for the convergence
@@ -284,7 +240,7 @@ object Dedup {
     * the real loop materializes exactly this shape every round. */
   private[graft] def ccRoundPlan(pairs: DataFrame, aCol: String = "a",
                                  bCol: String = "b"): DataFrame = {
-    val und = symmetrized(pairs, aCol, bCol)
+    val und = Graph.undirectedRows(pairs, aCol, bCol)
     val labels = und.select(col("x").as("node")).distinct()
       .withColumn("comp", col("node"))
     ccRound(und, labels)

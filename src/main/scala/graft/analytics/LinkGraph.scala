@@ -1,7 +1,10 @@
 package graft.analytics
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{IntegerType, LongType, StructField}
 
 /** Link-graph quality signals — PageRank over a (src, dst) edge table,
   * the standard corpus-quality prior a training-data pipeline joins
@@ -38,87 +41,50 @@ object LinkGraph {
   /** Fixed-point PageRank with dangling-mass redistribution. Returns
     * (node, rank) with rank in `scale` units (divide by scale for the
     * conventional value). Precondition (enforced): |V|*scale*100 must
-    * fit in a BIGINT — pick `scale` to match the graph size.
-    *
-    * Adaptive dispatch (the shape [[Dedup.connectedComponents]] uses):
-    * a HOST-level link graph is often tiny even when the corpus is not
-    * — 10⁸ pages collapse to 10⁵ hosts — and each distributed round is
-    * a fixed multi-stage job. When the distinct edge list fits on the
-    * driver, run the EXACT same BIGINT recurrence locally (floor
-    * divisions and integer sums are order-independent, so the two
-    * paths are bit-identical by construction — spec-pinned); unlike
-    * CC's min-label solve this needs no ordering on node ids, so any
-    * key type takes the fast path. Big graphs run the loop below. */
+    * fit in a BIGINT — pick `scale` to match the graph size. Routed by
+    * [[Graph]]; the recurrence needs no ordering on node ids, so any
+    * key type can take the local route. */
   def pagerank(edges: DataFrame, srcCol: String = "src", dstCol: String = "dst",
-               iterations: Int = 3, scale: Long = 1000000000000L,
-               localSolveMaxEdges: Long = 2000000L): DataFrame = {
-    val e = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
-      .distinct() // simple graph: parallel edges count once
-      // pre-partition + pre-sort on the per-round join key (src): the
-      // cached partitioning/ordering survive InMemoryTableScan, so
-      // every iteration's rank⋈edges join moves only the |V|-row rank
-      // side — the |E|-row edge table is never re-exchanged or
-      // re-sorted after round 1.
-      .repartition(col("src"))
-      .sortWithinPartitions("src")
-    e.cache()
-    // the deciding count materializes the cache the first round (or
-    // the collect) would have paid for anyway
-    if (e.count() <= localSolveMaxEdges) {
-      try return pagerankLocal(e, iterations, scale)
-      finally e.unpersist()
+               iterations: Int = 3, scale: Long = 1000000000000L): DataFrame =
+    pagerankOver(Graph.directed(edges, srcCol, dstCol), iterations, scale)
+
+  private[graft] def pagerankOver(g: Graph.Edges, iterations: Int, scale: Long): DataFrame =
+    g.solve(pagerankLocal(g, _, iterations, scale)) { e =>
+      // loop invariants are cached: vertices and out-degrees are re-read
+      // every round, and an uncached copy would re-aggregate the edges
+      // per iteration. try/finally: the overflow check fires AFTER these
+      // caches land, and a failed precondition must not leave them
+      // pinned in the block manager for the session.
+      val vertices = nodes(e).cache()
+      val outdeg = outDegrees(e).cache()
+      try {
+        val nV = vertices.count() // also materializes the vertices cache
+        checkScale(nV, scale)
+        Graph.rounds(vertices.withColumn("rank", lit(scale)), iterations,
+          round(e, vertices, outdeg, _, nV, (scale * 15L) / 100L))._1
+      } finally { vertices.unpersist(); outdeg.unpersist() }
     }
-    // loop invariants are cached: vertices and out-degrees are re-read
-    // every round, and an uncached copy would re-aggregate the edges
-    // per iteration. try/finally below: the overflow require() fires
-    // AFTER these caches land, and a failed precondition must not
-    // leave three tables pinned in the block manager for the session.
-    val vertices = e.select(col("src").as("node"))
-      .union(e.select(col("dst").as("node"))).distinct().cache()
-    val outdeg = e.groupBy("src").agg(count(lit(1)).as("outdeg")).cache()
-    try {
-    val nV = vertices.count() // also materializes the vertices cache
-    // Overflow precondition: total rank is conserved at ~|V|*scale
-    // units, and the dangling sum (and any contribution partial sum)
-    // is bounded by it — so |V|*scale must fit a BIGINT with headroom
-    // for the `85 *` numerator. Silent Long wrap here would corrupt
-    // ranks while a DuckDB oracle raises, so fail fast instead: the
-    // default scale=10^12 admits |V| up to ~9.2e4; callers at web
-    // scale (10^9+ nodes) pass a smaller `scale` (10^6 still gives 6
-    // exact decimal digits of rank and admits |V| up to ~9.2e10).
+
+  /** Overflow precondition: total rank is conserved at ~|V|*scale
+    * units, and the dangling sum (and any contribution partial sum) is
+    * bounded by it — so |V|*scale must fit a BIGINT with headroom for
+    * the `85 *` numerator. Silent Long wrap would corrupt ranks while a
+    * DuckDB oracle raises, so fail fast instead: the default
+    * scale=10^12 admits |V| up to ~9.2e4; callers at web scale (10^9+
+    * nodes) pass a smaller `scale` (10^6 still gives 6 exact decimal
+    * digits of rank and admits |V| up to ~9.2e10). */
+  private def checkScale(nV: Long, scale: Long): Unit =
     require(scale > 0 && nV <= Long.MaxValue / 100L / scale,
       s"pagerank fixed-point overflow: |V|=$nV * scale=$scale * 85 exceeds " +
         "Long range; lower `scale` so that |V|*scale*100 < 2^63")
-    val base = (scale * 15L) / 100L
-
-    var ranks = vertices.withColumn("rank", lit(scale))
-    var prevHandle: Option[org.apache.spark.rdd.RDD[org.apache.spark.sql.catalyst.InternalRow]] = None
-    for (_ <- 1 to iterations) {
-      val (next, handle) = Iterate.checkpoint(
-        round(e, vertices, outdeg, ranks, nV, base))
-      handle.count() // materialize this round before freeing the last
-      prevHandle.foreach(_.unpersist(false))
-      prevHandle = Some(handle)
-      ranks = next
-    }
-    // the final round's checkpoint backs the RETURNED ranks — freeable
-    // only after the caller consumes them ([[CheckpointRegistry]])
-    prevHandle.foreach(CheckpointRegistry.retain)
-    if (iterations <= 0) { // degenerate call: still return materialized
-      val (df, h) = Iterate.checkpoint(ranks); h.count()
-      CheckpointRegistry.retain(h); df
-    } else ranks
-    } finally { e.unpersist(); vertices.unpersist(); outdeg.unpersist() }
-  }
 
   /** Driver-local solve of the same recurrence: one HashMap pass per
     * round over the collected (distinct) edge list. Every operation is
     * the distributed plan's under Java long semantics — `/` on the
     * strictly-non-negative ranks IS SQL `div`, and integer sums are
     * order-independent — so outputs are bit-identical to the loop. */
-  private def pagerankLocal(e: DataFrame, iterations: Int,
+  private def pagerankLocal(g: Graph.Edges, rows: Array[Row], iterations: Int,
                             scale: Long): DataFrame = {
-    val rows = e.collect()
     val outdeg = new java.util.HashMap[Any, Long]()
     val verts = new java.util.LinkedHashSet[Any]()
     rows.foreach { r =>
@@ -126,20 +92,7 @@ object LinkGraph {
       verts.add(r.get(0)); verts.add(r.get(1))
     }
     val nV = verts.size.toLong
-    require(scale > 0 && nV <= Long.MaxValue / 100L / scale,
-      s"pagerank fixed-point overflow: |V|=$nV * scale=$scale * 85 exceeds " +
-        "Long range; lower `scale` so that |V|*scale*100 < 2^63")
-    // empty graph: no vertices, no rows — and the dangling share below
-    // would divide by |V| = 0 (the distributed path is vacuously safe:
-    // it evaluates per vertex row, of which there are none)
-    if (nV == 0L) {
-      val s0 = e.sparkSession
-      return s0.createDataFrame(s0.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        org.apache.spark.sql.types.StructType(Seq(
-          e.schema("src").copy(name = "node"),
-          org.apache.spark.sql.types.StructField("rank",
-            org.apache.spark.sql.types.LongType, nullable = false))))
-    }
+    checkScale(nV, scale)
     val base = (scale * 15L) / 100L
     var ranks = new java.util.HashMap[Any, Long]()
     verts.forEach(v => ranks.put(v, scale))
@@ -151,22 +104,15 @@ object LinkGraph {
       }
       var dangling = 0L
       verts.forEach(v => if (!outdeg.containsKey(v)) dangling += ranks.get(v))
-      val share = dangling / nV
+      // the share divides per vertex, as in the loop, so an empty graph
+      // never divides by |V| = 0
       val next = new java.util.HashMap[Any, Long]()
       verts.forEach(v =>
-        next.put(v, base + (85L * (contrib.getOrDefault(v, 0L) + share)) / 100L))
+        next.put(v, base + (85L * (contrib.getOrDefault(v, 0L) + dangling / nV)) / 100L))
       ranks = next
     }
-    val spark = e.sparkSession
-    val nodeField = e.schema("src")
-    val schema = org.apache.spark.sql.types.StructType(Seq(
-      nodeField.copy(name = "node",
-        nullable = nodeField.nullable || e.schema("dst").nullable),
-      org.apache.spark.sql.types.StructField("rank",
-        org.apache.spark.sql.types.LongType, nullable = false)))
-    val out = new scala.collection.mutable.ArrayBuffer[org.apache.spark.sql.Row](verts.size)
-    verts.forEach(v => out += org.apache.spark.sql.Row(v, ranks.get(v)))
-    spark.createDataFrame(spark.sparkContext.makeRDD(out.toSeq, 1), schema)
+    g.solved(Seq(StructField("rank", LongType)),
+      verts.asScala.toSeq.map(v => Row(v, ranks.get(v))))
   }
 
   /** HITS hubs & authorities over the same edge table — the
@@ -186,50 +132,25 @@ object LinkGraph {
     * oracle. Max-normalization is order-equivalent to L2 for ranking
     * (both are positive scalings of the same power-iteration vector).
     *
-    * Adaptive like [[pagerank]]: a host-level graph is usually
-    * driver-small, so under the edge guard the SAME recurrence runs
-    * locally (bit-identical by construction); big graphs run the
-    * distributed loop — per round, two edge⋈score joins + two
-    * aggregations over the pre-partitioned edge cache, two 1-row max
-    * aggregates riding back as broadcasts, checkpointed per round. */
+    * Routed by [[Graph]]. Each distributed round is two edge⋈score
+    * joins and two aggregations over the edge cache, with two 1-row max
+    * aggregates riding back as broadcasts. */
   def hits(edges: DataFrame, srcCol: String = "src", dstCol: String = "dst",
-           iterations: Int = 2, scale: Long = 1000000L,
-           localSolveMaxEdges: Long = 2000000L): DataFrame = {
-    val e = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
-      .distinct()
-      .repartition(col("src"))
-      .sortWithinPartitions("src")
-    e.cache()
-    val nE = e.count()
+           iterations: Int = 2, scale: Long = 1000000L): DataFrame =
+    hitsOver(Graph.directed(edges, srcCol, dstCol), iterations, scale)
+
+  private[graft] def hitsOver(g: Graph.Edges, iterations: Int, scale: Long): DataFrame = {
     // raw auth ≤ |E|·scale, and the rescale multiplies by `scale`
     // again before the division — |E|·scale² must fit a BIGINT
-    require(scale > 0 && nE <= Long.MaxValue / scale / scale,
-      s"hits fixed-point overflow: |E|=$nE * scale² exceeds Long range; " +
+    require(scale > 0 && g.count <= Long.MaxValue / scale / scale,
+      s"hits fixed-point overflow: |E|=${g.count} * scale² exceeds Long range; " +
         "lower `scale` (10^6 admits ~9.2e6 edges, 10^3 admits ~9.2e12)")
-    if (nE <= localSolveMaxEdges) {
-      try return hitsLocal(e, iterations, scale)
-      finally e.unpersist()
+    g.solve(hitsLocal(g, _, iterations, scale)) { e =>
+      val vertices = nodes(e).cache()
+      try Graph.rounds(vertices.withColumn("hub", lit(scale)).withColumn("auth", lit(scale)),
+          iterations, hitsRound(e, vertices, _, scale))._1
+      finally vertices.unpersist()
     }
-    val vertices = e.select(col("src").as("node"))
-      .union(e.select(col("dst").as("node"))).distinct().cache()
-    try {
-      var scores = vertices
-        .withColumn("hub", lit(scale)).withColumn("auth", lit(scale))
-      var prevHandle: Option[org.apache.spark.rdd.RDD[org.apache.spark.sql.catalyst.InternalRow]] = None
-      for (_ <- 1 to iterations) {
-        val (next, handle) = Iterate.checkpoint(
-          hitsRound(e, vertices, scores, scale))
-        handle.count()
-        prevHandle.foreach(_.unpersist(false))
-        prevHandle = Some(handle)
-        scores = next
-      }
-      prevHandle.foreach(CheckpointRegistry.retain)
-      if (iterations <= 0) {
-        val (df, h) = Iterate.checkpoint(scores); h.count()
-        CheckpointRegistry.retain(h); df
-      } else scores
-    } finally { e.unpersist(); vertices.unpersist() }
   }
 
   /** One HITS round: auth from hubs, rescale by max; hubs from the NEW
@@ -259,23 +180,10 @@ object LinkGraph {
   /** Driver-local mirror of [[hitsRound]] — Java long `/` on the
     * non-negative scores IS SQL `div`, integer sums and max are
     * order-independent, so outputs are bit-identical to the loop. */
-  private def hitsLocal(e: DataFrame, iterations: Int,
+  private def hitsLocal(g: Graph.Edges, rows: Array[Row], iterations: Int,
                         scale: Long): DataFrame = {
-    val rows = e.collect()
     val verts = new java.util.LinkedHashSet[Any]()
     rows.foreach { r => verts.add(r.get(0)); verts.add(r.get(1)) }
-    val spark = e.sparkSession
-    val nodeField = e.schema("src")
-    val schema = org.apache.spark.sql.types.StructType(Seq(
-      nodeField.copy(name = "node",
-        nullable = nodeField.nullable || e.schema("dst").nullable),
-      org.apache.spark.sql.types.StructField("hub",
-        org.apache.spark.sql.types.LongType, nullable = false),
-      org.apache.spark.sql.types.StructField("auth",
-        org.apache.spark.sql.types.LongType, nullable = false)))
-    if (verts.isEmpty)
-      return spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
     var hub = new java.util.HashMap[Any, Long]()
     var auth = new java.util.HashMap[Any, Long]()
     verts.forEach { v => hub.put(v, scale); auth.put(v, scale) }
@@ -294,9 +202,8 @@ object LinkGraph {
       verts.forEach(v => h2.put(v, hraw.getOrDefault(v, 0L) * scale / hm))
       hub = h2; auth = a2
     }
-    val out = new scala.collection.mutable.ArrayBuffer[org.apache.spark.sql.Row](verts.size)
-    verts.forEach(v => out += org.apache.spark.sql.Row(v, hub.get(v), auth.get(v)))
-    spark.createDataFrame(spark.sparkContext.makeRDD(out.toSeq, 1), schema)
+    g.solved(Seq(StructField("hub", LongType), StructField("auth", LongType)),
+      verts.asScala.toSeq.map(v => Row(v, hub.get(v), auth.get(v))))
   }
 
   /** Minimum-hop BFS depth from a seed set over a (src, dst) edge
@@ -327,32 +234,20 @@ object LinkGraph {
     * round moves |frontier| + |new| rows; the |E|-row edge table is
     * never re-exchanged after round 1. Per-depth layers checkpoint
     * (lineage would otherwise deepen per hop) and the returned frame
-    * is their union — handles retained via [[CheckpointRegistry]].
-    * Adaptive like [[pagerank]]: under the edge guard the same BFS
-    * runs driver-local (hop counts are trivially bit-identical), so
-    * host-graph-sized inputs skip per-round job overhead. */
+    * is their union. Routed by [[Graph]]. */
   def bfsDepth(edges: DataFrame, seeds: DataFrame,
                srcCol: String = "src", dstCol: String = "dst",
-               seedCol: String = "node", maxDepth: Int = 8,
-               localSolveMaxEdges: Long = 2000000L): DataFrame = {
-    val e = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
-      .distinct()
-      .repartition(col("src"))
-      .sortWithinPartitions("src")
-    e.cache()
-    val s0 = seeds.select(col(seedCol).as("node")).distinct()
-    if (e.count() <= localSolveMaxEdges)
-      try return bfsLocal(e, s0, maxDepth)
-      finally e.unpersist()
-    try {
-      val layers = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-      val handles = scala.collection.mutable.ArrayBuffer
-        .empty[org.apache.spark.rdd.RDD[org.apache.spark.sql.catalyst.InternalRow]]
-      val (l0, h0) = Iterate.checkpoint(
-        s0.withColumn("depth", lit(0)))
-      h0.count()
-      layers += l0; handles += h0
-      var frontier = l0.select("node")
+               seedCol: String = "node", maxDepth: Int = 8): DataFrame =
+    bfsOver(Graph.directed(edges, srcCol, dstCol),
+      seeds.select(col(seedCol).as("node")), maxDepth)
+
+  /** [[bfsDepth]] from `seeds` (column `node`). */
+  private[graft] def bfsOver(g: Graph.Edges, seeds: DataFrame, maxDepth: Int): DataFrame = {
+    val s0 = seeds.distinct()
+    g.solve(bfsLocal(g, _, s0, maxDepth)) { e =>
+      val layers = scala.collection.mutable.ArrayBuffer(
+        Graph.kept(s0.withColumn("depth", lit(0)))._1)
+      var frontier = layers.head.select("node")
       var d = 0
       var grew = true
       while (d < maxDepth && grew) {
@@ -363,15 +258,13 @@ object LinkGraph {
           .select(col("dst").as("node")).distinct()
           .join(visited, Seq("node"), "left_anti")
           .withColumn("depth", lit(d))
-        val (chk, h) = Iterate.checkpoint(next)
-        grew = h.count() > 0
-        if (grew) { layers += chk; handles += h; frontier = chk.select("node") }
-        else h.unpersist(false)
+        val (chk, n) = Graph.kept(next)
+        grew = n > 0
+        if (grew) { layers += chk; frontier = chk.select("node") }
       }
-      // every retained layer backs the returned union
-      handles.foreach(CheckpointRegistry.retain)
+      // every kept layer backs the returned union
       layers.reduce(_ union _)
-    } finally e.unpersist()
+    }
   }
 
   /** Driver-local BFS over the collected (distinct) edge list — the
@@ -379,10 +272,10 @@ object LinkGraph {
     * two paths bit-identical by construction. Seeds are collected
     * too: a seed list is operator input like the guard-sized edge
     * list, and callers at scale run the distributed loop anyway. */
-  private def bfsLocal(e: DataFrame, seeds: DataFrame,
+  private def bfsLocal(g: Graph.Edges, rows: Array[Row], seeds: DataFrame,
                        maxDepth: Int): DataFrame = {
     val adj = new java.util.HashMap[Any, scala.collection.mutable.ArrayBuffer[Any]]()
-    e.collect().foreach { r =>
+    rows.foreach { r =>
       adj.computeIfAbsent(r.get(0),
         _ => scala.collection.mutable.ArrayBuffer.empty[Any]) += r.get(1)
     }
@@ -404,16 +297,9 @@ object LinkGraph {
       }
       frontier = nf
     }
-    val spark = e.sparkSession
-    val seedField = seeds.schema("node")
-    val schema = org.apache.spark.sql.types.StructType(Seq(
-      seedField.copy(name = "node",
-        nullable = seedField.nullable || e.schema("dst").nullable),
-      org.apache.spark.sql.types.StructField("depth",
-        org.apache.spark.sql.types.IntegerType, nullable = false)))
-    val out = new scala.collection.mutable.ArrayBuffer[org.apache.spark.sql.Row](depth.size)
-    depth.forEach((v, dd) => out += org.apache.spark.sql.Row(v, dd))
-    spark.createDataFrame(spark.sparkContext.makeRDD(out.toSeq, 1), schema)
+    g.solved(Seq(StructField("depth", IntegerType, nullable = false)),
+      depth.asScala.toSeq.map { case (v, dd) => Row(v, dd) },
+      Seq(seeds.schema("node"), g.df.schema("dst")))
   }
 
   /** One PageRank round, pre-checkpoint — the plan each iteration
@@ -449,13 +335,15 @@ object LinkGraph {
   private[graft] def roundPlan(edges: DataFrame, srcCol: String = "src",
                                dstCol: String = "dst",
                                scale: Long = 1000000000000L): DataFrame = {
-    val e = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
-      .distinct().repartition(col("src")).sortWithinPartitions("src")
-    val vertices = e.select(col("src").as("node"))
-      .union(e.select(col("dst").as("node"))).distinct()
-    val outdeg = e.groupBy("src").agg(count(lit(1)).as("outdeg"))
-    val nV = vertices.count()
-    round(e, vertices, outdeg, vertices.withColumn("rank", lit(scale)),
-      nV, (scale * 15L) / 100L)
+    val e = Graph.directedRows(edges, srcCol, dstCol)
+    val vertices = nodes(e)
+    round(e, vertices, outDegrees(e), vertices.withColumn("rank", lit(scale)),
+      vertices.count(), (scale * 15L) / 100L)
   }
+
+  private def nodes(e: DataFrame): DataFrame =
+    e.select(col("src").as("node")).union(e.select(col("dst").as("node"))).distinct()
+
+  private def outDegrees(e: DataFrame): DataFrame =
+    e.groupBy("src").agg(count(lit(1)).as("outdeg"))
 }

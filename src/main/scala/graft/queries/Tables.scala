@@ -18,13 +18,13 @@ object Tables {
     else spark.read.parquet(s"$dir/$name.parquet")
 
   /** `events.ts` has shipped under two physical parquet encodings:
-    * TIMESTAMP(NANOS) (readable only via the nanosAsLong legacy conf, as a
-    * long of nanoseconds) and annotated TIMESTAMP_MICROS (read natively as
-    * a timestamp). Branch on the *read* schema rather than assuming one
-    * encoding; both paths land on TIMESTAMP_NTZ microseconds, matching the
-    * oracle's `CAST(ts AS TIMESTAMP)`. */
+    * TIMESTAMP(NANOS) (readable only via the nanosAsLong legacy conf,
+    * which [[graft.Session]] sets, as a long of nanoseconds) and annotated
+    * TIMESTAMP_MICROS (read natively as a timestamp). Branch on the
+    * *read* schema rather than assuming one encoding; both paths land on
+    * TIMESTAMP_NTZ microseconds, matching the oracle's
+    * `CAST(ts AS TIMESTAMP)`. */
   def events(spark: SparkSession, dir: String): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val raw = spark.read.parquet(s"$dir/events.parquet")
     raw.schema("ts").dataType match {
       case org.apache.spark.sql.types.LongType =>

@@ -2,7 +2,7 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.analytics.{Collapse, Dedup, Similarity}
+import graft.analytics.{Collapse, Dedup, Graph, Similarity}
 
 /** Skew defenses in the dedup pair generators: a degenerate input
   * (many identical / boilerplate docs) must complete with a BOUNDED
@@ -290,7 +290,7 @@ class DedupSkewSpec extends AnyFunSuite with LocalSpark {
       // local union-find solve == distributed fixed-point loop
       val pairs = Dedup.lshOver(u(true), "source", 1024)
       assert(cset(Dedup.connectedComponents(pairs)) ===
-        cset(Dedup.connectedComponents(pairs, localSolveMaxEdges = 0L)))
+        cset(Dedup.componentsOver(Graph.undirected(pairs, "a", "b").forced(local = false), 20)))
     }
   }
 }

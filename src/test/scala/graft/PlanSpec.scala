@@ -128,8 +128,8 @@ class PlanSpec extends AnyFunSuite with LocalSpark {
       (col("id") % 11).as("a"), (col("id") % 13 + 20).as("b"))
     // force the distributed loop (the 100 TB path): the local-solve
     // fast path would otherwise absorb this toy graph
-    val labels = graft.analytics.Dedup.connectedComponents(pairs,
-      localSolveMaxEdges = 0L)
+    val labels = graft.analytics.Dedup.componentsOver(
+      graft.analytics.Graph.undirected(pairs, "a", "b").forced(local = false), 20)
     val plan = labels.queryExecution.optimizedPlan.toString
     assert(plan.contains("LogicalRDD") || plan.contains("ExistingRDD"),
       s"converged labels must be a checkpoint scan:\n$plan")

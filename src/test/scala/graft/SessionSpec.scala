@@ -18,9 +18,22 @@ class SessionSpec extends AnyFunSuite with LocalSpark {
     assert(sc.getConf.get("spark.io.compression.codec") == "zstd")
     assert(spark.conf.get("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning") == "true")
     assert(spark.conf.get("spark.sql.session.timeZone") == "UTC")
+    assert(spark.conf.get("spark.sql.legacy.parquet.nanosAsLong") == "true")
     assert(sc.getConf.get("spark.ui.enabled") == "false")
     assert(sc.uiWebUrl.isEmpty)
     assert(LogManager.getRootLogger.getLevel == Level.WARN)
+  }
+
+  test("reading events leaves the session's settings as they were") {
+    val key = "spark.sql.legacy.parquet.nanosAsLong"
+    val dir = Files.createTempDirectory("events")
+    spark.range(3).selectExpr("id AS event_id", "timestamp_micros(id) AS ts")
+      .write.parquet(dir.resolve("events.parquet").toString)
+    spark.conf.unset(key)
+    try {
+      graft.queries.Tables.events(spark, dir.toString).count()
+      assert(!spark.conf.getAll.contains(key))
+    } finally spark.conf.set(key, "true")
   }
 
   test("no main builds a SparkSession outside graft/Session.scala") {

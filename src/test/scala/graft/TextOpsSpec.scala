@@ -72,6 +72,10 @@ class TextOpsSpec extends AnyFunSuite with LocalSpark {
     assert(r.getAs[Int]("n_emails") == 1)
   }
 
+  /** (src, dst) edges forced onto the distributed loop. */
+  private def loop(edges: org.apache.spark.sql.DataFrame) =
+    graft.analytics.Graph.directed(edges, "src", "dst").forced(local = false)
+
   /** Plain-Scala reference of the engine's integer recurrence, dangling
     * redistribution included: r' = 0.15s + 0.85(contrib + dangling/|V|). */
   private def pagerankRef(edgeList: Seq[(String, String)], iterations: Int,
@@ -129,7 +133,7 @@ class TextOpsSpec extends AnyFunSuite with LocalSpark {
       .pagerank(edges, iterations = 4, scale = 1000000L)
       .as[(String, Long)].collect().toMap
     val dist = graft.analytics.LinkGraph
-      .pagerank(edges, iterations = 4, scale = 1000000L, localSolveMaxEdges = 0L)
+      .pagerankOver(loop(edges), 4, 1000000L)
       .as[(String, Long)].collect().toMap
     assert(local == dist)
   }
@@ -242,14 +246,13 @@ class TextOpsSpec extends AnyFunSuite with LocalSpark {
     val local = graft.analytics.LinkGraph.bfsDepth(edges, seeds, maxDepth = 4)
       .as[(String, Int)].collect().toMap
     val dist = graft.analytics.LinkGraph
-      .bfsDepth(edges, seeds, maxDepth = 4, localSolveMaxEdges = 0L)
+      .bfsOver(loop(edges), seeds, 4)
       .as[(String, Int)].collect().toMap
     assert(local == dist)
     assert(local == bfsRef(edgeList, Seq("a", "x"), 4))
     // early-exit round: nothing new after depth 4 on the x-chain side
     val dist2 = graft.analytics.LinkGraph
-      .bfsDepth(edges, Seq("x").toDF("node"), maxDepth = 8,
-        localSolveMaxEdges = 0L)
+      .bfsOver(loop(edges), Seq("x").toDF("node"), 8)
       .as[(String, Int)].collect().toMap
     assert(dist2 == Map("x" -> 0, "y" -> 1))
   }
@@ -298,7 +301,7 @@ class TextOpsSpec extends AnyFunSuite with LocalSpark {
     val local = graft.analytics.LinkGraph.hits(edges, iterations = 3)
       .as[(String, Long, Long)].collect().sortBy(_._1).toSeq
     val dist = graft.analytics.LinkGraph
-      .hits(edges, iterations = 3, localSolveMaxEdges = 0L)
+      .hitsOver(loop(edges), 3, 1000000L)
       .as[(String, Long, Long)].collect().sortBy(_._1).toSeq
     assert(local == dist)
   }
@@ -358,8 +361,8 @@ class TextOpsSpec extends AnyFunSuite with LocalSpark {
     // the cap really caps: 2 rounds on the same chain leave the tail
     // under-merged (documented diameter bound). Force the distributed
     // loop — the local union-find solve is exact regardless of the cap.
-    val capped = graft.analytics.Dedup.connectedComponents(chain,
-        maxIterations = 2, localSolveMaxEdges = 0L)
+    val capped = graft.analytics.Dedup.componentsOver(
+        graft.analytics.Graph.undirected(chain, "a", "b").forced(local = false), 2)
       .as[(Long, Long)].collect().toMap
     assert(capped(6L) != 1L)
   }

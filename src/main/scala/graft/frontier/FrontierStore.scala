@@ -42,23 +42,29 @@ final class FrontierStore(val root: String, numBuckets: Int = 64,
 
   def exists: Boolean = Files.exists(currentFile)
 
+  /** The manifest's bytes; None before the first merge. The file is
+    * only ever replaced by an atomic move, so one read is one version. */
+  private def currentBytes: Option[Array[Byte]] =
+    if (!exists) None else Some(Files.readAllBytes(currentFile))
+
+  private def signatureOf(bytes: Option[Array[Byte]]): String =
+    bytes.fold("absent")(b => java.security.MessageDigest.getInstance("MD5")
+      .digest(b).map(x => f"$x%02x").mkString)
+
   /** Opaque signature of the table's current version — changes exactly
     * when a merge/compact swaps the manifest pointer. Lets pollers
     * (e.g. the streaming frontier source) detect "new frontier state"
     * with one small file read, no table scan. */
-  def versionSignature: String =
-    if (!exists) "absent"
-    else java.security.MessageDigest.getInstance("MD5")
-      .digest(Files.readAllBytes(currentFile))
-      .map(b => f"$b%02x").mkString
+  def versionSignature: String = signatureOf(currentBytes)
 
   /** bucket -> generation dir (relative), e.g. 7 -> "delta_3". */
-  private def manifest: Map[Int, String] =
-    if (!exists) Map.empty
-    else new String(Files.readAllBytes(currentFile)).linesIterator
+  private def manifestOf(bytes: Option[Array[Byte]]): Map[Int, String] =
+    bytes.fold(Map.empty[Int, String])(b => new String(b).linesIterator
       .filter(_.nonEmpty).map { l =>
-        val Array(b, g) = l.split("\t"); b.toInt -> g
-      }.toMap
+        val Array(k, g) = l.split("\t"); k.toInt -> g
+      }.toMap)
+
+  private def manifest: Map[Int, String] = manifestOf(currentBytes)
 
   private def emptyFrontier(spark: SparkSession): DataFrame =
     spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
@@ -66,13 +72,12 @@ final class FrontierStore(val root: String, numBuckets: Int = 64,
       .withColumn("next_fetch_date", col("next_fetch_date").cast("timestamp_ntz"))
       .withColumn("error_count", lit(0))
 
-  /** Read frontier rows for the given buckets (all when None). One scan
-    * per delta generation (basePath recovers the bucket column), unioned.
-    * The schema is pinned ([[FrontierStore.stored]]): an inferring read
+  /** Read the frontier rows of a manifest's buckets. One scan per delta
+    * generation (basePath recovers the bucket column), unioned. The
+    * schema is pinned ([[FrontierStore.stored]]): an inferring read
     * starts a one-task footer job per generation on every select and
     * every merge. */
-  private def readBuckets(spark: SparkSession, buckets: Option[Set[Int]]): DataFrame = {
-    val entries = manifest.filter { case (b, _) => buckets.forall(_.contains(b)) }
+  private def readBuckets(spark: SparkSession, entries: Map[Int, String]): DataFrame =
     if (entries.isEmpty) emptyFrontier(spark)
     else entries.groupBy(_._2).map { case (gen, es) =>
       spark.read
@@ -82,10 +87,30 @@ final class FrontierStore(val root: String, numBuckets: Int = 64,
         .select("url_sha256", "url", "status", "next_fetch_date", "key",
           "bucket", "metadata", "error_count")
     }.reduce(_.unionByName(_))
-  }
 
-  /** Read the current frontier table (empty-schema DF when absent). */
-  def read(spark: SparkSession): DataFrame = readBuckets(spark, None)
+  /** The last [[read]]: its session, the version it read and the frame.
+    * Building a read lists every bucket path it names (a Spark listing
+    * job once the paths outnumber the parallel-listing threshold), so a
+    * crawl cycle's select and merge, which read the same version, share
+    * one frame and one listing. Not serialized: a frame belongs to the
+    * driver. */
+  @transient @volatile private var lastRead: (SparkSession, String, DataFrame) = _
+
+  /** Read the current frontier table (empty-schema DF when absent). The
+    * same frame is returned while the session and the manifest version
+    * are unchanged; its listing is of that version's immutable
+    * generation files. */
+  def read(spark: SparkSession): DataFrame = {
+    val bytes = currentBytes
+    val version = signatureOf(bytes)
+    lastRead match {
+      case (s, v, df) if (s eq spark) && v == version => df
+      case _ =>
+        val df = readBuckets(spark, manifestOf(bytes))
+        lastRead = (spark, version, df)
+        df
+    }
+  }
 
   private def nextGeneration: Int =
     if (!exists) 0
@@ -209,7 +234,10 @@ final class FrontierStore(val root: String, numBuckets: Int = 64,
     // SURVIVORS after the window instead of being shuffled with every
     // candidate row — 64 hex chars + the key string are ~40% of the
     // row, and the merge exchange is the store's dominant shuffle.
-    val existing = readBuckets(spark, Some(touched))
+    // The touched buckets are pruned from the shared read ([[read]]:
+    // the select of the same version already listed them); `bucket` is
+    // the partition column, so untouched buckets' files are never opened.
+    val existing = read(spark).where(col("bucket").isin(touched.toSeq: _*))
       .select(col("url"), col("status"), col("next_fetch_date"),
         col("bucket"), col("metadata"), col("error_count"),
         lit(0).as("incoming"))

@@ -103,13 +103,22 @@ abstract class ShardedLedger(path: String, keyCol: String,
         ShardedTable.shardOf(shardSource(col(keyCol))))
       .collect().map(r => (r.getString(0), r.getString(1))).distinct // ≤ batch size
     if (rows.isEmpty) return Seq.empty
-    val local = spark.createDataFrame(
-      rows.map(r => Row(r._1)).toSeq.asJava,
-      StructType(Seq(StructField(keyCol, StringType))))
     table.sliver(spark, rows.map(_._2).distinct.toSeq)
-      .join(broadcast(local), Seq(keyCol), "left_semi")
+      .join(broadcast(local(spark, rows.map(_._1).toSeq)), Seq(keyCol), "left_semi")
       .select(keyCol).collect().map(_.getString(0)).distinct.toSeq
   }
+
+  /** [[knownAmong]] as a local relation of one `keyCol` column, for a
+    * semi or anti join against the batch: a broadcast of it runs no job,
+    * and a plan holding it renders one `LocalTableScan` node whatever the
+    * key count (an `isin` list renders every key). A semi or anti join
+    * against an empty one is folded away by the optimizer. */
+  def known(spark: SparkSession, keys: DataFrame): DataFrame =
+    local(spark, knownAmong(spark, keys))
+
+  private def local(spark: SparkSession, keys: Seq[String]): DataFrame =
+    spark.createDataFrame(keys.map(Row(_)).asJava,
+      StructType(Seq(StructField(keyCol, StringType))))
 
   /** Append keys (idempotent for readers — membership is a set
     * question, duplicate rows across appends are harmless). One file

@@ -2,6 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.InternalBridge
 import org.apache.spark.sql.streaming.Trigger
 
 import graft.fetch.{FetchStage, ProtocolFactory}
@@ -89,11 +90,10 @@ object CrawlTopology {
     // Every leg's Spark jobs carry the job description `crawl.<leg>`, so
     // a listener or the UI can attribute them; the label adds no action.
     // Per-leg profiling (timeLegs=true): each pipeline leg is FORCED
-    // (cache + count) inside a timer so wall time attributes to the
-    // leg that did the work instead of to whichever downstream action
-    // happened to trigger the lazy chain. Off by default — the extra
-    // materializing actions belong in a profiling run, not the
-    // production path.
+    // (count) inside a timer so wall time attributes to the leg that did
+    // the work instead of to whichever downstream action happened to
+    // trigger the lazy chain. Off by default — the extra materializing
+    // actions belong in a profiling run, not the production path.
     val sc = spark.sparkContext
     val legSecs = scala.collection.mutable.LinkedHashMap.empty[String, Double]
     def leg[T](name: String)(f: => T): T = {
@@ -107,71 +107,183 @@ object CrawlTopology {
         sc.setJobDescription(prev)
       }
     }
-    // selection may run at an adaptive horizon (backlog digging), but
-    // merges/schedules always stamp wall-clock batchTime — scheduling
-    // new discoveries at a frozen horizon would make them immediately
-    // due and defeat the freeze.
-    // The selection (like the status updates below) is materialized ONCE
-    // and read by every consumer: both are bounded (limit × outlinks per
-    // page), while recomputing them re-runs the frontier scan and window
-    // or the whole parse branch. Released at the end of the cycle.
-    val batch = store.selectBatch(spark, selectTime.getOrElse(batchTime),
-      perBucket, maxKeys, limit, saltBuckets = saltBuckets).cache()
-    val selected = leg("select")(batch.count())
-    if (selected == 0) {
-      batch.unpersist()
-      return (CrawlStats(0, 0, 0, 0, 0), spark.emptyDataFrame)
+    // The cycle's boundaries: each bounded intermediate (the selection,
+    // the cache hits, the fetched union, the parse output, the status
+    // updates and the two ledgers' keyed batches) is cached ONCE and read
+    // downstream through a leaf plan over its cached rows
+    // (InternalBridge.leaf). Every later leg then plans, analyses and
+    // renders a plan the size of its own leg instead of the whole cycle
+    // nested under it — that driver work, not the data, set the cycle's
+    // cost. A leaf also hides the files its original read, so an append
+    // to a store the cycle read re-caches no downstream plan. The fetched
+    // union and the parse output are `lazy val`s, built by the first leg
+    // that reads them, so their jobs carry that leg's label. The cached
+    // originals are released before return.
+    val held = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+    def boundary(df: DataFrame): DataFrame = {
+      held += df.cache()
+      InternalBridge.leaf(df)
     }
+    try {
+      // selection may run at an adaptive horizon (backlog digging), but
+      // merges/schedules always stamp wall-clock batchTime — scheduling
+      // new discoveries at a frozen horizon would make them immediately
+      // due and defeat the freeze.
+      val batch = leg("select")(boundary(store.selectBatch(spark,
+        selectTime.getOrElse(batchTime), perBucket, maxKeys, limit,
+        saltBuckets = saltBuckets)))
+      val selected = leg("select")(batch.count())
+      if (selected == 0) return (CrawlStats(0, 0, 0, 0, 0), spark.emptyDataFrame)
 
-    // Cache check (S3CacheChecker semantics): hits skip the network and
-    // re-enter the pipeline as synthetic FETCHED rows; only misses go
-    // through the fetch stage, whose new captures append to the store.
-    val (toFetch, cachedRows) = contentStore match {
-      case Some(cs) =>
-        val (hits, misses) = leg("content_store")(
-          cs.split(spark, batch, contentMaxAgeMs, batchTime.getTime))
-        // The split is FROZEN (≤ limit digests) before the fetch output
-        // appends to the store: Spark re-caches every plan that reads a
-        // path it writes, so a fetch whose input still read the store
-        // would be cleared by that append and re-run against the post-
-        // append store, where each page just fetched reads as a cache hit
-        // and each failure is fetched again.
-        val missed = leg("content_store")(
-          misses.select("url_sha256").collect().map(_.getString(0)).toSeq)
-        val isMiss = col("url_sha256").isin(missed: _*)
-        val hitRows = hits.where(!isMiss).select(
-          col("url"), col("key"), lit(Status.Fetched).as("status"),
-          lit(200).as("http_code"), col("content"),
-          lit(null).cast("string").as("content_type"),
-          lit(null).cast("string").as("redirect_to"), lit(0L).as("fetch_ms"),
-          // strip any previous cache.hit first — a second cache hit on
-          // the same URL would otherwise die on map_concat's duplicate-
-          // key EXCEPTION policy
-          map_concat(
-            map_filter(coalesce(col("metadata"), map()), (k, _) => k =!= "cache.hit"),
-            map(lit("cache.hit"), array(lit("true")))).as("metadata"))
-        (batch.where(isMiss), Some(hitRows))
-      case None => (batch, None)
-    }
-    val fetchedLive = FetchStage.fetch(spark, toFetch, protocols,
-      crawlDelayMs = crawlDelayMs, respectRobots = respectRobots,
-      sitemapDiscovery = sitemapDiscovery)
-    if (timeLegs) { fetchedLive.cache(); leg("fetch")(fetchedLive.count()) }
-    contentStore.foreach { cs =>
-      fetchedLive.cache() // store() is an action: populate before reuse
-      leg("content_store")(cs.store(fetchedLive
-        .where(col("status") === Status.Fetched && col("content").isNotNull)
-        .select(col("url"), col("content"), lit(batchTime).as("fetch_time"))))
-    }
-    val fetched = cachedRows.map(fetchedLive.unionByName(_)).getOrElse(fetchedLive)
-    fetched.cache() // two consumers: parse branch + status merge branch
-    val parsed = ParseStage.parse(fetched, chain)
-    parsed.cache()
-    if (timeLegs) leg("parse_chain")(parsed.count())
-    // handed to the caller: cached on its own so that releasing the
-    // parse output below keeps the docs readable without a re-fetch
-    val docs = parsed.where(col("kind") === "doc").cache()
+      // Cache check (S3CacheChecker semantics): hits skip the network and
+      // re-enter the pipeline as synthetic FETCHED rows; only misses go
+      // through the fetch stage, whose new captures append to the store.
+      // The hits are a boundary and the fetch takes the batch minus the
+      // hits, so no plan downstream of the check reads the store: Spark
+      // re-caches every cached plan that reads a path it writes, and a
+      // fetched union whose plan still read the store would lose its cache
+      // to that append and re-run the fetch in every later leg.
+      val hits = contentStore.map(cs => leg("content_store")(boundary(
+        cs.split(spark, batch, contentMaxAgeMs, batchTime.getTime)._1)))
+      val fetchedLive = FetchStage.fetch(spark,
+        hits.fold(batch)(h =>
+          batch.join(broadcast(h.select("url_sha256")), Seq("url_sha256"), "left_anti")),
+        protocols, crawlDelayMs = crawlDelayMs, respectRobots = respectRobots,
+        sitemapDiscovery = sitemapDiscovery)
+      lazy val fetched = boundary(hits.fold(fetchedLive)(h => fetchedLive.unionByName(h.select(
+        col("url"), col("key"), lit(Status.Fetched).as("status"),
+        lit(200).as("http_code"), col("content"),
+        lit(null).cast("string").as("content_type"),
+        lit(null).cast("string").as("redirect_to"), lit(0L).as("fetch_ms"),
+        // strip any previous cache.hit first — a second cache hit on the
+        // same URL would otherwise die on map_concat's duplicate-key
+        // EXCEPTION policy
+        map_concat(
+          map_filter(coalesce(col("metadata"), map()), (k, _) => k =!= "cache.hit"),
+          map(lit("cache.hit"), array(lit("true")))).as("metadata")))))
+      if (timeLegs) leg("fetch")(fetched.count())
+      for (cs <- contentStore; h <- hits)
+        // the live captures only, not the hits served from the store
+        leg("content_store")(cs.store(fetched
+          .where(col("status") === Status.Fetched && col("content").isNotNull)
+          .join(broadcast(h.select("url")), Seq("url"), "left_anti")
+          .select(col("url"), col("content"), lit(batchTime).as("fetch_time"))))
+      lazy val parsed = boundary(ParseStage.parse(fetched, chain))
+      if (timeLegs) leg("parse_chain")(parsed.count())
+      // read again by the index sink's deletions
+      val updates = leg("merge") {
+        val u = boundary(statusUpdates(fetched, parsed, chain))
+        store.merge(spark, u, batchTime)
+        u
+      }
+      // handed to the caller: cached on its own so that releasing the
+      // parse output below keeps the docs readable without a re-fetch
+      val docs = parsed.where(col("kind") === "doc").cache()
 
+      // live index sink (IndexerBolt + DeletionBolt wiring): index this
+      // batch's docs through the mapping projection; delete EVERY page
+      // whose status row turned ERROR this batch — robots-denied and
+      // unparseable pages included, not just parse failures (DeletionBolt
+      // also "deletes" never-indexed docs — a no-op at the backend).
+      // Errors produced by the merge's own escalation (3rd FETCH_ERROR)
+      // surface on a later batch's select, not here.
+      indexSink.foreach { sink =>
+        // optional batch-scoped digest collapse before indexing: pages
+        // serving byte-identical extracted content index ONCE per
+        // micro-batch (lexicographically-first url wins — deterministic),
+        // while every url keeps its own status row from the merge above.
+        // The reference's signature idea (AdaptiveScheduler change
+        // detection, MD5SignatureParseFilter) applied ACROSS urls. One
+        // batch-sized shuffle on the digest — the exactDedup shape; at
+        // cluster scale this is a hash exchange on sha-distributed keys,
+        // never a hotspot. Null-signature rows partition by their own url,
+        // so they are always kept.
+        val batchDeduped =
+          if (dedupContent) {
+            val w = org.apache.spark.sql.expressions.Window
+              .partitionBy(coalesce(col("signature"), col("url"))).orderBy("url")
+            docs.withColumn("__rn", row_number().over(w))
+              .where(col("__rn") === 1).drop("__rn")
+          } else docs
+        // cross-batch face: the ledger remembers every digest indexed by
+        // EARLIER batches, so identical content indexes once ever. The
+        // membership check broadcasts the bounded batch into a
+        // shard-pruned ledger sliver — the unbounded side never moves
+        // (DigestLedger scaladoc). Null signatures fall back to the url
+        // hash, i.e. are always fresh.
+        // The known set is COLLECTED (bounded by the batch: membership of
+        // batch keys only) into a local relation rather than left as a
+        // lazy semi-join: record() appends to the ledger path, and a
+        // `fresh` plan still reading the ledger files would be recomputed
+        // at indexBatch time against the POST-record ledger, where every
+        // just-recorded doc suppresses itself.
+        val toIndex = digestLedger match {
+          case Some(ledger) if dedupContent =>
+            // read by the check, the record and the index: computed once
+            val keyed = leg("digest_ledger")(boundary(batchDeduped.withColumn("__d",
+              coalesce(col("signature"), sha2(col("url"), 256)))))
+            val known = leg("digest_ledger")(ledger.known(spark,
+              keyed.select(col("__d").as("digest")))) // ≤ batch size
+            val fresh = keyed.join(broadcast(known.withColumnRenamed("digest", "__d")),
+              Seq("__d"), "left_anti")
+            leg("digest_ledger")(ledger.record(fresh.select(col("__d").as("digest"))))
+            fresh.drop("__d")
+          case _ => batchDeduped
+        }
+        // near-dup cross-batch face: suppress docs whose MinHash band
+        // keys collide with content an EARLIER batch indexed (BandLedger
+        // scaladoc: same shard-pruned bounded-batch-broadcast shape as
+        // the digest ledger; within-batch near-dups deliberately both
+        // index — the rule must not depend on intra-batch ordering).
+        // Known band keys are collected for the same reason as the digest
+        // stage above: the suppression decision must be frozen BEFORE
+        // record() appends, or the recompute would suppress the batch's
+        // own just-recorded bands.
+        val toIndexFinal = bandLedger match {
+          case Some(ledger) =>
+            // (url, bk) of every doc, MinHashed once for the check, the
+            // suppression and the record
+            val bands = leg("band_ledger")(boundary(
+              graft.index.BandLedger.bandKeys(toIndex, "text").select("url", "bk")))
+            val known = leg("band_ledger")(ledger.known(spark,
+              bands.select("bk"))) // ≤ 2 × batch size
+            val suppressed = broadcast(bands.join(broadcast(known), Seq("bk"), "left_semi")
+              .select("url").distinct())
+            def unsuppressed(df: DataFrame): DataFrame =
+              df.join(suppressed, Seq("url"), "left_anti")
+            leg("band_ledger")(ledger.record(unsuppressed(bands).select("bk")))
+            unsuppressed(toIndex)
+          case None => toIndex
+        }
+        leg("index_sink") {
+          sink.indexBatch(indexerMapping(toIndexFinal))
+          sink.deleteBatch(updates.where(col("status") === Status.Error).select("url"))
+        }
+      }
+      // one aggregate over the fetch output, one over the parse output;
+      // the latter reads the docs through their own cache, so it also
+      // materializes them for the caller before the parse cache goes
+      val (nFetched, nFailed, nDocs, nDisc) = leg("stats_counts") {
+        val f = fetched.agg(
+          count_if(col("status") === Status.Fetched),
+          count_if(col("status").isin(Status.FetchError, Status.Error))).head()
+        val p = docs.select(lit(true).as("doc"))
+          .unionByName(parsed.where(isOutlink).select(lit(false).as("doc")))
+          .agg(count_if(col("doc")), count_if(!col("doc"))).head()
+        (f.getLong(0), f.getLong(1), p.getLong(0), p.getLong(1))
+      }
+      (CrawlStats(selected, nFetched, nFailed, nDocs, nDisc, legs = legSecs.toMap), docs)
+    } finally held.foreach(_.unpersist())
+  }
+
+  /** Parse output rows that discover a URL: outlinks and redirects. */
+  private val isOutlink = col("kind").isin("outlink", "redirect")
+
+  /** The cycle's status updates for the frontier merge: each fetched
+    * page's own row (with its parse signature), redirect targets,
+    * outlinks, parse errors and robots-sitemap autodiscoveries. */
+  private def statusUpdates(fetched: DataFrame, parsed: DataFrame,
+                            chain: UrlFilterChain): DataFrame = {
     // attach the parse signature to the page's status row so the
     // adaptive scheduler's change detection has something to compare
     // (the docs output keeps its own copy) — tiny batch-sized join
@@ -211,7 +323,7 @@ object CrawlTopology {
         lit(Status.Discovered).as("status"), col("metadata"))
       .where(col("url").isNotNull)
     val outlinkStatuses = parsed
-      .where(col("kind").isin("outlink", "redirect"))
+      .where(isOutlink)
       .select(col("target_url").as("url"),
         lit(Status.Discovered).as("status"), col("metadata"))
     // binary-parse failures (Tika handleException path): the page's own
@@ -220,117 +332,9 @@ object CrawlTopology {
     val parseErrors = parsed.where(col("kind") === "error")
       .select(col("url"), col("status"), col("metadata"))
 
-    // cached here, not inside merge: merge never caches its input (a
-    // q94-scale update batch must not spill), but this one is bounded
-    // and is read again by the index sink's deletions
-    val updates = fetchStatuses.unionByName(redirectTargets)
+    fetchStatuses.unionByName(redirectTargets)
       .unionByName(outlinkStatuses).unionByName(parseErrors)
       .unionByName(discoveredFromFetch)
-      .cache()
-    leg("merge")(store.merge(spark, updates, batchTime))
-
-    // live index sink (IndexerBolt + DeletionBolt wiring): index this
-    // batch's docs through the mapping projection; delete EVERY page
-    // whose status row turned ERROR this batch — robots-denied and
-    // unparseable pages included, not just parse failures (DeletionBolt
-    // also "deletes" never-indexed docs — a no-op at the backend).
-    // Errors produced by the merge's own escalation (3rd FETCH_ERROR)
-    // surface on a later batch's select, not here.
-    indexSink.foreach { sink =>
-      // optional batch-scoped digest collapse before indexing: pages
-      // serving byte-identical extracted content index ONCE per
-      // micro-batch (lexicographically-first url wins — deterministic),
-      // while every url keeps its own status row from the merge above.
-      // The reference's signature idea (AdaptiveScheduler change
-      // detection, MD5SignatureParseFilter) applied ACROSS urls. One
-      // batch-sized shuffle on the digest — the exactDedup shape; at
-      // cluster scale this is a hash exchange on sha-distributed keys,
-      // never a hotspot. Null-signature rows partition by their own url,
-      // so they are always kept.
-      val batchDeduped =
-        if (dedupContent) {
-          val w = org.apache.spark.sql.expressions.Window
-            .partitionBy(coalesce(col("signature"), col("url"))).orderBy("url")
-          docs.withColumn("__rn", row_number().over(w))
-            .where(col("__rn") === 1).drop("__rn")
-        } else docs
-      // cross-batch face: the ledger remembers every digest indexed by
-      // EARLIER batches, so identical content indexes once ever. The
-      // membership check broadcasts the bounded batch into a
-      // shard-pruned ledger sliver — the unbounded side never moves
-      // (DigestLedger scaladoc). Null signatures fall back to the url
-      // hash, i.e. are always fresh.
-      // The known set is COLLECTED (bounded by the batch: membership of
-      // batch keys only) rather than left as a lazy semi-join: record()
-      // appends to the ledger path, and Spark recaches-by-path on
-      // write — a `fresh` plan still referencing the ledger files would
-      // be recomputed at indexBatch time against the POST-record
-      // ledger, where every just-recorded doc suppresses itself.
-      val (toIndex, cached) = digestLedger match {
-        case Some(ledger) if dedupContent =>
-          // read by the check, the record and the index: computed once
-          val keyed = batchDeduped.withColumn("__d",
-            coalesce(col("signature"), sha2(col("url"), 256))).cache()
-          val knownSet = leg("digest_ledger")(ledger.knownAmong(spark,
-            keyed.select(col("__d").as("digest")))) // ≤ batch size
-          val fresh =
-            if (knownSet.isEmpty) keyed
-            else keyed.where(!col("__d").isin(knownSet: _*))
-          leg("digest_ledger")(ledger.record(fresh.select(col("__d").as("digest"))))
-          (fresh.drop("__d"), Some(keyed))
-        case _ => (batchDeduped, None)
-      }
-      // near-dup cross-batch face: suppress docs whose MinHash band
-      // keys collide with content an EARLIER batch indexed (BandLedger
-      // scaladoc: same shard-pruned bounded-batch-broadcast shape as
-      // the digest ledger; within-batch near-dups deliberately both
-      // index — the rule must not depend on intra-batch ordering).
-      // Known band keys are collected for the same reason as the digest
-      // stage above: the suppression decision must be frozen BEFORE
-      // record() appends, or the recache-by-path recompute would
-      // suppress the batch's own just-recorded bands.
-      val (toIndexFinal, bandCached) = bandLedger match {
-        case Some(ledger) =>
-          // (url, bk) of every doc, MinHashed once for the check, the
-          // suppression and the record
-          val bands = graft.index.BandLedger.bandKeys(toIndex, "text")
-            .select("url", "bk").cache()
-          val knownKeys = leg("band_ledger")(ledger.knownAmong(spark,
-            bands.select("bk"))) // ≤ 2 × batch size
-          def unsuppressed(df: DataFrame): DataFrame =
-            if (knownKeys.isEmpty) df
-            else df.join(broadcast(bands.where(col("bk").isin(knownKeys: _*))
-              .select("url").distinct()), Seq("url"), "left_anti")
-          leg("band_ledger")(ledger.record(unsuppressed(bands).select("bk")))
-          (unsuppressed(toIndex), Some(bands))
-        case None => (toIndex, None)
-      }
-      try {
-        leg("index_sink") {
-          sink.indexBatch(indexerMapping(toIndexFinal))
-          sink.deleteBatch(updates.where(col("status") === Status.Error).select("url"))
-        }
-      } finally {
-        cached.foreach(_.unpersist())
-        bandCached.foreach(_.unpersist())
-      }
-    }
-    // one aggregate over the fetch output, one over the parse output;
-    // the latter reads the docs through their own cache, so it also
-    // materializes them for the caller before the parse cache goes
-    val (nFetched, nFailed, nDocs, nDisc) = leg("stats_counts") {
-      val f = fetched.agg(
-        count_if(col("status") === Status.Fetched),
-        count_if(col("status").isin(Status.FetchError, Status.Error))).head()
-      val p = docs.select(lit(true).as("doc"))
-        .unionByName(outlinkStatuses.select(lit(false).as("doc")))
-        .agg(count_if(col("doc")), count_if(!col("doc"))).head()
-      (f.getLong(0), f.getLong(1), p.getLong(0), p.getLong(1))
-    }
-    val stats = CrawlStats(selected, nFetched, nFailed, nDocs, nDisc,
-      legs = legSecs.toMap)
-    Seq(batch, fetchedLive, fetched, parsed, updates).foreach(_.unpersist())
-    (stats, docs)
   }
 
   /** Iterate crawl batches until the frontier has nothing due or

@@ -5,22 +5,35 @@ import java.util.concurrent.ConcurrentLinkedQueue
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerTaskEnd}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerTaskEnd}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.execution.ui.{SparkListenerSQLAdaptiveExecutionUpdate, SparkListenerSQLExecutionStart}
 import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.fetch.{ContentStore, ProtocolFactory}
+import graft.fetch.{ContentStore, Protocol, ProtocolFactory, ProtocolResponse}
 import graft.filters.{BasicUrlFilter, BasicUrlNormalizer, MaxDepthFilter, RegexUrlFilter, SelfUrlFilter, UrlFilterChain}
 import graft.frontier.FrontierStore
 import graft.index.{BandLedger, DigestLedger, IndexSink}
 import graft.model.Status
 import graft.streaming.CrawlTopology
 
+/** Serves every http URL an HTML page naming it and counts the fetches
+  * (tasks run in this JVM under `local[…]`). */
+object CountingProtocol extends Protocol {
+  val fetches = new java.util.concurrent.atomic.AtomicInteger()
+  def fetch(url: String, metadata: Map[String, Seq[String]]): ProtocolResponse = {
+    fetches.incrementAndGet()
+    ProtocolResponse(s"<html><body>page at $url</body></html>".getBytes("UTF-8"), 200,
+      Map("Content-Type" -> Seq("text/html")))
+  }
+}
+
 /** The fixed cost of a crawl cycle: the frontier merge writes in
-  * parallel through one exchange, a cycle leaves no cache behind, and
-  * every job of a cycle is labelled with its leg. */
+  * parallel through one exchange, a cycle leaves no cache behind, every
+  * job of a cycle is labelled with its leg, and no plan of a cycle grows
+  * with its batch. */
 class CrawlCycleSpec extends AnyFunSuite with LocalSpark {
 
   private val chain = new UrlFilterChain(Seq(
@@ -43,12 +56,20 @@ class CrawlCycleSpec extends AnyFunSuite with LocalSpark {
     def deleteBatch(urls: DataFrame): Unit = urls.count(): Unit
   }
 
-  /** Job starts (with their local properties) and task counts per stage.
-    * Listener delivery is asynchronous: [[drain]] runs a marker job and
-    * waits for its end, after which every earlier event has arrived. */
+  /** Job starts (with their local properties), task counts per stage and
+    * the physical plan text of every SQL execution start and adaptive
+    * re-plan. Listener delivery is asynchronous: [[drain]] runs a marker
+    * job and waits for its end, after which every earlier event has
+    * arrived. */
   private class JobLog extends SparkListener {
     val jobs = new ConcurrentLinkedQueue[SparkListenerJobStart]()
     val tasks = new java.util.concurrent.ConcurrentHashMap[Int, Int]()
+    val plans = new ConcurrentLinkedQueue[String]()
+    override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+      case s: SparkListenerSQLExecutionStart => plans.add(s.physicalPlanDescription)
+      case u: SparkListenerSQLAdaptiveExecutionUpdate => plans.add(u.physicalPlanDescription)
+      case _ =>
+    }
     @volatile private var markerJob = -1
     @volatile var markerDone = false
     override def onJobStart(e: SparkListenerJobStart): Unit =
@@ -201,5 +222,119 @@ class CrawlCycleSpec extends AnyFunSuite with LocalSpark {
       "index_sink", "stats_counts").map(l => s"crawl.$l")
     assert(labels.nonEmpty && labels.forall(legs.contains), labels.distinct)
     assert(legs.forall(labels.contains), labels.distinct)
+  }
+
+  /** Item counts of the literal lists in a plan's text: `x IN (a,b)` and
+    * the `x INSET a, b` form the optimizer gives lists of over ten. */
+  private def literalLists(plan: String): Seq[Int] =
+    ("""\bIN \(([^()]*)\)""".r.findAllMatchIn(plan).map(_.group(1).split(",").length) ++
+      """\bINSET ([^,\s\])]+(?:, [^,\s\])]+)*)""".r.findAllMatchIn(plan)
+        .map(_.group(1).split(", ").length)).toSeq
+
+  test("a cycle's plans do not grow with its batch: no plan nests the cycle or lists its keys") {
+    def plans(pages: Int): Seq[String] = {
+      val work = Files.createTempDirectory("plansize")
+      def d(n: String): String = work.resolve(n).toString
+      val store = new FrontierStore(d("frontier"))
+      CrawlTopology.seed(spark, store, site(pages), chain)
+      withJobLog { log =>
+        val (st, docs) = CrawlTopology.crawlOnce(spark, store, new ProtocolFactory(), chain,
+          perBucket = 100, limit = 100, crawlDelayMs = 0, respectRobots = false,
+          contentStore = Some(new ContentStore(d("content"))),
+          indexSink = Some(noopSink), dedupContent = true,
+          digestLedger = Some(new DigestLedger(d("digests"))),
+          bandLedger = Some(new BandLedger(d("bands"))))
+        docs.unpersist()
+        assert(st.fetched == pages)
+        drain(log)
+        log.plans.asScala.toSeq
+      }
+    }
+    val (small, large) = (plans(3), plans(30))
+    val (longest3, longest30) = (small.map(_.length).max, large.map(_.length).max)
+    assert(longest30 <= 1.2 * longest3, s"longest plan: $longest3 chars at 3 pages, " +
+      s"$longest30 at 30:\n${large.maxBy(_.length)}")
+    // a plan that nests the cycle is as long at 3 pages as at 30: bound
+    // it outright (a leg's own plan is about 12 000 chars; the cycle
+    // nested under a later leg ran to 1.6 million)
+    assert(longest30 <= 64 * 1024, s"a plan of $longest30 chars")
+    for (p <- small ++ large; n <- literalLists(p))
+      assert(n <= 16, s"a literal list of $n items:\n$p")
+  }
+
+  test("a recrawl whose digests and bands are all known indexes nothing and suppresses every doc") {
+    val work = Files.createTempDirectory("recrawl")
+    def d(n: String): String = work.resolve(n).toString
+    val pages = site(4)
+    val digests = new DigestLedger(d("digests"))
+    val bands = new BandLedger(d("bands"))
+    def ledgerRows: (Long, Long) =
+      (spark.read.parquet(d("digests")).count(), spark.read.parquet(d("bands")).count())
+    /** (doc urls of the cycle, urls it indexed) */
+    def crawl(digestLedger: Option[DigestLedger]): (Set[String], Set[String]) = {
+      val indexed = new ConcurrentLinkedQueue[String]()
+      val sink = new IndexSink {
+        def indexBatch(docs: DataFrame): Unit =
+          docs.select("url").collect().foreach(r => indexed.add(r.getString(0)))
+        def deleteBatch(urls: DataFrame): Unit = ()
+      }
+      val store = new FrontierStore(Files.createTempDirectory(work, "f").toString)
+      CrawlTopology.seed(spark, store, pages, chain)
+      val (_, docs) = CrawlTopology.crawlOnce(spark, store, new ProtocolFactory(), chain,
+        crawlDelayMs = 0, respectRobots = false, indexSink = Some(sink),
+        dedupContent = true, digestLedger = digestLedger, bandLedger = Some(bands))
+      val urls = docs.select("url").collect().map(_.getString(0)).toSet
+      docs.unpersist()
+      (urls, indexed.asScala.toSet)
+    }
+    val first = crawl(Some(digests))
+    assert(first == ((pages.toSet, pages.toSet)))
+    val recorded = ledgerRows
+    // every digest is known: the digest ledger's anti-join leaves nothing
+    assert(crawl(Some(digests)) == ((pages.toSet, Set.empty[String])))
+    // every doc's bands are known: the band ledger's anti-join suppresses all
+    assert(crawl(None) == ((pages.toSet, Set.empty[String])))
+    assert(ledgerRows == recorded)
+  }
+
+  test("with a content store, each miss is fetched exactly once and each hit not at all") {
+    val work = Files.createTempDirectory("fetchonce")
+    val urls = (0 until 6).map(i => s"http://h$i.example/p")
+    val cs = new ContentStore(work.resolve("content").toString)
+    def fetches(seeds: Seq[String]): Int = {
+      val store = new FrontierStore(Files.createTempDirectory(work, "f").toString)
+      CrawlTopology.seed(spark, store, seeds, chain)
+      CountingProtocol.fetches.set(0)
+      val (st, docs) = CrawlTopology.crawlOnce(spark, store,
+        new ProtocolFactory(CountingProtocol), chain, crawlDelayMs = 0,
+        respectRobots = false, contentStore = Some(cs))
+      assert(st.fetched == seeds.size && st.docs == seeds.size)
+      docs.unpersist()
+      CountingProtocol.fetches.get
+    }
+    assert(fetches(urls.take(3)) == 3)
+    // the store now has rows, so the hits read it: the cycle's append of
+    // the misses' captures must not make a later leg re-run their fetch
+    assert(fetches(urls) == 3)
+    assert(fetches(urls) == 0)
+  }
+
+  test("a cycle lists the frontier's bucket paths once, for the select and the merge") {
+    // 200 hosts fill most of the 64 buckets: a read of over 32 paths
+    // lists them in a Spark job
+    val urls = (0 until 200).map(i => s"http://h$i.example/p")
+    val store = new FrontierStore(Files.createTempDirectory("listing").toString)
+    CrawlTopology.seed(spark, store, urls, chain)
+    val listings = withJobLog { log =>
+      val (st, docs) = CrawlTopology.crawlOnce(spark, store,
+        new ProtocolFactory(CountingProtocol), chain, maxKeys = 200, crawlDelayMs = 0,
+        respectRobots = false)
+      docs.unpersist()
+      assert(st.fetched == urls.size)
+      drain(log)
+      log.jobs.asScala.toSeq.map(_.properties.getProperty("spark.job.description"))
+        .count(d => d != null && d.startsWith("Listing leaf files"))
+    }
+    assert(listings == 1)
   }
 }

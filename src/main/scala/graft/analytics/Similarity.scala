@@ -234,19 +234,9 @@ object Similarity {
     * (q65) checks, hash-identical, no recall hand-waving. */
   def pqTopK(corpus: DataFrame, queries: DataFrame, idCol: String,
              vecCol: String, m: Int = 8, subDim: Int = 8,
-             kCodes: Int = 16, iters: Int = 2, k: Int = 5): DataFrame =
-    pqTopKWith(pqCodebooks(corpus, idCol, vecCol, m, subDim, kCodes, iters),
-      corpus, queries, idCol, vecCol, m, subDim, k)
-
-  /** [[pqTopK]] with PRE-TRAINED codebooks — the production split: in
-    * a deployed ANN service codebooks are trained once (on a sample)
-    * and amortized across every encode+search batch; this entry point
-    * is what lets the benchmark time the two legs separately. */
-  def pqTopKWith(books: Array[Array[Array[Long]]],
-                 corpus: DataFrame, queries: DataFrame, idCol: String,
-                 vecCol: String, m: Int = 8, subDim: Int = 8,
-                 k: Int = 5): DataFrame = {
+             kCodes: Int = 16, iters: Int = 2, k: Int = 5): DataFrame = {
     import graft.functions.{PqFunctions, VecExpressions}
+    val books = pqCodebooks(corpus, idCol, vecCol, m, subDim, kCodes, iters)
     val codeCols = (0 until m).map(s =>
       VecExpressions.kmeansAssign(
           slice(col("qv"), s * subDim + 1, subDim), books(s))
@@ -281,17 +271,9 @@ object Similarity {
   def ivfPqTopK(corpus: DataFrame, queries: DataFrame, idCol: String,
                 vecCol: String, dim: Int = 64, numPlanes: Int = 6,
                 nprobe: Int = 3, m: Int = 8, subDim: Int = 8,
-                kCodes: Int = 16, iters: Int = 2, k: Int = 5): DataFrame =
-    ivfPqTopKWith(pqCodebooks(corpus, idCol, vecCol, m, subDim, kCodes, iters),
-      corpus, queries, idCol, vecCol, dim, numPlanes, nprobe, m, subDim, k)
-
-  /** [[ivfPqTopK]] with pre-trained codebooks (see [[pqTopKWith]]). */
-  def ivfPqTopKWith(books: Array[Array[Array[Long]]],
-                    corpus: DataFrame, queries: DataFrame, idCol: String,
-                    vecCol: String, dim: Int = 64, numPlanes: Int = 6,
-                    nprobe: Int = 3, m: Int = 8, subDim: Int = 8,
-                    k: Int = 5): DataFrame = {
+                kCodes: Int = 16, iters: Int = 2, k: Int = 5): DataFrame = {
     import graft.functions.{PqFunctions, VecExpressions}
+    val books = pqCodebooks(corpus, idCol, vecCol, m, subDim, kCodes, iters)
     val codeCols = (0 until m).map(s =>
       VecExpressions.kmeansAssign(
           slice(col("qv"), s * subDim + 1, subDim), books(s))

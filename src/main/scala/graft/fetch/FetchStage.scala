@@ -69,7 +69,6 @@ object FetchStage {
             crawlDelayMs: Long = 1000,
             maxCrawlDelayMs: Long = 30000,
             respectRobots: Boolean = true,
-            parallelism: Option[Int] = None,
             /** robots `Sitemap:` autodiscovery (`sitemap.discovery`,
               * `FetcherBolt.java:535-568`): on a fresh robots fetch,
               * emit each allowed sitemap URL as a DISCOVERED row
@@ -78,7 +77,7 @@ object FetchStage {
               * metadata `sitemap.discovery=true/false` overrides. */
             sitemapDiscovery: Boolean = false): DataFrame = {
     val enc = org.apache.spark.sql.Encoders.row(outputSchema)
-    val nParts = parallelism.getOrElse(spark.sparkContext.defaultParallelism)
+    val nParts = spark.sparkContext.defaultParallelism
     val robots = new RobotsCache(protocols)
 
     val in = batch.select(col("url"), col("key"), col("metadata"))

@@ -115,8 +115,6 @@ final class RobotsCache(protocols: ProtocolFactory,
     }
   }
 
-  def rulesFor(url: String): RobotRules = rulesForCached(url)._1
-
   /** Rules + whether they came from the cache — autodiscovery emits a
     * host's sitemaps only on a fresh robots fetch
     * (`FetcherBolt.java:537-539`: "if the robot file did not come from

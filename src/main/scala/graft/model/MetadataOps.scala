@@ -8,10 +8,9 @@ import org.apache.spark.sql.functions._
   *
   * Re-expresses the operations of the reference's `Metadata` class
   * (`core/.../Metadata.java`): `getFirstValue` (91-116), `getValues`,
-  * `setValue`/`addValue` (132-178), prefix scans `keySet(prefix)` (215-219)
-  * and prefixed bulk merge `putAll(m, prefix)` (75-86) — but as pure
-  * Catalyst column expressions, never UDFs. Honest cost note: the
-  * higher-order map functions (`map_filter`, `transform_keys`) are
+  * `setValue`/`addValue` (132-178) and prefix scans `keySet(prefix)`
+  * (215-219) — but as pure Catalyst column expressions, never UDFs.
+  * Honest cost note: the higher-order map function `map_filter` is
   * CodegenFallback — interpreted per row, though still null-safe,
   * prunable and far cheaper than opaque UDFs. That is fine here
   * because these run on per-STATUS-ROW paths (a handful of keys per
@@ -44,35 +43,8 @@ object MetadataOps {
       map(lit(key), concat(coalesce(element_at(base, key), array()), array(value))))
   }
 
-  /** Remove a key. */
-  def mdRemove(md: Column, key: String): Column =
-    map_filter(coalesce(md, map()), (k, _) => k =!= key)
-
   /** Sub-map of keys starting with prefix — `Metadata.keySet(prefix)`
     * (`Metadata.java:215-219`). */
   def mdPrefix(md: Column, prefix: String): Column =
     map_filter(coalesce(md, map()), (k, _) => k.startsWith(prefix))
-
-  /** Merge `other` into `md`, prefixing other's keys —
-    * `Metadata.putAll(m, prefix)` (`Metadata.java:75-86`).
-    * Keys colliding after prefixing take `other`'s values. */
-  def mdPutAllPrefixed(md: Column, other: Column, prefix: String): Column = {
-    val prefixed = transform_keys(coalesce(other, map()), (k, _) => concat(lit(prefix), k))
-    val keys = map_keys(prefixed)
-    map_concat(
-      map_filter(coalesce(md, map()), (k, _) => !array_contains(keys, k)),
-      prefixed)
-  }
-
-  /** Keep only whitelisted keys — `MetadataTransfer.filter`
-    * (`core/.../util/MetadataTransfer.java:151-180`); supports `"pfx.*"`
-    * glob entries like `indexer.md.mapping`. */
-  def mdFilterKeys(md: Column, keep: Seq[String]): Column = {
-    val (globs, exacts) = keep.partition(_.endsWith(".*"))
-    val globPrefixes = globs.map(_.dropRight(1)) // keep trailing '.'
-    map_filter(coalesce(md, map()), (k, _) => {
-      val exactHit = exacts.foldLeft(lit(false))((acc, e) => acc || (k === e))
-      globPrefixes.foldLeft(exactHit)((acc, p) => acc || k.startsWith(p))
-    })
-  }
 }

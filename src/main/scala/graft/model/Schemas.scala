@@ -43,13 +43,6 @@ object Schemas {
     StructField("anchor", StringType, nullable = true),
     StructField("metadata", metadataType, nullable = true)
   ))
-
-  /** Status-stream rows emitted by fetch/parse stages. */
-  val statusUpdate: StructType = StructType(Seq(
-    StructField("url", StringType, nullable = false),
-    StructField("status", StringType, nullable = false),
-    StructField("metadata", metadataType, nullable = true)
-  ))
 }
 
 /** Typed row for the frontier table (used with Dataset[StatusRow] where

@@ -179,6 +179,7 @@ object CrawlTopology {
       // handed to the caller: cached on its own so that releasing the
       // parse output below keeps the docs readable without a re-fetch
       val docs = parsed.where(col("kind") === "doc").cache()
+      held += docs // until handed over: a failed or stopped cycle releases it too
 
       // live index sink (IndexerBolt + DeletionBolt wiring): index this
       // batch's docs through the mapping projection; delete EVERY page
@@ -272,6 +273,7 @@ object CrawlTopology {
           .agg(count_if(col("doc")), count_if(!col("doc"))).head()
         (f.getLong(0), f.getLong(1), p.getLong(0), p.getLong(1))
       }
+      held -= docs
       (CrawlStats(selected, nFetched, nFailed, nDocs, nDisc, legs = legSecs.toMap), docs)
     } finally held.foreach(_.unpersist())
   }
@@ -367,12 +369,11 @@ object CrawlTopology {
         dedupContent = dedupContent, digestLedger = digestLedger,
         bandLedger = bandLedger)
       adaptiveDate.observe(st.selected, selectionLimit)
-      docsOut.foreach { dir =>
+      try docsOut.foreach { dir =>
         if (st.docs > 0)
           docs.select("url", "title", "text", "signature", "noindex")
             .write.mode("append").parquet(dir)
-      }
-      docs.unpersist()
+      } finally docs.unpersist()
       stats :+= st
       continue = st.selected > 0
       i += 1
@@ -409,11 +410,11 @@ object CrawlTopology {
           indexSink = indexSink, sitemapDiscovery = sitemapDiscovery,
           dedupContent = dedupContent, digestLedger = digestLedger,
           bandLedger = bandLedger)
-        if (st.docs > 0)
-          docs.select("url", "title", "text", "signature", "noindex")
-            .write.mode("append").parquet(docsOut)
-        docs.unpersist()
-        ()
+        try {
+          if (st.docs > 0)
+            docs.select("url", "title", "text", "signature", "noindex")
+              .write.mode("append").parquet(docsOut)
+        } finally docs.unpersist()
       }
       .start()
   }

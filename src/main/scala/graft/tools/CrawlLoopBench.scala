@@ -21,7 +21,7 @@ import graft.streaming.CrawlTopology
   * real `FileProtocol`; each host gets a distinct authority
   * (`file://hostN.example.com/...` — FileProtocol resolves by path, the
   * authority exists so `partitionKeyCol`/politeness see H distinct
-  * hosts, exactly like PolitenessBench). Page 0 of each host links the
+  * hosts). Page 0 of each host links the
   * other P−1, so all discovery flows through parse → chain → merge.
   * Even-numbered pages (p ≥ 2) serve IDENTICAL boilerplate across all
   * hosts — the mirrored-mass shape at crawl scale — so the batch

@@ -74,8 +74,9 @@ class ContentStoreSpec extends AnyFunSuite with LocalSpark {
     // first crawl populates the content store over the wire
     val st1 = new FrontierStore(Files.createTempDirectory("f1").toString)
     CrawlTopology.seed(spark, st1, Seq(url), chain)
-    val (s1, _) = CrawlTopology.crawlOnce(spark, st1, new ProtocolFactory(), chain,
+    val (s1, docs1) = CrawlTopology.crawlOnce(spark, st1, new ProtocolFactory(), chain,
       crawlDelayMs = 0, respectRobots = false, contentStore = Some(cs))
+    docs1.unpersist()
     assert(s1.fetched == 1)
     assert(cs.read(spark).count() == 1)
 
@@ -88,6 +89,7 @@ class ContentStoreSpec extends AnyFunSuite with LocalSpark {
       crawlDelayMs = 0, respectRobots = false, contentStore = Some(cs))
     assert(s2.fetched == 1, s2)
     assert(docs.count() == 1)
+    docs.unpersist()
     val row = st2.read(spark).collect().head
     assert(row.getAs[String]("status") == graft.model.Status.Fetched)
   }

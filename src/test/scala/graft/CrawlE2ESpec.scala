@@ -98,8 +98,9 @@ class CrawlE2ESpec extends AnyFunSuite with LocalSpark {
     CrawlTopology.seed(spark, store, Seq(s"file://$dir/index.html"), chain)
     val before = store.read(spark).select("url", "status")
     before.cache(); before.count() // freeze the pre-cycle snapshot
-    CrawlTopology.crawlOnce(spark, store, new ProtocolFactory(), chain,
+    val (_, docs) = CrawlTopology.crawlOnce(spark, store, new ProtocolFactory(), chain,
       crawlDelayMs = 0, respectRobots = false)
+    docs.unpersist()
     val after = store.read(spark).select("url", "status")
     val delta = graft.operators.SnapshotDiff
       .diff(before, after, Seq("url"), Seq("status"))

@@ -1,16 +1,33 @@
 package graft
 
-import java.net.InetSocketAddress
+import java.net.{InetSocketAddress, URI}
 import java.nio.file.Files
+import java.util.concurrent.ConcurrentLinkedQueue
+
+import scala.jdk.CollectionConverters._
 
 import com.sun.net.httpserver.{HttpExchange, HttpHandler, HttpServer}
+import org.apache.spark.TaskContext
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.fetch.ProtocolFactory
+import graft.fetch.{FetchStage, Protocol, ProtocolFactory, ProtocolResponse}
 import graft.filters._
 import graft.frontier.FrontierStore
 import graft.model.Status
 import graft.streaming.CrawlTopology
+
+/** Serves every URL an empty page and logs (key, partition id, start ms)
+  * per fetch; the key is the host's first label (tasks run in this JVM
+  * under `local[…]`). */
+object RecordingProtocol extends Protocol {
+  val starts = new ConcurrentLinkedQueue[(String, Int, Long)]()
+  def fetch(url: String, metadata: Map[String, Seq[String]]): ProtocolResponse = {
+    starts.add((new URI(url).getHost.takeWhile(_ != '.'),
+      TaskContext.getPartitionId(), System.currentTimeMillis()))
+    ProtocolResponse("<html></html>".getBytes("UTF-8"), 200,
+      Map("Content-Type" -> Seq("text/html")))
+  }
+}
 
 /** Real-HTTP crawl: JDK HttpServer serving a tiny site with robots.txt —
   * exercises HttpProtocol, the robots cache/deny path, and redirect
@@ -122,6 +139,36 @@ class CrawlHttpSpec extends AnyFunSuite with LocalSpark {
       assert(md("set-cookie").toSeq == Seq("sid=xyz; Path=/"))
       assert(md("set-cookie.origin").toSeq == Seq("127.0.0.1"))
     } finally server.stop(0)
+  }
+
+  test("FetchStage keeps each key's crawl delay and overlaps the keys of one partition") {
+    import spark.implicits._
+    val (keys, pages, delayMs) = (8, 4, 200L)
+    val batch = (for (k <- 0 until keys; p <- 0 until pages)
+      yield (s"http://k$k.polite.test/p$p", s"k$k", Map.empty[String, Seq[String]]))
+      .toDF("url", "key", "metadata")
+    RecordingProtocol.starts.clear()
+    val out = FetchStage.fetch(spark, batch, new ProtocolFactory(RecordingProtocol),
+      crawlDelayMs = delayMs, respectRobots = false).collect()
+    assert(out.map(_.getAs[String]("status")).toSeq == Seq.fill(keys * pages)(Status.Fetched))
+
+    val byKey = RecordingProtocol.starts.asScala.toSeq.groupBy(_._1)
+    assert(byKey.size == keys && byKey.values.forall(_.size == pages))
+    for ((k, fetches) <- byKey) {
+      val at = fetches.map(_._3).sorted
+      assert(at.zip(at.tail).forall { case (a, b) => b - a >= delayMs }, s"$k: $at")
+      assert(fetches.map(_._2).distinct.size == 1, s"$k drained in one partition")
+    }
+    // 8 keys over the session's 4 partitions: some partition holds two
+    // or more, and its earliest-ready-first drain fetches them in
+    // overlapping windows instead of one queue after the other
+    val window = byKey.map { case (k, fs) => k -> (fs.map(_._3).min, fs.map(_._3).max) }
+    val shared = byKey.keys.toSeq.groupBy(byKey(_).head._2).values.filter(_.size > 1)
+    assert(shared.nonEmpty)
+    for (ks <- shared; Seq(a, b) <- ks.sorted.combinations(2)) {
+      val ((fa, la), (fb, lb)) = (window(a), window(b))
+      assert(fa < lb && fb < la, s"$a [$fa, $la] and $b [$fb, $lb] do not overlap")
+    }
   }
 
   test("http.method.head metadata switches the request to HEAD") {

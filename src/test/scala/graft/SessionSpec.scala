@@ -46,4 +46,16 @@ class SessionSpec extends AnyFunSuite with LocalSpark {
       .map(root.relativize(_).toString).toSeq.sorted
     assert(builders.isEmpty)
   }
+
+  test("src/main holds exactly the seven kept entry points") {
+    val root = Paths.get("src/main/scala")
+    val mains = Files.walk(root).iterator.asScala
+      .filter(p => p.toString.endsWith(".scala"))
+      .filter(p => Files.readString(p).contains("def main("))
+      .map(root.relativize(_).toString).toSeq.sorted
+    assert(mains == Seq(
+      "graft/Bench.scala", "graft/CrawlDemo.scala", "graft/ExplainDump.scala",
+      "graft/Verify.scala", "graft/tools/CrawlLoopBench.scala",
+      "graft/tools/Profile.scala", "graft/tools/StreamingSoak.scala"))
+  }
 }

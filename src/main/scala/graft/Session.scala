@@ -58,13 +58,15 @@ object Session {
     "spark.sql.legacy.parquet.nanosAsLong" -> "true",
     "spark.ui.enabled" -> "false")
 
-  /** A `local[cpus]` session with the engine's settings, logging at WARN.
-    * Returns the JVM's existing session if there is one. */
+  /** A `local[cpus]` session with the engine's settings and optimizer
+    * rule (`graft.plans.install`), logging at WARN. Returns the JVM's
+    * existing session if there is one. */
   def local(cpus: Int = Session.cpus): SparkSession = {
     val spark = settings(cpus)
       .foldLeft(SparkSession.builder().master(s"local[$cpus]")) { case (b, (k, v)) => b.config(k, v) }
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    graft.plans.install(spark)
     spark
   }
 }

@@ -198,13 +198,13 @@ object Clustering {
                             k: Int, iters: Int, dim: Int, numPlanes: Int,
                             tau: Double, maxBucket: Int): (DataFrame, DataFrame) = {
     val cents = centroids(emb, idCol, vecCol, k, iters)
-    val enriched = graft.plans.InputWidth.widen(emb.select(
+    val enriched = emb.select(
       col(idCol).as("id"),
       VecExpressions.kmeansAssign(
         VecExpressions.quantizeLongs(col(vecCol), Scale), cents)
         .getField("cluster").as("cluster"),
       graft.functions.VecExpressions
-        .l2Normalize(col(vecCol).cast("array<double>")).as("nv")))
+        .l2Normalize(col(vecCol).cast("array<double>")).as("nv"))
     val n = enriched.where(col("nv").isNotNull)
       .withColumn("bucket", Similarity.lshBucket(col("nv"), dim, numPlanes))
       .withColumn("bkn", count(lit(1)).over(

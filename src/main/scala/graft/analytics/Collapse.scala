@@ -3,8 +3,6 @@ package graft.analytics
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-import graft.plans.InputWidth
-
 /** Verbatim-duplicate collapse: the reference's content-signature idea
   * (`MD5SignatureParseFilter.java:48`) applied across documents. An
   * operator whose result depends only on a document's text can run once
@@ -33,12 +31,9 @@ import graft.plans.InputWidth
   *    over units — bodies write `sum(weight)` where a per-document
   *    pipeline writes `count`. On unique units `weight` is the literal
   *    1, which Catalyst folds, so the direct plan carries no weights.
-  *  - Starved-scan repair ([[Units.wide]]): a compact single-row-group
-  *    corpus pins its scan to one task. Unique units widen the scan
-  *    ([[InputWidth.widen]]). Collapsed units never widen the scan, which
-  *    would shuffle the full corpus text into the join-back (measured
-  *    +2.5 s on q22 at 100× scale); they repartition the rep-sized
-  *    joined frame when the scan is narrow.
+  *  - The optimizer (`graft.plans`) widens a starved input above the
+  *    collapsed route's join-back: rep-sized rows shuffle, never the
+  *    corpus text (widening the scan measured +2.5 s on q22 at 100×).
   *
   * The route is data-dependent in a way AQE cannot re-plan, so a
   * one-row probe ([[unique]]) picks it before planning. Both routes are
@@ -85,11 +80,10 @@ object Collapse {
   def units(df: DataFrame, idCol: String, textCol: String,
             groupCols: Seq[String], unique: Boolean): Units = {
     val gs = groupCols.map(col)
-    if (unique) {
-      def project(scan: DataFrame) = scan.select(gs ++ Seq(col(idCol).as("key"),
-        lit(1L).as("weight"), col(textCol).as("text")): _*)
-      new Units(project(df), true, () => project(InputWidth.widen(df)), null)
-    } else {
+    if (unique)
+      new Units(df.select(gs ++ Seq(col(idCol).as("key"), lit(1L).as("weight"),
+        col(textCol).as("text")): _*), true, null)
+    else {
       // Both consumers below join this on (groups, digest) and read
       // every column through its (always true) filter, so Catalyst
       // infers the same filters into it and prunes neither column: the
@@ -106,12 +100,7 @@ object Collapse {
         .where(col("id") <= col("key"))
         .select(gs ++ Seq(col("key"), col("weight"), col("text")): _*)
       val members = withKeys(col(idCol).as("id")).select(col("key"), col("id"))
-      // never widen the scan here: it would shuffle the full corpus text
-      // into the join-back; repartition the rep-sized rows instead
-      def widened() =
-        if (!InputWidth.isNarrow(df)) rows
-        else rows.repartition(df.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt)
-      new Units(rows, false, () => widened(), members)
+      new Units(rows, false, members)
     }
   }
 
@@ -122,11 +111,7 @@ object Collapse {
     units(df, idCol, textCol, Nil, unique(df, textCol, textCol, atLeast))
 
   final class Units private[Collapse] (val rows: DataFrame, unique: Boolean,
-                                       widened: () => DataFrame, members: DataFrame) {
-
-    /** `rows` with the starved-scan repair; bodies use it where their
-      * per-row work is CPU-dense. */
-    def wide: DataFrame = widened()
+                                       members: DataFrame) {
 
     /** Per-unit results (column `key`) as per-document results (column
       * `idName`). Collapsed units join every member to its key. */

@@ -36,10 +36,7 @@ object Decontaminate {
     * (doc_id, n_hits, n_shingles, contamination, first_match) with
     * contamination = n_hits / n_shingles over DISTINCT k-word shingles
     * and first_match = the smallest benchmark id owning a shared gram.
-    * Docs shorter than k words have no shingles and never appear. The
-    * corpus scan is WIDENED: shingling is CPU-dense per row, and a
-    * compact single-row-group corpus pins it to one task (measured
-    * 0.8 s serial inside q90 at sf0.1 while 31 cores idle). */
+    * Docs shorter than k words have no shingles and never appear. */
   def ngramHits(corpus: DataFrame, bench: DataFrame, idCol: String,
                 textCol: String, k: Int): DataFrame =
     hitsOver(Collapse.textUnits(corpus, idCol, textCol),
@@ -104,7 +101,7 @@ object Decontaminate {
     * table `bg`, counted per unit and expanded to documents. */
   private def hits(u: Collapse.Units, bg: DataFrame, k: Int,
                    prefilter: DataFrame => DataFrame): DataFrame = {
-    val byKey = prefilter(docGrams(withGs(u.wide, "text", k), "key"))
+    val byKey = prefilter(docGrams(withGs(u.rows, "text", k), "key"))
       .join(bg, "g")
       .groupBy("key", "n_shingles")
       .agg(count(lit(1)).as("n_hits"), min("bench_id").as("first_match"))
@@ -177,7 +174,7 @@ object Decontaminate {
     // collapse saves the shingle pass and both aggregations per copy
     // (57 → a few seconds at a 100×-replicated sf10) but costs two
     // joins on a nearly-unique corpus
-    val cg = withGs(corpus.wide, "text", k)
+    val cg = withGs(corpus.rows, "text", k)
       .select(col("key"), explode_outer(col("gs")).as("g"))
     corpus.expand(attributionReport(cg.join(broadcast(bg), "g"), "key", minShared), "doc_id")
       .select(col("doc_id").cast("long").as("doc_id"), col("n_evals"),
@@ -315,15 +312,14 @@ object Decontaminate {
       Collapse.textUnits(ref, idCol, textCol), k, topK)
 
   /** Each side routes on its own probe: the reference's distinct gram
-    * set and a doc's novelty are both functions of the TEXT. The
-    * reference side is corpus-sized too, so both shingle passes widen. */
+    * set and a doc's novelty are both functions of the TEXT. */
   private[graft] def noveltyOver(doc: Collapse.Units, ref: Collapse.Units,
                                  k: Int, topK: Int): DataFrame = {
-    val refGrams = ref.wide
+    val refGrams = ref.rows
       .select(explode_outer(graft.functions.TextHashExpressions
         .distinctShingles(col("text"), k)).as("g"))
       .where(col("g").isNotNull).distinct()
-    val grams = docGrams(withGs(doc.wide, "text", k), "key")
+    val grams = docGrams(withGs(doc.rows, "text", k), "key")
       .where(col("g").isNotNull)
     doc.expand(noveltyStats(grams, refGrams, "key"), "doc_id")
       .select(col("doc_id").cast("long").as("doc_id"), col("n_shingles"),
@@ -377,7 +373,7 @@ object Decontaminate {
     dupSpansOver(Collapse.textUnits(corpus, idCol, textCol), k, minDf)
 
   private[graft] def dupSpansOver(u: Collapse.Units, k: Int, minDf: Long): DataFrame = {
-    val grams = withGs(u.wide, "text", k)
+    val grams = withGs(u.rows, "text", k)
       .select(col("key"), col("weight"),
         size(col("gs")).as("n_shingles"), explode_outer(col("gs")).as("g"))
     val dfTab = grams.groupBy("g").agg(sum("weight").as("df"))

@@ -32,10 +32,6 @@ object Dedup {
   /** Exact dedup: keep the smallest id per content digest
     * (the reference's dedup-by-signature idea, `MD5SignatureParseFilter
     * .java:48`, applied set-wide). One shuffle. */
-  // deliberately NOT widened (see InputWidth): md5 is ~as cheap per
-  // row as the repartition it would buy, and the groupBy right after
-  // re-parallelizes everything downstream anyway — measured 1.5 s ->
-  // 2.1 s at sf10 WITH widening, the one site where it lost
   def exactDedup(df: DataFrame, idCol: String, textCol: String): DataFrame =
     df.select(md5(col(textCol)).as("digest"), col(idCol))
       .groupBy("digest")
@@ -113,7 +109,7 @@ object Dedup {
   def minhashSignatures(df: DataFrame, idCol: String, textCol: String,
                         numHashes: Int = 4, shingleK: Int = 3): DataFrame = {
     require(numHashes <= 4, "one md5 yields 4 chunks")
-    graft.plans.InputWidth.widen(df).select(col(idCol),
+    df.select(col(idCol),
         graft.functions.TextHashExpressions.minhashSig(col(textCol), shingleK, numHashes).as("sig"))
       .where(col("sig").isNotNull)
       .select(col(idCol) +:
@@ -327,7 +323,7 @@ object Dedup {
                        maxBucket: Int): DataFrame = {
     val sig = graft.functions.TextHashExpressions
       .minhashSig(col("text"), 1, 4, distinct = true)
-    u.wide.where(Collapse.worded("text"))
+    u.rows.where(Collapse.worded("text"))
       .select(col(groupCol), col("key"), col("weight"), sig.as("sig"))
       .select(col(groupCol), col("key"), col("weight"), explode(array(
         concat_ws("_", lit("A"), col("sig").getItem(0), col("sig").getItem(1)),
@@ -390,7 +386,7 @@ object Dedup {
     * DuckDB oracle; this computes the same hash without the 16×|words|
     * row blowup or any shuffle. */
   def simhash16(df: DataFrame, idCol: String, textCol: String): DataFrame =
-    graft.plans.InputWidth.widen(df).select(col(idCol),
+    df.select(col(idCol),
         graft.functions.TextHashExpressions.simhash16(col(textCol)).as("simhash"))
       .where(col("simhash").isNotNull)
 
@@ -481,7 +477,7 @@ object Dedup {
   private def setPairs(u: Collapse.Units, groupCol: String, maxDf: Int,
                        name: String, minScore: Double, ratioPrefilter: Boolean,
                        score: (Column, Column, Column) => Column): DataFrame = {
-    val tok = u.wide.select(col(groupCol), col("key"), col("weight"),
+    val tok = u.rows.select(col(groupCol), col("key"), col("weight"),
       explode(array_distinct(words(col("text")))).as("w"))
     val sizes = tok.groupBy(col(groupCol), col("key")).agg(count(lit(1)).as("sz"))
     val pruned = tok

@@ -83,7 +83,7 @@ object Dsir {
     * corpus is removed, and in-suite the freed CPU is a neighbor
     * query's headroom. */
   private[graft] def importanceOver(u: Collapse.Units, buckets: Int, k: Int): DataFrame = {
-    val tokc = u.wide
+    val tokc = u.rows
       .select(col("key"), col("is_target"), col("weight"),
         explode(Dedup.words(col("text"))).as("w"))
       .select(col("key"), col("is_target"), col("weight"),

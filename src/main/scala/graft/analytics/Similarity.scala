@@ -60,13 +60,7 @@ object Similarity {
   def cosineTopK(corpus: DataFrame, queries: DataFrame, idCol: String,
                  vecCol: String, k: Int): DataFrame = {
     val q = normalized(queries, idCol, vecCol, "q_id", "q_vec")
-    // Widen the corpus side: a compact corpus (one parquet row group)
-    // otherwise serializes the nested-loop join, every dot product,
-    // and the 40M-row sort under the partial WindowGroupLimit onto ONE
-    // core — measured 130 s -> 8 s at sf10. widen() is a no-op when
-    // the input already splits across the cluster.
-    val c = graft.plans.InputWidth
-      .widen(normalized(corpus, idCol, vecCol, "c_id", "c_vec"))
+    val c = normalized(corpus, idCol, vecCol, "c_id", "c_vec")
     val scored = c.join(broadcast(q), col("q_id") =!= col("c_id"))
       .select(col("q_id"), col("c_id"), dotD(col("q_vec"), col("c_vec")).as("cosine"))
     val w = Window.partitionBy(col("q_id")).orderBy(col("cosine").desc, col("c_id"))
@@ -101,8 +95,7 @@ object Similarity {
   def ivfTopK(corpus: DataFrame, queries: DataFrame, idCol: String,
               vecCol: String, dim: Int, numPlanes: Int, k: Int,
               nprobe: Int): DataFrame = {
-    val c = graft.plans.InputWidth
-      .widen(normalized(corpus, idCol, vecCol, "c_id", "c_vec"))
+    val c = normalized(corpus, idCol, vecCol, "c_id", "c_vec")
       .withColumn("bucket", lshBucket(col("c_vec"), dim, numPlanes))
     val q = normalized(queries, idCol, vecCol, "q_id", "q_vec")
       .select(col("q_id"), col("q_vec"),
@@ -138,8 +131,7 @@ object Similarity {
   def nearDupPairs(corpus: DataFrame, idCol: String, vecCol: String,
                    dim: Int, numPlanes: Int, topN: Int,
                    maxBucket: Int = 1024): DataFrame = {
-    val n = graft.plans.InputWidth
-      .widen(normalized(corpus, idCol, vecCol, "id", "nv"))
+    val n = normalized(corpus, idCol, vecCol, "id", "nv")
       .withColumn("bucket", lshBucket(col("nv"), dim, numPlanes))
       .withColumn("bkn", count(lit(1)).over(Window.partitionBy(col("bucket"))))
       .where(col("bkn") <= maxBucket).drop("bkn")
@@ -241,9 +233,8 @@ object Similarity {
       VecExpressions.kmeansAssign(
           slice(col("qv"), s * subDim + 1, subDim), books(s))
         .getField("cluster"))
-    val c = graft.plans.InputWidth
-      .widen(corpus.select(col(idCol).as("c_id"),
-        VecExpressions.quantizeLongs(col(vecCol), Clustering.Scale).as("qv")))
+    val c = corpus.select(col(idCol).as("c_id"),
+        VecExpressions.quantizeLongs(col(vecCol), Clustering.Scale).as("qv"))
       .select(col("c_id"), array(codeCols: _*).as("codes"))
     val q = queries.select(col(idCol).as("q_id"),
       PqFunctions.pqLut(
@@ -278,11 +269,10 @@ object Similarity {
       VecExpressions.kmeansAssign(
           slice(col("qv"), s * subDim + 1, subDim), books(s))
         .getField("cluster"))
-    val c = graft.plans.InputWidth
-      .widen(corpus.select(col(idCol).as("c_id"),
+    val c = corpus.select(col(idCol).as("c_id"),
         VecExpressions.quantizeLongs(col(vecCol), Clustering.Scale).as("qv"),
         graft.functions.VecExpressions
-          .l2Normalize(col(vecCol).cast("array<double>")).as("nv")))
+          .l2Normalize(col(vecCol).cast("array<double>")).as("nv"))
       .where(col("nv").isNotNull)
       .select(col("c_id"), lshBucket(col("nv"), dim, numPlanes).as("bucket"),
         array(codeCols: _*).as("codes"))

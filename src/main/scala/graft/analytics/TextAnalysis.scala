@@ -130,7 +130,7 @@ object TextAnalysis {
         org.apache.spark.sql.types.StructField("df",
           org.apache.spark.sql.types.LongType, nullable = false)))
       val enc = org.apache.spark.sql.Encoders.row(outSchema)
-      graft.plans.InputWidth.widen(df).select(col(idCol), col(textCol))
+      df.select(col(idCol), col(textCol))
         .mapPartitions { rows =>
           val dfm = bc.value
           rows.flatMap { r =>
@@ -163,8 +163,7 @@ object TextAnalysis {
     * at most |vocab| rows per task. */
   private[analytics] def documentFrequency(df: DataFrame, idCol: String,
                                            textCol: String): DataFrame =
-    graft.plans.InputWidth.widen(df)
-      .select(explode(array_distinct(split(col(textCol), " "))).as("term"))
+    df.select(explode(array_distinct(split(col(textCol), " "))).as("term"))
       .where(col("term") =!= "")
       .groupBy(col("term")).agg(count(lit(1)).as("df"))
 
@@ -225,7 +224,7 @@ object TextAnalysis {
     * windowed relational formulation survives as the DuckDB oracle. */
   def winnowingFingerprints(df: DataFrame, idCol: String, textCol: String,
                             shingleK: Int = 4, window: Int = 5): DataFrame =
-    graft.plans.InputWidth.widen(df).select(col(idCol),
+    df.select(col(idCol),
         graft.functions.TextHashExpressions.winnowFp(col(textCol), shingleK, window).as("wf"))
       .where(col("wf").isNotNull)
       .select(col(idCol),
@@ -272,7 +271,7 @@ object TextAnalysis {
     // where the codegen'd expression is one pass. Documented
     // bit-identical output. Measured (sf0.1, isolated): q80 wall
     // ~2.1 → 1.33 s (min-of-4), executor task time 30.3 → 6.4 s.
-    val terms = u.wide
+    val terms = u.rows
       .select(col("key"), col("weight"),
         explode(graft.functions.TextHashExpressions
           .distinctShingles(col("text"), shingleN)).as("term"))
@@ -313,8 +312,7 @@ object TextAnalysis {
     // table across its three uses (nTotal + both broadcast joins).
     val toks =
       if (Collapse.unique(df, textCol, textCol, 0.95))
-        graft.plans.InputWidth.widen(df)
-          .select(lit(1L).as("weight"), Dedup.words(col(textCol)).as("ws"))
+        df.select(lit(1L).as("weight"), Dedup.words(col(textCol)).as("ws"))
       else {
         val agg = df
           .select(md5(col(textCol)).as("digest"))

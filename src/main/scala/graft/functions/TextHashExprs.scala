@@ -12,6 +12,8 @@ import org.apache.spark.sql.graft.ColumnBridge
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
+import graft.plans.CpuDense
+
 /** Single-pass MinHash signature computation as a native Catalyst
   * expression.
   *
@@ -163,7 +165,7 @@ object TextHashOps2 {
 }
 
 /** `simhash16(text)` — single codegen'd pass per document. */
-case class SimHash16Expr(child: Expression) extends UnaryExpression {
+case class SimHash16Expr(child: Expression) extends UnaryExpression with CpuDense {
   private val ops = "graft.functions.TextHashOps2$.MODULE$"
   override def dataType: DataType = org.apache.spark.sql.types.LongType
   override def nullable: Boolean = true // wordless docs have no hash
@@ -194,7 +196,7 @@ case class SimHash16Expr(child: Expression) extends UnaryExpression {
 
 /** `winnow_fp(text)` → [n_fingerprints, min_fp], one pass per doc. */
 case class WinnowFpExpr(child: Expression, shingleK: Int, window: Int)
-    extends UnaryExpression {
+    extends UnaryExpression with CpuDense {
   private val ops = "graft.functions.TextHashOps2$.MODULE$"
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
   override def nullable: Boolean = true // short docs have no full frame
@@ -261,7 +263,7 @@ object ShingleOps {
 /** `distinct_shingles(text, k)` → array<string> of distinct k-word
   * shingles (single-space tokenization, oracle-portable). */
 case class DistinctShinglesExpr(child: Expression, k: Int)
-    extends UnaryExpression {
+    extends UnaryExpression with CpuDense {
   private val ops = "graft.functions.ShingleOps$.MODULE$"
 
   override def dataType: DataType = ArrayType(StringType, containsNull = false)
@@ -278,7 +280,7 @@ case class DistinctShinglesExpr(child: Expression, k: Int)
 }
 
 case class MinhashChunksExpr(child: Expression, k: Int, numHashes: Int,
-                             distinct: Boolean) extends UnaryExpression {
+                             distinct: Boolean) extends UnaryExpression with CpuDense {
   require(numHashes >= 1 && numHashes <= 4, "one md5 yields 4 chunks")
   private val ops = "graft.functions.TextHashOps$.MODULE$"
 

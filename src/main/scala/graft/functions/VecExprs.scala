@@ -245,7 +245,7 @@ case class DotDExpr(left: Expression, right: Expression) extends BinaryExpressio
 /** `l2_normalize(v)` over ARRAY<DOUBLE>; NULL on zero/non-finite norm
   * (see [[VecOps.l2normalize]]) — so the expression is nullable even
   * over a non-null child. */
-case class L2NormalizeExpr(child: Expression) extends UnaryExpression {
+case class L2NormalizeExpr(child: Expression) extends UnaryExpression with graft.plans.CpuDense {
   private val ops = "graft.functions.VecOps$.MODULE$"
   override def dataType: DataType = ArrayType(DoubleType, containsNull = false)
   override def nullable: Boolean = true

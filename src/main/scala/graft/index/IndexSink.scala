@@ -98,52 +98,38 @@ final class JdbcIndexSink(
         val conn = java.sql.DriverManager.getConnection(u)
         try {
           conn.setAutoCommit(false)
-          val sql =
-            if (createMode)
-              // create-only: insert iff the id is absent (single
-              // statement, no read-modify-write race)
-              s"""INSERT INTO $t (doc_id, url, text_body, fields)
-                 |SELECT v.a, v.b, v.c, v.d
-                 |FROM (VALUES (CAST(? AS VARCHAR(64)), CAST(? AS VARCHAR(2048)),
-                 |              CAST(? AS CLOB), CAST(? AS CLOB))) AS v(a, b, c, d)
-                 |WHERE NOT EXISTS (SELECT 1 FROM $t WHERE $t.doc_id = v.a)"""
-                .stripMargin
-            else
-              // Derby's MERGE source must be a base table/function —
-              // the one-row dummy table + parameters is the idiom
-              s"""MERGE INTO $t USING SYSIBM.SYSDUMMY1
-                 |  ON $t.doc_id = CAST(? AS VARCHAR(64))
-                 |WHEN MATCHED THEN UPDATE SET
-                 |  url = CAST(? AS VARCHAR(2048)), text_body = CAST(? AS CLOB),
-                 |  fields = CAST(? AS CLOB)
-                 |WHEN NOT MATCHED THEN INSERT (doc_id, url, text_body, fields)
-                 |  VALUES (CAST(? AS VARCHAR(64)), CAST(? AS VARCHAR(2048)),
-                 |          CAST(? AS CLOB), CAST(? AS CLOB))""".stripMargin
-          val ps = conn.prepareStatement(sql)
+          // upsert: each row is inserted if its id is absent, then every row
+          // overwrites its id in batch order, so the last row for an id wins,
+          // new or not (Derby's MERGE failed inside the engine when two tasks
+          // ran it on one fresh database)
+          val update =
+            if (createMode) None
+            else Some(conn.prepareStatement(
+              s"UPDATE $t SET url = ?, text_body = ?, fields = ? WHERE doc_id = ?"))
+          // insert iff the id is absent (one statement, no read-modify-write race)
+          val insert = conn.prepareStatement(
+            s"""INSERT INTO $t (doc_id, url, text_body, fields)
+               |SELECT v.a, v.b, v.c, v.d
+               |FROM (VALUES (CAST(? AS VARCHAR(64)), CAST(? AS VARCHAR(2048)),
+               |              CAST(? AS CLOB), CAST(? AS CLOB))) AS v(a, b, c, d)
+               |WHERE NOT EXISTS (SELECT 1 FROM $t WHERE $t.doc_id = v.a)"""
+              .stripMargin)
+          def flush(): Unit = { insert.executeBatch(); update.foreach(_.executeBatch()); conn.commit() }
           var n = 0
           rows.foreach { r =>
-            if (createMode) {
-              ps.setString(1, r.getString(0))
-              ps.setString(2, r.getString(1))
-              ps.setString(3, r.getString(2))
-              ps.setString(4, r.getString(3))
-            } else {
-              ps.setString(1, r.getString(0))
-              ps.setString(2, r.getString(1))
-              ps.setString(3, r.getString(2))
-              ps.setString(4, r.getString(3))
-              ps.setString(5, r.getString(0))
-              ps.setString(6, r.getString(1))
-              ps.setString(7, r.getString(2))
-              ps.setString(8, r.getString(3))
+            update.foreach { ps =>
+              (1 to 3).foreach(i => ps.setString(i, r.getString(i)))
+              ps.setString(4, r.getString(0))
+              ps.addBatch()
             }
-            ps.addBatch()
+            (1 to 4).foreach(i => insert.setString(i, r.getString(i - 1)))
+            insert.addBatch()
             n += 1
-            if (n % bs == 0) { ps.executeBatch(); conn.commit() }
+            if (n % bs == 0) flush()
           }
-          ps.executeBatch()
-          conn.commit()
-          ps.close()
+          flush()
+          update.foreach(_.close())
+          insert.close()
         } finally conn.close()
       }
     }

@@ -193,11 +193,7 @@ object AnalyticsQueries {
       // hashes PROJECTED once per row before the aggregate (a when()
       // around each count_distinct re-evaluates its full-text hash per
       // aggregate — measured 1.17 s serial vs ~3×0.4 s for the three
-      // separate probes, erasing the fusion). Deliberately NOT widened:
-      // the probe needs the full text only to hash it, and a round-robin
-      // repartition ships exactly those text bytes (measured 4.2
-      // task-seconds of shuffle for ~0.4 s of serial hashing — the
-      // §2.3 project-before-exchange rule applied in reverse).
+      // separate probes, erasing the fusion).
       val pre = docs.select(
         corpusCond.as("isc"), Collapse.worded("text").as("w"),
         Collapse.probeKey("source", "text").as("hsrc"),
@@ -278,7 +274,7 @@ object AnalyticsQueries {
     // 0.65 s wall, and the OOV aggregate's input shrinks from every
     // token occurrence to the vocabulary×lang table.
     "q87_oov_rate" -> ((s, dir) => {
-      val lw = graft.plans.InputWidth.widen(t(s, dir, "documents"))
+      val lw = t(s, dir, "documents")
         .select(col("lang"), explode(Dedup.words(col("text"))).as("w"))
         .groupBy("lang", "w").agg(count(lit(1)).as("c"))
       val vocab = lw.groupBy("w").agg(sum(col("c")).as("c"))
@@ -317,7 +313,7 @@ object AnalyticsQueries {
       // shard count scales with cores: gzip is single-threaded per
       // shard, so 8 fixed shards capped the write at 8-way parallelism
       // on a 32-core box (and 8 read tasks after — one task per archive)
-      val shards = s.conf.get("spark.sql.shuffle.partitions").toInt
+      val shards = s.sparkContext.defaultParallelism
       graft.sources.Warc.write(content.repartition(shards), out.toString)
       // bounded verification face (one row per source, not per doc —
       // the old ORDER BY url face emitted and globally sorted O(corpus)

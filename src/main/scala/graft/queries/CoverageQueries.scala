@@ -140,7 +140,7 @@ object CoverageQueries {
     // Map-only per doc: no shuffle beyond the final presentation sort.
     "q43_binary_extract" -> ((s, dir) => {
       import s.implicits._
-      graft.plans.InputWidth.widen(t(s, dir, "documents"))
+      t(s, dir, "documents")
         .select(col("doc_id").cast("long"), col("text"))
         .as[(Long, String)]
         .mapPartitions(_.map { case (id, text) =>
@@ -184,7 +184,7 @@ object CoverageQueries {
     // Map-only per doc, like q43.
     "q52_image_parse" -> ((s, dir) => {
       import s.implicits._
-      graft.plans.InputWidth.widen(t(s, dir, "documents"))
+      t(s, dir, "documents")
         .select(col("doc_id").cast("long"))
         .as[Long]
         .mapPartitions(_.map { id =>

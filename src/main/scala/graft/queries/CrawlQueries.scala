@@ -164,7 +164,7 @@ object CrawlQueries {
     // Parse-stage outlink explosion (`JSoupParserBolt` flatMap →
     // Catalyst Generator): documents text → words → top-50 wordcount.
     "q10_outlink_explode" -> ((s, dir) =>
-      graft.plans.InputWidth.widen(t(s, dir, "documents"))
+      t(s, dir, "documents")
         .select(explode(split(col("text"), " ")).as("word"))
         .where(col("word") =!= "")
         .groupBy("word").agg(count(lit(1)).as("cnt"))

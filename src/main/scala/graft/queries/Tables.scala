@@ -13,9 +13,13 @@ import org.apache.spark.sql.functions.expr
   * expressions are used in the DuckDB oracle, so results hash-match.
   */
 object Tables {
-  def t(spark: SparkSession, dir: String, name: String): DataFrame =
+  /** Table `name` under `dir`, after installing the engine's optimizer
+    * rule into `spark` (a session `graft.Session` did not build lacks it). */
+  def t(spark: SparkSession, dir: String, name: String): DataFrame = {
+    graft.plans.install(spark)
     if (name == "events") events(spark, dir)
     else spark.read.parquet(s"$dir/$name.parquet")
+  }
 
   /** `events.ts` has shipped under two physical parquet encodings:
     * TIMESTAMP(NANOS) (readable only via the nanosAsLong legacy conf,

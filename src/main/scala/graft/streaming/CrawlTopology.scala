@@ -275,7 +275,21 @@ object CrawlTopology {
       }
       held -= docs
       (CrawlStats(selected, nFetched, nFailed, nDocs, nDisc, legs = legSecs.toMap), docs)
-    } finally held.foreach(_.unpersist())
+    } finally release(held)
+  }
+
+  /** Unpersists every frame, even when one `unpersist` throws. Stopping a
+    * stream interrupts its batch thread, and an interrupted `unpersist`
+    * throws before its block removal; so the interrupt is held back while
+    * releasing and restored after, and the first failure is rethrown. */
+  private[graft] def release(frames: Iterable[DataFrame]): Unit = {
+    val interrupted = Thread.interrupted()
+    val failures = frames.flatMap { df =>
+      try { df.unpersist(); None } catch { case e: Exception => Some(e) }
+    }
+    if (interrupted || failures.exists(_.isInstanceOf[InterruptedException]))
+      Thread.currentThread().interrupt()
+    failures.headOption.foreach(e => throw e)
   }
 
   /** Parse output rows that discover a URL: outlinks and redirects. */
@@ -373,7 +387,7 @@ object CrawlTopology {
         if (st.docs > 0)
           docs.select("url", "title", "text", "signature", "noindex")
             .write.mode("append").parquet(dir)
-      } finally docs.unpersist()
+      } finally release(Seq(docs))
       stats :+= st
       continue = st.selected > 0
       i += 1
@@ -414,7 +428,7 @@ object CrawlTopology {
           if (st.docs > 0)
             docs.select("url", "title", "text", "signature", "noindex")
               .write.mode("append").parquet(docsOut)
-        } finally docs.unpersist()
+        } finally release(Seq(docs))
       }
       .start()
   }

@@ -111,10 +111,6 @@ object CrawlLoopBench {
     val cycleSecs = scala.collection.mutable.ArrayBuffer.empty[Double]
     val t0 = System.nanoTime()
     var continue = true
-    // SPARK_GRAFT_LEGS=N: run cycle N (0-based) with per-leg timing —
-    // a profiling face; the forced materializations perturb that one
-    // cycle, so the throughput line from a legs run is not the record
-    val legsCycle = sys.env.get("SPARK_GRAFT_LEGS").map(_.toInt)
     while (continue && cycles < 64) {
       val tc0 = System.nanoTime()
       val (st, docs) = CrawlTopology.crawlOnce(spark, store,
@@ -125,15 +121,8 @@ object CrawlLoopBench {
         contentStore = Some(contentStore),
         indexSink = Some(sink),
         dedupContent = true, digestLedger = Some(digests),
-        bandLedger = Some(bands),
-        timeLegs = legsCycle.contains(cycles))
+        bandLedger = Some(bands))
       docs.unpersist()
-      if (st.legs.nonEmpty) {
-        val total = (System.nanoTime() - tc0) / 1e9
-        val parts = st.legs.map { case (k, v) => f""""$k":$v%.2f""" }.mkString(",")
-        val accounted = st.legs.values.sum
-        println(f"""{"metric":"crawl_loop_legs","cycle":$cycles,"selected":${st.selected},"cycle_sec":$total%.2f,"accounted_sec":$accounted%.2f,"legs":{$parts}}""")
-      }
       adaptiveDate.observe(st.selected, limit)
       val sec = (System.nanoTime() - tc0) / 1e9
       if (st.selected > 0) {

@@ -9,8 +9,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.analytics.Collapse
 
 /** `Collapse` is the one place that knows how verbatim duplicates
-  * collapse and expand: its probe, and the starved-scan repair of the
-  * collapsed route. */
+  * collapse and expand: its probe and its units. */
 class CollapseSpec extends AnyFunSuite with LocalSpark {
 
   test("probe: exact at 1.0, ratio below it, empty and wordless inputs read unique") {
@@ -46,15 +45,21 @@ class CollapseSpec extends AnyFunSuite with LocalSpark {
   }
 
   test("no analytics operator outside Collapse.scala repairs a starved scan itself") {
-    val root = Paths.get("src/main/scala/graft/analytics")
-    val home = root.resolve("Collapse.scala")
-    assert(Files.isRegularFile(home))
-    val copies = Files.list(root).iterator.asScala
-      .filter(p => p.toString.endsWith(".scala") && p != home)
+    // repo-wide: the starved-scan decision lives in graft/plans only, and
+    // only Session.scala (which sets it) names the width conf
+    val root = Paths.get("src/main/scala")
+    val plans = root.resolve("graft/plans")
+    val session = root.resolve("graft/Session.scala")
+    assert(Files.isDirectory(plans) && Files.isRegularFile(session))
+    val wide = """\.wide\b""".r
+    val copies = Files.walk(root).iterator.asScala
+      .filter(p => p.toString.endsWith(".scala") && !p.startsWith(plans))
       .flatMap { p =>
         Files.readAllLines(p).asScala.zipWithIndex.collect {
-          case (l, i) if l.contains("isNarrow(") || l.contains("spark.sql.shuffle.partitions") =>
-            s"${p.getFileName}:${i + 1}"
+          case (l, i) if l.contains("InputWidth") || l.contains("isNarrow(") ||
+              wide.findFirstIn(l).nonEmpty ||
+              (l.contains("spark.sql.shuffle.partitions") && p != session) =>
+            s"${root.relativize(p)}:${i + 1}"
         }
       }.toSeq.sorted
     assert(copies.isEmpty, copies.mkString(", "))

@@ -9,6 +9,7 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListe
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.execution.ui.{SparkListenerSQLAdaptiveExecutionUpdate, SparkListenerSQLExecutionStart}
+import org.apache.spark.sql.graft.CacheEntries
 import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -170,6 +171,28 @@ class CrawlCycleSpec extends AnyFunSuite with LocalSpark {
       docs.unpersist()
       assert(sc.getPersistentRDDs.size == before, s"content=$content timeLegs=$timeLegs")
     }
+  }
+
+  test("a cycle whose sink interrupts its thread fails and leaves no cache entry behind") {
+    // what a stopped stream does to its batch thread: the interrupt lands
+    // mid-cycle, with every boundary of the cycle cached
+    val store = new FrontierStore(Files.createTempDirectory("interrupted").toString)
+    CrawlTopology.seed(spark, store, site(3), chain)
+    val interrupting = new IndexSink {
+      def indexBatch(docs: DataFrame): Unit = {
+        Thread.currentThread().interrupt()
+        throw new InterruptedException("indexing stopped")
+      }
+      def deleteBatch(urls: DataFrame): Unit = ()
+    }
+    val before = CacheEntries.count(spark)
+    intercept[InterruptedException] {
+      CrawlTopology.crawlOnce(spark, store, new ProtocolFactory(), chain,
+        crawlDelayMs = 0, respectRobots = false, indexSink = Some(interrupting))
+    }
+    val kept = Thread.interrupted() // and cleared for the specs after this one
+    assert(CacheEntries.count(spark) == before)
+    assert(kept, "the interrupt flag is kept")
   }
 
   test("with a non-empty content store, a miss is fetched once and stays a live fetch") {

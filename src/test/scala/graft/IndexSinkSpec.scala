@@ -67,6 +67,15 @@ class IndexSinkSpec extends AnyFunSuite with LocalSpark {
     // deleting a never-indexed doc is a no-op (DeletionBolt contract)
     sink.deleteBatch(Seq("http://never.example/x").toDF("url"))
     assert(queryAll(jdbc, "docs_idx").size == 1)
+
+    // one url twice in a batch (one task): the later row wins, for a new
+    // id and for an indexed one alike
+    sink.indexBatch(Seq(
+        ("http://a.example/3", "third v1", "t3"), ("http://a.example/2", "second v1", "t2"),
+        ("http://a.example/3", "third v2", "t3"), ("http://a.example/2", "second v2", "t2"))
+      .toDF("url", "text", "title").coalesce(1))
+    assert(queryAll(jdbc, "docs_idx").values.toSet == Set(
+      "http://a.example/2" -> "second v2", "http://a.example/3" -> "third v2"))
   }
 
   test("create-only mode leaves existing docs untouched") {

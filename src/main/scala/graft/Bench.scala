@@ -149,8 +149,9 @@ object Bench {
   private[graft] def execute(df: DataFrame): Long = df.queryExecution.toRdd.count()
 
   /** Untimed hygiene at a query boundary, sized for a suite of
-    * `nQueries`. */
-  private[graft] def boundary(spark: SparkSession, nQueries: Int): Unit = {
+    * `nQueries`; `freeAtStart` is the free disk (GB) when the query
+    * started. */
+  private[graft] def boundary(spark: SparkSession, nQueries: Int, freeAtStart: Double): Unit = {
     // free result-backing checkpoints (CC labels, digest maps) so
     // repeated queries don't accumulate block-manager residents
     graft.analytics.CheckpointRegistry.releaseAll()
@@ -170,14 +171,19 @@ object Bench {
     // r14 what's-wrong #2). Safe at a query boundary — every query
     // allocates a fresh dir.
     graft.tools.Scratch.sweepAll()
-    // GC + bounded wait for the ASYNCHRONOUS shuffle-file reclaim
+    // The GC runs at every boundary, whatever the free disk: it is what
+    // lets the ContextCleaner reclaim the query's dead state (above).
+    System.gc()
+    // Then a bounded wait for the ASYNCHRONOUS shuffle-file reclaim
     // (measured: 42 GB of q44 sf1000 shuffle vanishes ~20-40 s after
     // the boundary; a store-backed query starting milliseconds later
     // races that deletion — this, not monotonic leakage, is what
-    // refused q99 in the r17 re-cut). Disk.settle exits on target
+    // refused q99 in the r17 re-cut). The wait exits on target
     // headroom or observed-then-stopped growth, never on quiet ticks
-    // alone (ADVICE r15).
-    Disk.settle(Disk.requiredGb(nQueries) + 10): Unit
+    // alone (ADVICE r15), and runs only after a query that consumed
+    // disk, so a host short of the target does not sleep at every
+    // boundary.
+    Disk.settleIfConsumed(freeAtStart, Disk.requiredGb(nQueries) + 10): Unit
   }
 
   def main(args: Array[String]): Unit = {
@@ -219,6 +225,7 @@ object Bench {
     def runSuite(dir: String): Map[String, Double] = {
       val runs = (1 to reps).map { _ =>
         suite.map { case (name, fn) =>
+          val free0 = Disk.freeGb()
           val t0 = System.nanoTime()
           // a failed query is recorded as failed (NaN), never as a timing:
           // an exception's duration (~0.05 s) silently deflating the total
@@ -237,7 +244,7 @@ object Bench {
               errorDetails.getOrElseUpdate(key, reason): Unit
             }
           val t = if (ok) (System.nanoTime() - t0) / 1e9 else Double.NaN
-          boundary(spark, nSelected)
+          boundary(spark, nSelected, free0)
           name -> t
         }.toMap
       }

@@ -32,9 +32,11 @@ object CrawlDemo {
     val store = new FrontierStore(Files.createTempDirectory("frontier").toString)
     CrawlTopology.seed(spark, store, Seq(seedUrl), chain)
 
-    val stats = CrawlTopology.crawl(spark, store, new ProtocolFactory(), chain,
-      maxIterations = maxIter, crawlDelayMs = 100,
-      respectRobots = seedUrl.startsWith("http"))
+    val stats = CrawlTopology.crawl(spark, store,
+      t => CrawlTopology.crawlOnce(spark, store, new ProtocolFactory(), chain,
+        crawlDelayMs = 100, respectRobots = seedUrl.startsWith("http"),
+        selectTime = Some(t)),
+      maxIterations = maxIter)
     stats.zipWithIndex.foreach { case (s, i) =>
       println(s"iter $i: selected=${s.selected} fetched=${s.fetched} " +
         s"failed=${s.failed} docs=${s.docs} discovered=${s.discovered}")

@@ -39,9 +39,8 @@ object Disk {
     * reached, or when growth (≥0.5 GB/tick) was OBSERVED and has since
     * stopped for two ticks — never on quiet ticks alone, which would
     * return before the delayed deletion even starts (ADVICE r15). Used
-    * at Bench query boundaries and inside multi-cycle store queries
-    * (q94's inter-cycle hygiene). Returns the final freeGb. */
-  def settle(targetGb: Double, maxWaitSec: Int = 90, tickMs: Long = 3000): Double = {
+    * through [[settleIfConsumed]]. Returns the final freeGb. */
+  private def settle(targetGb: Double, maxWaitSec: Int = 90, tickMs: Long = 3000): Double = {
     System.gc()
     var prev = freeGb()
     var grewOnce = false
@@ -55,6 +54,16 @@ object Disk {
       prev = now
     }
     prev
+  }
+
+  /** [[settle]] to `targetGb`, but only when free space is below it AND
+    * the work since `freeAtStart` measurably consumed disk (more than
+    * 5 GB): a host that is simply low on disk, with nothing pending to
+    * reclaim, must not sit out the settle timeout at every boundary.
+    * Returns the final freeGb. */
+  def settleIfConsumed(freeAtStart: Double, targetGb: Double): Double = {
+    val free = freeGb()
+    if (free < targetGb && freeAtStart - free > 5) settle(targetGb) else free
   }
 
   /** Throws with a named reason if the tmpdir filesystem is under the

@@ -381,12 +381,9 @@ object CrawlQueries {
       // on disk until a GC lets the ContextCleaner reclaim it, and at
       // 1 B rows that residue plus cycle 1's shuffle plus BOTH store
       // generations (copy-on-write input + output) is what blew the FS
-      // in the r18 isolation attempt. Gated on BOTH low headroom AND
-      // cycle 0 having measurably consumed disk: a host that is simply
-      // low on disk with nothing pending to reclaim must not stall a
-      // gate-scale run for the settle timeout.
-      val freeNow = graft.Disk.freeGb()
-      if (freeNow < 40 && freeAtEntry - freeNow > 5) graft.Disk.settle(40): Unit
+      // in the r18 isolation attempt. Gated on cycle 0 having
+      // measurably consumed disk (Disk.settleIfConsumed).
+      graft.Disk.settleIfConsumed(freeAtEntry, 40): Unit
       // cycle 1: select due work, simulate fetch outcomes by page id
       val batch = store.selectBatch(s, t1, perBucket = 8, maxKeys = 10, limit = 50)
       val d = regexp_extract(col("url"), "page/([0-9]+)", 1).cast("long")

@@ -7,7 +7,7 @@ import org.apache.spark.sql.streaming.Trigger
 
 import graft.fetch.{FetchStage, ProtocolFactory}
 import graft.filters.UrlFilterChain
-import graft.frontier.FrontierStore
+import graft.frontier.{AdaptiveQueryDate, FrontierStore}
 import graft.model.Status
 import graft.parse.ParseStage
 
@@ -20,18 +20,21 @@ import graft.parse.ParseStage
   *     → status merge (idempotent upsert on url_sha256)
   *     → indexable docs out
   *
-  * Batch mode (`crawlOnce`/`crawl`) is the primary engine: each
-  * iteration is one frontier micro-batch, and exactly-once comes from
-  * the idempotent merge keyed on sha256(url) — strictly stronger than
-  * the reference's at-least-once + dedup-by-docid (SURVEY §2.9).
-  * `startStream` wires the same body behind a Structured Streaming
-  * trigger (rate-source heartbeat + foreachBatch) for continuous runs
-  * with checkpointed progress.
+  * `crawlOnce` is one frontier micro-batch; exactly-once comes from the
+  * idempotent merge keyed on sha256(url) — strictly stronger than the
+  * reference's at-least-once + dedup-by-docid (SURVEY §2.9). One private
+  * cycle step runs it (adaptive select date, docs out, compaction), and
+  * both faces repeat that step: `crawl` until a selection comes back
+  * empty, `startStream` on every tick of a rate-source heartbeat
+  * (foreachBatch, checkpointed progress).
   */
 object CrawlTopology {
 
   final case class CrawlStats(selected: Long, fetched: Long, failed: Long,
                               docs: Long, discovered: Long,
+                              /** the cap the selection ran with
+                                * (crawlOnce's `limit`) */
+                              limit: Int,
                               /** per-leg wall seconds, populated only
                                 * when crawlOnce ran with timeLegs */
                               legs: Map[String, Double] = Map.empty)
@@ -66,27 +69,26 @@ object CrawlTopology {
     * The returned docs are CACHED (materialized by the cycle's own stats
     * aggregate), so consuming them never re-runs the fetch; every other
     * cache of the cycle is released before return. The caller owns the
-    * docs: `docs.unpersist()` once it has consumed them, as [[crawl]]
-    * and [[startStream]] do. */
+    * docs: `docs.unpersist()` once it has consumed them, as the loop's
+    * step does for [[crawl]] and [[startStream]]. */
   def crawlOnce(spark: SparkSession, store: FrontierStore,
                 protocols: ProtocolFactory = new ProtocolFactory(),
                 chain: UrlFilterChain = UrlFilterChain.default(),
                 perBucket: Int = 5, maxKeys: Int = 100, limit: Int = 500,
                 crawlDelayMs: Long = 1000,
                 respectRobots: Boolean = true,
-                batchTime: java.sql.Timestamp = now(),
-                saltBuckets: Int = 1,
                 contentStore: Option[graft.fetch.ContentStore] = None,
-                contentMaxAgeMs: Option[Long] = None,
                 selectTime: Option[java.sql.Timestamp] = None,
                 indexSink: Option[graft.index.IndexSink] = None,
-                indexerMapping: graft.index.IndexerMapping =
-                  graft.index.IndexerMapping(),
                 sitemapDiscovery: Boolean = false,
                 dedupContent: Boolean = false,
                 digestLedger: Option[graft.index.DigestLedger] = None,
                 bandLedger: Option[graft.index.BandLedger] = None,
                 timeLegs: Boolean = false): (CrawlStats, DataFrame) = {
+    val batchTime = now()
+    val saltBuckets = 1
+    val contentMaxAgeMs: Option[Long] = None
+    val indexerMapping = graft.index.IndexerMapping()
     // Every leg's Spark jobs carry the job description `crawl.<leg>`, so
     // a listener or the UI can attribute them; the label adds no action.
     // Per-leg profiling (timeLegs=true): each pipeline leg is FORCED
@@ -133,7 +135,7 @@ object CrawlTopology {
         selectTime.getOrElse(batchTime), perBucket, maxKeys, limit,
         saltBuckets = saltBuckets)))
       val selected = leg("select")(batch.count())
-      if (selected == 0) return (CrawlStats(0, 0, 0, 0, 0), spark.emptyDataFrame)
+      if (selected == 0) return (CrawlStats(0, 0, 0, 0, 0, limit), spark.emptyDataFrame)
 
       // Cache check (S3CacheChecker semantics): hits skip the network and
       // re-enter the pipeline as synthetic FETCHED rows; only misses go
@@ -274,7 +276,7 @@ object CrawlTopology {
         (f.getLong(0), f.getLong(1), p.getLong(0), p.getLong(1))
       }
       held -= docs
-      (CrawlStats(selected, nFetched, nFailed, nDocs, nDisc, legs = legSecs.toMap), docs)
+      (CrawlStats(selected, nFetched, nFailed, nDocs, nDisc, limit, legs = legSecs.toMap), docs)
     } finally release(held)
   }
 
@@ -353,83 +355,61 @@ object CrawlTopology {
       .unionByName(discoveredFromFetch)
   }
 
-  /** Iterate crawl batches until the frontier has nothing due or
-    * `maxIterations` is hit; docs accumulate to `docsOut` (parquet). */
-  def crawl(spark: SparkSession, store: FrontierStore,
-            protocols: ProtocolFactory = new ProtocolFactory(),
-            chain: UrlFilterChain = UrlFilterChain.default(),
-            maxIterations: Int = 10,
-            docsOut: Option[String] = None,
-            crawlDelayMs: Long = 1000,
-            respectRobots: Boolean = true,
-            selectionLimit: Int = 500,
-            indexSink: Option[graft.index.IndexSink] = None,
-            sitemapDiscovery: Boolean = false,
-            dedupContent: Boolean = false,
-            digestLedger: Option[graft.index.DigestLedger] = None,
-            bandLedger: Option[graft.index.BandLedger] = None): Seq[CrawlStats] = {
-    var stats = Vector.empty[CrawlStats]
-    var i = 0
-    var continue = true
-    // backlog-digging horizon (AggregationSpout's adaptive queryDate):
-    // frozen while selections come back full, reset on empty/partial
-    val adaptiveDate = new graft.frontier.AdaptiveQueryDate()
-    while (continue && i < maxIterations) {
-      val (st, docs) = crawlOnce(spark, store, protocols, chain,
-        limit = selectionLimit,
-        crawlDelayMs = crawlDelayMs, respectRobots = respectRobots,
-        selectTime = Some(adaptiveDate.queryDate()),
-        indexSink = indexSink, sitemapDiscovery = sitemapDiscovery,
-        dedupContent = dedupContent, digestLedger = digestLedger,
-        bandLedger = bandLedger)
-      adaptiveDate.observe(st.selected, selectionLimit)
+  /** One crawl micro-batch at the select date it is given: a
+    * [[crawlOnce]] that the caller builds, e.g.
+    * `t => crawlOnce(spark, store, chain = chain, selectTime = Some(t))`. */
+  type Cycle = java.sql.Timestamp => (CrawlStats, DataFrame)
+
+  /** The step every crawl loop repeats: run the cycle at the
+    * backlog-digging select date (AggregationSpout's adaptive queryDate:
+    * frozen while selections fill the cap the cycle reports in
+    * `CrawlStats.limit`, reset otherwise), append its docs to `docsOut`
+    * (parquet) and release them, and compact (and so vacuum) the
+    * frontier above 16 live generations. The date is driver-side state
+    * between cycles, so a loop holds one step. */
+  private final class Step(spark: SparkSession, store: FrontierStore, cycle: Cycle,
+                           docsOut: Option[String]) {
+    private val date = new AdaptiveQueryDate()
+
+    def apply(): CrawlStats = {
+      val (st, docs) = cycle(date.queryDate())
+      date.observe(st.selected, st.limit)
       try docsOut.foreach { dir =>
         if (st.docs > 0)
           docs.select("url", "title", "text", "signature", "noindex")
             .write.mode("append").parquet(dir)
       } finally release(Seq(docs))
-      stats :+= st
-      continue = st.selected > 0
-      i += 1
       // keep reads at a bounded number of generation scans
       if (store.generationCount > 16) store.compact(spark)
+      st
     }
-    stats
   }
 
-  /** Continuous crawl: a rate-source heartbeat triggers one crawl
-    * micro-batch per tick via foreachBatch — the Structured Streaming
-    * face of the loop. Stop via the returned query handle. */
-  def startStream(spark: SparkSession, store: FrontierStore,
-                  protocols: ProtocolFactory = new ProtocolFactory(),
-                  chain: UrlFilterChain = UrlFilterChain.default(),
+  /** Run cycles until one selects nothing or `maxIterations` ran; the
+    * stats include that last, empty cycle. */
+  def crawl(spark: SparkSession, store: FrontierStore, cycle: Cycle,
+            maxIterations: Int = 10,
+            docsOut: Option[String] = None): Seq[CrawlStats] = {
+    val step = new Step(spark, store, cycle, docsOut)
+    val (full, rest) = Iterator.continually(step()).take(maxIterations)
+      .span(_.selected > 0)
+    full.toVector ++ rest.take(1)
+  }
+
+  /** Continuous crawl: a rate-source heartbeat triggers one step per
+    * tick via foreachBatch — the Structured Streaming face of the loop,
+    * with checkpointed progress. Stop via the returned query handle. */
+  def startStream(spark: SparkSession, store: FrontierStore, cycle: Cycle,
                   intervalMs: Long = 2000, // spout.min.delay.queries=2s analogue
                   checkpointDir: String,
-                  docsOut: String,
-                  crawlDelayMs: Long = 1000,
-                  respectRobots: Boolean = true,
-                  indexSink: Option[graft.index.IndexSink] = None,
-                  sitemapDiscovery: Boolean = false,
-                  dedupContent: Boolean = false,
-                  digestLedger: Option[graft.index.DigestLedger] = None,
-                  bandLedger: Option[graft.index.BandLedger] = None): org.apache.spark.sql.streaming.StreamingQuery = {
+                  docsOut: String): org.apache.spark.sql.streaming.StreamingQuery = {
+    val step = new Step(spark, store, cycle, Some(docsOut))
     spark.readStream
       .format("rate").option("rowsPerSecond", 1).load()
       .writeStream
       .option("checkpointLocation", checkpointDir)
       .trigger(Trigger.ProcessingTime(intervalMs))
-      .foreachBatch { (_: DataFrame, _: Long) =>
-        val (st, docs) = crawlOnce(spark, store, protocols, chain,
-          crawlDelayMs = crawlDelayMs, respectRobots = respectRobots,
-          indexSink = indexSink, sitemapDiscovery = sitemapDiscovery,
-          dedupContent = dedupContent, digestLedger = digestLedger,
-          bandLedger = bandLedger)
-        try {
-          if (st.docs > 0)
-            docs.select("url", "title", "text", "signature", "noindex")
-              .write.mode("append").parquet(docsOut)
-        } finally release(Seq(docs))
-      }
+      .foreachBatch { (_: DataFrame, _: Long) => step(); () }
       .start()
   }
 

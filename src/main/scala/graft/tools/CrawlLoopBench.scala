@@ -36,10 +36,16 @@ import graft.streaming.CrawlTopology
   * kept hosts concurrent AND the select/merge/ledger overhead stayed
   * inside the politeness windows.
   *
-  * Prints one JSON line:
+  * The loop is `CrawlTopology.crawl` (at most 64 cycles) over a timed
+  * `crawlOnce`. Prints one JSON line:
   *   {"metric":"crawl_loop_throughput","hosts":H,"pages_per_host":P,
-  *    "fetched":N,"cycles":C,"wall_sec":…, "pages_per_sec":…,
-  *    "politeness_floor_sec":…, "merge_overhead_sec":…}
+  *    "per_host_per_cycle":K,"fetched":N,"failed":F,"cycles":C,
+  *    "wall_sec":…,"pages_per_sec":…,"politeness_floor_sec":…,
+  *    "overhead_sec":…,"indexed":I,"expected_max_indexed":M,
+  *    "index_once_held":…}
+  * where `cycles` counts the cycles that selected something and
+  * `overhead_sec` is their summed wall minus the politeness floor. Exits
+  * 1 when the index-once check fails (indexed > expected_max_indexed).
   *
   * Usage: runMain graft.tools.CrawlLoopBench [hosts] [pagesPerHost] [perHost]
   */
@@ -102,44 +108,35 @@ object CrawlLoopBench {
 
     CrawlTopology.seed(spark, store, seeds, chain)
 
-    val adaptiveDate = new graft.frontier.AdaptiveQueryDate()
     val limit = hosts * perHost
-    var totalFetched = 0L
-    var totalFailed = 0L
-    var cycles = 0
-    var fetchFloorSec = 0.0
+    // wall of each cycle that selected something, timed around crawlOnce
     val cycleSecs = scala.collection.mutable.ArrayBuffer.empty[Double]
     val t0 = System.nanoTime()
-    var continue = true
-    while (continue && cycles < 64) {
+    val ran = CrawlTopology.crawl(spark, store, { date =>
       val tc0 = System.nanoTime()
       val (st, docs) = CrawlTopology.crawlOnce(spark, store,
         new ProtocolFactory(), chain,
         perBucket = perHost, maxKeys = hosts, limit = limit,
         crawlDelayMs = delayMs, respectRobots = true,
-        selectTime = Some(adaptiveDate.queryDate()),
+        selectTime = Some(date),
         contentStore = Some(contentStore),
         indexSink = Some(sink),
         dedupContent = true, digestLedger = Some(digests),
         bandLedger = Some(bands))
-      docs.unpersist()
-      adaptiveDate.observe(st.selected, limit)
       val sec = (System.nanoTime() - tc0) / 1e9
       if (st.selected > 0) {
-        cycleSecs += sec
-        // a cycle fetching k pages on some host owes (k-1) delays
-        fetchFloorSec += math.max(0,
-          math.min(perHost, math.ceil(st.selected.toDouble / hosts)).toInt - 1) * delayMs / 1000.0
-        totalFetched += st.fetched
-        totalFailed += st.failed
         System.err.println(
-          f"cycle=$cycles%2d selected=${st.selected}%6d fetched=${st.fetched}%6d " +
+          f"cycle=${cycleSecs.size}%2d selected=${st.selected}%6d fetched=${st.fetched}%6d " +
             f"failed=${st.failed}%4d wall=$sec%7.1fs")
+        cycleSecs += sec
       }
-      continue = st.selected > 0
-      cycles += 1
-      if (store.generationCount > 16) store.compact(spark)
-    }
+      (st, docs)
+    }, maxIterations = 64).filter(_.selected > 0)
+    val totalFetched = ran.map(_.fetched).sum
+    val totalFailed = ran.map(_.failed).sum
+    // a cycle fetching k pages on some host owes (k-1) delays
+    val fetchFloorSec = ran.map(st => math.max(0,
+      math.min(perHost, math.ceil(st.selected.toDouble / hosts)).toInt - 1) * delayMs / 1000.0).sum
     val wallSec = (System.nanoTime() - t0) / 1e9
     val mergeOverhead = cycleSecs.sum - fetchFloorSec
     // index cardinality: proves the index-once semantics held at soak
@@ -160,7 +157,8 @@ object CrawlLoopBench {
     // the ledgers can only push `indexed` BELOW this, never above —
     // so indexed > expectedMax means index-once semantics broke.
     val expectedMax = hosts.toLong * (1 + oddUnique) + sharedEvens
-    if (indexed > expectedMax)
+    val held = indexed <= expectedMax
+    if (!held)
       System.err.println(
         s"crawl_loop: INDEX-ONCE VIOLATION — indexed=$indexed exceeds expected_max_indexed=$expectedMax")
     println(f"""{"metric":"crawl_loop_throughput","hosts":$hosts,"pages_per_host":$pages,""" +
@@ -169,7 +167,8 @@ object CrawlLoopBench {
       f""""pages_per_sec":${totalFetched / wallSec}%.1f,""" +
       f""""politeness_floor_sec":$fetchFloorSec%.1f,"overhead_sec":$mergeOverhead%.1f,""" +
       f""""indexed":$indexed,"expected_max_indexed":$expectedMax,""" +
-      f""""index_once_held":${indexed <= expectedMax}}""")
+      f""""index_once_held":$held}""")
     spark.stop()
+    if (!held) sys.exit(1)
   }
 }

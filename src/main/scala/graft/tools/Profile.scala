@@ -72,6 +72,7 @@ object Profile {
         ListenerBridge.drain(spark.sparkContext)
         rec.jobs.set(0)
         rec.stages.clear()
+        val free0 = graft.Disk.freeGb()
         val t0 = System.nanoTime()
         val df = fn(spark, sfDir)
         val t1 = System.nanoTime()
@@ -85,7 +86,7 @@ object Profile {
         println(r)
         if (rep == reps) plans.foreach(dir => Files.writeString(dir.resolve(s"$name.txt"),
           df.queryExecution.explainString(FormattedMode)))
-        Bench.boundary(spark, suite.size)
+        Bench.boundary(spark, suite.size, free0)
         r
       }
     } finally spark.sparkContext.removeSparkListener(rec)

@@ -71,6 +71,15 @@ class BenchGuardSpec extends AnyFunSuite {
     }
   }
 
+  test("disk settle: a boundary that consumed no disk returns without sleeping") {
+    // a target no host reaches: only the consumption gate keeps the
+    // settle loop (3 s ticks, up to 90 s) from running
+    val t0 = System.nanoTime()
+    val free = Disk.settleIfConsumed(freeAtStart = Disk.freeGb(), targetGb = 1e9)
+    assert((System.nanoTime() - t0) / 1e9 < 1.0)
+    assert(free > 0 && free < 1e9)
+  }
+
   test("round3: millisecond precision, minimal JSON literal, locale-free") {
     assert(Bench.round3(0.554832503) == "0.555")
     assert(Bench.round3(114.848813136) == "114.849")

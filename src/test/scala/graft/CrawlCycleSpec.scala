@@ -143,10 +143,12 @@ class CrawlCycleSpec extends AnyFunSuite with LocalSpark {
     val counts = (1 to 3).map { i =>
       val store = new FrontierStore(d(s"frontier$i"))
       CrawlTopology.seed(spark, store, site(4), chain)
-      val stats = CrawlTopology.crawl(spark, store, new ProtocolFactory(), chain,
-        maxIterations = 3, docsOut = Some(d(s"docs$i")), crawlDelayMs = 0,
-        respectRobots = false, indexSink = Some(noopSink), dedupContent = true,
-        digestLedger = Some(digests), bandLedger = Some(bands))
+      val stats = CrawlTopology.crawl(spark, store,
+        t => CrawlTopology.crawlOnce(spark, store, new ProtocolFactory(), chain,
+          crawlDelayMs = 0, respectRobots = false, indexSink = Some(noopSink),
+          dedupContent = true, digestLedger = Some(digests), bandLedger = Some(bands),
+          selectTime = Some(t)),
+        maxIterations = 3, docsOut = Some(d(s"docs$i")))
       assert(stats.map(_.fetched).sum == 4)
       assert(spark.read.parquet(d(s"docs$i")).count() == 4)
       sc.getPersistentRDDs.size

@@ -64,8 +64,10 @@ class CrawlE2ESpec extends AnyFunSuite with LocalSpark {
     CrawlTopology.seed(spark, store, Seq(s"file://$dir/index.html"), chain)
     assert(store.read(spark).count() == 1)
 
-    val stats = CrawlTopology.crawl(spark, store, new ProtocolFactory(), chain,
-      maxIterations = 5, crawlDelayMs = 0, respectRobots = false)
+    val stats = CrawlTopology.crawl(spark, store,
+      t => CrawlTopology.crawlOnce(spark, store, new ProtocolFactory(), chain,
+        crawlDelayMs = 0, respectRobots = false, selectTime = Some(t)),
+      maxIterations = 5)
 
     // crawl reached every linked page
     val rows = store.read(spark).collect()
@@ -125,8 +127,10 @@ class CrawlE2ESpec extends AnyFunSuite with LocalSpark {
       .toDF("url", "status", "metadata")
     store.merge(spark, seeds)
 
-    CrawlTopology.crawl(spark, store, new ProtocolFactory(), chain,
-      maxIterations = 3, crawlDelayMs = 0, respectRobots = false)
+    CrawlTopology.crawl(spark, store,
+      t => CrawlTopology.crawlOnce(spark, store, new ProtocolFactory(), chain,
+        crawlDelayMs = 0, respectRobots = false, selectTime = Some(t)),
+      maxIterations = 3)
 
     val urls = store.read(spark).collect().map(_.getAs[String]("url")).toSet
     // sitemap index -> sub-sitemap -> page urls
@@ -141,8 +145,10 @@ class CrawlE2ESpec extends AnyFunSuite with LocalSpark {
     val store = new FrontierStore(Files.createTempDirectory("frontier").toString)
     CrawlTopology.seed(spark, store, Seq(s"file://$dir/index.html"), chain)
     val docsOut = Files.createTempDirectory("docs").toString + "/docs"
-    CrawlTopology.crawl(spark, store, new ProtocolFactory(), chain,
-      maxIterations = 5, docsOut = Some(docsOut), crawlDelayMs = 0, respectRobots = false)
+    CrawlTopology.crawl(spark, store,
+      t => CrawlTopology.crawlOnce(spark, store, new ProtocolFactory(), chain,
+        crawlDelayMs = 0, respectRobots = false, selectTime = Some(t)),
+      maxIterations = 5, docsOut = Some(docsOut))
 
     val docs = spark.read.parquet(docsOut)
     val all = docs.collect().map(_.getAs[String]("url")).toSet
@@ -167,8 +173,10 @@ class CrawlE2ESpec extends AnyFunSuite with LocalSpark {
     CrawlTopology.seed(spark, store,
       Seq(s"file://$dir/doc.pdf", s"file://$dir/bad.pdf"), chain)
     val docsOut = Files.createTempDirectory("docs").toString + "/docs"
-    CrawlTopology.crawl(spark, store, new ProtocolFactory(), chain,
-      maxIterations = 3, docsOut = Some(docsOut), crawlDelayMs = 0, respectRobots = false)
+    CrawlTopology.crawl(spark, store,
+      t => CrawlTopology.crawlOnce(spark, store, new ProtocolFactory(), chain,
+        crawlDelayMs = 0, respectRobots = false, selectTime = Some(t)),
+      maxIterations = 3, docsOut = Some(docsOut))
 
     val byUrl = store.read(spark).collect()
       .map(r => r.getAs[String]("url") -> r.getAs[String]("status")).toMap
@@ -203,9 +211,11 @@ class CrawlE2ESpec extends AnyFunSuite with LocalSpark {
         indexed ++= docs.select("url").collect().map(_.getString(0))
       def deleteBatch(urls: org.apache.spark.sql.DataFrame): Unit = ()
     }
-    CrawlTopology.crawl(spark, store, new ProtocolFactory(), chain,
-      maxIterations = 2, crawlDelayMs = 0, respectRobots = false,
-      indexSink = Some(sink), dedupContent = true)
+    CrawlTopology.crawl(spark, store,
+      t => CrawlTopology.crawlOnce(spark, store, new ProtocolFactory(), chain,
+        crawlDelayMs = 0, respectRobots = false, indexSink = Some(sink),
+        dedupContent = true, selectTime = Some(t)),
+      maxIterations = 2)
     // every url keeps its own status row — dedup only gates the index
     val byUrl = store.read(spark).collect()
       .map(r => r.getAs[String]("url") -> r.getAs[String]("status")).toMap
@@ -233,9 +243,11 @@ class CrawlE2ESpec extends AnyFunSuite with LocalSpark {
     }
     // round 1: first.html indexes and its digest lands in the ledger
     CrawlTopology.seed(spark, store, Seq(s"file://$dir/first.html"), chain)
-    CrawlTopology.crawl(spark, store, new ProtocolFactory(), chain,
-      maxIterations = 2, crawlDelayMs = 0, respectRobots = false,
-      indexSink = Some(sink), dedupContent = true, digestLedger = Some(ledger))
+    CrawlTopology.crawl(spark, store,
+      t => CrawlTopology.crawlOnce(spark, store, new ProtocolFactory(), chain,
+        crawlDelayMs = 0, respectRobots = false, indexSink = Some(sink),
+        dedupContent = true, digestLedger = Some(ledger), selectTime = Some(t)),
+      maxIterations = 2)
     assert(indexed.toSeq == Seq(s"file://$dir/first.html"))
     // round 2: a MIXED batch — a NEW url serving byte-identical content
     // (batch-scoped dedup can't see it; the ledger must) AND a
@@ -247,9 +259,11 @@ class CrawlE2ESpec extends AnyFunSuite with LocalSpark {
       "<html><body>content the ledger has never seen</body></html>".getBytes("UTF-8"))
     CrawlTopology.seed(spark, store,
       Seq(s"file://$dir/second.html", s"file://$dir/novel.html"), chain)
-    CrawlTopology.crawl(spark, store, new ProtocolFactory(), chain,
-      maxIterations = 2, crawlDelayMs = 0, respectRobots = false,
-      indexSink = Some(sink), dedupContent = true, digestLedger = Some(ledger))
+    CrawlTopology.crawl(spark, store,
+      t => CrawlTopology.crawlOnce(spark, store, new ProtocolFactory(), chain,
+        crawlDelayMs = 0, respectRobots = false, indexSink = Some(sink),
+        dedupContent = true, digestLedger = Some(ledger), selectTime = Some(t)),
+      maxIterations = 2)
     assert(indexed.toSet == Set(s"file://$dir/first.html", s"file://$dir/novel.html"),
       s"indexed: $indexed")
     // both urls crawled and FETCHED — only indexing was gated
@@ -290,9 +304,11 @@ class CrawlE2ESpec extends AnyFunSuite with LocalSpark {
       def deleteBatch(urls: org.apache.spark.sql.DataFrame): Unit = ()
     }
     CrawlTopology.seed(spark, store, Seq(s"file://$dir/first.html"), chain)
-    CrawlTopology.crawl(spark, store, new ProtocolFactory(), chain,
-      maxIterations = 2, crawlDelayMs = 0, respectRobots = false,
-      indexSink = Some(sink), bandLedger = Some(ledger))
+    CrawlTopology.crawl(spark, store,
+      t => CrawlTopology.crawlOnce(spark, store, new ProtocolFactory(), chain,
+        crawlDelayMs = 0, respectRobots = false, indexSink = Some(sink),
+        bandLedger = Some(ledger), selectTime = Some(t)),
+      maxIterations = 2)
     assert(indexed.toSeq == Seq(s"file://$dir/first.html"))
     // round 2: one near-dup (different bytes, shared band) and one
     // genuinely new page — only the new page may index
@@ -300,9 +316,11 @@ class CrawlE2ESpec extends AnyFunSuite with LocalSpark {
     Files.write(dir.resolve("far.html"), page(farText).getBytes("UTF-8"))
     CrawlTopology.seed(spark, store,
       Seq(s"file://$dir/near.html", s"file://$dir/far.html"), chain)
-    CrawlTopology.crawl(spark, store, new ProtocolFactory(), chain,
-      maxIterations = 2, crawlDelayMs = 0, respectRobots = false,
-      indexSink = Some(sink), bandLedger = Some(ledger))
+    CrawlTopology.crawl(spark, store,
+      t => CrawlTopology.crawlOnce(spark, store, new ProtocolFactory(), chain,
+        crawlDelayMs = 0, respectRobots = false, indexSink = Some(sink),
+        bandLedger = Some(ledger), selectTime = Some(t)),
+      maxIterations = 2)
     assert(indexed.toSet == Set(s"file://$dir/first.html", s"file://$dir/far.html"),
       s"indexed: $indexed")
     // the near-dup still got its status row — only indexing was gated
@@ -317,8 +335,10 @@ class CrawlE2ESpec extends AnyFunSuite with LocalSpark {
     CrawlTopology.seed(spark, store, Seq(s"file://$dir/index.html"), chain)
     val t0 = System.currentTimeMillis()
     // first batch: 1 url; second batch: several same-host urls with 200ms delay
-    CrawlTopology.crawl(spark, store, new ProtocolFactory(), chain,
-      maxIterations = 2, crawlDelayMs = 200, respectRobots = false)
+    CrawlTopology.crawl(spark, store,
+      t => CrawlTopology.crawlOnce(spark, store, new ProtocolFactory(), chain,
+        crawlDelayMs = 200, respectRobots = false, selectTime = Some(t)),
+      maxIterations = 2)
     val elapsed = System.currentTimeMillis() - t0
     // batch 2 fetches >= 4 same-key urls -> >= 3 gaps of 200ms
     assert(elapsed >= 600, s"politeness not enforced: ${elapsed}ms")

@@ -257,9 +257,11 @@ class CrawlHttpSpec extends AnyFunSuite with LocalSpark {
         new BasicUrlNormalizer(), new SelfUrlFilter(), RegexUrlFilter.parse(Seq("+."))))
       val store = new FrontierStore(Files.createTempDirectory("frontier").toString)
       CrawlTopology.seed(spark, store, Seq(s"$base/seed.html"), chain)
-      CrawlTopology.crawl(spark, store, new ProtocolFactory(), chain,
-        maxIterations = 4, crawlDelayMs = 0, respectRobots = true,
-        sitemapDiscovery = true)
+      CrawlTopology.crawl(spark, store,
+        t => CrawlTopology.crawlOnce(spark, store, new ProtocolFactory(), chain,
+          crawlDelayMs = 0, respectRobots = true, sitemapDiscovery = true,
+          selectTime = Some(t)),
+        maxIterations = 4)
       val byUrl = store.read(spark).collect()
         .map(r => r.getAs[String]("url") -> r.getAs[String]("status")).toMap
       // the robots Sitemap: directive was discovered and the sitemap fetched
@@ -278,8 +280,10 @@ class CrawlHttpSpec extends AnyFunSuite with LocalSpark {
       val store = new FrontierStore(Files.createTempDirectory("frontier").toString)
       CrawlTopology.seed(spark, store, Seq(s"$base/index.html"), chain)
 
-      CrawlTopology.crawl(spark, store, new ProtocolFactory(), chain,
-        maxIterations = 4, crawlDelayMs = 0, respectRobots = true)
+      CrawlTopology.crawl(spark, store,
+        t => CrawlTopology.crawlOnce(spark, store, new ProtocolFactory(), chain,
+          crawlDelayMs = 0, respectRobots = true, selectTime = Some(t)),
+        maxIterations = 4)
 
       val byUrl = store.read(spark).collect()
         .map(r => r.getAs[String]("url") -> r.getAs[String]("status")).toMap

@@ -106,9 +106,11 @@ class IndexSinkSpec extends AnyFunSuite with LocalSpark {
     val store = new FrontierStore(Files.createTempDirectory("frontier").toString)
     CrawlTopology.seed(spark, store,
       Seq(s"file://$tmp/doc.pdf", s"file://$tmp/bad.pdf"), chain)
-    CrawlTopology.crawl(spark, store, new ProtocolFactory(), chain,
-      maxIterations = 2, crawlDelayMs = 0, respectRobots = false,
-      indexSink = Some(sink))
+    CrawlTopology.crawl(spark, store,
+      t => CrawlTopology.crawlOnce(spark, store, new ProtocolFactory(), chain,
+        crawlDelayMs = 0, respectRobots = false, indexSink = Some(sink),
+        selectTime = Some(t)),
+      maxIterations = 2)
     val rows = queryAll(jdbc, "docs_idx")
     assert(rows.size == 1)
     val (url, text) = rows.values.head

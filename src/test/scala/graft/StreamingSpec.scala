@@ -153,10 +153,11 @@ class StreamingSpec extends AnyFunSuite with LocalSpark {
 
     val docsOut = Files.createTempDirectory("docs").toString + "/docs"
     val q = graft.streaming.CrawlTopology.startStream(spark, store,
-      new graft.fetch.ProtocolFactory(), chain,
-      intervalMs = 200,
-      checkpointDir = Files.createTempDirectory("ckpt").toString,
-      docsOut = docsOut, crawlDelayMs = 0, respectRobots = false)
+      t => graft.streaming.CrawlTopology.crawlOnce(spark, store,
+        new graft.fetch.ProtocolFactory(), chain,
+        crawlDelayMs = 0, respectRobots = false, selectTime = Some(t)),
+      intervalMs = 200, checkpointDir = Files.createTempDirectory("ckpt").toString,
+      docsOut = docsOut)
     // let triggers fire until progress is visible (poll with a hard
     // deadline — a fixed sleep flakes when the suite JVM is busy)
     def fetchedCount(): Long = store.statusCounts(spark).collect()
@@ -196,9 +197,10 @@ class StreamingSpec extends AnyFunSuite with LocalSpark {
     // when the suite JVM is busy (only 1 page completes in 5 s under load)
     def run(targetFetched: Long): Unit = {
       val q = graft.streaming.CrawlTopology.startStream(spark, store,
-        new graft.fetch.ProtocolFactory(), chain,
-        intervalMs = 200, checkpointDir = ckpt, docsOut = docsOut,
-        crawlDelayMs = 0, respectRobots = false)
+        t => graft.streaming.CrawlTopology.crawlOnce(spark, store,
+          new graft.fetch.ProtocolFactory(), chain,
+          crawlDelayMs = 0, respectRobots = false, selectTime = Some(t)),
+        intervalMs = 200, checkpointDir = ckpt, docsOut = docsOut)
       val deadline = System.currentTimeMillis() + 120000
       while (fetchedCount() < targetFetched && System.currentTimeMillis() < deadline)
         Thread.sleep(250)

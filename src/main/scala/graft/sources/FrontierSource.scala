@@ -85,8 +85,7 @@ final class FrontierTable(props: Map[String, String]) extends Table with Support
               throw new IllegalArgumentException("option 'path' is required")),
             props.getOrElse("perBucket", "5").toInt,
             props.getOrElse("maxKeys", "100").toInt,
-            props.getOrElse("limit", "500").toInt,
-            props.getOrElse("saltBuckets", "1").toInt)
+            props.getOrElse("limit", "500").toInt)
       }
     }
 }
@@ -97,7 +96,7 @@ final case class FrontierOffset(seq: Long, version: String) extends Offset {
 }
 
 final class FrontierMicroBatchStream(path: String, perBucket: Int, maxKeys: Int,
-                                     limit: Int, saltBuckets: Int)
+                                     limit: Int)
     extends MicroBatchStream {
 
   private val store = new FrontierStore(path)
@@ -125,7 +124,7 @@ final class FrontierMicroBatchStream(path: String, perBucket: Int, maxKeys: Int,
     if (s.seq == e.seq) return Array.empty
     val spark = SparkSession.active
     val batch = store.selectBatch(spark, new java.sql.Timestamp(System.currentTimeMillis()),
-      perBucket = perBucket, maxKeys = maxKeys, limit = limit, saltBuckets = saltBuckets)
+      perBucket = perBucket, maxKeys = maxKeys, limit = limit)
     // bounded by construction (≤ limit rows): safe to collect, and
     // grouping by key gives the politeness-local partitions downstream
     batch.collect().groupBy(_.getAs[String]("key")).values

@@ -35,8 +35,8 @@ object CrawlTopology {
                               /** the cap the selection ran with
                                 * (crawlOnce's `limit`) */
                               limit: Int,
-                              /** per-leg wall seconds, populated only
-                                * when crawlOnce ran with timeLegs */
+                              /** per-leg wall seconds, reported by
+                                * every cycle */
                               legs: Map[String, Double] = Map.empty)
 
   /** Seed the frontier from (url [, metadata]) rows — FileSpout +
@@ -66,11 +66,15 @@ object CrawlTopology {
 
   /** One crawl micro-batch. Returns (stats, indexable docs).
     *
-    * The returned docs are CACHED (materialized by the cycle's own stats
-    * aggregate), so consuming them never re-runs the fetch; every other
-    * cache of the cycle is released before return. The caller owns the
-    * docs: `docs.unpersist()` once it has consumed them, as the loop's
-    * step does for [[crawl]] and [[startStream]]. */
+    * Every call reports each leg's wall seconds in `CrawlStats.legs`.
+    * `timeLegs` has no effect: it is kept for callers that pass it by
+    * name, and a timed cycle runs the same jobs as an untimed one.
+    *
+    * The returned docs are CACHED (materialized by the parse leg's
+    * count aggregate), so consuming them never re-runs the fetch; every
+    * other cache of the cycle is released before return. The caller owns
+    * the docs: `docs.unpersist()` once it has consumed them, as the
+    * loop's step does for [[crawl]] and [[startStream]]. */
   def crawlOnce(spark: SparkSession, store: FrontierStore,
                 protocols: ProtocolFactory = new ProtocolFactory(),
                 chain: UrlFilterChain = UrlFilterChain.default(),
@@ -86,16 +90,10 @@ object CrawlTopology {
                 bandLedger: Option[graft.index.BandLedger] = None,
                 timeLegs: Boolean = false): (CrawlStats, DataFrame) = {
     val batchTime = now()
-    val saltBuckets = 1
-    val contentMaxAgeMs: Option[Long] = None
     val indexerMapping = graft.index.IndexerMapping()
     // Every leg's Spark jobs carry the job description `crawl.<leg>`, so
-    // a listener or the UI can attribute them; the label adds no action.
-    // Per-leg profiling (timeLegs=true): each pipeline leg is FORCED
-    // (count) inside a timer so wall time attributes to the leg that did
-    // the work instead of to whichever downstream action happened to
-    // trigger the lazy chain. Off by default — the extra materializing
-    // actions belong in a profiling run, not the production path.
+    // a listener or the UI can attribute them, and every leg adds its
+    // wall time to `legSecs`; neither adds an action.
     val sc = spark.sparkContext
     val legSecs = scala.collection.mutable.LinkedHashMap.empty[String, Double]
     def leg[T](name: String)(f: => T): T = {
@@ -104,8 +102,7 @@ object CrawlTopology {
       val t0 = System.nanoTime()
       try f
       finally {
-        if (timeLegs)
-          legSecs(name) = legSecs.getOrElse(name, 0.0) + (System.nanoTime() - t0) / 1e9
+        legSecs(name) = legSecs.getOrElse(name, 0.0) + (System.nanoTime() - t0) / 1e9
         sc.setJobDescription(prev)
       }
     }
@@ -118,9 +115,9 @@ object CrawlTopology {
     // nested under it — that driver work, not the data, set the cycle's
     // cost. A leaf also hides the files its original read, so an append
     // to a store the cycle read re-caches no downstream plan. The fetched
-    // union and the parse output are `lazy val`s, built by the first leg
-    // that reads them, so their jobs carry that leg's label. The cached
-    // originals are released before return.
+    // union and the parse output are materialized inside their own legs
+    // by the cycle's stats aggregates, so their work is timed and
+    // labelled there. The cached originals are released before return.
     val held = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
     def boundary(df: DataFrame): DataFrame = {
       held += df.cache()
@@ -132,10 +129,10 @@ object CrawlTopology {
       // new discoveries at a frozen horizon would make them immediately
       // due and defeat the freeze.
       val batch = leg("select")(boundary(store.selectBatch(spark,
-        selectTime.getOrElse(batchTime), perBucket, maxKeys, limit,
-        saltBuckets = saltBuckets)))
+        selectTime.getOrElse(batchTime), perBucket, maxKeys, limit)))
       val selected = leg("select")(batch.count())
-      if (selected == 0) return (CrawlStats(0, 0, 0, 0, 0, limit), spark.emptyDataFrame)
+      if (selected == 0)
+        return (CrawlStats(0, 0, 0, 0, 0, limit, legs = legSecs.toMap), spark.emptyDataFrame)
 
       // Cache check (S3CacheChecker semantics): hits skip the network and
       // re-enter the pipeline as synthetic FETCHED rows; only misses go
@@ -145,43 +142,55 @@ object CrawlTopology {
       // re-caches every cached plan that reads a path it writes, and a
       // fetched union whose plan still read the store would lose its cache
       // to that append and re-run the fetch in every later leg.
-      val hits = contentStore.map(cs => leg("content_store")(boundary(
-        cs.split(spark, batch, contentMaxAgeMs, batchTime.getTime)._1)))
-      val fetchedLive = FetchStage.fetch(spark,
-        hits.fold(batch)(h =>
-          batch.join(broadcast(h.select("url_sha256")), Seq("url_sha256"), "left_anti")),
-        protocols, crawlDelayMs = crawlDelayMs, respectRobots = respectRobots,
-        sitemapDiscovery = sitemapDiscovery)
-      lazy val fetched = boundary(hits.fold(fetchedLive)(h => fetchedLive.unionByName(h.select(
-        col("url"), col("key"), lit(Status.Fetched).as("status"),
-        lit(200).as("http_code"), col("content"),
-        lit(null).cast("string").as("content_type"),
-        lit(null).cast("string").as("redirect_to"), lit(0L).as("fetch_ms"),
-        // strip any previous cache.hit first — a second cache hit on the
-        // same URL would otherwise die on map_concat's duplicate-key
-        // EXCEPTION policy
-        map_concat(
-          map_filter(coalesce(col("metadata"), map()), (k, _) => k =!= "cache.hit"),
-          map(lit("cache.hit"), array(lit("true")))).as("metadata")))))
-      if (timeLegs) leg("fetch")(fetched.count())
+      val hits = contentStore.map(cs => leg("content_store")(boundary(cs.split(spark, batch)._1)))
+      // the fetch's own aggregate materializes the fetched union
+      val (fetched, nFetched, nFailed) = leg("fetch") {
+        val live = FetchStage.fetch(spark,
+          hits.fold(batch)(h =>
+            batch.join(broadcast(h.select("url_sha256")), Seq("url_sha256"), "left_anti")),
+          protocols, crawlDelayMs = crawlDelayMs, respectRobots = respectRobots,
+          sitemapDiscovery = sitemapDiscovery)
+        val f = boundary(hits.fold(live)(h => live.unionByName(h.select(
+          col("url"), col("key"), lit(Status.Fetched).as("status"),
+          lit(200).as("http_code"), col("content"),
+          lit(null).cast("string").as("content_type"),
+          lit(null).cast("string").as("redirect_to"), lit(0L).as("fetch_ms"),
+          // strip any previous cache.hit first — a second cache hit on the
+          // same URL would otherwise die on map_concat's duplicate-key
+          // EXCEPTION policy
+          map_concat(
+            map_filter(coalesce(col("metadata"), map()), (k, _) => k =!= "cache.hit"),
+            map(lit("cache.hit"), array(lit("true")))).as("metadata")))))
+        val c = f.agg(
+          count_if(col("status") === Status.Fetched),
+          count_if(col("status").isin(Status.FetchError, Status.Error))).head()
+        (f, c.getLong(0), c.getLong(1))
+      }
       for (cs <- contentStore; h <- hits)
         // the live captures only, not the hits served from the store
         leg("content_store")(cs.store(fetched
           .where(col("status") === Status.Fetched && col("content").isNotNull)
           .join(broadcast(h.select("url")), Seq("url"), "left_anti")
           .select(col("url"), col("content"), lit(batchTime).as("fetch_time"))))
-      lazy val parsed = boundary(ParseStage.parse(fetched, chain))
-      if (timeLegs) leg("parse_chain")(parsed.count())
+      // handed to the caller: cached on its own so that releasing the
+      // parse output keeps the docs readable without a re-fetch; the
+      // parse's own aggregate materializes both, reading the docs through
+      // their cache
+      val (parsed, docs, nDocs, nDisc) = leg("parse_chain") {
+        val p = boundary(ParseStage.parse(fetched, chain))
+        val d = p.where(col("kind") === "doc").cache()
+        held += d // until handed over: a failed or stopped cycle releases it too
+        val c = d.select(lit(true).as("doc"))
+          .unionByName(p.where(isOutlink).select(lit(false).as("doc")))
+          .agg(count_if(col("doc")), count_if(!col("doc"))).head()
+        (p, d, c.getLong(0), c.getLong(1))
+      }
       // read again by the index sink's deletions
       val updates = leg("merge") {
         val u = boundary(statusUpdates(fetched, parsed, chain))
         store.merge(spark, u, batchTime)
         u
       }
-      // handed to the caller: cached on its own so that releasing the
-      // parse output below keeps the docs readable without a re-fetch
-      val docs = parsed.where(col("kind") === "doc").cache()
-      held += docs // until handed over: a failed or stopped cycle releases it too
 
       // live index sink (IndexerBolt + DeletionBolt wiring): index this
       // batch's docs through the mapping projection; delete EVERY page
@@ -262,18 +271,6 @@ object CrawlTopology {
           sink.indexBatch(indexerMapping(toIndexFinal))
           sink.deleteBatch(updates.where(col("status") === Status.Error).select("url"))
         }
-      }
-      // one aggregate over the fetch output, one over the parse output;
-      // the latter reads the docs through their own cache, so it also
-      // materializes them for the caller before the parse cache goes
-      val (nFetched, nFailed, nDocs, nDisc) = leg("stats_counts") {
-        val f = fetched.agg(
-          count_if(col("status") === Status.Fetched),
-          count_if(col("status").isin(Status.FetchError, Status.Error))).head()
-        val p = docs.select(lit(true).as("doc"))
-          .unionByName(parsed.where(isOutlink).select(lit(false).as("doc")))
-          .agg(count_if(col("doc")), count_if(!col("doc"))).head()
-        (f.getLong(0), f.getLong(1), p.getLong(0), p.getLong(1))
       }
       held -= docs
       (CrawlStats(selected, nFetched, nFailed, nDocs, nDisc, limit, legs = legSecs.toMap), docs)
@@ -450,13 +447,12 @@ object CrawlTopology {
     * loop through the source itself. */
   def frontierStream(spark: SparkSession, frontierRoot: String,
                      perBucket: Int = 5, maxKeys: Int = 100,
-                     limit: Int = 500, saltBuckets: Int = 1): DataFrame =
+                     limit: Int = 500): DataFrame =
     spark.readStream
       .format("graft.sources.FrontierSource")
       .option("path", frontierRoot)
       .option("perBucket", perBucket.toString)
       .option("maxKeys", maxKeys.toString)
       .option("limit", limit.toString)
-      .option("saltBuckets", saltBuckets.toString)
       .load()
 }

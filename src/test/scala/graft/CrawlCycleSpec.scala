@@ -243,10 +243,44 @@ class CrawlCycleSpec extends AnyFunSuite with LocalSpark {
       drain(log)
       log.group("cycle").map(_.properties.getProperty("spark.job.description"))
     }
-    val legs = Set("select", "content_store", "merge", "digest_ledger", "band_ledger",
-      "index_sink", "stats_counts").map(l => s"crawl.$l")
+    val legs = Set("select", "content_store", "fetch", "parse_chain", "merge",
+      "digest_ledger", "band_ledger", "index_sink").map(l => s"crawl.$l")
     assert(labels.nonEmpty && labels.forall(legs.contains), labels.distinct)
     assert(legs.forall(labels.contains), labels.distinct)
+  }
+
+  test("a cycle reports every leg and runs the same jobs whether timed or not") {
+    val sc = spark.sparkContext
+    /** (the legs the cycle reported, its `crawl.*` jobs) */
+    def cycle(timeLegs: Boolean): (Set[String], Int) = {
+      val work = Files.createTempDirectory("timed")
+      def d(n: String): String = work.resolve(n).toString
+      val store = new FrontierStore(d("frontier"))
+      CrawlTopology.seed(spark, store, site(3), chain)
+      withJobLog { log =>
+        sc.setJobGroup("cycle", s"timeLegs=$timeLegs")
+        val st = try {
+          val (st, docs) = CrawlTopology.crawlOnce(spark, store, new ProtocolFactory(), chain,
+            crawlDelayMs = 0, respectRobots = false,
+            contentStore = Some(new ContentStore(d("content"))),
+            indexSink = Some(noopSink), dedupContent = true,
+            digestLedger = Some(new DigestLedger(d("digests"))),
+            bandLedger = Some(new BandLedger(d("bands"))), timeLegs = timeLegs)
+          docs.unpersist()
+          st
+        } finally sc.clearJobGroup()
+        drain(log)
+        (st.legs.keySet, log.group("cycle").count(j =>
+          Option(j.properties.getProperty("spark.job.description")).exists(_.startsWith("crawl."))))
+      }
+    }
+    val legs = Set("select", "fetch", "content_store", "parse_chain", "merge",
+      "digest_ledger", "band_ledger", "index_sink")
+    val (untimed, timed) = (cycle(timeLegs = false), cycle(timeLegs = true))
+    assert(legs.subsetOf(untimed._1), s"untimed cycle reported ${untimed._1}")
+    assert(legs.subsetOf(timed._1), s"timed cycle reported ${timed._1}")
+    assert(untimed._2 == timed._2,
+      s"${untimed._2} crawl jobs untimed, ${timed._2} timed")
   }
 
   /** Item counts of the literal lists in a plan's text: `x IN (a,b)` and

@@ -30,6 +30,17 @@ class CrawlLoopSpec extends AnyFunSuite with LocalSpark {
     t => CrawlTopology.crawlOnce(spark, store, new ProtocolFactory(), chain,
       crawlDelayMs = 0, respectRobots = false, indexSink = sink, selectTime = Some(t))
 
+  /** `cycle` adding each cycle's fetched pages to `fetched`: a counter
+    * the test thread can poll while the stream compacts and vacuums the
+    * frontier under a store scan. */
+  private def counted(cycle: CrawlTopology.Cycle,
+                      fetched: java.util.concurrent.atomic.AtomicLong): CrawlTopology.Cycle =
+    t => {
+      val (st, docs) = cycle(t)
+      fetched.addAndGet(st.fetched)
+      (st, docs)
+    }
+
   private def statuses(store: FrontierStore): Map[String, String] =
     store.read(spark).collect()
       .map(r => r.getAs[String]("url") -> r.getAs[String]("status")).toMap
@@ -61,9 +72,10 @@ class CrawlLoopSpec extends AnyFunSuite with LocalSpark {
     val root = tmp("frontier")
     val store = new FrontierStore(root, numBuckets = 1024)
     CrawlTopology.seed(spark, store, Seq(url(0)), chain)
-    val q = CrawlTopology.startStream(spark, store, cycle(store),
+    val fetched = new java.util.concurrent.atomic.AtomicLong()
+    val q = CrawlTopology.startStream(spark, store, counted(cycle(store), fetched),
       intervalMs = 200, checkpointDir = tmp("ckpt"), docsOut = tmp("docs") + "/docs")
-    runUntil(q)(statuses(store).values.count(_ == Status.Fetched) == hosts)
+    runUntil(q)(fetched.get == hosts)
 
     assert(statuses(store) == (0 until hosts).map(url(_) -> Status.Fetched).toMap)
     assert(store.generationCount <= 16, s"${store.generationCount} live generations")

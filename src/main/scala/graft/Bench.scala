@@ -65,6 +65,32 @@ object Bench {
 
   private def gitPorcelainDirty(): Boolean = affectsCompiledClasses(gitPorcelain())
 
+  /** The short sha of HEAD, stamped `-dirty` when the tree has dirt in
+    * the build inputs (the guard's scope: a driver-written round
+    * artifact such as LEAKCHECK.json cannot change the measured code,
+    * so it must not taint the sha); "unknown" outside a git checkout.
+    * Bench's line and Profile's plan file name the build with it. */
+  private[graft] def sourceSha(): String = {
+    val commit =
+      try {
+        val p = new ProcessBuilder("git", "rev-parse", "--short", "HEAD").start()
+        val s = scala.io.Source.fromInputStream(p.getInputStream).mkString.trim
+        p.waitFor()
+        if (s.nonEmpty) s else "unknown"
+      } catch { case _: Exception => "unknown" }
+    if (gitPorcelainDirty()) s"$commit-dirty" else commit
+  }
+
+  /** The body of a JSON string literal for `v`: quote, backslash and
+    * every control char (< 0x20) escaped — a tab or CR left raw makes
+    * the reader's json.load fail. Bench's line and Verify's
+    * oracle_sql.json both go through it (spec-tested). */
+  private[graft] def jsonEscape(v: String): String = v.flatMap {
+    case '"' => "\\\""; case '\\' => "\\\\"; case '\n' => "\\n"
+    case '\r' => "\\r"; case '\t' => "\\t"
+    case c if c < ' ' => f"\\u${c.toInt}%04x"; case c => c.toString
+  }
+
   /** Store-backed crawl faces run FIRST (VERDICT r15 ask #1): their
     * store writes are small but disk-sensitive, and alphabetical order
     * put q94 right after the q08/q44 shuffle giants, whose ~40 GB of
@@ -295,17 +321,7 @@ object Bench {
       s""","only":${o.map("\"" + _ + "\"").mkString("[", ",", "]")}""").getOrElse("")
     // provenance: every bench line names the build it measured, so a
     // stale artifact (or a table mixing two builds) is self-evident.
-    val commit =
-      try {
-        val p = new ProcessBuilder("git", "rev-parse", "--short", "HEAD").start()
-        val s = scala.io.Source.fromInputStream(p.getInputStream).mkString.trim
-        p.waitFor()
-        if (s.nonEmpty) s else "unknown"
-      } catch { case _: Exception => "unknown" }
-    // the -dirty stamp uses the same build-input scope as the guard:
-    // a driver-written round artifact (LEAKCHECK.json, BENCH_r*.json)
-    // can't change the measured code, so it must not taint the sha.
-    val dirty = if (affectsCompiledClasses(gitPorcelain())) "-dirty" else ""
+    val sha = sourceSha()
     // Locale.ROOT: the JVM default locale may render 12,3 — invalid JSON
     // in the one line the driver parses.
     val freeGb = String.format(java.util.Locale.ROOT, "%.1f", Double.box(Disk.freeGb()))
@@ -315,22 +331,17 @@ object Bench {
     // 96 g runs. Every artifact now names the heap it measured under.
     val heapGb = String.format(java.util.Locale.ROOT, "%.1f",
       Double.box(Runtime.getRuntime.maxMemory / 1e9))
-    def jesc(v: String): String = v.flatMap {
-      case '"' => "\\\""; case '\\' => "\\\\"; case '\n' => "\\n"
-      case '\r' => "\\r"; case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"; case c => c.toString
-    }
     val details =
       if (errorDetails.isEmpty) ""
       else s""","error_details":${errorDetails.toSeq.sortBy(_._1).map { case (k, v) =>
-        "\"" + jesc(k) + "\":\"" + jesc(v) + "\""
+        "\"" + jsonEscape(k) + "\":\"" + jsonEscape(v) + "\""
       }.mkString("{", ",", "}")}"""
     // FULL line (per-query map, sf0.01 pass, error details) — artifact
     // file + stderr only. The driver's stdout tail capture truncated
     // this ~5 KB object two rounds running (BENCH parsed:null), so the
     // full map must never be the line the driver parses.
     val line =
-      s"""{"metric":"total","value":$total,"unit":"sec","reps":$reps,"commit":"$commit$dirty","disk_free_gb":$freeGb,"heap_gb":$heapGb$onlyKey${errs(results :: small.toList: _*)}$details,"queries":${js(results)},"sf":"${jesc(sfDir)}"$extra}"""
+      s"""{"metric":"total","value":$total,"unit":"sec","reps":$reps,"commit":"$sha","disk_free_gb":$freeGb,"heap_gb":$heapGb$onlyKey${errs(results :: small.toList: _*)}$details,"queries":${js(results)},"sf":"${jsonEscape(sfDir)}"$extra}"""
     // land the full line in a file. Path from env (SPARK_GRAFT_BENCH_OUT)
     // with a fallback OUTSIDE the worktree (tmpdir): a scratch file
     // inside the repo makes the NEXT bench in a series report a -dirty
@@ -363,7 +374,7 @@ object Bench {
     // per-query data is never lost entirely.
     val nOk = results.values.count(!_.isNaN)
     val compact =
-      s"""{"metric":"total","value":$total,"unit":"sec","n":$nOk,"reps":$reps,"commit":"$commit$dirty","disk_free_gb":$freeGb,"heap_gb":$heapGb$onlyKey${errs(results :: small.toList: _*)},"artifact":"${jesc(outPath)}","queries":${jsMs(results)},"sf":"${jesc(sfDir)}"}"""
+      s"""{"metric":"total","value":$total,"unit":"sec","n":$nOk,"reps":$reps,"commit":"$sha","disk_free_gb":$freeGb,"heap_gb":$heapGb$onlyKey${errs(results :: small.toList: _*)},"artifact":"${jsonEscape(outPath)}","queries":${jsMs(results)},"sf":"${jsonEscape(sfDir)}"}"""
     // COMMITTED fallback channel (VERDICT r14 missing-#1, 3 rounds of
     // parsed:null): sbt decorates stdout ([info]/[success]) beyond our
     // control, so the compact line ALSO lands at a fixed repo path the

@@ -48,18 +48,10 @@ object Verify {
         // free result-backing checkpoints between queries
         graft.analytics.CheckpointRegistry.releaseAll()
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
+    // every control char escaped: a tab or CR in builder-authored SQL
+    // would otherwise make the driver's json.load fail and silently zero
+    // the round's correctness.
+    def q(s: String): String = "\"" + Bench.jsonEscape(s) + "\""
     val json = SparkEntry.oracleSql
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)

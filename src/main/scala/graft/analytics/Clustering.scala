@@ -218,7 +218,7 @@ object Clustering {
     (enriched, pairs)
   }
 
-  /** The plan one Lloyd round materializes (for the PLANS.md dump):
+  /** The plan one Lloyd round materializes (for `Profile --plans`):
     * map-only assignment against the init centroids feeding the k-row
     * centroid-update aggregate — the round's ONLY exchange. Built from
     * the same column expressions `lloyd` runs, so the dump cannot

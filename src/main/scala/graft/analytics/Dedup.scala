@@ -232,7 +232,7 @@ object Dedup {
       .agg(min(col("comp")).as("comp"), max(col("prev")).as("prev"))
   }
 
-  /** Round-1's pre-checkpoint frame for plan inspection (ExplainDump):
+  /** Round-1's pre-checkpoint frame for plan inspection (`Profile --plans`):
     * the real loop materializes exactly this shape every round. */
   private[graft] def ccRoundPlan(pairs: DataFrame, aCol: String = "a",
                                  bCol: String = "b"): DataFrame = {

@@ -329,7 +329,7 @@ object LinkGraph {
           .cast("long").as("rank"))
   }
 
-  /** Round-1's pre-checkpoint frame for plan inspection (ExplainDump):
+  /** Round-1's pre-checkpoint frame for plan inspection (`Profile --plans`):
     * the real loop materializes exactly this shape every iteration —
     * the post-checkpoint plan is just a scan of its output. */
   private[graft] def roundPlan(edges: DataFrame, srcCol: String = "src",

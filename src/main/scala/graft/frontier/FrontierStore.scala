@@ -462,16 +462,6 @@ final class FrontierStore(val root: String, numBuckets: Int = 64,
   def deletions(spark: SparkSession): DataFrame =
     read(spark).where(col("status") === Status.Error)
       .select("url_sha256", "url")
-
-  /** Typed view of the frontier — Dataset[StatusRow] for call sites
-    * that want compile-time field checks. */
-  def readTyped(spark: SparkSession): org.apache.spark.sql.Dataset[graft.model.StatusRow] = {
-    import spark.implicits._
-    read(spark)
-      .select(col("url_sha256"), col("url"), col("status"), col("next_fetch_date").cast("timestamp"),
-        col("key"), col("bucket"), col("metadata"))
-      .as[graft.model.StatusRow]
-  }
 }
 
 object FrontierStore {

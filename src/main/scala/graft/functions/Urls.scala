@@ -250,9 +250,6 @@ object Urls {
     new String(out)
   }
 
-  /** Document id = sha256(url) (`AbstractStatusUpdaterBolt.java:251-253`). */
-  def sha256Hex(s: String): String = digestHex("SHA-256", s)
-
   /** Page signature md5 (`MD5SignatureParseFilter.java:48`). */
   def md5Hex(s: String): String = digestHex("MD5", s)
 }

@@ -35,14 +35,6 @@ object MetadataOps {
       map_filter(coalesce(md, map()), (k, _) => k =!= key),
       map(lit(key), array(value)))
 
-  /** Append a value to a key — `Metadata.addValue` (150). */
-  def mdAdd(md: Column, key: String, value: Column): Column = {
-    val base = coalesce(md, map())
-    map_concat(
-      map_filter(base, (k, _) => k =!= key),
-      map(lit(key), concat(coalesce(element_at(base, key), array()), array(value))))
-  }
-
   /** Sub-map of keys starting with prefix — `Metadata.keySet(prefix)`
     * (`Metadata.java:215-219`). */
   def mdPrefix(md: Column, prefix: String): Column =

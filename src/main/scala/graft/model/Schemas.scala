@@ -45,16 +45,5 @@ object Schemas {
   ))
 }
 
-/** Typed row for the frontier table (used with Dataset[StatusRow] where
-  * compile-time field checks help; DataFrame elsewhere). */
-case class StatusRow(
-    url_sha256: String,
-    url: String,
-    status: String,
-    next_fetch_date: Option[java.sql.Timestamp],
-    key: Option[String],
-    bucket: Option[Int],
-    metadata: Option[Map[String, Seq[String]]])
-
 /** Outlink produced by parsing. */
 case class OutlinkRow(target_url: String, anchor: Option[String])

@@ -24,8 +24,8 @@ import org.apache.spark.sql.functions._
   *
   * Scale: ONE key-partitioned full-outer join — both sides shuffle on
   * the key once (sort-merge at scale, no broadcast: both snapshots are
-  * corpus-sized). Snapshots stored bucketed on the key
-  * ([[graft.plans.Bucketing]]) make it exchange-free. The presence
+  * corpus-sized). Snapshots written with Spark's `bucketBy` on the
+  * key would make it exchange-free. The presence
   * flags cost one constant column per side — no count/distinct
   * pre-pass, no second scan of either snapshot.
   */

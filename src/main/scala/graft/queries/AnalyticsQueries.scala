@@ -988,9 +988,9 @@ object AnalyticsQueries {
 
   /** q49's derived host graph — restricting src to h0..h14 makes
     * h15..h19 dst-only, i.e. REAL dangling nodes, so the oracle hash
-    * exercises dangling-mass redistribution. Shared with ExplainDump's
-    * round-body dump so the dumped plan runs over the same edges the
-    * query does. */
+    * exercises dangling-mass redistribution. Shared with `Profile
+    * --plans`' round-body plan so the dumped plan runs over the same
+    * edges the query does. */
   private[graft] def q49Edges(s: SparkSession, dir: String): DataFrame =
     t(s, dir, "events")
       .where(col("user_id") % 20 < 15)

@@ -54,6 +54,14 @@ class BenchGuardSpec extends AnyFunSuite {
     assert(!Bench.affectsCompiledClasses("?? build.sbt.bak\n"))
     assert(!Bench.affectsCompiledClasses("?? projectX/a.txt\n"))
   }
+  // Bench's line and Verify's oracle_sql.json both go through this
+  // escape; a raw control char makes the reader's JSON parse fail.
+  test("JSON escape: a JSON parser reads quote, backslash and control chars back") {
+    val raw = "a\"b\\c\t\r\n\u0001"
+    val node = new com.fasterxml.jackson.databind.ObjectMapper()
+      .readTree("\"" + Bench.jsonEscape(raw) + "\"")
+    assert(node.isTextual && node.asText == raw)
+  }
   test("disk preflight decision: below-threshold refuses, at-or-above runs") {
     assert(Disk.belowThreshold(free = 1.2, min = 5.0))
     assert(!Disk.belowThreshold(free = 5.0, min = 5.0))

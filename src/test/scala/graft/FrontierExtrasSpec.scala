@@ -146,15 +146,6 @@ class FrontierExtrasSpec extends AnyFunSuite with LocalSpark {
     assert(dels.head.getAs[String]("url_sha256").length == 64)
   }
 
-  test("readTyped: Dataset[StatusRow] round-trips fields") {
-    val st = store("http://h.com/x" -> Status.Discovered)
-    val rows = st.readTyped(spark).collect()
-    assert(rows.length == 1)
-    assert(rows.head.url == "http://h.com/x")
-    assert(rows.head.status == Status.Discovered)
-    assert(rows.head.key.contains("h.com"))
-  }
-
   test("adaptive scheduler in merge: unchanged grows interval, changed shrinks") {
     import spark.implicits._
     import graft.frontier.AdaptiveScheduler

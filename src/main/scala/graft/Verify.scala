@@ -48,9 +48,9 @@ object Verify {
         // free result-backing checkpoints between queries
         graft.analytics.CheckpointRegistry.releaseAll()
     }
-    // every control char escaped: a tab or CR in builder-authored SQL
-    // would otherwise make the driver's json.load fail and silently zero
-    // the round's correctness.
+    // every control char escaped: a raw tab or CR in a query's oracle
+    // SQL would make the reader's JSON parse fail and silently zero the
+    // correctness compare.
     def q(s: String): String = "\"" + Bench.jsonEscape(s) + "\""
     val json = SparkEntry.oracleSql
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")

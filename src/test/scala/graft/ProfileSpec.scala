@@ -26,11 +26,12 @@ class ProfileSpec extends AnyFunSuite with LocalSpark {
     }
     // one `## <query>` section per query, each holding one final plan
     val sections = Files.readString(plans).split("\n## ").toSeq.tail
-      .map(s => s.takeWhile(_ != '\n') -> s).toMap
-    assert(sections.keys.toSeq.sorted == queries)
+      .map(s => s.takeWhile(_ != '\n') -> s)
+    assert(sections.map(_._1).sorted == queries)
     sections.foreach { case (q, text) => assert(text.contains("isFinalPlan=true"), q) }
-    assert(sections("q01_pricing_summary").contains("partial_sum map-side, one tiny shuffle"))
-    assert(sections("q49_pagerank").contains("### q49_pagerank — round body"))
+    val byQuery = sections.toMap
+    assert(byQuery("q01_pricing_summary").contains("partial_sum map-side, one tiny shuffle"))
+    assert(byQuery("q49_pagerank").contains("### q49_pagerank — round body"))
   }
 
   test("drain on an interrupted thread keeps the interrupt") {

@@ -66,9 +66,9 @@ object Bench {
   private def gitPorcelainDirty(): Boolean = affectsCompiledClasses(gitPorcelain())
 
   /** The short sha of HEAD, stamped `-dirty` when the tree has dirt in
-    * the build inputs (the guard's scope: a driver-written round
-    * artifact such as LEAKCHECK.json cannot change the measured code,
-    * so it must not taint the sha); "unknown" outside a git checkout.
+    * the build inputs (the guard's scope: a round artifact such as
+    * LEAKCHECK.json cannot change the measured code, so it must not
+    * taint the sha); "unknown" outside a git checkout.
     * Bench's line and Profile's plan file name the build with it. */
   private[graft] def sourceSha(): String = {
     val commit =

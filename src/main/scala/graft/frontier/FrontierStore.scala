@@ -1,6 +1,6 @@
 package graft.frontier
 
-import java.nio.file.{Files, Paths, StandardCopyOption}
+import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -12,13 +12,23 @@ import graft.model.Status
 /** The frontier/status table: one row per normalized URL, the engine's
   * single piece of long-lived state (SURVEY §1.4).
   *
-  * Storage = hash-bucketed parquet with a per-bucket version manifest
-  * (`_CURRENT`: one `bucket TAB generation` line per bucket, swapped
-  * atomically). A merge rewrites ONLY the buckets its updates hash
-  * into — at 100 TB a micro-batch touching 2 % of hosts rewrites 2 %
-  * of the table, not all of it; untouched buckets keep their old
+  * Storage = hash-bucketed parquet generations plus one immutable
+  * manifest per version. A merge rewrites ONLY the buckets its updates
+  * hash into — at 100 TB a micro-batch touching 2 % of hosts rewrites
+  * 2 % of the table, not all of it; untouched buckets keep their old
   * files (poor-man's Delta partition-pruned MERGE; a real Delta
   * `MERGE INTO` slots straight into [[merge]]'s interface).
+  *
+  * Commit protocol (one writer per store): commit N, a merge or a
+  * compaction over version N-1, writes the generation `delta_N`, then
+  * creates the manifest `_manifest/N` (`bucket TAB generation` lines)
+  * by an atomic move of `_manifest/N.tmp` — the commit point. A crash
+  * before it leaves version N-1 whole; the next commit overwrites the
+  * orphan. Manifests are never rewritten, so [[version]] (the largest
+  * N) names one bucket map while [[vacuum]] keeps it: the newest four
+  * manifests and their generations, so a frame read up to three
+  * commits ago still collects, and superseded generations outlive a
+  * compaction by at most three commits.
   *
   * The table is hash-distributed on `url_sha256` (the merge shuffles
   * both sides once on that key); bucket dirs give the frontier query
@@ -38,33 +48,29 @@ final class FrontierStore(val root: String, numBuckets: Int = 64,
                           scheduler: DefaultScheduler = DefaultScheduler(),
                           adaptive: Option[AdaptiveScheduler] = None) extends Serializable {
 
-  private def currentFile = Paths.get(root, "_CURRENT")
+  private def manifests = Paths.get(root, "_manifest")
 
-  def exists: Boolean = Files.exists(currentFile)
+  private def manifestFile(version: Long) = manifests.resolve(version.toString)
 
-  /** The manifest's bytes; None before the first merge. The file is
-    * only ever replaced by an atomic move, so one read is one version. */
-  private def currentBytes: Option[Array[Byte]] =
-    if (!exists) None else Some(Files.readAllBytes(currentFile))
+  /** File names in `dir` (none when absent); `File.list` opens no stream to leak. */
+  private def names(dir: Path): Seq[String] = Option(dir.toFile.list()).toSeq.flatten
 
-  private def signatureOf(bytes: Option[Array[Byte]]): String =
-    bytes.fold("absent")(b => java.security.MessageDigest.getInstance("MD5")
-      .digest(b).map(x => f"$x%02x").mkString)
+  /** The committed versions on disk, oldest first. */
+  private def versions: Seq[Long] =
+    names(manifests).filter(n => n.nonEmpty && n.forall(_.isDigit)).map(_.toLong).sorted
 
-  /** Opaque signature of the table's current version — changes exactly
-    * when a merge/compact swaps the manifest pointer. Lets pollers
-    * (e.g. the streaming frontier source) detect "new frontier state"
-    * with one small file read, no table scan. */
-  def versionSignature: String = signatureOf(currentBytes)
+  /** The latest committed version, -1 before the first merge. It moves
+    * exactly when a merge or a compaction commits, so pollers (the
+    * streaming frontier source) see new frontier state with one
+    * directory listing, no table scan. */
+  def version: Long = versions.lastOption.getOrElse(-1L)
 
-  /** bucket -> generation dir (relative), e.g. 7 -> "delta_3". */
-  private def manifestOf(bytes: Option[Array[Byte]]): Map[Int, String] =
-    bytes.fold(Map.empty[Int, String])(b => new String(b).linesIterator
-      .filter(_.nonEmpty).map { l =>
-        val Array(k, g) = l.split("\t"); k.toInt -> g
-      }.toMap)
-
-  private def manifest: Map[Int, String] = manifestOf(currentBytes)
+  /** bucket -> generation dir of a version, e.g. 7 -> "delta_3"; empty
+    * at -1; `NoSuchFileException` once vacuumed. */
+  private def manifest(version: Long): Map[Int, String] =
+    if (version < 0) Map.empty
+    else new String(Files.readAllBytes(manifestFile(version))).linesIterator
+      .filter(_.nonEmpty).map(_.split("\t")).map { case Array(k, g) => k.toInt -> g }.toMap
 
   private def emptyFrontier(spark: SparkSession): DataFrame =
     spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
@@ -94,42 +100,37 @@ final class FrontierStore(val root: String, numBuckets: Int = 64,
     * crawl cycle's select and merge, which read the same version, share
     * one frame and one listing. Not serialized: a frame belongs to the
     * driver. */
-  @transient @volatile private var lastRead: (SparkSession, String, DataFrame) = _
+  @transient @volatile private var lastRead: (SparkSession, Long, DataFrame) = _
 
-  /** Read the current frontier table (empty-schema DF when absent). The
-    * same frame is returned while the session and the manifest version
-    * are unchanged; its listing is of that version's immutable
-    * generation files. */
-  def read(spark: SparkSession): DataFrame = {
-    val bytes = currentBytes
-    val version = signatureOf(bytes)
+  /** Read the frontier table at `version`, the latest by default
+    * (empty-schema DF before the first merge; `NoSuchFileException`
+    * once vacuumed). The same frame is returned while the session and
+    * the version are unchanged; its listing is of that version's
+    * immutable generation files. */
+  def read(spark: SparkSession, version: Long = this.version): DataFrame =
     lastRead match {
       case (s, v, df) if (s eq spark) && v == version => df
       case _ =>
-        val df = readBuckets(spark, manifestOf(bytes))
+        val df = readBuckets(spark, manifest(version))
         lastRead = (spark, version, df)
         df
     }
-  }
-
-  private def nextGeneration: Int =
-    if (!exists) 0
-    else manifest.values.map(_.stripPrefix("delta_").toInt).maxOption.map(_ + 1).getOrElse(0)
 
   /** Task count of a delta write: one task per bucket up to the
     * cluster's parallelism. */
   private def writeParallelism(spark: SparkSession): Int =
     math.min(numBuckets, spark.sparkContext.defaultParallelism).max(1)
 
-  /** Write the merged content of `touched` buckets as one new delta
-    * generation and swap the manifest pointer atomically. `preClustered`
+  /** Commit the merged content of `touched` buckets over version `base`
+    * as generation and manifest `base + 1`. `preClustered`
     * promises the input is ALREADY hash-distributed by bucket (merge's
     * bucket-aligned window leaves it so) — the repartition exchange is
     * skipped, halving the write path's shuffle bytes; a false promise
     * is still correct, just multi-file per bucket. */
-  private def writeDelta(df: DataFrame, touched: Set[Int],
+  private def writeDelta(df: DataFrame, base: Long, touched: Set[Int],
                          preClustered: Boolean = false): Unit = {
-    val gen = s"delta_$nextGeneration"
+    val next = base + 1
+    val gen = s"delta_$next"
     // cluster by bucket before the partitionBy write: a partitionBy
     // write from W tasks creates up to W files PER BUCKET (≈2 000 tiny
     // files per delta at 32 tasks × 64 buckets — the ContentStore
@@ -151,50 +152,44 @@ final class FrontierStore(val root: String, numBuckets: Int = 64,
       // high-water mark; zstd decode speed keeps reads scan-bound.
       .option("compression", "zstd")
       .parquet(s"$root/$gen")
-    val updated = manifest ++ touched.map(_ -> gen)
-    val tmp = Paths.get(root, "_CURRENT.tmp")
-    Files.createDirectories(Paths.get(root))
+    val updated = manifest(base) ++ touched.map(_ -> gen)
+    val tmp = manifests.resolve(s"$next.tmp")
+    Files.createDirectories(manifests)
     Files.write(tmp, updated.toSeq.sortBy(_._1)
       .map { case (b, g) => s"$b\t$g" }.mkString("\n").getBytes)
-    Files.move(tmp, currentFile, StandardCopyOption.ATOMIC_MOVE,
-      StandardCopyOption.REPLACE_EXISTING)
+    // the commit point: readers see manifest N whole or not at all
+    Files.move(tmp, manifestFile(next), StandardCopyOption.ATOMIC_MOVE)
   }
 
   /** Rewrite the whole table into a single generation and vacuum — run
-    * periodically (the crawl loop does it every `compactEvery` merges)
+    * periodically (the crawl loop does it above 16 live generations)
     * so reads stay one scan instead of one per historical generation. */
   def compact(spark: SparkSession): Unit = {
-    if (manifest.values.toSet.size <= 1) return
-    val all = read(spark)
-    val touched = manifest.keySet
-    writeDelta(all, touched)
+    val v = version
+    val entries = manifest(v)
+    if (entries.values.toSet.size > 1) writeDelta(read(spark, v), v, entries.keySet)
     vacuum()
   }
 
   /** Number of distinct live generations (compaction trigger metric). */
-  def generationCount: Int = manifest.values.toSet.size
+  def generationCount: Int = manifest(version).values.toSet.size
 
-  /** Delete delta generations no bucket references anymore. Streams
-    * are closed explicitly — the crawl driver vacuums for days on end
-    * and leaked directory-stream fds would eventually hit the ulimit. */
+  /** Keep the newest [[FrontierStore.KeptVersions]] manifests and the
+    * generations they name; delete older manifests first (so no reader
+    * resolves a version being deleted), then every other `delta_*`
+    * directory (a crashed commit's orphan too) and stale tmp files. */
   def vacuum(): Unit = {
-    val referenced = manifest.values.toSet
-    val rootPath = Paths.get(root)
-    if (Files.exists(rootPath)) {
-      val listing = Files.list(rootPath)
-      try {
-        val it = listing.iterator()
-        while (it.hasNext) {
-          val p = it.next()
-          val name = p.getFileName.toString
-          if (name.startsWith("delta_") && !referenced.contains(name)) {
-            val walk = Files.walk(p)
-            try walk.sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
-              .forEach(f => Files.deleteIfExists(f))
-            finally walk.close()
-          }
-        }
-      } finally listing.close()
+    val all = versions
+    val (old, kept) = all.splitAt(all.size - FrontierStore.KeptVersions)
+    val named = kept.flatMap(manifest(_).values).toSet
+    old.foreach(v => Files.deleteIfExists(manifestFile(v)))
+    names(manifests).filter(_.endsWith(".tmp"))
+      .foreach(n => Files.deleteIfExists(manifests.resolve(n)))
+    names(Paths.get(root)).filter(n => n.startsWith("delta_") && !named(n)).foreach { n =>
+      val walk = Files.walk(Paths.get(root, n))
+      try walk.sorted(java.util.Comparator.reverseOrder[Path]())
+        .forEach(f => Files.deleteIfExists(f))
+      finally walk.close()
     }
   }
 
@@ -228,6 +223,7 @@ final class FrontierStore(val root: String, numBuckets: Int = 64,
     val touched = enriched.select("bucket").distinct()
       .collect().map(_.getInt(0)).toSet
     if (touched.isEmpty) return
+    val base = version
 
     // SLIM union: url_sha256 and key are pure functions of url
     // (enrich's own definitions), so they are recomputed on the merge
@@ -237,7 +233,7 @@ final class FrontierStore(val root: String, numBuckets: Int = 64,
     // The touched buckets are pruned from the shared read ([[read]]:
     // the select of the same version already listed them); `bucket` is
     // the partition column, so untouched buckets' files are never opened.
-    val existing = read(spark).where(col("bucket").isin(touched.toSeq: _*))
+    val existing = read(spark, base).where(col("bucket").isin(touched.toSeq: _*))
       .select(col("url"), col("status"), col("next_fetch_date"),
         col("bucket"), col("metadata"), col("error_count"),
         lit(0).as("incoming"))
@@ -359,29 +355,34 @@ final class FrontierStore(val root: String, numBuckets: Int = 64,
 
     writeDelta(scheduled.select(
       "url_sha256", "url", "status", "next_fetch_date", "key", "bucket",
-      "metadata", "error_count"), touched, preClustered = true)
+      "metadata", "error_count"), base, touched, preClustered = true)
   }
+
+  /** The rows of `version` due at `now` (next fetch date ≤ now), ERROR excepted. */
+  private def due(spark: SparkSession, now: java.sql.Timestamp, version: Long): DataFrame =
+    read(spark, version)
+      .where(col("next_fetch_date").isNotNull &&
+        col("next_fetch_date") <= lit(now).cast("timestamp_ntz") &&
+        col("status") =!= Status.Error)
 
   /** Frontier selection — AggregationSpout / SQLSpout semantics
     * (`AggregationSpout.java:110-166`, `SQLSpout.java:120-139`): due
     * URLs, top-`perBucket` per key by next_fetch_date, at most
     * `maxKeys` keys ordered by their earliest due date, global LIMIT.
     * The due-date filter prunes parquet files before the single window
-    * shuffle. */
+    * shuffle. `version` names the snapshot to select from, the latest
+    * by default. */
   def selectBatch(spark: SparkSession, now: java.sql.Timestamp,
                   perBucket: Int = 5, maxKeys: Int = 100,
                   limit: Int = 500,
                   excludeInFlight: Option[DataFrame] = None,
                   saltBuckets: Int = 1,
-                  keyPriority: Option[DataFrame] = None): DataFrame = {
-    val due = read(spark)
-      .where(col("next_fetch_date").isNotNull &&
-        col("next_fetch_date") <= lit(now).cast("timestamp_ntz") &&
-        col("status") =!= Status.Error)
+                  keyPriority: Option[DataFrame] = None,
+                  version: Long = this.version): DataFrame = {
     val afterPurgatory = excludeInFlight match {
-      case Some(inflight) => due.join(broadcast(inflight.select(col("url_sha256"))),
+      case Some(inflight) => due(spark, now, version).join(broadcast(inflight.select(col("url_sha256"))),
         Seq("url_sha256"), "left_anti")
-      case None => due
+      case None => due(spark, now, version)
     }
     // Key selection first: top-`maxKeys` keys by earliest due date as a
     // small aggregate + TakeOrdered (never a global window over URL
@@ -440,15 +441,11 @@ final class FrontierStore(val root: String, numBuckets: Int = 64,
     * .java:53`): keyset pagination — for each (key, last seen due date),
     * the next `perKey` due URLs strictly after that date. `cursor` needs
     * columns (key, last_seen); it is small (one row per active queue) so
-    * it broadcasts. */
+    * it broadcasts. `version` names the snapshot, the latest by default. */
   def refill(spark: SparkSession, cursor: DataFrame, now: java.sql.Timestamp,
-             perKey: Int = 5): DataFrame = {
-    val due = read(spark)
-      .where(col("next_fetch_date").isNotNull &&
-        col("next_fetch_date") <= lit(now).cast("timestamp_ntz") &&
-        col("status") =!= Status.Error)
+             perKey: Int = 5, version: Long = this.version): DataFrame = {
     val wk = Window.partitionBy(col("key")).orderBy(col("next_fetch_date"), col("url"))
-    due.join(broadcast(cursor), Seq("key"))
+    due(spark, now, version).join(broadcast(cursor), Seq("key"))
       .where(col("next_fetch_date") > col("last_seen"))
       .withColumn("rn", row_number().over(wk))
       .where(col("rn") <= perKey)
@@ -465,6 +462,11 @@ final class FrontierStore(val root: String, numBuckets: Int = 64,
 }
 
 object FrontierStore {
+  /** Manifests [[vacuum]] keeps. A crawl cycle commits at most two
+    * versions (its merge, then a compaction), so four keep every
+    * version read during the previous cycle. */
+  private val KeptVersions = 4
+
   /** The columns of a delta generation as written (`bucket` is the
     * partition directory). */
   private val stored: org.apache.spark.sql.types.StructType = {

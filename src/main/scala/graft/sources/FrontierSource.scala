@@ -32,23 +32,21 @@ import graft.frontier.FrontierStore
   * Offset/trigger design — sized for the semantics the reference
   * actually has, not more:
   *
-  *   - `latestOffset` polls the store's `versionSignature` (one tiny
-  *     manifest read — the spout's cheap "is there new work?" check,
-  *     `spout.min.delay.queries` pacing is the trigger interval). The
-  *     offset advances only when a merge swapped the manifest, so an
-  *     idle frontier schedules no batches and `processAllAvailable`
-  *     converges in tests.
-  *   - `planInputPartitions` runs the frontier window query and
-  *     collects it on the driver — bounded by construction: the batch
-  *     is ≤ `limit` rows (reference defaults select ~10 URLs per poll;
-  *     `maxKeys × perBucket` caps ours). One InputPartition per
-  *     partition key preserves the politeness locality the fetch stage
-  *     needs (FIELDS(key) grouping in the reference topology).
-  *   - Replay of a committed-but-unprocessed range re-runs the
-  *     selection against the CURRENT store — at-least-once, exactly
-  *     the reference's ack/fail redelivery contract; end-to-end
-  *     exactly-once comes from the idempotent sha256-keyed merge
-  *     downstream, same as the rest of the engine.
+  *   - Offset = (store version, select time). `latestOffset` polls
+  *     [[FrontierStore.version]] (one directory listing — the spout's
+  *     cheap "is there new work?" check; the trigger interval is
+  *     `spout.min.delay.queries`) and stamps a new offset only when a
+  *     merge committed, so an idle frontier schedules no batches.
+  *   - `planInputPartitions` selects at the end offset's version and
+  *     time and collects on the driver — ≤ `limit` rows by
+  *     construction. One InputPartition per partition key keeps the
+  *     fetch stage's politeness locality (the reference's FIELDS(key)).
+  *   - Replay of a logged range re-selects the same rows while the
+  *     store keeps that version (`FrontierStore.vacuum` keeps the
+  *     newest four); a vacuumed version selects from the latest
+  *     instead — at-least-once, the reference's ack/fail redelivery;
+  *     the idempotent sha256-keyed merge downstream makes it
+  *     exactly-once end to end.
   */
 class FrontierSource extends TableProvider {
   override def inferSchema(options: CaseInsensitiveStringMap): StructType =
@@ -90,9 +88,9 @@ final class FrontierTable(props: Map[String, String]) extends Table with Support
     }
 }
 
-/** Offset = (poll sequence, store version at that poll). */
-final case class FrontierOffset(seq: Long, version: String) extends Offset {
-  override def json(): String = s"""{"seq":$seq,"version":"$version"}"""
+/** Offset = (store version, select time in epoch ms). */
+final case class FrontierOffset(version: Long, atMs: Long) extends Offset {
+  override def json(): String = s"""{"version":$version,"atMs":$atMs}"""
 }
 
 final class FrontierMicroBatchStream(path: String, perBucket: Int, maxKeys: Int,
@@ -100,34 +98,33 @@ final class FrontierMicroBatchStream(path: String, perBucket: Int, maxKeys: Int,
     extends MicroBatchStream {
 
   private val store = new FrontierStore(path)
-  @volatile private var last = FrontierOffset(0L, "uninitialized")
+  @volatile private var last = FrontierOffset(-1L, 0L)
 
-  override def initialOffset(): Offset = FrontierOffset(0L, "uninitialized")
+  override def initialOffset(): Offset = FrontierOffset(-1L, 0L)
 
   override def latestOffset(): Offset = {
-    val v = store.versionSignature
-    if (v != last.version) last = FrontierOffset(last.seq + 1, v)
+    val v = store.version
+    if (v != last.version) last = FrontierOffset(v, System.currentTimeMillis())
     last
   }
 
   override def deserializeOffset(json: String): Offset = {
-    // minimal parse of the json() shape above
-    val seq = "\"seq\":(\\d+)".r.findFirstMatchIn(json).map(_.group(1).toLong).getOrElse(0L)
-    val ver = "\"version\":\"([^\"]*)\"".r.findFirstMatchIn(json).map(_.group(1)).getOrElse("")
-    val o = FrontierOffset(seq, ver)
-    if (o.seq > last.seq) last = o // restart: resume the sequence
-    o
+    val Seq(version, atMs) = "-?\\d+".r.findAllIn(json).map(_.toLong).toSeq
+    // a restart resumes at the logged offset: an unchanged store schedules no batch
+    if (version > last.version) last = FrontierOffset(version, atMs)
+    FrontierOffset(version, atMs)
   }
 
   override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] = {
-    val (s, e) = (start.asInstanceOf[FrontierOffset], end.asInstanceOf[FrontierOffset])
-    if (s.seq == e.seq) return Array.empty
+    val e = end.asInstanceOf[FrontierOffset]
+    if (start.asInstanceOf[FrontierOffset].version == e.version) return Array.empty
     val spark = SparkSession.active
-    val batch = store.selectBatch(spark, new java.sql.Timestamp(System.currentTimeMillis()),
-      perBucket = perBucket, maxKeys = maxKeys, limit = limit)
-    // bounded by construction (≤ limit rows): safe to collect, and
-    // grouping by key gives the politeness-local partitions downstream
-    batch.collect().groupBy(_.getAs[String]("key")).values
+    def select(version: Long) = store.selectBatch(spark, new java.sql.Timestamp(e.atMs),
+      perBucket = perBucket, maxKeys = maxKeys, limit = limit, version = version).collect()
+    // ≤ limit rows: safe to collect; a vacuumed version selects from the latest
+    val rows = try select(e.version)
+      catch { case _: java.nio.file.NoSuchFileException => select(store.version) }
+    rows.groupBy(_.getAs[String]("key")).values
       .map(rows => FrontierPartition(rows.toSeq): InputPartition).toArray
   }
 

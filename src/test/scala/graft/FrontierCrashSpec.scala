@@ -1,6 +1,6 @@
 package graft
 
-import java.nio.file.{Files, Paths, StandardCopyOption}
+import java.nio.file.{Files, Paths}
 import java.sql.Timestamp
 
 import org.scalatest.funsuite.AnyFunSuite
@@ -8,15 +8,16 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.frontier.FrontierStore
 import graft.model.Status
 
-/** Crash recovery for the frontier's manifest-swap protocol
-  * (`FrontierStore.writeDelta`): a merge is (1) write the new delta
-  * generation's parquet, (2) atomically move `_CURRENT.tmp` over
-  * `_CURRENT`, (3) — on compaction only — vacuum unreferenced
-  * generations. A crash between any two steps must leave the table
-  * readable at a CONSISTENT version (all-old or all-new, never mixed)
-  * and the next merge/vacuum must self-heal the leftovers. Each test
-  * reproduces one kill point by performing the protocol's prefix by
-  * hand against a store that real merges built. */
+/** Crash recovery for the frontier's commit protocol
+  * (`FrontierStore.writeDelta`): commit N is (1) write the generation
+  * `delta_N`'s parquet, (2) write `_manifest/N.tmp` and atomically move
+  * it to `_manifest/N` — the commit point — and (3), on compaction
+  * only, vacuum what the four newest manifests no longer name. A crash
+  * between any two steps must leave the table readable at a CONSISTENT
+  * version (all-old or all-new, never mixed) and the next
+  * merge/vacuum must self-heal the leftovers. Each test reproduces one
+  * kill point by performing the protocol's prefix by hand against a
+  * store that real merges built. */
 class FrontierCrashSpec extends AnyFunSuite with LocalSpark {
 
   private val t0 = Timestamp.valueOf("2024-01-01 00:00:00")
@@ -41,18 +42,19 @@ class FrontierCrashSpec extends AnyFunSuite with LocalSpark {
     (st, root)
   }
 
-  private def manifestGens(root: String): Set[String] =
-    new String(Files.readAllBytes(Paths.get(root, "_CURRENT"))).linesIterator
-      .filter(_.nonEmpty).map(_.split("\t")(1)).toSet
+  /** The generations the latest manifest names. */
+  private def manifestGens(st: FrontierStore): Set[String] =
+    new String(Files.readAllBytes(Paths.get(st.root, "_manifest", st.version.toString)))
+      .linesIterator.filter(_.nonEmpty).map(_.split("\t")(1)).toSet
 
-  test("crash after delta write, before _CURRENT move: reads stay on the " +
-       "old version; the next merge reuses the orphan generation number") {
+  test("crash after delta write, before the manifest commit: reads stay on " +
+       "the old version; the next merge reuses the orphan generation number") {
     val (st, root) = newStore()
     val before = snapshot(st)
 
     // protocol prefix: the next generation's parquet lands on disk but
-    // the manifest move never happens (kill between steps 1 and 2)
-    val orphanGen = manifestGens(root).map(_.stripPrefix("delta_").toInt).max + 1
+    // the manifest create never happens (kill between steps 1 and 2)
+    val orphanGen = st.version + 1
     st.read(spark).write.partitionBy("bucket").mode("overwrite")
       .parquet(s"$root/delta_$orphanGen")
 
@@ -60,30 +62,30 @@ class FrontierCrashSpec extends AnyFunSuite with LocalSpark {
       "an unreferenced delta must be invisible to readers")
 
     // self-healing: the next real merge claims the same generation
-    // number (manifest-derived, not directory-derived), overwrites the
-    // orphan, and its content becomes visible atomically
+    // number (the next version's), overwrites the orphan, and its
+    // content becomes visible atomically
     st.merge(spark, statusRows("http://c.com/3" -> Status.Discovered), t0)
     val after = snapshot(st)
     assert(after == before + (("http://c.com/3", Status.Discovered)))
-    assert(manifestGens(root).contains(s"delta_$orphanGen"),
+    assert(manifestGens(st).contains(s"delta_$orphanGen"),
       "merge after the crash must reuse the orphaned generation number")
   }
 
-  test("crash with a half-written _CURRENT.tmp: reads unaffected, next " +
+  test("crash with a half-written manifest tmp file: reads unaffected, next " +
        "merge replaces the tmp file") {
     val (st, root) = newStore()
     val before = snapshot(st)
     // kill mid-step-2: tmp exists (possibly truncated garbage), the
     // atomic move never ran
-    Files.write(Paths.get(root, "_CURRENT.tmp"), "3\tdelta_9".getBytes)
+    val tmp = Paths.get(root, "_manifest", s"${st.version + 1}.tmp")
+    Files.write(tmp, "3\tdelta_9".getBytes)
     assert(snapshot(st) == before)
     st.merge(spark, statusRows("http://d.com/4" -> Status.Discovered), t0)
     assert(snapshot(st) == before + (("http://d.com/4", Status.Discovered)))
-    assert(!Files.exists(Paths.get(root, "_CURRENT.tmp")),
-      "the atomic move consumes the tmp file")
+    assert(!Files.exists(tmp), "the atomic move consumes the tmp file")
   }
 
-  test("crash after _CURRENT move, before vacuum: reads serve the new " +
+  test("crash after the manifest commit, before vacuum: reads serve the new " +
        "version; vacuum() cleans the unreferenced generations") {
     val (st, root) = newStore()
     // several more merges build up history, then compact's writeDelta
@@ -93,56 +95,44 @@ class FrontierCrashSpec extends AnyFunSuite with LocalSpark {
     val before = snapshot(st)
     st.compact(spark) // compact = writeDelta + vacuum …
     // … so recreate the pre-vacuum state: put back two fake stale dirs
-    // a crashed vacuum would have left
+    // and a stale tmp file a crashed vacuum would have left
     for (g <- Seq("delta_90", "delta_91")) {
       Files.createDirectories(Paths.get(root, g))
       Files.write(Paths.get(root, g, "junk.parquet"), Array[Byte](1, 2, 3))
     }
+    val staleTmp = Paths.get(root, "_manifest", "2.tmp")
+    Files.write(staleTmp, "0\tdelta_2".getBytes)
     assert(snapshot(st) == before,
       "stale unreferenced generations must not affect reads")
     st.vacuum()
     assert(!Files.exists(Paths.get(root, "delta_90")) &&
       !Files.exists(Paths.get(root, "delta_91")),
       "vacuum must delete every unreferenced generation, junk included")
+    assert(!Files.exists(staleTmp), "vacuum must delete stale tmp files")
     assert(snapshot(st) == before)
-    val referenced = manifestGens(root)
+    val manifests = Files.list(Paths.get(root, "_manifest")).toArray
+      .map(p => p.asInstanceOf[java.nio.file.Path].getFileName.toString)
+    val referenced = manifests.flatMap(v =>
+      new String(Files.readAllBytes(Paths.get(root, "_manifest", v)))
+        .linesIterator.filter(_.nonEmpty).map(_.split("\t")(1))).toSet
     val onDisk = Files.list(Paths.get(root)).toArray.map(_.toString)
       .map(p => Paths.get(p).getFileName.toString)
       .filter(_.startsWith("delta_")).toSet
-    assert(onDisk == referenced, "post-vacuum disk state == manifest")
+    assert(onDisk == referenced, "post-vacuum disk state == the kept manifests")
   }
 
   test("torn read impossible: a reader holding the old manifest still " +
        "sees a complete old version after a concurrent merge lands") {
-    val (st, root) = newStore()
+    val (st, _) = newStore()
     val before = snapshot(st)
-    // reader A captures the manifest (simulated: copy _CURRENT aside)
-    val held = Paths.get(root, "_CURRENT.held")
-    Files.copy(Paths.get(root, "_CURRENT"), held)
-    // a merge swaps in a new generation (it does NOT vacuum, so the
-    // old generation's files are still on disk for reader A)
+    val held = st.version // reader A holds the pre-merge version
+    // a merge commits a new version (it does NOT vacuum, so the old
+    // generation's files are still on disk for reader A)
     st.merge(spark, statusRows("http://f.com/6" -> Status.Fetched), t0)
-    // reader A's view: restore its held manifest into a scratch store
-    val scratch = Files.createTempDirectory("frontier-held").toString
-    Files.createDirectories(Paths.get(scratch))
-    val listing = Files.list(Paths.get(root))
-    try {
-      val it = listing.iterator()
-      while (it.hasNext) {
-        val p = it.next()
-        if (p.getFileName.toString.startsWith("delta_")) {
-          val walk = Files.walk(p)
-          try walk.forEach { f =>
-            val rel = Paths.get(root).relativize(f)
-            val dst = Paths.get(scratch).resolve(rel)
-            if (Files.isDirectory(f)) Files.createDirectories(dst)
-            else Files.copy(f, dst, StandardCopyOption.REPLACE_EXISTING)
-          } finally walk.close()
-        }
-      }
-    } finally listing.close()
-    Files.copy(held, Paths.get(scratch, "_CURRENT"))
-    assert(snapshot(new FrontierStore(scratch, numBuckets = 8)) == before,
-      "the held (pre-merge) manifest must resolve to the complete old version")
+    assert(snapshot(st) != before)
+    val heldRows = st.read(spark, held).select("url", "status").collect()
+      .map(r => (r.getString(0), r.getString(1))).toSet
+    assert(heldRows == before,
+      "the held (pre-merge) version must resolve to the complete old version")
   }
 }

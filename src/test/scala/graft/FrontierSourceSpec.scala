@@ -56,6 +56,28 @@ class FrontierSourceSpec extends AnyFunSuite with LocalSpark {
     } finally q.stop()
   }
 
+  test("a replayed offset range selects the rows it first selected") {
+    import graft.sources.{FrontierMicroBatchStream, FrontierPartition}
+    val root = Files.createTempDirectory("frontier_replay").toString
+    val store = new FrontierStore(root)
+    store.merge(spark, statusRows(
+      "http://h1.com/a" -> Status.Discovered,
+      "http://h1.com/b" -> Status.Discovered,
+      "http://h2.com/a" -> Status.Discovered), t0)
+    val stream = new FrontierMicroBatchStream(root, perBucket = 1, maxKeys = 10, limit = 10)
+    val o = stream.latestOffset()
+    assert(stream.deserializeOffset(o.json) == o)
+    def planned(): Seq[String] =
+      stream.planInputPartitions(stream.initialOffset(), o).toSeq
+        .flatMap(_.asInstanceOf[FrontierPartition].rows)
+        .map(r => s"${r.getAs[String]("url")} ${r.getAs[String]("status")}").sorted
+    val first = planned()
+    assert(first == Seq("http://h1.com/a DISCOVERED", "http://h2.com/a DISCOVERED"))
+    // h1.com/a is fetched: the latest version selects h1.com/b instead
+    store.merge(spark, statusRows("http://h1.com/a" -> Status.Fetched))
+    assert(planned() == first)
+  }
+
   test("seedStream: seed files dropped into a directory flow into the frontier") {
     import graft.filters.UrlFilterChain
     import graft.streaming.CrawlTopology

@@ -153,11 +153,28 @@ class FrontierSpec extends AnyFunSuite with LocalSpark {
     assert(byUrl("http://hosta.com/1") == Status.Fetched)
     assert(byUrl("http://hostb.com/1") == Status.Discovered)
 
-    // delta_0 (hosta's first write) is now unreferenced -> vacuumed
+    // three more commits: delta_0 (hosta's first write) is named only
+    // by versions 0 and 1, which fall out of the four kept manifests
+    for (_ <- 1 to 3) st.merge(spark, statusRows("http://hosta.com/1" -> Status.Fetched), t1)
     st.vacuum()
     val after = new java.io.File(root).list().filter(_.startsWith("delta_")).sorted
     assert(!after.contains("delta_0"), after.mkString(","))
+    assert(after.contains("delta_1"), after.mkString(",")) // hostb's live generation
     assert(st.read(spark).count() == 2) // still fully readable
+  }
+
+  test("a frame read before a merge and a compaction still collects") {
+    val st = new FrontierStore(Files.createTempDirectory("frontier").toString, numBuckets = 8)
+    st.merge(spark, statusRows("http://hosta.com/1" -> Status.Discovered), t0)
+    st.merge(spark, statusRows("http://hostb.com/1" -> Status.Discovered), t0)
+    val held = st.read(spark)
+    st.merge(spark, statusRows("http://hosta.com/1" -> Status.Fetched), t1)
+    st.compact(spark) // one generation now; the vacuum spares the held one
+    assert(st.generationCount == 1)
+    assert(held.select("url", "status").collect()
+      .map(r => r.getString(0) -> r.getString(1)).toMap == Map(
+        "http://hosta.com/1" -> Status.Discovered,
+        "http://hostb.com/1" -> Status.Discovered))
   }
 
   test("statusCounts aggregation") {

@@ -110,9 +110,7 @@ class FrontierCrashSpec extends AnyFunSuite with LocalSpark {
       "vacuum must delete every unreferenced generation, junk included")
     assert(!Files.exists(staleTmp), "vacuum must delete stale tmp files")
     assert(snapshot(st) == before)
-    val manifests = Files.list(Paths.get(root, "_manifest")).toArray
-      .map(p => p.asInstanceOf[java.nio.file.Path].getFileName.toString)
-    val referenced = manifests.flatMap(v =>
+    val referenced = new java.io.File(root, "_manifest").list().flatMap(v =>
       new String(Files.readAllBytes(Paths.get(root, "_manifest", v)))
         .linesIterator.filter(_.nonEmpty).map(_.split("\t")(1))).toSet
     val onDisk = Files.list(Paths.get(root)).toArray.map(_.toString)

@@ -105,12 +105,12 @@ class FrontierSourceSpec extends AnyFunSuite with LocalSpark {
 
   test("mid-batch crash after fetch, before merge commit: restart is exactly-once") {
     // the streaming-layer companion to FrontierCrashSpec's store-level
-    // manifest-swap coverage: kill the standing query AFTER the fetch
+    // commit-protocol coverage: kill the standing query AFTER the fetch
     // stage ran but BEFORE the frontier merge commits, restart from the
     // same checkpoint, and require the frontier to land in the exact
     // state an uninterrupted run produces — the offset-log/commit-log
     // gap makes Structured Streaming replay the same batch, the source
-    // re-runs the selection against the unchanged store, and the
+    // re-selects at the logged offset's version and time, and the
     // sha256-keyed merge applies it exactly once
     import org.apache.spark.sql.DataFrame
     import org.apache.spark.sql.functions._

@@ -25,10 +25,10 @@ import graft.model.Status
   * by an atomic move of `_manifest/N.tmp` — the commit point. A crash
   * before it leaves version N-1 whole; the next commit overwrites the
   * orphan. Manifests are never rewritten, so [[version]] (the largest
-  * N) names one bucket map while [[vacuum]] keeps it: the newest four
-  * manifests and their generations, so a frame read up to three
-  * commits ago still collects, and superseded generations outlive a
-  * compaction by at most three commits.
+  * N) names one bucket map while [[vacuum]], which ends every commit,
+  * keeps it: the newest four manifests and their generations, so a
+  * frame read up to three commits ago still collects and `_manifest/`
+  * (listed by [[version]]) never holds more than four files.
   *
   * The table is hash-distributed on `url_sha256` (the merge shuffles
   * both sides once on that key); bucket dirs give the frontier query
@@ -159,16 +159,16 @@ final class FrontierStore(val root: String, numBuckets: Int = 64,
       .map { case (b, g) => s"$b\t$g" }.mkString("\n").getBytes)
     // the commit point: readers see manifest N whole or not at all
     Files.move(tmp, manifestFile(next), StandardCopyOption.ATOMIC_MOVE)
+    vacuum()
   }
 
-  /** Rewrite the whole table into a single generation and vacuum — run
+  /** Rewrite the whole table into a single generation — run
     * periodically (the crawl loop does it above 16 live generations)
     * so reads stay one scan instead of one per historical generation. */
   def compact(spark: SparkSession): Unit = {
     val v = version
     val entries = manifest(v)
     if (entries.values.toSet.size > 1) writeDelta(read(spark, v), v, entries.keySet)
-    vacuum()
   }
 
   /** Number of distinct live generations (compaction trigger metric). */
@@ -185,12 +185,8 @@ final class FrontierStore(val root: String, numBuckets: Int = 64,
     old.foreach(v => Files.deleteIfExists(manifestFile(v)))
     names(manifests).filter(_.endsWith(".tmp"))
       .foreach(n => Files.deleteIfExists(manifests.resolve(n)))
-    names(Paths.get(root)).filter(n => n.startsWith("delta_") && !named(n)).foreach { n =>
-      val walk = Files.walk(Paths.get(root, n))
-      try walk.sorted(java.util.Comparator.reverseOrder[Path]())
-        .forEach(f => Files.deleteIfExists(f))
-      finally walk.close()
-    }
+    names(Paths.get(root)).filter(n => n.startsWith("delta_") && !named(n))
+      .foreach(n => org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(root, n)))
   }
 
   /** Normalize incoming status rows (url, status, metadata[, signature])
@@ -441,9 +437,9 @@ final class FrontierStore(val root: String, numBuckets: Int = 64,
     * .java:53`): keyset pagination — for each (key, last seen due date),
     * the next `perKey` due URLs strictly after that date. `cursor` needs
     * columns (key, last_seen); it is small (one row per active queue) so
-    * it broadcasts. `version` names the snapshot, the latest by default. */
+    * it broadcasts. */
   def refill(spark: SparkSession, cursor: DataFrame, now: java.sql.Timestamp,
-             perKey: Int = 5, version: Long = this.version): DataFrame = {
+             perKey: Int = 5): DataFrame = {
     val wk = Window.partitionBy(col("key")).orderBy(col("next_fetch_date"), col("url"))
     due(spark, now, version).join(broadcast(cursor), Seq("key"))
       .where(col("next_fetch_date") > col("last_seen"))

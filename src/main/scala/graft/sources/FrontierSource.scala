@@ -121,9 +121,11 @@ final class FrontierMicroBatchStream(path: String, perBucket: Int, maxKeys: Int,
     val spark = SparkSession.active
     def select(version: Long) = store.selectBatch(spark, new java.sql.Timestamp(e.atMs),
       perBucket = perBucket, maxKeys = maxKeys, limit = limit, version = version).collect()
-    // ≤ limit rows: safe to collect; a vacuumed version selects from the latest
-    val rows = try select(e.version)
-      catch { case _: java.nio.file.NoSuchFileException => select(store.version) }
+    // ≤ limit rows: safe to collect; a vacuumed version (its manifest gone,
+    // or a frame built before its files went: FAILED_READ_FILE) selects from the latest
+    def gone(t: Throwable): Boolean = t != null && (t.isInstanceOf[java.io.FileNotFoundException]
+      || t.isInstanceOf[java.nio.file.NoSuchFileException] || gone(t.getCause))
+    val rows = try select(e.version) catch { case t: Exception if gone(t) => select(store.version) }
     rows.groupBy(_.getAs[String]("key")).values
       .map(rows => FrontierPartition(rows.toSeq): InputPartition).toArray
   }

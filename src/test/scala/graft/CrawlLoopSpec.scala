@@ -69,7 +69,7 @@ class CrawlLoopSpec extends AnyFunSuite with LocalSpark {
 
     assert(statuses(store) == (0 until hosts).map(url(_) -> Status.Fetched).toMap)
     assert(store.generationCount <= 16, s"${store.generationCount} live generations")
-    // every manifest on disk is one the last vacuum kept or one committed since
+    // the manifests on disk are the four the last commit's vacuum kept
     val manifests = Paths.get(root, "_manifest")
     val referenced = Files.list(manifests).iterator.asScala.toSeq
       .flatMap(m => Files.readAllLines(m).asScala)

@@ -11,8 +11,8 @@ import graft.model.Status
 /** Crash recovery for the frontier's commit protocol
   * (`FrontierStore.writeDelta`): commit N is (1) write the generation
   * `delta_N`'s parquet, (2) write `_manifest/N.tmp` and atomically move
-  * it to `_manifest/N` — the commit point — and (3), on compaction
-  * only, vacuum what the four newest manifests no longer name. A crash
+  * it to `_manifest/N` — the commit point — and (3) vacuum what the
+  * four newest manifests no longer name. A crash
   * between any two steps must leave the table readable at a CONSISTENT
   * version (all-old or all-new, never mixed) and the next
   * merge/vacuum must self-heal the leftovers. Each test reproduces one
@@ -93,7 +93,7 @@ class FrontierCrashSpec extends AnyFunSuite with LocalSpark {
     // generation — the crash happens before vacuum (between 2 and 3)
     st.merge(spark, statusRows("http://e.com/5" -> Status.Discovered), t0)
     val before = snapshot(st)
-    st.compact(spark) // compact = writeDelta + vacuum …
+    st.compact(spark) // compact = a commit, so writeDelta + vacuum …
     // … so recreate the pre-vacuum state: put back two fake stale dirs
     // and a stale tmp file a crashed vacuum would have left
     for (g <- Seq("delta_90", "delta_91")) {
@@ -124,8 +124,9 @@ class FrontierCrashSpec extends AnyFunSuite with LocalSpark {
     val (st, _) = newStore()
     val before = snapshot(st)
     val held = st.version // reader A holds the pre-merge version
-    // a merge commits a new version (it does NOT vacuum, so the old
-    // generation's files are still on disk for reader A)
+    // a merge commits a new version (its vacuum keeps the four newest
+    // versions, so the old generation's files are still on disk for
+    // reader A)
     st.merge(spark, statusRows("http://f.com/6" -> Status.Fetched), t0)
     assert(snapshot(st) != before)
     val heldRows = st.read(spark, held).select("url", "status").collect()

@@ -57,25 +57,41 @@ class FrontierSourceSpec extends AnyFunSuite with LocalSpark {
   }
 
   test("a replayed offset range selects the rows it first selected") {
-    import graft.sources.{FrontierMicroBatchStream, FrontierPartition}
+    import org.apache.spark.sql.Row
+    import graft.sources.{FrontierMicroBatchStream, FrontierOffset, FrontierPartition}
     val root = Files.createTempDirectory("frontier_replay").toString
     val store = new FrontierStore(root)
     store.merge(spark, statusRows(
       "http://h1.com/a" -> Status.Discovered,
       "http://h1.com/b" -> Status.Discovered,
       "http://h2.com/a" -> Status.Discovered), t0)
-    val stream = new FrontierMicroBatchStream(root, perBucket = 1, maxKeys = 10, limit = 10)
-    val o = stream.latestOffset()
+    def newStream() = new FrontierMicroBatchStream(root, perBucket = 1, maxKeys = 10, limit = 10)
+    val stream = newStream()
+    val o = stream.latestOffset().asInstanceOf[FrontierOffset]
     assert(stream.deserializeOffset(o.json) == o)
-    def planned(): Seq[String] =
-      stream.planInputPartitions(stream.initialOffset(), o).toSeq
-        .flatMap(_.asInstanceOf[FrontierPartition].rows)
-        .map(r => s"${r.getAs[String]("url")} ${r.getAs[String]("status")}").sorted
+    def show(rows: Seq[Row]): Seq[String] =
+      rows.map(r => s"${r.getAs[String]("url")} ${r.getAs[String]("status")}").sorted
+    def planned(s: FrontierMicroBatchStream = stream): Seq[String] =
+      show(s.planInputPartitions(s.initialOffset(), o).toSeq
+        .flatMap(_.asInstanceOf[FrontierPartition].rows))
     val first = planned()
     assert(first == Seq("http://h1.com/a DISCOVERED", "http://h2.com/a DISCOVERED"))
     // h1.com/a is fetched: the latest version selects h1.com/b instead
     store.merge(spark, statusRows("http://h1.com/a" -> Status.Fetched))
     assert(planned() == first)
+
+    // o's version leaves the kept window: a compaction, then three
+    // merges, and the fourth commit's vacuum deletes delta_0
+    store.compact(spark)
+    (3 to 5).foreach(h => store.merge(spark, statusRows(s"http://h$h.com/a" -> Status.Discovered)))
+    assert(!Files.exists(java.nio.file.Paths.get(root, "delta_0")))
+    val latest = show(store.selectBatch(spark, new Timestamp(o.atMs),
+      perBucket = 1, maxKeys = 10, limit = 10).collect().toSeq)
+    assert(latest.contains("http://h1.com/b DISCOVERED"), latest)
+    // the stream built a frame of o's version before its files went;
+    // a fresh stream finds o's manifest gone: both select the latest
+    assert(planned() == latest)
+    assert(planned(newStream()) == latest)
   }
 
   test("seedStream: seed files dropped into a directory flow into the frontier") {
